@@ -44,6 +44,7 @@ from ds_caselaw_ingester_spark.operators.uri_cascade import (
     expected_namespace_col,
     resolve_uris,
 )
+from ds_caselaw_ingester_spark.sources.messages import KIND_INVALID
 
 
 def analyze(
@@ -196,12 +197,21 @@ def perform_ingest(
     members: DataFrame | None = None,
     batch_id: int | None = None,
     archives: DataFrame | None = None,
+    invalid: DataFrame | None = None,
 ) -> dict[str, int]:
     """Execute phase: apply effects in the reference's fixed order (K13).
 
     Rows routed to error states (cascade cardinality errors, C3
     error_existing) are quarantined, not written — per-record containment.
     Returns row counts per effect table for observability.
+
+    invalid: optional parse_messages rows with kind='invalid' (no usable
+    envelope or reference). analyze() drops them, so they join the
+    routing errors in the ONE quarantine write, with status 'invalid'.
+    One write per batch matters under batch_id: two dynamic overwrites
+    of the same ``batch_id=<n>`` partition would each replace the other's
+    rows. The quarantine schema is (msg_id, message_id, status,
+    write_route) for both kinds; counts['quarantine'] counts both.
 
     Counts come from ``Observation`` metrics attached to each sink plan —
     the write action itself computes them, so no sink plan ever runs
@@ -225,6 +235,15 @@ def perform_ingest(
     instead of appending duplicates, so every sink table converges on
     replay (the documents MERGE is already idempotent by key). This is
     the standard Spark epoch-keyed exactly-once-ish sink pattern.
+
+    Caches: `analysis` (read by every sink) and the asset fan-out (read
+    by two) are persisted and released before returning. A cached plan
+    keeps its output partitioning unless
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is on,
+    so a small batch cached under 32 shuffle partitions runs 32 tasks per
+    sink and leaves up to 32 files per append. run_full_ingest_stream
+    turns the conf on for its epochs' session clone; it is not a
+    localCheckpoint because local checkpoints are never released.
     """
     from pyspark.sql import Observation
 
@@ -242,9 +261,9 @@ def perform_ingest(
         | (F.col("write_route") == "error_existing")
         | (F.col("email_action") == "error")
     )
-    ok = analysis.where(~bad).persist()
+    # not cached: a filter over the cached analysis (caching it measured neutral)
+    ok = analysis.where(~bad)
     try:
-        quarantine = analysis.where(bad)
         counts: dict[str, int] = {}
 
         def append_counted(df: DataFrame, name: str) -> None:
@@ -394,10 +413,18 @@ def perform_ingest(
         finally:
             assets.unpersist()
 
-        # C6 — quarantine/DLQ
-        q = quarantine.select("msg_id", "message_id", "status", "write_route")
+        # C6 — quarantine/DLQ: routing errors and parse-invalid messages
+        q = analysis.where(bad).select("msg_id", "message_id", "status", "write_route")
+        if invalid is not None:
+            q = q.unionByName(
+                invalid.select(
+                    F.coalesce(F.col("message_id"), F.col("consignment_ref")).alias("msg_id"),
+                    "message_id",
+                    F.lit(KIND_INVALID).alias("status"),
+                    F.lit(None).cast("string").alias("write_route"),
+                )
+            )
         append_counted(q, "quarantine")
         return counts
     finally:
-        ok.unpersist()
         analysis.unpersist()

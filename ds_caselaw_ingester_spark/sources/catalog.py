@@ -85,11 +85,11 @@ def _footer_schema(path: str):
     then use plain ``spark.read.parquet``, so every off-happy-path
     behavior (error classes included) is unchanged. The conversion is
     pinned equal to Spark's own inference for every table × sf dir in
-    tests/test_catalog_events.py. Fields are always nullable, matching
-    Spark's file-relation rule (file sources relax all columns to
-    nullable on read). timestamp[ns] deliberately returns None: that is
-    the legacy events layout only readable through the nanosAsLong conf
-    dance in _read_events."""
+    tests/test_catalog_events.py. Fields and list elements are always
+    nullable, matching Spark's file-relation rule (file sources relax
+    all columns to nullable on read). timestamp[ns] deliberately
+    returns None: that is the legacy events layout only readable
+    through the nanosAsLong conf dance in _read_events."""
     try:
         import pyarrow.parquet as papq
         import pyarrow.types as pat
@@ -124,7 +124,7 @@ def _footer_schema(path: str):
             et = conv(t.value_type)
             if et is None:
                 return None
-            return T.ArrayType(et, containsNull=t.value_field.nullable)
+            return T.ArrayType(et, containsNull=True)
         return None
 
     fields = []

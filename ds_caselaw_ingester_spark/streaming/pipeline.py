@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ds_caselaw_ingester_spark.schemas import SQS_RECORD_SCHEMA
-from ds_caselaw_ingester_spark.sources.messages import parse_messages
+from ds_caselaw_ingester_spark.sources.messages import KIND_INVALID, parse_messages
 
 
 def read_message_stream(spark: SparkSession, path: str, max_files: int = 1) -> DataFrame:
@@ -111,6 +111,23 @@ def read_message_stream_rate(
     )
 
 
+# Off by default: AQE then leaves a cached plan's output partitioning
+# alone, and every frame an epoch persists keeps
+# spark.sql.shuffle.partitions partitions however few rows it holds.
+CACHED_PLAN_REPARTITION = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+def _size_epoch_caches(batch_df: DataFrame) -> None:
+    """Let AQE coalesce the frames this epoch persists, so each sink
+    write runs as many tasks, and leaves as many files, as its rows need.
+
+    foreachBatch hands every epoch a DataFrame of the query's private
+    clone of the caller's session (cloned when the query starts), so the
+    conf set here reaches neither the caller's session nor any batch
+    plan built outside the stream."""
+    batch_df.sparkSession.conf.set(CACHED_PLAN_REPARTITION, "true")
+
+
 def run_ingest_stream(
     records: DataFrame,
     out_dir: str,
@@ -126,6 +143,7 @@ def run_ingest_stream(
     analyze = analyze or parse_messages
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
+        _size_epoch_caches(batch_df)
         analyzed = analyze(batch_df)
         analyzed.persist()
         try:
@@ -176,11 +194,26 @@ def run_full_ingest_stream(
     batch's writes exactly once (the streaming analog of the reference
     checking MarkLogic per message).
 
-    Invalid messages (unclassifiable / missing reference) are written
-    to `quarantine/` partitioned by epoch BEFORE analysis — the C6 DLQ
-    the simpler run_ingest_stream has; without it a parse-invalid
-    message would vanish (analyze() filters kind='invalid'), with no
-    message_id recorded for a ReportBatchItemFailures-style redrive.
+    Invalid messages (unclassifiable / missing reference) go to the
+    `quarantine/` DLQ with their message_id, for a
+    ReportBatchItemFailures-style redrive; analyze() drops them, so
+    they are handed to perform_ingest, which writes them and the routing
+    errors in ONE epoch-keyed overwrite. Two writes would each replace
+    the other's `batch_id=<epoch>` partition, losing the parse-invalid
+    rows whenever an epoch also had a routing error.
+
+    Per-epoch caches: each epoch persists its parsed messages, and
+    perform_ingest its analysis and asset fan-out. AQE does not change a
+    cached plan's output partitioning by default, so a 25-message epoch
+    cached under 32 shuffle partitions ran 32 tasks per sink write and
+    left up to 32 files per append sink (884 tasks per epoch at
+    local[4]). _size_epoch_caches turns
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` on for
+    the query's own session clone only: the caller's session, and every
+    batch plan and oracle run in it, keep their conf. localCheckpoint
+    would size the frames as well, but its blocks are never released,
+    so a long-running stream would leak every epoch's data; persist +
+    unpersist frees them when the epoch ends.
     """
     from ds_caselaw_ingester_spark.operators.compaction import (
         read_parquet_or_none,
@@ -190,6 +223,7 @@ def run_full_ingest_stream(
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
+        _size_epoch_caches(batch_df)
         docs_path = f"{sink_root}/documents"
         recover_buckets(docs_path[len("file:") :] if docs_path.startswith("file:") else docs_path)
         docs = read_parquet_or_none(spark, docs_path)
@@ -204,20 +238,21 @@ def run_full_ingest_stream(
         )
         msgs = parse_messages(batch_df).persist()
         try:
-            # DLQ first: analyze() drops kind='invalid', so quarantine is
-            # the only record these messages existed. Epoch-keyed dynamic
-            # overwrite — a redelivered epoch replaces its own partition.
-            bad = msgs.where(F.col("kind") == "invalid").drop("payload")
-            bad.withColumn("batch_id", F.lit(epoch_id)).write.mode(
-                "overwrite"
-            ).partitionBy("batch_id").option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(f"{sink_root}/quarantine")
+            # Fill the cache before analyze: the analysis plan reads
+            # `msgs` at several sites, and AQE fills a still-empty cache
+            # from each of them in its own job (7 more jobs per
+            # 25-message epoch).
+            msgs.write.format("noop").mode("overwrite").save()
             a = analyze(
                 msgs, metadata, best_xmls, identifiers, state, environment=environment
             )
             perform_ingest(
-                a, sink_root, members=members, batch_id=epoch_id, archives=archives
+                a,
+                sink_root,
+                members=members,
+                batch_id=epoch_id,
+                archives=archives,
+                invalid=msgs.where(F.col("kind") == KIND_INVALID),
             )
         finally:
             msgs.unpersist()

@@ -333,7 +333,7 @@ def test_vocab_entries_narrow_equals_wide(spark):
     )
 
 
-def test_footer_schema_matches_spark_inference(spark):
+def test_footer_schema_matches_spark_inference(spark, tmp_path):
     """Round 15: table() supplies the scan schema from the parquet
     footer via pyarrow, driver-side and JOBLESS (spark.read.parquet
     without a schema schedules one footer-inference job per call —
@@ -357,6 +357,20 @@ def test_footer_schema_matches_spark_inference(spark):
             assert _footer_schema(p) == spark.read.parquet(p).schema, (sf, t)
             checked += 1
     assert checked > 0
+
+    # a list whose elements are REQUIRED in the footer: Spark still
+    # infers containsNull=True (file sources relax nullability)
+    p = str(tmp_path / "required_items.parquet")
+    item = pa.field("item", pa.int64(), nullable=False)
+    pq.write_table(
+        pa.table(
+            {"xs": pa.array([[1, 2], [3]], type=pa.list_(item))},
+            schema=pa.schema([pa.field("xs", pa.list_(item))]),
+        ),
+        p,
+    )
+    assert not pq.read_schema(p).field("xs").type.value_field.nullable
+    assert _footer_schema(p) == spark.read.parquet(p).schema
 
 
 def test_table_read_schedules_no_job(spark):

@@ -215,6 +215,92 @@ def test_invalid_messages_land_in_quarantine_not_void(spark, tmp_path, context_t
     assert docs.count() == 1
 
 
+def test_parse_invalid_and_routing_errors_share_one_dlq_partition(
+    spark, tmp_path, context_tables
+):
+    """Regression: the DLQ used to be written twice per epoch, and both
+    writes dynamically overwrote the same batch_id=<epoch> partition, so
+    an epoch with a routing error (unknown originator) destroyed its
+    parse-invalid rows. One write now holds both kinds."""
+    src = tmp_path / "incoming"
+    src.mkdir()
+    with open(src / "f0.json", "w") as f:
+        f.write(json.dumps(_record("m1", "TDR-1", "TDR")) + "\n")
+        f.write(json.dumps(_record("m-bad", "", "TDR")) + "\n")  # empty ref
+        f.write(json.dumps(_record("m-err", "TDR-2", "WEIRD")) + "\n")
+
+    sink_root = str(tmp_path / "sinks")
+    _run_stream(spark, src, sink_root, str(tmp_path / "ckpt"), context_tables)
+    q = spark.read.parquet(f"{sink_root}/quarantine")
+    assert set(q.columns) == {"msg_id", "message_id", "status", "write_route", "batch_id"}
+    rows = {r.message_id: r for r in q.collect()}
+    assert set(rows) == {"m-bad", "m-err"}
+    assert {r.batch_id for r in rows.values()} == {0}
+    assert rows["m-bad"].status == "invalid"
+    assert rows["m-err"].status != "invalid"
+    assert spark.read.parquet(f"{sink_root}/documents").count() == 1
+
+
+def test_epoch_caches_are_sized_released_and_stream_scoped(
+    spark, tmp_path, context_tables
+):
+    """The epoch's cached frames are coalesced by AQE, on the stream's
+    own session clone only. Under 32 shuffle partitions a small epoch
+    used to run 32 tasks per sink write and leave several files per
+    append sink partition. Pins: the caller's conf is never written, every
+    epoch cache is released, and each sink partition holds one file
+    (assets, a union of four fan-outs, at most four)."""
+    from ds_caselaw_ingester_spark.streaming.pipeline import CACHED_PLAN_REPARTITION
+
+    src = tmp_path / "incoming"
+    src.mkdir()
+    with open(src / "f0.json", "w") as f:
+        for rec in (
+            _record("m1", "TDR-1", "TDR"),
+            _record("m2", "TDR-2", "TDR"),
+            _record("m4", "TDR-4", "FCL S3"),
+            _record("m-bad", "", "TDR"),
+        ):
+            f.write(json.dumps(rec) + "\n")
+    sink_root = tmp_path / "sinks"
+
+    jsc = spark.sparkContext._jsc
+    cached_before = jsc.getPersistentRDDs().size()
+    conf_before = spark.conf.get(CACHED_PLAN_REPARTITION)
+    partitions_before = spark.conf.get("spark.sql.shuffle.partitions")
+    real_set = spark.conf.set
+
+    def guarded_set(key, value):
+        assert key != CACHED_PLAN_REPARTITION, (
+            "the ingest stream wrote the caller session's cached-plan conf"
+        )
+        return real_set(key, value)
+
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    spark.conf.set = guarded_set
+    try:
+        _run_stream(
+            spark, src, str(sink_root), str(tmp_path / "ckpt"), context_tables
+        )
+    finally:
+        spark.conf.set = real_set
+        spark.conf.set("spark.sql.shuffle.partitions", partitions_before)
+
+    assert spark.conf.get(CACHED_PLAN_REPARTITION) == conf_before
+    assert jsc.getPersistentRDDs().size() == cached_before
+    files = {
+        t: [
+            n
+            for n in os.listdir(sink_root / t / "batch_id=0")
+            if n.endswith(".parquet")
+        ]
+        for t in (*EFFECT_TABLES, "quarantine")
+    }
+    assert all(files.values()), files  # every sink got rows this epoch
+    assert len(files["assets"]) <= 4, files
+    assert all(len(v) == 1 for t, v in files.items() if t != "assets"), files
+
+
 def test_bucket_backup_is_recovered_before_state_read(spark, tmp_path, context_tables):
     """Review regression: a kb=N.old backup left by a bucketed-MERGE
     crash must be reconciled BEFORE the documents-state read — without
