@@ -26,95 +26,50 @@ Scale properties:
 
 from __future__ import annotations
 
-import warnings
-
-from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _is_py4j_missing_api(exc: "Py4JError") -> bool:
-    """True when a Py4JError means the JVM-side method DOES NOT EXIST
-    (removed/renamed private API) rather than a real execution failure.
-    py4j reports a missing method as 'Method <name>([...]) does not
-    exist' without a java_exception; anything carrying a real Java
-    exception is an execution error and must propagate."""
-    if getattr(exc, "java_exception", None) is not None:
-        return False
-    return "does not exist" in str(exc)
-
-
 # Edge-count bound (symmetrised rows) below which the min-label fixpoint
-# is computed driver-side from ONE collect instead of the iterative loop.
-# The loop costs ~5 scheduled jobs (edge cache, label init checkpoint,
-# per-round checkpoint + convergence count) — measured 1.9 s for 827
-# edges at sf0.1 with the pair pipeline already cached (optimization
-# round 14), pure scheduling round-trips; on a busy cluster the same
-# round-trips are per-batch latency for every streaming micro-batch that
-# runs CC over a handful of pairs. Env-overridable for ops
-# (SPARK_GRAFT_CC_DRIVER_ROWS; 0 disables the driver path entirely).
+# is computed driver-side from ONE bounded Arrow fetch instead of the
+# iterative loop. The loop costs ~5 scheduled jobs (edge cache, label
+# init checkpoint, per-round checkpoint + convergence count) — measured
+# 1.9 s for 827 edges at sf0.1 with the pair pipeline already cached
+# (optimization round 14), pure scheduling round-trips; on a busy
+# cluster the same round-trips are per-batch latency for every streaming
+# micro-batch that runs CC over a handful of pairs.
+# connected_components(driver_threshold=0) selects the loop.
 #
-# Sized by the measured COMPUTE crossover, not the collect budget (the
-# same re-sizing change #12 applied to the kmeans/pq replay caps).
-# With the pure-Python union-find the crossover sat at ~27-30k edges
-# (12.4 s at 49k); after the C-speed numpy scatter-min propagation
-# (_driver_min_label_np) the clean-host sweep shows the driver path
-# ahead through at least 600k edges (random mixed-topology edges,
-# checkpointed input, interleaved min of 3, driver vs loop: 1.18/5.74 s
-# at 100k edges, 1.77/6.53 at 200k, 3.08/8.30 at 400k, 4.37/11.29 at
-# 600k — the loop's wall grows too, so no crossover was reached). Cap
-# re-sized to 800k sym rows (400k edges): a 2.7x measured advantage at
-# the cap, bounded collect footprint (~13 MB of long pairs; string ids
-# proportionally more), and margin for host variance rather than
-# extrapolating past the measured range.
+# Sized by the measured COMPUTE crossover of the numpy scatter-min
+# propagation (_driver_min_label_np), not the collect budget (the same
+# re-sizing change #12 applied to the kmeans/pq replay caps): the
+# clean-host sweep shows the driver path ahead through at least 600k
+# edges (random mixed-topology edges, checkpointed input, interleaved
+# min of 3, driver vs loop: 1.18/5.74 s at 100k edges, 1.77/6.53 at
+# 200k, 3.08/8.30 at 400k, 4.37/11.29 at 600k — the loop's wall grows
+# too, so no crossover was reached). Cap sized to 800k sym rows (400k
+# edges): a 2.7x measured advantage at the cap, bounded fetch footprint
+# (~13 MB of long pairs; string ids proportionally more), and margin for
+# host variance rather than extrapolating past the measured range.
 CC_DRIVER_SYM_ROWS_MAX = 800_000
 
-# Separate, much lower bound for the PURE-PYTHON union-find fallback the
-# numpy scatter-min path declines to (null ids, float/bytes ids,
-# NUL-bearing strings): its wall grows superlinearly (measured 12.4 s at
-# 49k edges — the number that sized the pre-numpy cap), so a declined
-# graph near the 800k-row cap would take minutes on the driver vs ~8 s
-# for the distributed loop (ADVICE r14). Declined graphs above this
-# bound fall through to the loop instead.
-CC_UNION_FIND_SYM_ROWS_MAX = 50_000
 
-
-def _driver_min_label_np(a_vals: list, b_vals: list) -> "tuple | None":
-    """Vectorized min-label fixpoint: factorize node ids with np.unique
-    (ascending sort = label order), then scatter-min label propagation
-    with pointer jumping until no label moves. Exact, not approximate:
-    component MEMBERSHIP is a property of the graph, not the algorithm,
-    and because np.unique sorts ascending the minimum label INDEX in a
-    component is the minimum node id — the identical fixpoint the
-    union-find and the distributed loop produce (pinned in
-    tests/test_cluster.py). Returns (nodes, components) numpy arrays
-    sorted by node, or None when the ids resolve to object dtype
-    (e.g. a null id), whose comparison semantics stay with the
-    union-find. Replaces a pure-Python union-find whose wall grew
-    superlinearly past ~30k edges (12.4 s at 49k; this path is C-speed
-    throughout)."""
+def _driver_min_label_np(a, b) -> tuple:
+    """Vectorized min-label fixpoint over two id arrays screened by
+    similarity._arrow_id_values (non-null ints or NUL-free strings):
+    factorize node ids with np.unique (ascending sort = label order),
+    then scatter-min label propagation with pointer jumping until no
+    label moves. Exact, not approximate: component MEMBERSHIP is a
+    property of the graph, not the algorithm, and because np.unique
+    sorts ascending the minimum label INDEX in a component is the
+    minimum node id — the identical fixpoint the distributed loop
+    produces (pinned in tests/test_cluster.py). Returns (nodes,
+    components) numpy arrays sorted by node."""
     import numpy as np
 
-    # plain-list string inputs must be screened for NUL characters
-    # BEFORE the lossy fixed-width conversion ('<U' pads with trailing
-    # NULs, so "a\x00" would compare equal to "a" — merged components);
-    # ndarray inputs come from _arrow_id_values, which screened the raw
-    # buffer already
-    for vals in (a_vals, b_vals):
-        if isinstance(vals, list) and any(
-            isinstance(s, str) and "\x00" in s for s in vals
-        ):
-            return None
-    a, b = np.asarray(a_vals), np.asarray(b_vals)
-    # ints and (NUL-free) strings only: float ids would drag NaN
-    # total-order questions in, bytes share the NUL-padding hazard, and
-    # object dtype (null ids, exotic types) keeps Python comparison
-    # semantics — all stay on the union-find
-    if a.dtype.kind not in "iuU" or b.dtype.kind not in "iuU":
-        return None
     ids = np.concatenate([a, b])
     uniq, inv = np.unique(ids, return_inverse=True)
-    n_edges = len(a_vals)
+    n_edges = len(a)
     u, v = inv[:n_edges], inv[n_edges:]
     labels = np.arange(len(uniq), dtype=np.int64)
     while True:
@@ -132,40 +87,6 @@ def _driver_min_label_np(a_vals: list, b_vals: list) -> "tuple | None":
     return uniq, uniq[labels]
 
 
-def _driver_min_label(rows, id_a: str, id_b: str) -> dict:
-    """Union-find + min-member relabel over collected edge rows — the
-    same fixpoint the distributed loop converges to (component = MIN
-    reachable node id), computed exactly, no iteration bound needed.
-    Kept as the exact-comparison fallback for id dtypes numpy cannot
-    sort natively (see _driver_min_label_np, the C-speed default)."""
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for row in rows:
-        a, b = row[id_a], row[id_b]
-        for n in (a, b):
-            if n not in parent:
-                parent[n] = n
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    members: dict = {}
-    for n in parent:
-        members.setdefault(find(n), []).append(n)
-    return {
-        n: min([root] + ns)
-        for root, ns in members.items()
-        for n in ns
-    }
-
-
 def connected_components(
     edges: DataFrame,
     id_a: str = "doc_a",
@@ -181,17 +102,17 @@ def connected_components(
     explicit failure beats silently wrong clusters; the small-graph
     driver path below is exact and needs no bound).
 
-    driver_threshold: symmetrised-row bound for the driver-side
-    union-find fast path (None -> CC_DRIVER_SYM_ROWS_MAX, overridable
-    via $SPARK_GRAFT_CC_DRIVER_ROWS; 0 forces the distributed loop).
-    The gate is ONE bounded limit-probe whose fetch doubles as the
-    driver path's input (an overflowing probe falls to the loop, which
-    then counts the cached edges for its partition sizing); both paths
-    produce the identical min-label fixpoint (pinned in
-    tests/test_cluster.py).
+    driver_threshold: symmetrised-row bound for the driver-side numpy
+    path (None -> CC_DRIVER_SYM_ROWS_MAX; <= 0 selects the distributed
+    loop). The gate is ONE bounded Arrow fetch that is also the driver
+    path's input. An oversized edge list, or ids the numpy path does
+    not model (null, float or NUL-bearing ids — see
+    similarity._arrow_id_values), run the distributed loop, which then
+    counts the cached edges for its partition sizing. Both paths produce
+    the identical min-label fixpoint (pinned in tests/test_cluster.py).
     """
     # The edge list is re-joined EVERY round of the distributed loop, so
-    # it is materialised ONCE (e.persist, forced by the probe or count
+    # it is materialised ONCE (e.persist, forced by the fetch or count
     # below — without it each unionAll branch replays the upstream
     # pair-producing pipeline; for neardup_clusters that's the whole
     # shingle->minhash->banding computation) and the symmetrised list is
@@ -202,127 +123,49 @@ def connected_components(
     # iterate only the labels.
     e = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).persist()
     spark = edges.sparkSession
+    from ds_caselaw_ingester_spark.operators.similarity import (
+        _arrow_id_values,
+        _bounded_arrow,
+    )
 
     if driver_threshold is None:
-        import os
-
-        env = os.environ.get("SPARK_GRAFT_CC_DRIVER_ROWS", "").strip()
-        driver_threshold = int(env) if env else CC_DRIVER_SYM_ROWS_MAX
-    # Gate = ONE bounded probe (optimization round 15; kmeans_fit's gate
-    # shape): limit(cap+1) fetched as one Arrow batch decides the path
-    # AND, when the whole edge list fits, IS the driver path's input —
-    # the separate e.count() job the old gate scheduled (plus its second
-    # pass over the cached edges for the fetch) only runs when the probe
-    # overflows into the distributed loop. One scheduling round-trip
-    # saved per under-cap call — every bench CC and every streaming
-    # micro-batch that clusters a handful of pairs.
-    sym_rows = None
-    cap_edges = driver_threshold // 2  # threshold counts SYMMETRISED rows
-    if driver_threshold:
-        from pyspark.sql import types as T
-
-        id_type = e.schema["src"].dataType
-        from ds_caselaw_ingester_spark.operators.similarity import (
-            _arrow_id_values,
-            _to_arrow_or_none,
-        )
-
-        sel = e.select(F.col("src").alias(id_a), F.col("dst").alias(id_b)).limit(
-            cap_edges + 1
-        )
-        # the bounded fetch rides ONE Arrow batch when the API exists
-        # (no Row materialization — the same collect-vs-Arrow split the
-        # kmeans/pq probes measured at ~3x); int / NUL-free-string id
-        # columns convert straight to numpy for the scatter-min path,
-        # anything else falls back to plain values + the union-find.
-        # hasattr seam + unsupported-type fallback only; real execution
-        # failures propagate (see _to_arrow_or_none, ADVICE r14).
-        tbl = _to_arrow_or_none(sel)
-        if tbl is not None:
-            rows = None
-            n_fetched = tbl.num_rows
-        else:
-            rows = sel.collect()
-            n_fetched = len(rows)
-        if n_fetched > cap_edges:
-            # overflow: the loop path needs the real count for its
-            # partition sizing; the probe already materialised (part of)
-            # the cached edge list, so this pass reads mostly cache
-            sym_rows = 2 * e.count()
-        else:
-            sym_rows = 2 * n_fetched  # probe captured the whole edge list
-    if sym_rows is not None and sym_rows <= driver_threshold:
-        # Small graph: the bounded probe above replaces the whole loop
-        # (see CC_DRIVER_SYM_ROWS_MAX). The labels frame is created in
-        # the caller's session — downstream joins plan under the
-        # caller's conf, same contract as the loop's re-parented result.
-        if rows is None:
-            a_vals = _arrow_id_values(tbl.column(0).combine_chunks())
-            b_vals = _arrow_id_values(tbl.column(1).combine_chunks())
-        else:
-            a_vals = [r[id_a] for r in rows]
-            b_vals = [r[id_b] for r in rows]
-        schema = T.StructType(
-            [
-                T.StructField("node", id_type, False),
-                T.StructField("component", id_type, False),
-            ]
-        )
-        np_lbl = (
-            _driver_min_label_np(a_vals, b_vals)
-            if a_vals is not None and b_vals is not None
-            else None
-        )
-        if np_lbl is not None and len(np_lbl[0]):
-            import pandas as pd
+        driver_threshold = CC_DRIVER_SYM_ROWS_MAX
+    # threshold counts SYMMETRISED rows; the fetch is of raw edges
+    tbl = _bounded_arrow(e, driver_threshold // 2)
+    if tbl is not None:
+        a = _arrow_id_values(tbl.column("src").combine_chunks())
+        b = _arrow_id_values(tbl.column("dst").combine_chunks())
+        if a is not None and b is not None:
+            # Small graph: the bounded fetch replaces the whole loop
+            # (see CC_DRIVER_SYM_ROWS_MAX). The labels frame is created
+            # in the caller's session — downstream joins plan under the
+            # caller's conf, same contract as the loop's re-parented
+            # result.
+            from pyspark.sql import types as T
 
             e.unpersist()
-            nodes, comps = np_lbl
+            id_type = e.schema["src"].dataType
+            schema = T.StructType(
+                [
+                    T.StructField("node", id_type, False),
+                    T.StructField("component", id_type, False),
+                ]
+            )
+            if not len(a):  # empty graph: the plain empty frame
+                return spark.createDataFrame([], schema)
+            import pandas as pd
+
+            nodes, comps = _driver_min_label_np(a, b)
+            # pandas -> Arrow -> JVM LocalTableScan: a list-of-tuples
+            # createDataFrame would plan as a PythonRDD and every
+            # consumer of the labels frame would round-trip a Python
+            # worker per task
             return spark.createDataFrame(
                 pd.DataFrame({"node": nodes, "component": comps}), schema
             )
-        if np_lbl is not None:  # empty graph: keep the plain empty frame
-            e.unpersist()
-            return spark.createDataFrame([], schema)
-        if sym_rows <= CC_UNION_FIND_SYM_ROWS_MAX:
-            e.unpersist()
-            if rows is None:
-                # Arrow fetch whose ids the numpy path declined: plain
-                # dicts carry the same [key] access the union-find reads
-                rows = tbl.to_pylist()
-            labels = _driver_min_label(rows, id_a, id_b)
-            items = sorted(labels.items())
-            # pandas -> Arrow -> JVM LocalTableScan: a list-of-tuples
-            # createDataFrame would plan as a PythonRDD and every consumer
-            # of the labels frame would round-trip a Python worker per task
-            # (the same hazard the round-14 fixture fix measured at ~1.5 s
-            # per pass). Empty graphs keep the plain path — zero rows cost
-            # nothing and pandas dtype inference has nothing to infer from.
-            if items:
-                import pandas as pd
-
-                return spark.createDataFrame(
-                    pd.DataFrame(
-                        {
-                            "node": [n for n, _ in items],
-                            "component": [c for _, c in items],
-                        }
-                    ),
-                    schema,
-                )
-            return spark.createDataFrame([], schema)
-        # numpy declined AND the graph is past the union-find's measured
-        # superlinear knee (12.4 s at 49k edges; ~minutes near the 800k
-        # cap): fall through to the distributed loop, which handles these
-        # sizes in seconds (ADVICE r14). `e` stays persisted — the loop
-        # below re-uses it; the bounded fetch above is sunk cost, paid
-        # only on this rare declined-dtype band.
-
-    if sym_rows is None:
-        # probe disabled (driver_threshold 0): the loop still needs the
-        # edge count for its partition sizing, and the count doubles as
-        # the cache-forcing pass the loop requires
-        sym_rows = 2 * e.count()
+    # the loop needs the edge count for its partition sizing; when the
+    # fetch declined only the ids, it already holds the whole list
+    sym_rows = 2 * (tbl.num_rows if tbl is not None else e.count())
 
     # Size-aware loop partitioning. AQE cannot re-plan cached or
     # checkpointed subtrees (canChangeCachedPlanOutputPartitioning is
@@ -357,47 +200,16 @@ def connected_components(
     # O(E) edge frames.
     loop = spark.newSession()
     loop.conf.set("spark.sql.shuffle.partitions", str(p))
+    sym = None
     try:
         # the cross-session hop rides SparkSession.internalCreateDataFrame
-        # (package-private but stable since 2.x; reachable via py4j). If
-        # a future Spark removes it, fall back to the caller-session
-        # conf set/restore below — same plans, weaker isolation.
+        # (package-private but stable since 2.x; reachable via py4j)
         e_loop = DataFrame(
             loop._jsparkSession.internalCreateDataFrame(
                 e._jdf.queryExecution().toRdd(), e._jdf.schema(), False
             ),
             loop,
         )
-    except (AttributeError, TypeError) as exc:
-        # API-REMOVAL errors only (py4j surfaces a missing/renamed
-        # method as Py4JError or a Python-side attribute/signature
-        # error). Real execution failures must PROPAGATE — a bare
-        # except here silently degraded every failure to the
-        # conf-mutating fallback, reintroducing the isolation hazard
-        # the scoped session exists to remove (ADVICE r10).
-        warnings.warn(
-            "connected_components: internalCreateDataFrame unavailable "
-            f"({exc!r}); falling back to caller-session conf flip — "
-            "concurrent planning in this session may see mis-sized "
-            "exchanges for the loop's duration",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        e_loop = None
-    except Py4JError as exc:
-        if _is_py4j_missing_api(exc):
-            warnings.warn(
-                "connected_components: internalCreateDataFrame unavailable "
-                f"({exc!r}); falling back to caller-session conf flip — "
-                "concurrent planning in this session may see mis-sized "
-                "exchanges for the loop's duration",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            e_loop = None
-        else:
-            raise
-    if e_loop is not None:
         sym = (
             e_loop.unionAll(
                 e_loop.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -405,38 +217,21 @@ def connected_components(
             .repartition(p, "src")
             .persist()
         )
-        try:
-            labels = _min_label_loop(sym, max_iter)
-            # re-parent the (localCheckpointed) labels into the CALLER's
-            # session so downstream joins plan under the caller's conf
-            labels = DataFrame(
-                spark._jsparkSession.internalCreateDataFrame(
-                    labels._jdf.queryExecution().toRdd(),
-                    labels._jdf.schema(),
-                    False,
-                ),
-                spark,
-            )
-        finally:
-            e.unpersist()
-            sym.unpersist()
-        return labels
-    # Fallback (only reachable if Spark drops the private API): flip the
-    # caller session's conf for the loop and restore in finally. Same
-    # plan shapes; the isolation caveat this path reintroduces is why
-    # the scoped session above is the primary path.
-    sym = (
-        e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition(p, "src")
-        .persist()
-    )
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(p))
         labels = _min_label_loop(sym, max_iter)
+        # re-parent the (localCheckpointed) labels into the CALLER's
+        # session so downstream joins plan under the caller's conf
+        labels = DataFrame(
+            spark._jsparkSession.internalCreateDataFrame(
+                labels._jdf.queryExecution().toRdd(),
+                labels._jdf.schema(),
+                False,
+            ),
+            spark,
+        )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(cur))
         e.unpersist()
-        sym.unpersist()
+        if sym is not None:
+            sym.unpersist()
     return labels
 
 

@@ -49,22 +49,13 @@ from ds_caselaw_ingester_spark.operators.similarity import (
 # ~140k crossover for host variance, and a bounded probe/collect
 # footprint (~26 MB of doubles, well under driver budgets; the
 # limit(cap+1) probe an OVERSIZED fit pays before taking the loop
-# stays a sub-second bounded job). Env-overridable
-# (SPARK_GRAFT_PQ_DRIVER_ROWS; 0 disables the driver path).
+# stays a sub-second bounded job). pq_fit(driver_threshold=0) selects
+# the loop.
 PQ_DRIVER_ROWS_MAX = 50_000
 
 
-def _pq_driver_rows_max() -> int:
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_PQ_DRIVER_ROWS", "").strip()
-    return int(env) if env else PQ_DRIVER_ROWS_MAX
-
-
-def _pq_fit_driver(
-    rows: list,
-    vec_col: str,
-    id_col: str,
+def _pq_replay(
+    V,
     m: int,
     k: int,
     max_iter: int,
@@ -72,100 +63,21 @@ def _pq_fit_driver(
     round_digits: int,
     ansi: bool,
 ) -> "list | None":
-    """Driver-side replay of the pq_fit Lloyd loop over a bounded,
-    fully-collected (already-projected) sample — the kmeans_fit driver
-    fast path's sibling (gated by PQ_DRIVER_ROWS_MAX above; the kmeans
-    cap is KMEANS_DRIVER_ROWS_MAX in similarity.py).
-    Returns the trained books, or None when a row needs the Spark
-    loop's slice/null semantics (null vector, null element, or a length
-    mismatch — pq_fit has no dim guard, so the loop silently truncates
-    short vectors; rather than replicate that, anomalies delegate), or
-    when a zero denominator (zero-norm codeword) appears under ANSI
-    mode, where Spark's division throws instead of yielding NULL.
+    """Driver-side replay of the pq_fit Lloyd loop over the id-sorted
+    matrix of a bounded, clean, already-projected sample
+    (similarity._arrow_clean_matrix) — the kmeans_fit replay's sibling
+    (gated by PQ_DRIVER_ROWS_MAX above). Init = the first k rows'
+    subspace slices; the k and dim guards raise exactly like the loop's.
+    Returns the trained books, or None when a zero denominator
+    (zero-norm codeword) appears under ANSI mode, where Spark's division
+    throws instead of yielding NULL — the caller then runs the loop so
+    the error surfaces exactly as Spark raises it.
     Per-subspace semantics are exactly the loop's: sequential
     per-dimension fold order for every dot and norm (bit-identical
     doubles), greatest(norm, 1e-300), Spark HALF_UP score rounding,
     null-first/NaN-last struct ordering with code tie-break, per-cell
     means rounded with Python round(), empty cells keep their codeword.
     Pinned against the loop in tests/test_pq.py."""
-    import numpy as np
-
-    rows = sorted(rows, key=lambda r: (r[id_col] is not None, r[id_col]))
-    if len(rows) < k:
-        raise ValueError(f"pq_fit: need at least k={k} vectors, got {len(rows)}")
-    dim = len(rows[0][vec_col]) if rows[0][vec_col] is not None else None
-    if dim is None or dim % m:
-        return None if dim is None else _raise_dim(dim, m)
-    n = len(rows)
-    try:
-        # one C-speed conversion doubles as the anomaly screen: a null
-        # vector or ragged row raises ValueError, a null element
-        # TypeError — exactly the inputs whose slice/null semantics
-        # belong to the Spark loop, so any failure delegates (None).
-        V = np.array([r[vec_col] for r in rows], dtype=np.float64)
-        if V.ndim != 2 or V.shape[1] != dim:
-            return None
-    except (TypeError, ValueError):
-        return None
-    subdim = dim // m
-    init = rows[:k]
-    books: list[list[list[float]]] = [
-        [
-            [float(x) for x in r[vec_col][s * subdim : (s + 1) * subdim]]
-            for r in init
-        ]
-        for s in range(m)
-    ]
-    return _pq_replay(
-        V, books, m, k, max_iter, round_centroids, round_digits, ansi
-    )
-
-
-def _pq_fit_driver_mat(
-    V,
-    m: int,
-    k: int,
-    max_iter: int,
-    round_centroids: int,
-    round_digits: int,
-    ansi: bool,
-) -> "list | None":
-    """_pq_fit_driver over an already-sorted clean matrix (the Arrow
-    probe path — no Rows, no per-row Python). Identical replay: init =
-    first k rows' subspace slices, k/dim guards raise exactly like the
-    Row walk's."""
-    n = len(V)
-    if n < k:
-        raise ValueError(f"pq_fit: need at least k={k} vectors, got {n}")
-    dim = V.shape[1]
-    if dim % m:
-        _raise_dim(dim, m)
-    subdim = dim // m
-    books: list[list[list[float]]] = [
-        [
-            [float(x) for x in V[c, s * subdim : (s + 1) * subdim]]
-            for c in range(k)
-        ]
-        for s in range(m)
-    ]
-    return _pq_replay(
-        V, books, m, k, max_iter, round_centroids, round_digits, ansi
-    )
-
-
-def _pq_replay(
-    V,
-    books: "list[list[list[float]]]",
-    m: int,
-    k: int,
-    max_iter: int,
-    round_centroids: int,
-    round_digits: int,
-    ansi: bool,
-) -> "list | None":
-    """The shared per-subspace Lloyd replay over a prepared (V, init
-    books) pair — called by both the Row walk (_pq_fit_driver) and the
-    Arrow probe path (_pq_fit_driver_mat)."""
     import math
 
     import numpy as np
@@ -176,7 +88,18 @@ def _pq_replay(
     )
 
     n, dim = V.shape
+    if n < k:
+        raise ValueError(f"pq_fit: need at least k={k} vectors, got {n}")
+    if dim % m:
+        raise ValueError(f"pq_fit: dim {dim} not divisible by m={m}")
     subdim = dim // m
+    books: list[list[list[float]]] = [
+        [
+            [float(x) for x in V[c, s * subdim : (s + 1) * subdim]]
+            for c in range(k)
+        ]
+        for s in range(m)
+    ]
     # per-subspace norms, sequential fold order; greatest(norm, 1e-300)
     nrm = np.zeros((n, m))
     for s in range(m):
@@ -235,10 +158,6 @@ def _pq_replay(
     return books
 
 
-def _raise_dim(dim: int, m: int) -> None:
-    raise ValueError(f"pq_fit: dim {dim} not divisible by m={m}")
-
-
 def pq_fit(
     vectors: DataFrame,
     vec_col: str,
@@ -281,55 +200,28 @@ def pq_fit(
     sample and encodes everything."""
     vectors = _maybe_project({"pca": pca_model}, vectors, vec_col)
     if driver_threshold is None:
-        driver_threshold = _pq_driver_rows_max()
-    if driver_threshold and round_centroids is not None:
-        # bounded probe (kmeans_fit's driver fast-path gate, with pq's
-        # own cap — see PQ_DRIVER_ROWS_MAX), fetched as ONE Arrow batch
-        # (no Row materialization; see kmeans_fit's gate for the
-        # measured collect-vs-Arrow split): if the whole projected
-        # sample fits, ONE job replaces init + explode/persist +
-        # max_iter assignment/mean jobs; oversized samples keep the
-        # loop below. A vector anomaly (null/ragged) delegates to the
-        # loop directly — exactly what the Row walk would decide —
-        # while id/element dtypes the Arrow path does not model
-        # re-probe via collect() so the Row walk decides.
+        driver_threshold = PQ_DRIVER_ROWS_MAX
+    if round_centroids is not None:
+        # kmeans_fit's driver gate with pq's own cap (PQ_DRIVER_ROWS_MAX):
+        # if the whole projected sample fits and is clean, ONE bounded
+        # Arrow fetch replaces init + explode/persist + max_iter
+        # assignment/mean jobs; an oversized or declined sample (null or
+        # ragged vectors, ids _arrow_id_values declines) runs the loop
+        # below, whose slice/null semantics are the reference.
         from ds_caselaw_ingester_spark.operators.similarity import (
             _ansi_enabled,
             _arrow_clean_matrix,
-            _to_arrow_or_none,
+            _bounded_arrow,
         )
 
-        probe = vectors.select(id_col, vec_col).limit(driver_threshold + 1)
-        # hasattr seam + unsupported-type fallback only; real execution
-        # failures propagate (see _to_arrow_or_none, ADVICE r14)
-        tbl = _to_arrow_or_none(probe)
-        books_d = None
-        need_rows = tbl is None
-        if tbl is not None and tbl.num_rows <= driver_threshold:
-            tag, V = _arrow_clean_matrix(tbl, id_col, vec_col)
-            if tag == "ok":
-                books_d = _pq_fit_driver_mat(
-                    V, m, k, max_iter, round_centroids, round_digits,
-                    ansi=_ansi_enabled(vectors),
-                )
-            elif tag == "unsupported":
-                need_rows = True
-            # "vec_anomaly": books_d stays None -> the loop's
-            # slice/null semantics apply, same as the Row walk
-        if need_rows:
-            # the unsupported sample is already on the driver inside
-            # tbl — plain dicts carry the same [key] access the Row
-            # walk reads, no second bounded job (review finding); only
-            # the pre-4.0 seam still collects
-            head = tbl.to_pylist() if tbl is not None else probe.collect()
-            if len(head) <= driver_threshold:
-                books_d = _pq_fit_driver(
-                    head, vec_col, id_col, m, k, max_iter, round_centroids,
-                    round_digits, ansi=_ansi_enabled(vectors),
-                )
+        tbl = _bounded_arrow(vectors.select(id_col, vec_col), driver_threshold)
+        V = None if tbl is None else _arrow_clean_matrix(tbl, id_col, vec_col)
+        books_d = None if V is None else _pq_replay(
+            V, m, k, max_iter, round_centroids, round_digits,
+            ansi=_ansi_enabled(vectors),
+        )
         if books_d is not None:
-            dim_d = len(books_d[0][0]) * m
-            out = {"m": m, "k": k, "subdim": dim_d // m, "books": books_d}
+            out = {"m": m, "k": k, "subdim": V.shape[1] // m, "books": books_d}
             if pca_model is not None:
                 out["pca"] = pca_model
             return out

@@ -399,8 +399,7 @@ def lsh_neardup_pairs(
 # quality_clf.py, the DuckDB oracle replay) that makes the mean's
 # summation order immaterial; the dot/score path is replicated
 # bit-exactly (sequential fold order + Spark's HALF_UP shortest-repr
-# rounding). Env-overridable (SPARK_GRAFT_KMEANS_DRIVER_ROWS; 0 disables
-# the driver path entirely).
+# rounding). kmeans_fit(driver_threshold=0) selects the loop.
 #
 # The cap is sized by the COMPUTE crossover, not the broadcast budget:
 # originally 6k, when the replay's per-(row, centroid) HALF_UP rounding
@@ -417,13 +416,6 @@ def lsh_neardup_pairs(
 # fit's limit(cap+1) probe stays one sub-second bounded job before the
 # loop engages).
 KMEANS_DRIVER_ROWS_MAX = 50_000
-
-
-def _kmeans_driver_rows_max() -> int:
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_ROWS", "").strip()
-    return int(env) if env else KMEANS_DRIVER_ROWS_MAX
 
 
 def _ansi_enabled(df: DataFrame) -> bool:
@@ -516,24 +508,16 @@ def _argmin_entries(neg: "list", isnull: "list", n_c: int) -> int:
     return min(range(n_c), key=key)
 
 
-def _to_arrow_or_none(df):
-    """Bounded-probe Arrow fetch with the seam semantics the probes
-    need: None when the API is absent (pre-4.0 — tested with hasattr,
-    so an AttributeError raised from INSIDE a present implementation
-    PROPAGATES instead of silently re-running the query via collect(),
-    ADVICE r14) or when the frame carries an Arrow-unsupported type
-    (PySparkTypeError — the Row path handles it); every other
-    exception, i.e. any real execution failure, propagates."""
-    if not hasattr(df, "toArrow"):
+def _bounded_arrow(df, cap: int):
+    """The driver paths' one bounded fetch: `df` as ONE Arrow table (no
+    Row objects) when it has at most `cap` rows, else None — also None
+    without running anything when cap <= 0, which selects the caller's
+    distributed loop. The probe is limit(cap + 1), so an oversized frame
+    costs one short bounded job; execution failures propagate."""
+    if cap <= 0:
         return None
-    try:
-        from pyspark.errors import PySparkTypeError
-    except ImportError:  # pre-3.4: no pyspark.errors package
-        PySparkTypeError = ()
-    try:
-        return df.toArrow()
-    except PySparkTypeError:
-        return None
+    tbl = df.limit(cap + 1).toArrow()
+    return tbl if tbl.num_rows <= cap else None
 
 
 def _arrow_id_values(col):
@@ -544,8 +528,9 @@ def _arrow_id_values(col):
     review-found hazard: merged CC components, flipped init order).
     The raw UTF-8 data buffer is screened for NUL bytes in one C pass
     BEFORE the lossy conversion; over-detection on sliced buffers only
-    costs the exact fallback. Returns None when not modeled — callers
-    keep the Row/union-find path, whose Python comparisons are exact."""
+    sends the input to the loop. Returns None for null, float, NUL-bearing
+    or other ids — callers then run the distributed loop, whose Spark
+    comparisons are exact for every id type."""
     import numpy as np
     import pyarrow.types as pat
 
@@ -557,49 +542,40 @@ def _arrow_id_values(col):
         buf = col.buffers()[2]
         if buf is not None and 0 in np.frombuffer(buf, dtype=np.uint8):
             return None
-        arr = np.asarray(col.to_pylist())
-        return arr if arr.dtype.kind == "U" else None
+        return np.array(col.to_pylist(), dtype=str)
     return None
 
 
 def _arrow_clean_matrix(tbl, id_col: str, vec_col: str):
-    """Classify a bounded Arrow probe table and, when clean, build the
-    id-sorted vector matrix with zero per-row Python work.
+    """A bounded Arrow fetch -> the (n, dim) float64 vector matrix sorted
+    by id ascending, built with zero per-row Python work (numpy stable
+    argsort == Spark's orderBy for the screened ids — the ordering
+    contract _driver_min_label_np relies on too).
 
-    Returns a (tag, payload) pair:
-    - ("ok", V)          — non-null int / NUL-free string ids (screened
-                           by _arrow_id_values), rectangular
-                           list<float64> vectors with no nulls; V is
-                           the (n, dim) float64 matrix sorted by id
-                           ascending (numpy stable argsort == Python
-                           sorted for these screened dtypes — the
-                           ordering contract _driver_min_label_np
-                           relies on);
-    - ("vec_anomaly", _) — a null vector, null element or ragged row:
-                           exactly the inputs whose semantics belong to
-                           the per-row walk (kmeans valid-mask / dim
-                           guard) or the Spark loop (pq delegation);
-    - ("unsupported", _) — anything the Arrow fast path does not model
-                           (null/float/exotic ids, non-float64 element
-                           type, n < 1): caller falls back to the
-                           collect()+Row path, which handles all of it.
-    """
+    Returns None for every input the driver replays do not model, which
+    then take the distributed loop: no rows; null, float or NUL-bearing
+    ids (screened by _arrow_id_values); a vector column that is not a
+    list of float32/float64; a null vector, null element or ragged row.
+    float32 elements widen to float64 exactly — every float32 is a
+    double, and the loop casts each element to double before any
+    arithmetic."""
     import numpy as np
     import pyarrow.types as pat
 
     n = tbl.num_rows
     if n < 1:
-        return ("unsupported", None)
+        return None
     ids_np = _arrow_id_values(tbl.column(id_col).combine_chunks())
     if ids_np is None:
-        return ("unsupported", None)
+        return None
     vec = tbl.column(vec_col).combine_chunks()
     if not (pat.is_list(vec.type) or pat.is_large_list(vec.type)):
-        return ("unsupported", None)
-    if not pat.is_float64(vec.type.value_type):
-        return ("unsupported", None)
+        return None
+    et = vec.type.value_type
+    if not (pat.is_float64(et) or pat.is_float32(et)):
+        return None
     if vec.null_count or vec.values.null_count:
-        return ("vec_anomaly", None)
+        return None
     off_width = 8 if pat.is_large_list(vec.type) else 4
     off_dtype = np.int64 if off_width == 8 else np.int32
     offs = np.frombuffer(
@@ -608,14 +584,14 @@ def _arrow_clean_matrix(tbl, id_col: str, vec_col: str):
     lens = np.diff(offs)
     dim = int(lens[0])
     if not np.all(lens == dim):
-        return ("vec_anomaly", None)
-    flat = vec.values.to_numpy(zero_copy_only=False)
+        return None
+    flat = vec.values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
     V = flat[int(offs[0]) : int(offs[0]) + n * dim].reshape(n, dim)
     order = np.argsort(ids_np, kind="stable")
-    return ("ok", np.ascontiguousarray(V[order]))
+    return np.ascontiguousarray(V[order])
 
 
-def _kmeans_fit_driver_mat(
+def _kmeans_replay(
     V,
     k: int,
     max_iter: int,
@@ -623,43 +599,15 @@ def _kmeans_fit_driver_mat(
     round_centroids: int,
     ansi: bool,
 ) -> "list[dict] | None":
-    """_kmeans_fit_driver over an already-sorted clean matrix (the
-    Arrow probe path — no Rows, no per-row Python). Identical replay:
-    init = first k rows of the id-sorted matrix, every row valid."""
-    import numpy as np
-
-    n = len(V)
-    if n < k:
-        raise ValueError(f"need at least k={k} vectors, got {n}")
-    cents: list[dict] = [
-        {"centroid_id": i, "cvec": [float(x) for x in V[i]]} for i in range(k)
-    ]
-    return _kmeans_replay(
-        V, np.ones(n, dtype=bool), cents, k, max_iter, tol, round_centroids, ansi
-    )
-
-
-def _kmeans_fit_driver(
-    rows: list,
-    vec_col: str,
-    id_col: str,
-    k: int,
-    max_iter: int,
-    tol: float,
-    round_centroids: int,
-    ansi: bool,
-) -> "list[dict] | None":
-    """Driver-side replay of the kmeans_fit loop over a bounded,
-    fully-collected training set. Semantics mirror the Spark loop
-    exactly (pinned in tests/test_semdedup.py):
-    - init = k lowest-id rows (nulls first, Spark's orderBy order);
+    """Driver-side replay of the kmeans_fit loop over the id-sorted
+    matrix of a bounded, clean training set (_arrow_clean_matrix).
+    Semantics mirror the Spark loop exactly (pinned in
+    tests/test_semdedup.py):
+    - init = the k lowest-id rows, Spark's orderBy order;
     - assignment = ivf_assign's rounded-cosine argmax with the SAME
       sequential per-dimension fold order (bit-identical doubles),
       Spark HALF_UP rounding, null-first/NaN-last struct ordering and
       centroid-id tie-break;
-    - rows with a null vector or null element are unassigned (null
-      centroid) and never reach a mean; a non-null vector of the wrong
-      length raises like ivf_assign's dim guard;
     - a zero denominator (zero-norm vector or centroid) under ANSI mode
       — where Spark's division THROWS instead of yielding NULL —
       returns None so the caller delegates to the Spark loop and the
@@ -670,68 +618,16 @@ def _kmeans_fit_driver(
       the mean's summation order immaterial;
     - empty cells keep their centroid; tol uses the rounded means.
     """
-    import numpy as np
-
-    rows = sorted(rows, key=lambda r: (r[id_col] is not None, r[id_col]))
-    if len(rows) < k:
-        raise ValueError(f"need at least k={k} vectors, got {len(rows)}")
-    init = rows[:k]
-    dim = len(init[0][vec_col])
-    cents: list[dict] = [
-        {"centroid_id": i, "cvec": [float(x) for x in r[vec_col]]}
-        for i, r in enumerate(init)
-    ]
-    n = len(rows)
-    valid = np.ones(n, dtype=bool)
-    try:
-        # clean inputs (every vector present, rectangular, no null
-        # elements) build the matrix in one C-speed conversion; any
-        # anomaly falls back to the per-row walk below, which also
-        # raises the dim guard exactly where the fast path cannot tell
-        # a ragged row from a null one.
-        V = np.array([r[vec_col] for r in rows], dtype=np.float64)
-        if V.ndim != 2 or V.shape[1] != dim:
-            raise ValueError("ragged")
-    except (TypeError, ValueError):
-        V = np.zeros((n, dim))
-        for i, r in enumerate(rows):
-            v = r[vec_col]
-            if v is None:
-                valid[i] = False
-                continue
-            if len(v) != dim:
-                raise RuntimeError(
-                    f"ivf_assign: vector dim {len(v)} != centroid dim {dim}"
-                    " — raw/reduced space mix? Project inputs through the"
-                    " same PCA model the quantizer was trained in."
-                )
-            if any(x is None for x in v):
-                valid[i] = False
-                continue
-            V[i] = [float(x) for x in v]
-    return _kmeans_replay(
-        V, valid, cents, k, max_iter, tol, round_centroids, ansi
-    )
-
-
-def _kmeans_replay(
-    V,
-    valid,
-    cents: "list[dict]",
-    k: int,
-    max_iter: int,
-    tol: float,
-    round_centroids: int,
-    ansi: bool,
-) -> "list[dict] | None":
-    """The shared Lloyd replay over a prepared (V, valid, init cents)
-    triple — called by both the Row walk (_kmeans_fit_driver) and the
-    Arrow probe path (_kmeans_fit_driver_mat)."""
     import math
 
     import numpy as np
 
     n, dim = V.shape
+    if n < k:
+        raise ValueError(f"need at least k={k} vectors, got {n}")
+    cents: list[dict] = [
+        {"centroid_id": i, "cvec": [float(x) for x in V[i]]} for i in range(k)
+    ]
     # sequential per-dimension accumulation: each step is one multiply
     # rounding + one add rounding, exactly the zip_with/aggregate fold
     acc = np.zeros(n)
@@ -750,7 +646,7 @@ def _kmeans_replay(
             dots = dots + V[:, d : d + 1] * C[:, d]
         denom = vnorm[:, None] * cnorms[None, :]
         isnull = denom == 0.0  # non-ANSI Spark: x / 0.0 -> NULL
-        if ansi and bool(isnull[valid].any() if valid.any() else False):
+        if ansi and bool(isnull.any()):
             return None  # ANSI division-by-zero: let the Spark loop raise
         with np.errstate(divide="ignore", invalid="ignore"):
             raw = dots / denom
@@ -763,10 +659,10 @@ def _kmeans_replay(
         # rows whose entries are all finite non-null: vectorized argmin
         # (first occurrence = lowest centroid_id, the struct tie-break);
         # any null/NaN/Inf entry falls back to the exact comparator
-        plain = valid & ~(isnull | np.isnan(neg) | np.isinf(neg)).any(axis=1)
+        plain = ~(isnull | np.isnan(neg) | np.isinf(neg)).any(axis=1)
         if plain.any():
             pick[plain] = np.argmin(neg[plain], axis=1)
-        for i in np.where(valid & ~plain)[0]:
+        for i in np.where(~plain)[0]:
             pick[i] = _argmin_entries(neg[i], isnull[i], k)
 
         new: dict[int, list[float]] = {}
@@ -840,50 +736,24 @@ def kmeans_fit(
     # which this caches just as well.)
     vectors = vectors.select(id_col, vec_col).persist()
     if driver_threshold is None:
-        driver_threshold = _kmeans_driver_rows_max()
-    if driver_threshold and round_centroids is not None:
-        # bounded probe: at most threshold+1 rows, fetched as ONE Arrow
-        # batch (no Row materialization — measured 3x faster than
-        # collect() at the 50k cap, and the matrix conversion is a
-        # ~20 ms buffer reshape instead of a per-row walk). If the whole
-        # training set fits, the ONE job above replaces init + max_iter
-        # assignment/mean jobs; if not, the loop below proceeds and the
-        # probe cost one short bounded job (see KMEANS_DRIVER_ROWS_MAX).
-        # Samples the Arrow fast path does not model (null ids/vectors,
-        # ragged rows, exotic dtypes) re-probe via collect() so the Row
-        # walk's exact semantics (valid-mask, dim guard) decide.
-        probe = vectors.limit(driver_threshold + 1)
-        # pre-4.0 seam = hasattr, NOT a broad except around the call: an
-        # AttributeError/TypeError raised from INSIDE a present toArrow
-        # would silently re-run the query via collect(), contrary to the
-        # propagate-real-failures contract (ADVICE r14). Only the
-        # unsupported-Arrow-type error falls back to the Row path.
-        tbl = _to_arrow_or_none(probe)
-        res = None
-        need_rows = tbl is None
-        if tbl is not None and tbl.num_rows <= driver_threshold:
-            tag, V = _arrow_clean_matrix(tbl, id_col, vec_col)
-            if tag == "ok":
-                res = _kmeans_fit_driver_mat(
-                    V, k, max_iter, tol, round_centroids,
-                    ansi=_ansi_enabled(vectors),
-                )
-            else:
-                need_rows = True
-        if need_rows:
-            # the anomalous/unsupported sample is already on the driver
-            # inside tbl — plain dicts carry the same [key] access the
-            # Row walk reads, no second bounded job (review finding);
-            # only the pre-4.0 seam still collects
-            head = tbl.to_pylist() if tbl is not None else probe.collect()
-            if len(head) <= driver_threshold:
-                res = _kmeans_fit_driver(
-                    head, vec_col, id_col, k, max_iter, tol, round_centroids,
-                    ansi=_ansi_enabled(vectors),
-                )
-        if res is not None:
-            vectors.unpersist()
-            return res
+        driver_threshold = KMEANS_DRIVER_ROWS_MAX
+    if round_centroids is not None:
+        # ONE bounded Arrow fetch (no Row materialization — measured 3x
+        # faster than collect() at the 50k cap, and the matrix build is a
+        # ~20 ms buffer reshape). If the whole training set fits and is
+        # clean, that one job replaces init + max_iter assignment/mean
+        # jobs (see KMEANS_DRIVER_ROWS_MAX); an oversized or declined
+        # sample (see _arrow_clean_matrix) runs the loop below, whose
+        # Spark semantics are the reference.
+        tbl = _bounded_arrow(vectors, driver_threshold)
+        V = None if tbl is None else _arrow_clean_matrix(tbl, id_col, vec_col)
+        if V is not None:
+            res = _kmeans_replay(
+                V, k, max_iter, tol, round_centroids, ansi=_ansi_enabled(vectors)
+            )
+            if res is not None:
+                vectors.unpersist()
+                return res
     init = vectors.orderBy(id_col).limit(k).collect()
     if len(init) < k:
         raise ValueError(f"need at least k={k} vectors, got {len(init)}")

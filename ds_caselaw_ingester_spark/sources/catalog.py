@@ -70,13 +70,21 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return _read_events(spark, f"{sf_dir}/events.parquet")
     path = f"{sf_dir}/{name}.parquet"
-    st = _footer_schema(path)
+    st = _footer_schema(path, _infer_ntz(spark))
     if st is None:
         return spark.read.parquet(path)
     return spark.read.schema(st).parquet(path)
 
 
-def _footer_schema(path: str):
+def _infer_ntz(spark: SparkSession) -> bool:
+    """The session's spark.sql.parquet.inferTimestampNTZ.enabled: whether
+    Spark's parquet inference reads a tz-less timestamp as
+    TimestampNTZType (the default) or as TimestampType."""
+    conf = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    return str(conf).lower() == "true"
+
+
+def _footer_schema(path: str, infer_ntz: bool = True):
     """Spark StructType from the parquet footer, read DRIVER-SIDE via
     pyarrow — no Spark job (see module docstring for the measured cost
     of the inference job this replaces). Returns None whenever the
@@ -89,7 +97,10 @@ def _footer_schema(path: str):
     nullable, matching Spark's file-relation rule (file sources relax
     all columns to nullable on read). timestamp[ns] deliberately
     returns None: that is the legacy events layout only readable
-    through the nanosAsLong conf dance in _read_events."""
+    through the nanosAsLong conf dance in _read_events. `infer_ntz` is
+    the session's inferTimestampNTZ conf (see _infer_ntz): a tz-less
+    timestamp[us] maps to TimestampNTZType when it is set, else to
+    TimestampType, as Spark's own inference does."""
     try:
         import pyarrow.parquet as papq
         import pyarrow.types as pat
@@ -118,7 +129,9 @@ def _footer_schema(path: str):
             return T.BinaryType()
         if pat.is_timestamp(t):
             if t.unit == "us":
-                return T.TimestampType() if t.tz else T.TimestampNTZType()
+                if t.tz or not infer_ntz:
+                    return T.TimestampType()
+                return T.TimestampNTZType()
             return None
         if pat.is_list(t) or pat.is_large_list(t):
             et = conv(t.value_type)
@@ -143,7 +156,7 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
     NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
-    st = _footer_schema(path)
+    st = _footer_schema(path, _infer_ntz(spark))
     if st is not None:
         # modern layout, schema known from the footer: jobless read; the
         # ts normalization below is layout-driven and unchanged

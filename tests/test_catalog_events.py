@@ -340,37 +340,61 @@ def test_footer_schema_matches_spark_inference(spark, tmp_path):
     measured 0.13 s warm, paid by every query invocation). Pins the
     conversion EQUAL to Spark's own inference for every table x sf dir,
     so the jobless read can never silently drift from what
-    spark.read.parquet would have planned."""
+    spark.read.parquet would have planned — under both settings of
+    spark.sql.parquet.inferTimestampNTZ.enabled, which decides how
+    Spark infers the tz-less timestamps of orders and lineitem."""
     import os
+
+    from conftest import SF_SMOKE
 
     from ds_caselaw_ingester_spark.sources.catalog import (
         TABLES,
         _footer_schema,
+        _infer_ntz,
     )
-
-    checked = 0
-    for sf in ("sf0.001", "sf0.01", "sf0.1"):
-        for t in TABLES:
-            p = f"/root/testdata/{sf}/{t}.parquet"
-            if not os.path.exists(p):
-                continue
-            assert _footer_schema(p) == spark.read.parquet(p).schema, (sf, t)
-            checked += 1
-    assert checked > 0
 
     # a list whose elements are REQUIRED in the footer: Spark still
     # infers containsNull=True (file sources relax nullability)
-    p = str(tmp_path / "required_items.parquet")
+    req = str(tmp_path / "required_items.parquet")
     item = pa.field("item", pa.int64(), nullable=False)
     pq.write_table(
         pa.table(
             {"xs": pa.array([[1, 2], [3]], type=pa.list_(item))},
             schema=pa.schema([pa.field("xs", pa.list_(item))]),
         ),
-        p,
+        req,
     )
-    assert not pq.read_schema(p).field("xs").type.value_field.nullable
-    assert _footer_schema(p) == spark.read.parquet(p).schema
+    assert not pq.read_schema(req).field("xs").type.value_field.nullable
+
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prior = spark.conf.get(key, None)
+    try:
+        for ntz in ("true", "false"):
+            spark.conf.set(key, ntz)
+            assert _infer_ntz(spark) is (ntz == "true")
+            checked = 0
+            for sf in ("sf0.001", "sf0.01", "sf0.1"):
+                sf_dir = os.path.join(os.path.dirname(SF_SMOKE), sf)
+                for t in TABLES:
+                    p = f"{sf_dir}/{t}.parquet"
+                    if not os.path.exists(p):
+                        continue
+                    want = spark.read.parquet(p).schema
+                    assert _footer_schema(p, _infer_ntz(spark)) == want, (
+                        ntz, sf, t,
+                    )
+                    if t != "events":  # events normalizes ts on read
+                        assert table(spark, sf_dir, t).schema == want, (ntz, sf, t)
+                    checked += 1
+            assert checked > 0
+            assert _footer_schema(req, _infer_ntz(spark)) == (
+                spark.read.parquet(req).schema
+            )
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
 
 
 def test_table_read_schedules_no_job(spark):

@@ -311,59 +311,9 @@ def test_keeper_and_split_match_python_model_on_random_graphs(spark, seed):
         assert out[i] == ("train" if frac < 0.7 else "val"), (i, comp[i], frac)
 
 
-def test_missing_api_classifier_and_fallback_warns(spark, monkeypatch):
-    """ADVICE r10: the private-API hop's except must catch ONLY
-    API-removal errors (with a RuntimeWarning naming the degraded
-    isolation), never real execution failures. Unit-pins the Py4J
-    classifier, then forces the AttributeError branch and checks the
-    fallback still computes correct components under a warning."""
-    import warnings as _w
-
-    from py4j.protocol import Py4JError
-
-    from ds_caselaw_ingester_spark.operators import cluster as C
-
-    # classifier: missing-method Py4JError degrades; real java
-    # execution errors propagate
-    assert C._is_py4j_missing_api(
-        Py4JError("Method internalCreateDataFrame([class X]) does not exist")
-    )
-    java_err = Py4JError("error while calling o123.count")
-    java_err.java_exception = object()  # what Py4JJavaError carries
-    assert not C._is_py4j_missing_api(java_err)
-    assert not C._is_py4j_missing_api(Py4JError("connection refused"))
-
-    # force the API-unavailable branch: the hop's first DataFrame(...)
-    # construction raises AttributeError (what a removed py4j member
-    # surfaces as Python-side)
-    real_df = C.DataFrame
-
-    class _Boom:
-        def __call__(self, *a, **k):
-            raise AttributeError("internalCreateDataFrame is gone")
-
-    monkeypatch.setattr(C, "DataFrame", _Boom())
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
-    )
-    with _w.catch_warnings(record=True) as rec:
-        _w.simplefilter("always")
-        got = {
-            (r["node"], r["component"])
-            for r in C.connected_components(edges, driver_threshold=0).collect()
-        }
-    monkeypatch.setattr(C, "DataFrame", real_df)
-    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-    msgs = [str(w.message) for w in rec if w.category is RuntimeWarning]
-    assert any("falling back to caller-session conf flip" in m for m in msgs)
-    # the fallback restored the caller's conf
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
 def test_driver_and_loop_paths_agree(spark):
     """Optimization round 14: small edge sets take a driver-side
-    union-find fast path (one bounded collect) instead of the iterative
+    numpy fast path (one bounded Arrow fetch) instead of the iterative
     loop. Both paths must produce the IDENTICAL min-label fixpoint —
     pinned here on a mixed graph (cliques, a chain, singleton-adjacent
     pairs, unordered/duplicate edges)."""
@@ -417,21 +367,15 @@ def test_driver_path_empty_edges(spark):
 
 def test_driver_min_label_np_matches_union_find():
     """Optimization round 14: the driver CC fast path factorizes ids and
-    runs a numpy scatter-min label propagation (C-speed) instead of the
-    pure-Python union-find; this pins fixpoint equality on random
-    graphs at several densities, string ids, self-loops, duplicate and
-    reversed edges — and that object-dtype ids (null id) decline to the
-    union-find."""
-    import random
+    runs a numpy scatter-min label propagation (C-speed); this pins
+    fixpoint equality with the pure-Python union-find oracle above on
+    random graphs at several densities, string ids, self-loops,
+    duplicate and reversed edges."""
+    import numpy as np
 
     from ds_caselaw_ingester_spark.operators.cluster import (
-        _driver_min_label,
         _driver_min_label_np,
     )
-
-    class Row(dict):
-        def __getitem__(self, k):
-            return dict.__getitem__(self, k)
 
     rng = random.Random(20260818)
     for n_nodes, n_edges in ((10, 4), (50, 50), (120, 150), (300, 900)):
@@ -441,80 +385,25 @@ def test_driver_min_label_np_matches_union_find():
         b += [7]
         a += a[:5]  # duplicates
         b += b[:5]
-        rows = [Row(x=x, y=y) for x, y in zip(a, b)]
-        want = _driver_min_label(rows, "x", "y")
-        got = _driver_min_label_np(a, b)
-        assert got is not None
-        assert dict(zip(got[0].tolist(), got[1].tolist())) == want
+        got = _driver_min_label_np(np.array(a), np.array(b))
+        assert dict(zip(got[0].tolist(), got[1].tolist())) == (
+            _union_find_components(list(zip(a, b)))
+        )
 
     # string ids (numpy '<U' sort == Python lexicographic sort)
     sa = [f"doc-{rng.randrange(40):03d}" for _ in range(60)]
     sb = [f"doc-{rng.randrange(40):03d}" for _ in range(60)]
-    rows = [Row(x=x, y=y) for x, y in zip(sa, sb)]
-    got = _driver_min_label_np(sa, sb)
-    assert got is not None
-    assert dict(zip(got[0].tolist(), got[1].tolist())) == _driver_min_label(
-        rows, "x", "y"
+    got = _driver_min_label_np(np.array(sa, dtype=str), np.array(sb, dtype=str))
+    assert dict(zip(got[0].tolist(), got[1].tolist())) == (
+        _union_find_components(list(zip(sa, sb)))
     )
-
-    # object dtype (a null id) must decline
-    assert _driver_min_label_np([1, None], [2, 3]) is None
-
-
-def _delete_toarrow_everywhere(monkeypatch, df):
-    """Remove toArrow from EVERY class in the instance's MRO that defines
-    it. Round 15 fix: the r14 version of these tests monkeypatched the
-    abstract pyspark.sql.dataframe.DataFrame parent, but the live
-    instance is pyspark.sql.classic.dataframe.DataFrame whose OWN
-    toArrow shadows the patch — the 'Row seam' assertions were silently
-    comparing the Arrow path against itself. Deleting the attribute from
-    each defining class makes hasattr(df, 'toArrow') genuinely False,
-    which is the pre-4.0 condition _to_arrow_or_none feature-detects."""
-    for klass in type(df).__mro__:
-        if "toArrow" in vars(klass):
-            monkeypatch.delattr(klass, "toArrow")
-
-
-def test_cc_arrow_fetch_matches_row_fetch(spark, monkeypatch):
-    """Optimization round 14: the driver CC fast path fetches edges as
-    ONE Arrow batch. Pins identical labels vs the collect()+Row fetch
-    (forced by genuinely deleting the toArrow API — the pre-4.0 seam)
-    on long and string ids."""
-    import random
-
-    from ds_caselaw_ingester_spark.operators.cluster import (
-        connected_components,
-    )
-
-    rng = random.Random(4)
-    edges = [(rng.randrange(80), rng.randrange(80)) for _ in range(120)]
-    df_l = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    df_s = spark.createDataFrame(
-        [(f"d{a:03d}", f"d{b:03d}") for a, b in edges],
-        "doc_a string, doc_b string",
-    )
-    for df in (df_l, df_s):
-        got_arrow = {
-            (r.node, r.component) for r in connected_components(df).collect()
-        }
-
-        _delete_toarrow_everywhere(monkeypatch, df)
-        try:
-            got_rows = {
-                (r.node, r.component)
-                for r in connected_components(df).collect()
-            }
-        finally:
-            monkeypatch.undo()
-        assert got_arrow == got_rows
 
 
 def test_cc_arrow_fetch_execution_failure_propagates(spark, monkeypatch):
-    """ADVICE r14: an AttributeError/TypeError raised from INSIDE a
-    present toArrow implementation is a real execution failure and must
-    PROPAGATE — the pre-4.0 seam is hasattr-detected, never a broad
-    except around the call (which silently re-ran the query via
-    collect())."""
+    """ADVICE r14: an AttributeError/TypeError raised from INSIDE
+    toArrow is a real execution failure and must PROPAGATE — the bounded
+    fetch has no except around the call and no collect() fallback that
+    would silently re-run the query."""
     import pytest
 
     from ds_caselaw_ingester_spark.operators.cluster import (
@@ -532,11 +421,10 @@ def test_cc_arrow_fetch_execution_failure_propagates(spark, monkeypatch):
 
 
 def test_cc_declined_large_graph_takes_distributed_loop(spark, monkeypatch):
-    """ADVICE r14 (medium): the pure-Python union-find fallback is
-    superlinear, so a graph the numpy path declines (float ids here)
-    that is ALSO above CC_UNION_FIND_SYM_ROWS_MAX must go to the
-    distributed loop, not the union-find. Forced by shrinking the gate;
-    the union-find is replaced with a tripwire to prove the path."""
+    """Ids the numpy path declines (float ids here) take the distributed
+    loop at ANY size — under the default threshold too, where the graph
+    would otherwise fit the driver path. A spy on _min_label_loop proves
+    the path."""
     from ds_caselaw_ingester_spark.operators import cluster
 
     edges = [(float(i), float(i + 1)) for i in range(0, 40, 2)] + [
@@ -544,33 +432,60 @@ def test_cc_declined_large_graph_takes_distributed_loop(spark, monkeypatch):
     ]
     df = spark.createDataFrame(edges, "doc_a double, doc_b double")
 
-    def _tripwire(rows, id_a, id_b):
-        raise AssertionError("union-find must not run above its gate")
+    calls = []
+    real_loop = cluster._min_label_loop
 
-    monkeypatch.setattr(cluster, "CC_UNION_FIND_SYM_ROWS_MAX", 10)
-    monkeypatch.setattr(cluster, "_driver_min_label", _tripwire)
+    def _spy(sym, max_iter):
+        calls.append(max_iter)
+        return real_loop(sym, max_iter)
+
+    monkeypatch.setattr(cluster, "_min_label_loop", _spy)
     got = {
         (r.node, r.component)
         for r in cluster.connected_components(df).collect()
     }
+    assert len(calls) == 1
     # pairs {2i, 2i+1} with min-label 2i; the duplicate (10,11) edge
-    # changes nothing — same fixpoint either path
+    # changes nothing
     exp = {(float(i), float(i - (i % 2))) for i in range(40)}
     assert got == exp
+
+
+def test_cc_null_id_matches_loop(spark):
+    """An edge list with a null id declines the numpy path and takes the
+    distributed loop, so the default threshold returns the loop's labels
+    (driver_threshold=0). A driver-side union-find used to raise
+    TypeError here, comparing None with int."""
+    df = spark.createDataFrame(
+        [(1, 2), (2, None), (5, 6)], "doc_a long, doc_b long"
+    )
+    via_default = {
+        (r.node, r.component) for r in connected_components(df).collect()
+    }
+    via_loop = {
+        (r.node, r.component)
+        for r in connected_components(df, driver_threshold=0).collect()
+    }
+    assert via_default == via_loop == {
+        (1, 1), (2, 1), (5, 5), (6, 5), (None, 1)
+    }
 
 
 def test_cc_nul_string_ids_keep_exact_semantics(spark):
     """Review-found hazard: numpy's fixed-width '<U' storage pads with
     trailing NULs, so ids "a" and "a\\x00" would silently merge on the
-    numpy path. Pins that NUL-bearing string ids decline to the
-    union-find (helper-level) and that the driver path's labels still
-    equal the distributed loop's end-to-end."""
-    from ds_caselaw_ingester_spark.operators.cluster import (
-        _driver_min_label_np,
-        connected_components,
+    numpy path. Pins that NUL-bearing (and null) string ids are declined
+    by the id screen (helper-level), and that the default path's labels
+    still equal the distributed loop's end-to-end."""
+    import pyarrow as pa
+
+    from ds_caselaw_ingester_spark.operators.similarity import (
+        _arrow_id_values,
     )
 
-    assert _driver_min_label_np(["a", "a\x00"], ["c", "b"]) is None
+    assert _arrow_id_values(pa.array(["a", "a\x00"])) is None
+    assert _arrow_id_values(pa.array(["a", None])) is None
+    assert _arrow_id_values(pa.array(["a", "b"])).tolist() == ["a", "b"]
 
     df = spark.createDataFrame(
         [("a", "c"), ("a\x00", "b"), ("x", "y")],

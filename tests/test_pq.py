@@ -343,7 +343,7 @@ def test_ivf_assign_null_vector_flows_as_null_row(spark, pq_ctx, method):
 
 def test_pq_driver_and_loop_paths_agree(spark, pq_ctx):
     """Optimization round 14: bounded (projected) samples train all m
-    codebooks driver-side from one collect — the kmeans driver fast
+    codebooks driver-side from one bounded fetch — the kmeans driver fast
     path's sibling. Pins driver == loop codebooks on the real sample,
     on clean random data, and (non-ANSI conf) on adversarial inputs;
     anomalous rows (null vector/element) must delegate to the loop and
@@ -491,54 +491,54 @@ def test_round_like_spark_vec_bit_exact():
             ), (digits, repr(v), repr(e), repr(float(g)))
 
 
-def test_arrow_probe_matches_row_probe(spark, monkeypatch):
-    """Optimization round 14: the bounded driver probes fetch ONE Arrow
-    batch instead of collect()ed Rows. Pins that the Arrow fast path
-    and the Row walk produce identical models (pq codebooks and kmeans
-    centroids) on clean data with long AND string ids — the Row path is
-    forced by genuinely deleting the toArrow API (round 15 fix: the r14
-    version patched the abstract DataFrame parent, which the live
-    classic subclass's own toArrow shadows — the Row branch never
-    actually ran; deleting the attribute from every defining class in
-    the MRO makes hasattr(df, 'toArrow') False, the real pre-4.0
-    condition)."""
+def test_float32_vectors_take_arrow_path_and_match_loop(spark, monkeypatch):
+    """array<float> vectors (the embeddings table's type) widen exactly
+    to float64 in the bounded Arrow fetch, so kmeans_fit and pq_fit
+    build the driver replay's matrix — spied here — and return exactly
+    the distributed loop's model (driver_threshold=0), with long AND
+    string ids."""
     import random
 
+    import numpy as np
+
+    from ds_caselaw_ingester_spark.operators import similarity as sim
     from ds_caselaw_ingester_spark.operators.pq import pq_fit
-    from ds_caselaw_ingester_spark.operators.similarity import kmeans_fit
+
+    built = []
+    real = sim._arrow_clean_matrix
+
+    def _spy(*a, **kw):
+        V = real(*a, **kw)
+        built.append(isinstance(V, np.ndarray))
+        return V
+
+    monkeypatch.setattr(sim, "_arrow_clean_matrix", _spy)
 
     rng = random.Random(17)
     dim = 8
-    rows = [(i, [round(rng.uniform(-1, 1), 3) for _ in range(dim)])
-            for i in range(150)]
-    srows = [(f"id-{i:04d}", v) for i, v in rows]
-    df_l = spark.createDataFrame(rows, "id long, v array<double>")
-    df_s = spark.createDataFrame(srows, "id string, v array<double>")
-
-    def via_rows(fn, df, **kw):
-        for klass in type(df).__mro__:
-            if "toArrow" in vars(klass):
-                monkeypatch.delattr(klass, "toArrow")
-        try:
-            return fn(df, "v", "id", **kw)
-        finally:
-            monkeypatch.undo()
-
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(150)]
+    df_l = spark.createDataFrame(rows, "id long, v array<float>")
+    df_s = spark.createDataFrame(
+        [(f"id-{i:04d}", v) for i, v in rows], "id string, v array<float>"
+    )
     for df in (df_l, df_s):
-        kw = dict(m=4, k=5, max_iter=3, round_centroids=6,
-                  driver_threshold=1000)
-        assert pq_fit(df, "v", "id", **kw) == via_rows(pq_fit, df, **kw)
-        kw = dict(k=5, max_iter=3, round_centroids=6, driver_threshold=1000)
-        assert kmeans_fit(df, "v", "id", **kw) == via_rows(
-            kmeans_fit, df, **kw
+        built.clear()
+        kw = dict(m=4, k=5, max_iter=3, round_centroids=6)
+        assert pq_fit(df, "v", "id", **kw) == pq_fit(
+            df, "v", "id", driver_threshold=0, **kw
         )
+        kw = dict(k=5, max_iter=3, round_centroids=6)
+        assert sim.kmeans_fit(df, "v", "id", **kw) == sim.kmeans_fit(
+            df, "v", "id", driver_threshold=0, **kw
+        )
+        assert built == [True, True]
 
 
 def test_nul_string_ids_decline_arrow_probe(spark):
     """Review-found hazard: a trailing-NUL id would flip the Arrow
     probe's init order (numpy '<U' compares "a\\x00" == "a"). Pins that
-    NUL-bearing ids keep the Row walk and the driver path still equals
-    the distributed loop for both pq and kmeans."""
+    NUL-bearing ids take the distributed loop under the default
+    threshold, so the result equals the loop's for both pq and kmeans."""
     import random
 
     from ds_caselaw_ingester_spark.operators.pq import pq_fit

@@ -149,7 +149,7 @@ def test_incremental_matches_full_recompute_restricted_to_new(spark, sf_dir):
 
 def test_kmeans_driver_and_loop_paths_agree(spark, sf_dir):
     """Optimization round 14: bounded training sets run the whole Lloyd
-    loop driver-side from one collect (similarity.KMEANS_DRIVER_ROWS_MAX)
+    loop driver-side from one bounded fetch (similarity.KMEANS_DRIVER_ROWS_MAX)
     — 1 job instead of 1 + max_iter, identical centroids. Pins driver ==
     loop on the real embeddings, on random data (clean, ANSI session),
     and — under a non-ANSI conf, where division by zero yields NULL

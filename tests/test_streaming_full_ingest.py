@@ -265,7 +265,7 @@ def test_epoch_caches_are_sized_released_and_stream_scoped(
     sink_root = tmp_path / "sinks"
 
     jsc = spark.sparkContext._jsc
-    cached_before = jsc.getPersistentRDDs().size()
+    cached_before = set(jsc.getPersistentRDDs().keys())
     conf_before = spark.conf.get(CACHED_PLAN_REPARTITION)
     partitions_before = spark.conf.get("spark.sql.shuffle.partitions")
     real_set = spark.conf.set
@@ -287,7 +287,11 @@ def test_epoch_caches_are_sized_released_and_stream_scoped(
         spark.conf.set("spark.sql.shuffle.partitions", partitions_before)
 
     assert spark.conf.get(CACHED_PLAN_REPARTITION) == conf_before
-    assert jsc.getPersistentRDDs().size() == cached_before
+    # ids, not a count: localCheckpoint RDDs left by earlier tests are
+    # released by Spark's context cleaner at whatever JVM GC comes next,
+    # which can shrink the count mid-stream. No RDD persisted during the
+    # stream may survive it.
+    assert set(jsc.getPersistentRDDs().keys()) <= cached_before
     files = {
         t: [
             n
