@@ -38,11 +38,28 @@ choices encoded here:
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def local_path(path: str) -> str:
+    """`path` without its `file:` scheme: the local directory the
+    rename-swap protocols list, rename and delete."""
+    return path.removeprefix("file:")
+
+
+def write_json_atomic(path: str, obj, **dump_kw) -> None:
+    """Write `obj` as JSON to `path` through `path.tmp` and os.replace,
+    so a reader sees the old file or the new one, never a torn one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, **dump_kw)
+    os.replace(tmp, path)
 
 
 def dir_stats(path: str) -> "tuple[int, int]":
@@ -70,7 +87,9 @@ def recover_swap(local: str, tmp: str, old: str, exclusive: bool = False) -> Non
     write-tmp → rename-local-to-old → rename-tmp-in → drop-old swap
     protocol, before doing anything destructive. Invariant: never
     delete `old` unless `local` holds a complete table that SUPERSEDES
-    it. Shared by compaction, the flat upsert sink, and the SCD2 sink
+    it. Shared by compact_parquet_dir, migrate_to_partitioned, the
+    drift and HLL sketch sinks and the SemDeDup index retrain; the
+    bucketed sinks heal per bucket with recover_buckets instead.
     (ADVICE r6: the sinks previously rmtree'd `old` unconditionally,
     so a crash between the two renames destroyed the only copy on the
     next micro-batch).
@@ -110,10 +129,6 @@ def recover_swap(local: str, tmp: str, old: str, exclusive: bool = False) -> Non
     )
 
 
-# compaction's own entry point keeps its historical name
-_recover = recover_swap
-
-
 def read_parquet_or_none(spark: SparkSession, path: str):
     """Read a parquet table, or return None ONLY when the path does not
     exist (the legitimate first-batch case). Any other read failure —
@@ -146,7 +161,7 @@ def commit_swap(local: str, tmp: "str | None" = None, old: "str | None" = None) 
 
 def recover_buckets(local: str, prefix: str = "kb=") -> None:
     """Per-partition-directory recovery for bucketed layouts
-    (operators/upsert.py upsert_parquet_table_bucketed): a crash
+    (merge_touched_buckets, the curation and SemDeDup indexes): a crash
     between rename(dst, old) and rename(src, dst) leaves partition
     `kb=N` only in `kb=N.old`. A bucket dir is only ever created by an
     atomic rename from a fully-written tmp, so: dst missing -> restore
@@ -174,9 +189,9 @@ def recover_buckets(local: str, prefix: str = "kb=") -> None:
 def swap_partition_dirs(local: str, tmp: str, touched: "list", col: str) -> None:
     """Swap ONLY the `col=<value>` partition directories listed in
     `touched` from a fully-materialized `tmp` layout into `local` —
-    the touched-partition half of the bucketed-upsert protocol
-    (operators/upsert.py), shared by every sink that bounds its
-    rewrite by the increment instead of rewriting the whole table.
+    the touched-partition half of merge_touched_buckets, shared by
+    every sink that bounds its rewrite by the increment instead of
+    rewriting the whole table.
 
     Each touched partition swaps via rename(dst, dst.old) →
     rename(src, dst) → drop dst.old; every crash point is reconciled
@@ -225,8 +240,6 @@ def ensure_partitioned_layout(
        under. Pass n_buckets=None for layouts whose partition values
        are data-derived (SemDeDup cells) rather than a modulus.
     """
-    import json
-
     # a half-finished migration must be completed (rerun
     # migrate_to_partitioned — its recover_swap reconciles every crash
     # point) before any sink touches the path: proceeding could
@@ -288,10 +301,7 @@ def ensure_partitioned_layout(
             f"different modulus than this run's {col}={n_buckets}; "
             "rebuild it under the new bucket count instead."
         )
-    tmp = sidecar + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"col": col, "n_buckets": n_buckets}, f)
-    os.replace(tmp, sidecar)
+    pin_partitioned_layout(local, col, n_buckets)
 
 
 def pin_partitioned_layout(local: str, col: str, n_buckets: int) -> None:
@@ -299,14 +309,9 @@ def pin_partitioned_layout(local: str, col: str, n_buckets: int) -> None:
     called by the bucketed sinks right after a successful swap (never
     before: pinning pre-write would bless a count for a table an
     aborted batch never created). Idempotent; atomic rename."""
-    import json
-
     sidecar = local + ".layout.json"
-    tmp = sidecar + ".tmp"
     os.makedirs(os.path.dirname(os.path.abspath(sidecar)), exist_ok=True)
-    with open(tmp, "w") as f:
-        json.dump({"col": col, "n_buckets": n_buckets}, f)
-    os.replace(tmp, sidecar)
+    write_json_atomic(sidecar, {"col": col, "n_buckets": n_buckets})
 
 
 def partition_file_snapshot(local: str, touched: "list", col: str) -> dict:
@@ -327,6 +332,83 @@ def partition_file_snapshot(local: str, touched: "list", col: str) -> dict:
     return out
 
 
+def merge_touched_buckets(
+    updates: DataFrame,
+    path: str,
+    key: str,
+    n_buckets: int,
+    merge: "Callable[[DataFrame | None, DataFrame], DataFrame]",
+) -> None:
+    """The touched-bucket MERGE of the keyed sinks (the documents
+    upsert, the SCD2 history): the table at `path` is laid out as
+    ``kb=<pmod(xxhash64(key), n_buckets)>`` partitions, and a batch
+    reads, merges and swaps only the buckets its keys hash into —
+    O(touched buckets) per batch, not O(table).
+
+    `merge(current, updates)` is the caller's row semantics. `current`
+    is the touched buckets of the table (None before the first write),
+    `updates` the batch; neither carries `kb`. It returns the new
+    contents of those buckets, and must be per-key: a key's output
+    rows depend only on that key's input rows, so restricting the
+    table to the touched buckets cannot change any result.
+
+    Protocol, in order:
+    1. refuse a flat table and a changed n_buckets
+       (ensure_partitioned_layout);
+    2. restore buckets a crash left only in `kb=N.old`, before the
+       read (recover_buckets) — the merge must never bootstrap a
+       bucket whose full copy sits in the backup;
+    3. collect the touched buckets (a driver list of at most
+       n_buckets values) and snapshot their files;
+    4. materialize the merge into `<table>.tmp`, one file per bucket
+       (not one per task × bucket — the fragmentation cliff in
+       docs/SCALE.md); the plan reads the table, so it is never
+       overwritten in place;
+    5. single-writer contract, DETECTED not assumed: if a touched
+       bucket's files changed since the snapshot, another writer ran
+       and swapping would drop its rows — abort with the table
+       untouched. (A window between the check and the renames remains
+       — plain parquet has no commit log; Delta/Iceberg optimistic
+       commits are the production substitute.)
+    6. swap the touched buckets (swap_partition_dirs), then pin the
+       modulus the table now verifiably holds (pin_partitioned_layout).
+    """
+    spark = updates.sparkSession
+    local = local_path(path)
+    ensure_partitioned_layout(local, "kb", n_buckets)
+    recover_buckets(local)
+    kb = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+    touched = sorted(
+        r.kb for r in updates.select(kb.alias("kb")).distinct().collect()
+    )
+    has_table = os.path.isdir(local) and any(
+        e.startswith("kb=") for e in os.listdir(local)
+    )
+    snapshot = partition_file_snapshot(local, touched, "kb")
+    current = (
+        spark.read.parquet(local).where(F.col("kb").isin(touched)).drop("kb")
+        if has_table
+        else None
+    )
+    tmp = local + ".tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    merge(current, updates).withColumn("kb", kb).repartition(
+        F.col("kb")
+    ).write.mode("overwrite").partitionBy("kb").parquet(tmp)
+    after = partition_file_snapshot(local, touched, "kb")
+    changed = [b for b in touched if after[b] != snapshot[b]]
+    if changed:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise RuntimeError(
+            f"bucket(s) {changed} of {local} were modified by another "
+            "writer during the merge; aborting without swapping "
+            "(single-writer contract — serialize batches or use a "
+            "transactional table format)."
+        )
+    swap_partition_dirs(local, tmp, touched, "kb")
+    pin_partitioned_layout(local, "kb", n_buckets)
+
+
 def compact_parquet_dir(
     spark: SparkSession,
     path: str,
@@ -339,9 +421,9 @@ def compact_parquet_dir(
     without it compaction is a shuffle-free coalesce). Raises if the
     directory is hive-partitioned or if a concurrent writer modified it
     during the rewrite (original left untouched in both cases)."""
-    local = path[len("file:") :] if path.startswith("file:") else path
+    local = local_path(path)
     tmp, old = local + ".compact-tmp", local + ".compact-old"
-    _recover(local, tmp, old)
+    recover_swap(local, tmp, old)
     partition_dirs = [
         e
         for e in os.listdir(local)
@@ -415,7 +497,7 @@ def migrate_to_partitioned(
     stale, and every crash point reconciles on the next run. The
     migrated row count is read from the rewrite's parquet footers —
     the source is scanned exactly once."""
-    local = path[len("file:") :] if path.startswith("file:") else path
+    local = local_path(path)
     tmp, old = local + ".migrate-tmp", local + ".migrate-old"
     recover_swap(local, tmp, old, exclusive=True)
     df = spark.read.parquet(path)

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ds_caselaw_ingester_spark.operators.compaction import local_path, write_json_atomic
+
 
 def shuffled_shards(df: DataFrame, id_col: str, num_shards: int) -> DataFrame:
     """The exported frame: `_shuffle_key` = md5 of the id, `_shard` =
@@ -125,7 +127,6 @@ def write_manifest(spark, out_dir: str) -> dict:
     """Compute and persist `_manifest.json` beside the shards (the
     underscore prefix keeps parquet readers away from it). Returns the
     manifest dict: {num_shards, total_rows, shards: [...]}."""
-    import json
     import os
 
     shards = shard_manifest(spark, out_dir)
@@ -134,11 +135,10 @@ def write_manifest(spark, out_dir: str) -> dict:
         "total_rows": sum(s["rows"] for s in shards),
         "shards": shards,
     }
-    local = out_dir[len("file:") :] if out_dir.startswith("file:") else out_dir
-    tmp = os.path.join(local, "_manifest.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(local, "_manifest.json"))
+    write_json_atomic(
+        os.path.join(local_path(out_dir), "_manifest.json"),
+        manifest, indent=1, sort_keys=True,
+    )
     return manifest
 
 
@@ -152,7 +152,7 @@ def verify_export(spark, out_dir: str) -> dict:
     import json
     import os
 
-    local = out_dir[len("file:") :] if out_dir.startswith("file:") else out_dir
+    local = local_path(out_dir)
     path = os.path.join(local, "_manifest.json")
     if not os.path.exists(path):
         raise ValueError(f"no _manifest.json under {out_dir}")

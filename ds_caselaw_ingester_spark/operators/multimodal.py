@@ -135,20 +135,6 @@ def decode_image_stub(data: bytes) -> tuple[int, int | None, int, int, int]:
     return n, first, width, height, channels
 
 
-def resize_image_real(data: bytes, width: int, height: int) -> bytes:
-    """Where PIL Image.resize would go (no codec libs in this container)."""
-    raise NotImplementedError("image codecs not available in this environment")
-
-
-def resize_image_stub(data: bytes, width: int, height: int) -> tuple[int, int, int]:
-    """Deterministic fake 'resize': output byte length scales with the
-    requested area, derived purely from input bytes."""
-    n = len(data)
-    out_len = (n * width * height) % 65536
-    checksum = (sum(data[:64]) + width * 7 + height * 13) % 997 if n else 0
-    return out_len, width * height, checksum
-
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),

@@ -10,7 +10,7 @@ quarantine branch (per-record containment, lambda_function.py:131-136).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 ORIGINATOR_TDR = "TDR"
@@ -209,10 +209,3 @@ def annotation_message(is_tdr: Column, exists_in_db: Column) -> Column:
     verb = F.when(exists_in_db, F.lit("Updated")).otherwise(F.lit("New"))
     return F.concat(verb, F.lit(" document "), tail)
 
-
-def split_quarantine(df: DataFrame, error_predicate: Column) -> tuple[DataFrame, DataFrame]:
-    """C6 (lambda_function.py:131-136): per-record error containment as a
-    success/quarantine split. Both sides share the parent plan; at scale
-    persist the parent (or let AQE reuse the exchange) rather than
-    recomputing it twice."""
-    return df.where(~error_predicate), df.where(error_predicate)

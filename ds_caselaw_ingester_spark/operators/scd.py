@@ -67,8 +67,8 @@ def scd2_apply(
     intervals (unreachable by scd2_as_of) and resurrect stale payloads
     as current, silently. validate=True also checks this (one max()
     over the current slice); the streaming sink enforces it cheaper by
-    clamping (streaming/scd_sink.py apply_scd2_batch) since it already
-    collects the max for event-time monotonicity. Batch callers
+    clamping (streaming/scd_sink.py apply_scd2_batch_bucketed) since it
+    already collects the max for event-time monotonicity. Batch callers
     replaying history must apply batches in timestamp order."""
     ts = F.to_timestamp(F.lit(batch_ts))
     if validate:

@@ -15,9 +15,9 @@ is what makes streaming replay (§2.7 at-least-once redelivery) safe, the
 Spark analog of the reference re-running a whole ingest against the same
 uri on SQS redelivery.
 
-Scale: the join shuffles on `uri` only; both sides should be bucketed/
-pre-partitioned on the key at 100 TB so the MERGE is co-located. The
-error branch (C3: exists & error_on_existing_document) is carried as a
+Scale: the join shuffles on `uri` only, and the sink reads and rewrites
+only the key-hash buckets a batch touches (upsert_parquet_table_bucketed).
+The error branch (C3: exists & error_on_existing_document) is carried as a
 routing column and split out BEFORE the merge, preserving per-record
 containment.
 """
@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ds_caselaw_ingester_spark.operators.compaction import merge_touched_buckets
 
 
 def merge_documents(target: DataFrame, updates: DataFrame, key: str = "uri") -> DataFrame:
@@ -72,229 +74,24 @@ def merge_documents(target: DataFrame, updates: DataFrame, key: str = "uri") -> 
     return joined.select(*out_cols)
 
 
-def upsert_parquet_table(
-    spark_df: DataFrame, path: str, key: str = "uri"
-) -> None:
-    """foreachBatch-compatible upsert into a parquet directory: read the
-    current table (if any), merge, write to a temp dir, swap. Single-writer
-    semantics — the driver-side orchestration of K13 guarantees write order.
-
-    Crash-safety: the merged plan READS from `path`, so overwriting `path`
-    in place would destroy the input of a plan that might still recompute
-    (cache eviction). Instead the merge is fully materialized into
-    `path + ".tmp"` while the current table stays untouched, and only then
-    swapped in via two renames. A crash mid-write leaves the current table
-    intact; a crash between the renames leaves a recoverable `.old`. On a
-    real object store this maps to write-to-staging + catalog pointer flip
-    (or a Delta/Iceberg MERGE, which is the production substitute).
-    """
-    from ds_caselaw_ingester_spark.operators.compaction import (
-        commit_swap,
-        read_parquet_or_none,
-        recover_swap,
-    )
-
-    spark = spark_df.sparkSession
-    local = path[len("file:") :] if path.startswith("file:") else path
-    # Reconcile a prior crash BEFORE reading: a crash between the two
-    # renames below leaves the table only in .old; without recovery the
-    # next batch would read a missing path, bootstrap from the batch
-    # alone, and delete the only full copy. exclusive=True — this sink
-    # is the single writer of `local` (K13 driver-side ordering).
-    recover_swap(local, local + ".tmp", local + ".old", exclusive=True)
-    current = read_parquet_or_none(spark, path)
-    if current is not None:
-        merged = merge_documents(current, spark_df, key=key).drop("op")
-    else:
-        # ONLY the first-batch case falls through to a plain write
-        merged = spark_df
-    merged.write.mode("overwrite").parquet(local + ".tmp")
-    commit_swap(local)
-
-
 def upsert_parquet_table_bucketed(
     spark_df: DataFrame, path: str, key: str = "uri", n_buckets: int = 64
 ) -> None:
-    """Partition-pruned MERGE: the table is laid out as
-    ``kb=<pmod(xxhash64(key), n_buckets)>`` partitions, and a batch only
-    reads, merges, and swaps the buckets its keys actually touch.
-
-    This is the scale story the flat upsert lacks: the flat variant
-    re-reads and rewrites the WHOLE table every batch — O(table) per
-    batch, unusable once the accumulated table dwarfs the batch. Here
-    cost is O(touched buckets) ≈ O(batch × table/n_buckets): with keys
-    hash-distributed, a small batch touches few buckets and each bucket
-    is table/n_buckets small. Pick n_buckets so a bucket fits an
-    executor's memory at the target table size. (On a real deployment
-    Delta/Iceberg MERGE subsumes this; the layout below is the same idea
-    — rewrite only matching files — expressed with plain parquet.)
-
-    Crash-safety mirrors the flat variant: the merge fully materializes
-    into a temp dir (reads never race their own overwrite), then each
-    touched bucket is swapped via rename with an `.old` fallback, and
-    every batch first restores any bucket a prior crash left only in
-    its `.old` — before the read, so the merge never bootstraps a
-    bucket whose full copy is sitting in the backup.
-
-    Single-writer contract, DETECTED not assumed (same discipline as
-    compact_parquet_dir): the touched buckets' file lists are
-    snapshotted at read time and re-checked after the merge
-    materializes; if a concurrent writer changed any touched bucket in
-    between, the batch aborts loudly with the table untouched — the
-    alternative is a last-writer-wins swap that silently drops the
-    other writer's rows. (A window between the check and the renames
-    remains — plain parquet has no commit log; Delta/Iceberg
-    optimistic commits are the production substitute.)
+    """The documents sink (K1/K2): MERGE `spark_df` into the table at
+    `path` with merge_documents, through the touched-bucket protocol
+    (operators/compaction.py merge_touched_buckets). The table is laid
+    out as ``kb=<pmod(xxhash64(key), n_buckets)>`` partitions, and a
+    batch only reads, merges and swaps the buckets its keys touch: cost
+    O(touched buckets) ≈ O(batch × table/n_buckets). Pick n_buckets so
+    a bucket fits an executor's memory at the target table size. The
+    crash recovery, the concurrent-writer check and the layout guard
+    are the protocol's. (A Delta/Iceberg MERGE is the production
+    substitute — docs/TABLE_FORMATS.md.)
     """
-    import os
-    import shutil
 
-    from ds_caselaw_ingester_spark.operators.compaction import (
-        ensure_partitioned_layout,
-        partition_file_snapshot,
-        pin_partitioned_layout,
-        recover_buckets,
-        swap_partition_dirs,
-    )
+    def merge(current: "DataFrame | None", updates: DataFrame) -> DataFrame:
+        if current is None:
+            return updates
+        return merge_documents(current, updates, key=key).drop("op")
 
-    spark = spark_df.sparkSession
-    local = path[len("file:") :] if path.startswith("file:") else path
-    # refuse a flat table at `path` and a changed n_buckets (both
-    # silently corrupt the MERGE — see ensure_partitioned_layout)
-    ensure_partitioned_layout(local, "kb", n_buckets)
-    # Per-bucket crash recovery BEFORE the read: a crash between the
-    # bucket renames leaves kb=N only in kb=N.old, and reading without
-    # recovery would miss those rows then delete the backup (and any
-    # OTHER reader of this table — e.g. the streaming state lookup —
-    # must run the same recovery, or partition discovery reads kb=N.old
-    # as a partition value; see recover_buckets).
-    recover_buckets(local)
-    upd = spark_df.withColumn(
-        "kb", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    )
-    # bounded by n_buckets — a deliberate, small driver-side list that
-    # becomes the partition-pruning predicate for the read below
-    touched = sorted(r.kb for r in upd.select("kb").distinct().collect())
-    has_table = os.path.isdir(local) and any(
-        e.startswith("kb=") for e in os.listdir(local)
-    )
-    snapshot = partition_file_snapshot(local, touched, "kb")
-    if has_table:
-        current = spark.read.parquet(local).where(F.col("kb").isin(touched))
-        merged = merge_documents(current, upd, key=key).drop("op")
-    else:
-        merged = upd
-    tmp = local + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    # one file per touched bucket, not one per (task × bucket) — the
-    # fragmentation cliff measured in docs/SCALE.md
-    merged.repartition(F.col("kb")).write.mode("overwrite").partitionBy(
-        "kb"
-    ).parquet(tmp)
-    # single-writer violation check: the merge covered exactly the
-    # snapshotted files; a concurrent append/overwrite in any touched
-    # bucket means swapping would drop rows Spark never read. Abort
-    # with the table untouched.
-    after = partition_file_snapshot(local, touched, "kb")
-    changed = [b for b in touched if after[b] != snapshot[b]]
-    if changed:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"upsert_parquet_table_bucketed: bucket(s) {changed} of {local} "
-            "were modified by another writer during the merge; aborting "
-            "without swapping (single-writer contract — serialize batches "
-            "or use a transactional table format)."
-        )
-    swap_partition_dirs(local, tmp, touched, "kb")
-    # record the modulus the table now verifiably holds (after the
-    # swap, never before — see pin_partitioned_layout)
-    pin_partitioned_layout(local, "kb", n_buckets)
-
-
-def upsert_table(
-    spark_df: DataFrame,
-    path: str,
-    key: str = "uri",
-    backend: str = "parquet",
-    n_buckets: "int | None" = None,
-) -> None:
-    """Backend-dispatching upsert (round 14, VERDICT r13 queue #4):
-    `backend="parquet"` (default) keeps the crash-tested rename-swap
-    protocols — flat when n_buckets is None, bucket-pruned otherwise;
-    `backend="delta"` routes the same MERGE semantics through Delta
-    Lake's transaction log when delta-spark is on the classpath.
-
-    The Delta branch is an OPT-IN for deployments that ship the jars
-    (this container does not — docs/TABLE_FORMATS.md records the
-    substitution map); it needs a session built with the Delta
-    extension and catalog:
-
-        spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension
-        spark.sql.catalog.spark_catalog=
-            org.apache.spark.sql.delta.catalog.DeltaSparkCatalog
-
-    Absent the package, the branch refuses with an ImportError naming
-    the remedy rather than silently falling back — a caller asking for
-    a transaction log must not get rename-swap semantics unannounced.
-    """
-    if backend == "parquet":
-        if n_buckets is None:
-            upsert_parquet_table(spark_df, path, key=key)
-        else:
-            upsert_parquet_table_bucketed(
-                spark_df, path, key=key, n_buckets=n_buckets
-            )
-        return
-    if backend != "delta":
-        raise ValueError(
-            f"unknown upsert backend {backend!r}: expected 'parquet' or "
-            "'delta'"
-        )
-    try:
-        from delta.tables import DeltaTable  # noqa: PLC0415
-    except ImportError as exc:
-        raise ImportError(
-            "upsert_table(backend='delta') needs the delta-spark "
-            "package and a session configured with the Delta extension "
-            "(io.delta:delta-spark jars + "
-            "spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension); "
-            "this environment has neither — use the default parquet "
-            "backend, whose rename-swap protocol is the documented "
-            "stand-in (docs/TABLE_FORMATS.md)."
-        ) from exc
-
-    spark = spark_df.sparkSession
-    if not DeltaTable.isDeltaTable(spark, path):
-        # first batch bootstraps the table, version_n=1 on every row
-        # when the merge semantics carry versions downstream
-        df = spark_df
-        if "version_n" not in df.columns:
-            df = df.withColumn("version_n", F.lit(1))
-        df.write.format("delta").save(path)
-        return
-    target = DeltaTable.forPath(spark, path)
-    payload = [c for c in spark_df.columns if c != key]
-    # identical row semantics to merge_documents: matched -> payload
-    # replaced + version bump; not matched -> insert at version 1;
-    # target-only rows untouched (Delta MERGE leaves them by definition,
-    # where the parquet emulation carries them through the full-outer
-    # join) — the op column is a parquet-emulation artifact the log
-    # subsumes (Delta's commit history records the operation)
-    (
-        target.alias("t")
-        .merge(spark_df.alias("u"), f"t.`{key}` = u.`{key}`")
-        .whenMatchedUpdate(
-            set={
-                **{c: F.col(f"u.`{c}`") for c in payload},
-                "version_n": F.col("t.version_n") + F.lit(1),
-            }
-        )
-        .whenNotMatchedInsert(
-            values={
-                key: F.col(f"u.`{key}`"),
-                **{c: F.col(f"u.`{c}`") for c in payload},
-                "version_n": F.lit(1),
-            }
-        )
-        .execute()
-    )
+    merge_touched_buckets(spark_df, path, key, n_buckets, merge)

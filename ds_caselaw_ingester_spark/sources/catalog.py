@@ -203,12 +203,6 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register the tables as temp views for the SQL API path."""
-    for name in names:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition a small input across all cores before an explode-heavy
     stage. A compact parquet file arrives as 1-2 partitions; the

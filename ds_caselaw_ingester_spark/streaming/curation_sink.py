@@ -102,8 +102,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ds_caselaw_ingester_spark.operators.compaction import (
+    local_path,
     recover_buckets,
     swap_partition_dirs,
+    write_json_atomic,
 )
 from ds_caselaw_ingester_spark.operators.curation import (
     SEQ_COL,
@@ -194,10 +196,6 @@ def _gate_pin(
     }
 
 
-def _local(path: str) -> str:
-    return path[len("file:") :] if path.startswith("file:") else path
-
-
 def _bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("band_key")), F.lit(n_buckets)).cast("int")
 
@@ -227,13 +225,6 @@ def _layout_path(local: str) -> str:
 
 def _meta_path(local: str) -> str:
     return local + ".seqmeta.json"
-
-
-def _write_json(path: str, obj: dict) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)
 
 
 def _read_json(path: str) -> "dict | None":
@@ -357,7 +348,7 @@ def _pin_layout(
     payload = {"col": BUCKET_COL, "n_buckets": n_buckets, "key_mode": key_mode}
     if gate is not None:
         payload["gate"] = gate
-    _write_json(_layout_path(local), payload)
+    write_json_atomic(_layout_path(local), payload)
 
 
 def _read_epoch_meta(local: str) -> dict:
@@ -385,7 +376,7 @@ def rebuild_index_meta(spark, index_path: str, key_col: str) -> dict:
     per-epoch kept-doc count (distinct keys — the undersize guard's
     running total). For disaster recovery / migration only — the hot
     path never scans."""
-    local = _local(index_path)
+    local = local_path(index_path)
     meta = {"epochs": {}, "kept": {}}
     if _epoch_values(local):
         rows = (
@@ -400,7 +391,7 @@ def rebuild_index_meta(spark, index_path: str, key_col: str) -> dict:
         )
         meta["epochs"] = {str(r[EPOCH_COL]): r["mx"] for r in rows}
         meta["kept"] = {str(r[EPOCH_COL]): int(r["kept"]) for r in rows}
-    _write_json(_meta_path(local), meta)
+    write_json_atomic(_meta_path(local), meta)
     return meta
 
 
@@ -425,7 +416,7 @@ def _prior_index(
     send the replay into spark.read.parquet over a path with zero data
     files ("Unable to infer schema") and wedge the stream instead of
     converging (ADVICE r8)."""
-    local = _local(index_path)
+    local = local_path(index_path)
     if not touched_buckets or not any(
         e < epoch_id for e in _epoch_values(local)
     ):
@@ -567,7 +558,7 @@ def apply_curation_batch(
     as the SemDeDup sink's fixed quantizer)."""
     if batch.isEmpty():
         return
-    local = _local(index_path)
+    local = local_path(index_path)
     if os.path.exists(local + ".rebuilding"):
         raise RuntimeError(
             f"{local} has an unfinished rebuild (the .rebuilding marker "
@@ -582,7 +573,7 @@ def apply_curation_batch(
     # hide an epoch's chunks in `epoch=<t>.old` until the next
     # maintenance run, with nothing on the hot path healing it)
     recover_buckets(local, prefix=f"{EPOCH_COL}=")
-    recover_buckets(_local(chunks_path), prefix=f"{EPOCH_COL}=")
+    recover_buckets(local_path(chunks_path), prefix=f"{EPOCH_COL}=")
     if isinstance(n_buckets, str):
         if n_buckets != "auto":
             raise ValueError(
@@ -685,7 +676,7 @@ def apply_curation_batch(
     # the max map, so a crashed epoch's re-run overwrites its own entry
     # and the cumulative sum converges whatever the crash order
     meta.setdefault("kept", {})[str(epoch_id)] = kept_new
-    _write_json(_meta_path(local), meta)
+    write_json_atomic(_meta_path(local), meta)
     _pin_layout(local, n_buckets, key_mode, gate)
     # cold-start undersize guard (VERDICT r10 #7, extended to min-key
     # mode in r12): if the sizing rule on what the index now actually
@@ -737,7 +728,7 @@ def apply_curation_batch(
                     # docs (empty epochs are legal); record the zero so
                     # the backfill never re-runs
                     kept_map[e] = found.get(e, 0)
-                _write_json(_meta_path(local), meta)
+                write_json_atomic(_meta_path(local), meta)
                 log.warning(
                     "curation sink: sidecar predates the per-epoch kept "
                     "map for epochs %s — backfilled once from the index "
@@ -797,7 +788,7 @@ def _fold_epochs(spark, path: str, upto_epoch: int) -> "tuple[list[int], int]":
     epoch's existence implies every earlier epoch committed), so
     moving its rows BELOW their original id only widens what an
     `epoch < current` probe has always been entitled to see."""
-    local = _local(path)
+    local = local_path(path)
     if not os.path.isdir(local):
         return [], 0
     recover_buckets(local, prefix=f"{EPOCH_COL}=")
@@ -878,7 +869,7 @@ def compact_index_epochs(spark, index_path: str, upto_epoch: int) -> int:
     maintenance cadence with the stream QUIESCED, not the hot path (it
     reads O(folded epochs) like any compaction). A rebuilt `epoch=-1`
     partition folds toward -1, never upward (see _fold_epochs)."""
-    local = _local(index_path)
+    local = local_path(index_path)
     # a lost sidecar must stay LOUD: folding with a fabricated entry
     # would hand the next batch a non-empty epochs dict, bypass its
     # missing-meta guard, restart seq assignment at 0 over indexed
@@ -916,7 +907,7 @@ def compact_index_epochs(spark, index_path: str, upto_epoch: int) -> int:
     kept_vals = [kept_map.pop(str(e), None) for e in src]
     if kept_vals and all(v is not None for v in kept_vals):
         meta.setdefault("kept", {})[str(target)] = sum(kept_vals)
-    _write_json(_meta_path(local), meta)
+    write_json_atomic(_meta_path(local), meta)
     return len(src)
 
 
@@ -1003,7 +994,7 @@ def rebuild_curation_index(
     to converge) — never an empty index silently adopted as fresh, and
     never a mix of rows gated under two parameter sets (the old epochs
     are dropped before the swapped-in `epoch=-1` becomes visible)."""
-    local = _local(index_path)
+    local = local_path(index_path)
     recover_buckets(local, prefix=f"{EPOCH_COL}=")
     marker = local + ".rebuilding"
     os.makedirs(os.path.dirname(os.path.abspath(local)), exist_ok=True)
@@ -1041,7 +1032,7 @@ def rebuild_curation_index(
     for e in _epoch_values(local):
         shutil.rmtree(os.path.join(local, f"{EPOCH_COL}={e}"), ignore_errors=True)
     if chunks_path is not None:
-        chunks_local = _local(chunks_path)
+        chunks_local = local_path(chunks_path)
         # heal a crashed chunk-compaction swap first: _epoch_values
         # ignores `epoch=<t>.old`, so an unhealed leftover would
         # survive this purge and later be resurrected as OLD-GATE
@@ -1065,7 +1056,7 @@ def rebuild_curation_index(
     ).collect()[0]
     mx = agg["mx"]
     n_rows = new_bands.count()
-    _write_json(
+    write_json_atomic(
         _meta_path(local),
         {"epochs": {"-1": mx}, "kept": {"-1": int(agg["kept"])}},
     )
@@ -1094,7 +1085,7 @@ def migrate_index_to_bucketed(
     epoch directories migrated. `key_col` is the column the sidecar's
     per-epoch max is computed over — the id column for an r8-era
     monotone index (key_mode='id'), SEQ_COL for a seq-keyed one."""
-    local = _local(index_path)
+    local = local_path(index_path)
     recover_buckets(local, prefix=f"{EPOCH_COL}=")
     epochs = _epoch_values(local)
     if not epochs:

@@ -32,6 +32,8 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ds_caselaw_ingester_spark.operators.compaction import local_path
+
 logger = logging.getLogger(__name__)
 
 
@@ -79,11 +81,7 @@ def apply_drift_batch(
     import os
 
     spark = batch.sparkSession
-    local = (
-        counts_path[len("file:") :]
-        if counts_path.startswith("file:")
-        else counts_path
-    )
+    local = local_path(counts_path)
     # reconcile a prior crash BEFORE reading (the shared sink rule:
     # without it, a crash between the two renames strands the table in
     # .old and the next epoch would bootstrap fresh over the only copy)
@@ -146,11 +144,7 @@ def run_drift_monitor(
 
     if score_every <= 0:
         raise ValueError(f"score_every must be positive, got {score_every}")
-    counts_local = (
-        counts_path[len("file:") :]
-        if counts_path.startswith("file:")
-        else counts_path
-    )
+    counts_local = local_path(counts_path)
 
     def _apply(batch: DataFrame, epoch_id: int) -> None:
         apply_drift_batch(batch, counts_path, text_col, epoch_id=epoch_id)

@@ -216,6 +216,7 @@ def run_full_ingest_stream(
     unpersist frees them when the epoch ends.
     """
     from ds_caselaw_ingester_spark.operators.compaction import (
+        local_path,
         read_parquet_or_none,
         recover_buckets,
     )
@@ -225,7 +226,7 @@ def run_full_ingest_stream(
         spark = batch_df.sparkSession
         _size_epoch_caches(batch_df)
         docs_path = f"{sink_root}/documents"
-        recover_buckets(docs_path[len("file:") :] if docs_path.startswith("file:") else docs_path)
+        recover_buckets(local_path(docs_path))
         docs = read_parquet_or_none(spark, docs_path)
         # ONLY the first-batch case (no documents table yet) runs with
         # empty state; read_parquet_or_none propagates any other read

@@ -1,11 +1,11 @@
 """Streaming SCD2 sink: an audit-preserving history table maintained
 from a change feed via foreachBatch.
 
-The in-place streaming upsert (pipeline.py:run_ingest_stream) keeps
-only the latest state; this sink keeps every state with its validity
-interval (operators/scd.py), turning the message stream into a
-time-travelable dimension — "what did this document look like when the
-model was trained" is a filter, not a forensic reconstruction.
+The documents sink (operators/upsert.py) keeps only the latest state;
+this sink keeps every state with its validity interval
+(operators/scd.py), turning the message stream into a time-travelable
+dimension — "what did this document look like when the model was
+trained" is a filter, not a forensic reconstruction.
 
 Batch timestamping is EVENT-time: each micro-batch applies at the max
 event timestamp it contains, so the history's validity intervals are a
@@ -14,26 +14,29 @@ backfill replay IN THE SAME BATCH ORDER produces the identical table
 (the same determinism rule the rest of the engine follows). An
 out-of-order batch (max event time at or behind the history's newest
 effective_from) is clamped forward by a microsecond rather than
-writing inverted intervals — see apply_scd2_batch. Within a batch, a
-key's rows collapse to the latest event (ts desc, then a stable
-tie-break) before the merge, since SCD2 records one state per key per
-apply.
+writing inverted intervals — see apply_scd2_batch_bucketed. Within a
+batch, a key's rows collapse to the latest event (ts desc, then a
+stable tie-break) before the merge, since SCD2 records one state per
+key per apply.
 
-Crash-safety reuses the upsert sink's discipline: the merge
-materializes into a temp dir (the plan reads the current table, so an
-in-place overwrite would race its own input), then swaps via renames;
-checkpointed offsets + the event-time stamping make redelivered
-batches converge instead of double-applying.
+Crash-safety, the layout guard and the concurrent-writer check are the
+documents sink's: both run the touched-bucket MERGE
+(operators/compaction.py merge_touched_buckets). Checkpointed offsets +
+the event-time stamping make redelivered batches converge instead of
+double-applying.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
+import datetime as dt
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ds_caselaw_ingester_spark.operators.compaction import (
+    local_path,
+    merge_touched_buckets,
+)
 from ds_caselaw_ingester_spark.operators.scd import scd2_apply
 
 
@@ -48,69 +51,6 @@ def _latest_per_key(batch: DataFrame, key: str, ts_col: str) -> DataFrame:
     )
 
 
-def apply_scd2_batch(
-    batch: DataFrame,
-    path: str,
-    key: str,
-    payload_cols: "list[str]",
-    ts_col: str = "event_time",
-) -> None:
-    """One micro-batch into the history table at `path` (parquet,
-    tmp-dir + rename swap). Empty batches are a no-op."""
-    import datetime as dt
-
-    from ds_caselaw_ingester_spark.operators.compaction import (
-        commit_swap,
-        read_parquet_or_none,
-        recover_swap,
-    )
-
-    spark = batch.sparkSession
-    local = path[len("file:") :] if path.startswith("file:") else path
-    # Reconcile a prior crash BEFORE reading history: without this, a
-    # crash between the two renames below left the table only in .old,
-    # and the next micro-batch read a missing path, bootstrapped fresh
-    # history, and rmtree'd the only copy (ADVICE r6). exclusive=True:
-    # this checkpointed sink is the sole writer of `local`.
-    recover_swap(local, local + ".tmp", local + ".old", exclusive=True)
-    # persist: the batch plan is read twice (max event time, then the
-    # per-key latest rows feeding the merge write) — without the cache
-    # every trigger pays the batch computation twice
-    batch = batch.persist()
-    first = batch.select(F.max(F.col(ts_col)).alias("m")).collect()[0]["m"]
-    if first is None:
-        batch.unpersist()
-        return
-    updates = _latest_per_key(batch, key, ts_col).select(key, *payload_cols)
-    history = read_parquet_or_none(spark, path)
-    if history is not None:
-        # history is also read twice (newest effective_from, then the
-        # merge); cache it for the life of this apply
-        history = history.persist()
-    # Monotonicity clamp: a late/out-of-order micro-batch whose max
-    # event time is <= the history's newest effective_from would write
-    # INVERTED or zero-width validity intervals (a closed row
-    # [10:05, 10:02) is unreachable by scd2_as_of, and its successor
-    # silently backdates). History time never goes backward: the apply
-    # timestamp is max(batch event time, newest effective_from + 1µs).
-    # Full microsecond precision is kept for the same reason — two
-    # batches inside one second must not collapse to zero-width rows.
-    batch_time = first
-    if history is not None:
-        newest = history.select(F.max("effective_from").alias("m")).collect()[0]["m"]
-        if newest is not None and batch_time <= newest:
-            batch_time = newest + dt.timedelta(microseconds=1)
-    batch_ts = batch_time.strftime("%Y-%m-%d %H:%M:%S.%f")
-    merged = scd2_apply(history, updates, key, payload_cols, batch_ts)
-    try:
-        merged.write.mode("overwrite").parquet(local + ".tmp")
-    finally:
-        batch.unpersist()
-        if history is not None:
-            history.unpersist()
-    commit_swap(local)
-
-
 def apply_scd2_batch_bucketed(
     batch: DataFrame,
     path: str,
@@ -121,82 +61,54 @@ def apply_scd2_batch_bucketed(
 ) -> None:
     """One micro-batch into a history table laid out as
     ``kb=<pmod(xxhash64(key), n_buckets)>`` partitions, rewriting ONLY
-    the buckets the batch's keys hash into — the same touched-partition
-    protocol as the bucketed upsert and the SemDeDup cell index.
+    the buckets the batch's keys hash into (merge_touched_buckets).
+    SCD2's apply is per-key independent (the full-outer join and the
+    closed-row pass-through both key on `key`), so the closed past of
+    untouched keys is never re-serialized. Empty batches are a no-op.
 
-    The flat apply_scd2_batch rewrites the WHOLE history every batch —
-    O(history) write amplification on a table that grows forever (the
-    closed rows never change again but are re-serialized every epoch).
-    Here the write is O(touched buckets); SCD2's apply is per-key
-    independent (the full-outer join and the closed-row pass-through
-    both key on `key`), so restricting history to the touched buckets
-    changes nothing about the result on those keys and cannot touch
-    any other key.
-
-    The one global read that remains is the event-time monotonicity
-    clamp: the newest effective_from is a max over ALL buckets. That
-    scan is column-pruned to one timestamp column — footer + a single
-    column per bucket, not the payload bytes that dominate the table.
+    The one global read is the event-time monotonicity clamp: a late
+    batch whose max event time is <= the history's newest
+    effective_from would write INVERTED or zero-width validity
+    intervals (a closed row [10:05, 10:02) is unreachable by
+    scd2_as_of, and its successor silently backdates). History time
+    never goes backward: the apply timestamp is max(batch event time,
+    newest effective_from + 1µs), at full microsecond precision so two
+    batches inside one second cannot collapse to zero-width rows. The
+    newest effective_from is a max over ALL buckets, column-pruned to
+    that one timestamp column.
     """
-    import datetime as dt
-
-    from ds_caselaw_ingester_spark.operators.compaction import (
-        ensure_partitioned_layout,
-        pin_partitioned_layout,
-        recover_buckets,
-        swap_partition_dirs,
-    )
-
     spark = batch.sparkSession
-    local = path[len("file:") :] if path.startswith("file:") else path
-    # refuse a flat history (the flat sink's layout) and a changed
-    # n_buckets — both silently corrupt: the flat table would be
-    # bootstrapped over, and a re-hashed key misses its own history
-    ensure_partitioned_layout(local, "kb", n_buckets)
-    recover_buckets(local)
+    # read twice: the max event time, then the per-key latest rows
     batch = batch.persist()
-    first = batch.select(F.max(F.col(ts_col)).alias("m")).collect()[0]["m"]
-    if first is None:
-        batch.unpersist()
-        return
-    kb = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    updates = (
-        _latest_per_key(batch, key, ts_col)
-        .select(key, *payload_cols)
-        .withColumn("kb", kb)
-        .persist()  # read twice: touched-bucket collect + the merge
-    )
-    touched = sorted(r.kb for r in updates.select("kb").distinct().collect())
-    has_table = os.path.isdir(local) and any(
-        e.startswith("kb=") for e in os.listdir(local)
-    )
-    batch_time = first
-    history = None
-    if has_table:
-        full = spark.read.parquet(local)
-        # monotonicity clamp (see apply_scd2_batch): global max, but
-        # column-pruned — only effective_from is read
-        newest = full.select(F.max("effective_from").alias("m")).collect()[0]["m"]
-        if newest is not None and batch_time <= newest:
-            batch_time = newest + dt.timedelta(microseconds=1)
-        history = full.where(F.col("kb").isin(touched)).drop("kb").persist()
-    batch_ts = batch_time.strftime("%Y-%m-%d %H:%M:%S.%f")
-    merged = scd2_apply(history, updates.drop("kb"), key, payload_cols, batch_ts)
-    tmp = local + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
+    cached = [batch]
     try:
-        # one file per touched bucket, not one per (task × bucket) —
-        # the fragmentation cliff measured in docs/SCALE.md
-        merged.withColumn("kb", kb).repartition(F.col("kb")).write.mode(
-            "overwrite"
-        ).partitionBy("kb").parquet(tmp)
+        first = batch.select(F.max(F.col(ts_col)).alias("m")).collect()[0]["m"]
+        if first is None:
+            return
+        # read twice: the touched-bucket collect, then the merge
+        updates = _latest_per_key(batch, key, ts_col).select(key, *payload_cols).persist()
+        cached.append(updates)
+
+        def merge(history: "DataFrame | None", upd: DataFrame) -> DataFrame:
+            batch_time = first
+            if history is not None:
+                newest = (
+                    spark.read.parquet(local_path(path))
+                    .select(F.max("effective_from").alias("m"))
+                    .collect()[0]["m"]
+                )
+                if newest is not None and batch_time <= newest:
+                    batch_time = newest + dt.timedelta(microseconds=1)
+                # scd2_apply reads it twice: the closed and current slices
+                history = history.persist()
+                cached.append(history)
+            batch_ts = batch_time.strftime("%Y-%m-%d %H:%M:%S.%f")
+            return scd2_apply(history, upd, key, payload_cols, batch_ts)
+
+        merge_touched_buckets(updates, path, key, n_buckets, merge)
     finally:
-        batch.unpersist()
-        updates.unpersist()
-        if history is not None:
-            history.unpersist()
-    swap_partition_dirs(local, tmp, touched, "kb")
-    pin_partitioned_layout(local, "kb", n_buckets)
+        for df in cached:
+            df.unpersist()
 
 
 def run_scd2_stream(
@@ -206,22 +118,15 @@ def run_scd2_stream(
     key: str,
     payload_cols: "list[str]",
     ts_col: str = "event_time",
-    n_buckets: "int | None" = None,
+    n_buckets: int = 64,
 ):
-    """Materialize the change feed as an SCD2 history table.
-
-    n_buckets=None keeps the flat single-directory layout (rewritten
-    whole each batch — fine for small state); an int lays the history
-    out bucketed by key hash and bounds each batch's rewrite to the
-    touched buckets (the 100 TB configuration)."""
+    """Materialize the change feed as an SCD2 history table, bucketed by
+    key hash (apply_scd2_batch_bucketed)."""
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if n_buckets is None:
-            apply_scd2_batch(batch_df, table_path, key, payload_cols, ts_col)
-        else:
-            apply_scd2_batch_bucketed(
-                batch_df, table_path, key, payload_cols, ts_col, n_buckets
-            )
+        apply_scd2_batch_bucketed(
+            batch_df, table_path, key, payload_cols, ts_col, n_buckets
+        )
 
     return (
         updates.writeStream.foreachBatch(_process)

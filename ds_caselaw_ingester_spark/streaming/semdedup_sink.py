@@ -57,8 +57,10 @@ from pyspark.sql import functions as F
 
 from ds_caselaw_ingester_spark.operators.compaction import (
     ensure_partitioned_layout,
+    local_path,
     recover_buckets,
     swap_partition_dirs,
+    write_json_atomic,
 )
 from ds_caselaw_ingester_spark.operators.semdedup import (
     semantic_dedup_incremental,
@@ -99,10 +101,6 @@ _QUANTIZER_FILE = "_quantizer.json"
 _PCA_FILE = "_pca.json"
 
 
-def _local(path: str) -> str:
-    return path[len("file:") :] if path.startswith("file:") else path
-
-
 def _load_quantizer(local: str) -> "list | None":
     import json
 
@@ -111,18 +109,6 @@ def _load_quantizer(local: str) -> "list | None":
             with open(p) as f:
                 return json.load(f)
     return None
-
-
-def _quantizer_json(cents: "list") -> str:
-    import json
-
-    return json.dumps(
-        [
-            {"centroid_id": int(c["centroid_id"]),
-             "cvec": [float(x) for x in c["cvec"]]}
-            for c in cents
-        ]
-    )
 
 
 def _pca_fingerprint(model: dict) -> str:
@@ -170,10 +156,7 @@ def _check_pca_pin(local: str, pca_model: "dict | None") -> None:
                 "index from projected vectors first."
             )
         os.makedirs(local, exist_ok=True)
-        tmp = pin_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"md5": fp, "k": k}, f)
-        os.replace(tmp, pin_path)
+        write_json_atomic(pin_path, {"md5": fp, "k": k})
     elif pinned["md5"] != fp:
         raise ValueError(
             f"{local} is pinned to PCA fingerprint {pinned['md5']} "
@@ -189,11 +172,13 @@ def _save_quantizer(local: str, cents: "list") -> None:
     retraining on a later batch would silently make every indexed cell
     incomparable."""
     os.makedirs(local, exist_ok=True)
-    p = os.path.join(local, _QUANTIZER_FILE)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(_quantizer_json(cents))
-    os.replace(tmp, p)
+    write_json_atomic(
+        os.path.join(local, _QUANTIZER_FILE),
+        [
+            {"centroid_id": int(c["centroid_id"]), "cvec": [float(x) for x in c["cvec"]]}
+            for c in cents
+        ],
+    )
 
 
 def _resolve_centroids(
@@ -326,7 +311,7 @@ def apply_semdedup_batch(
     closed.
     """
     spark = batch.sparkSession
-    local = _local(index_path)
+    local = local_path(index_path)
     # refuse to run under an unfinished retrain: a crash between
     # commit_swap's two renames can leave `local` MISSING with the only
     # full pre-retrain index parked in .retrain-old — a restarted stream
@@ -494,7 +479,7 @@ def retrain_semdedup_index(
         semdedup_num_clusters,
     )
 
-    local = _local(index_path)
+    local = local_path(index_path)
     tmp, old = local + ".retrain-tmp", local + ".retrain-old"
     # marker FIRST: from here until commit_swap completes, a concurrent
     # or restarted stream must refuse to touch the index (see
@@ -538,8 +523,7 @@ def retrain_semdedup_index(
     rebuilt.repartition(F.col(CELL_COL)).write.mode("overwrite").partitionBy(
         CELL_COL
     ).parquet("file:" + tmp)
-    with open(os.path.join(tmp, _QUANTIZER_FILE), "w") as f:
-        f.write(_quantizer_json(cents))
+    _save_quantizer(tmp, cents)
     # the PCA pin is part of the index's identity (the retrain read the
     # index's own already-projected vectors, so the projection is
     # unchanged) — carry it through the swap

@@ -32,6 +32,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 
+from ds_caselaw_ingester_spark.operators.compaction import local_path
 from ds_caselaw_ingester_spark.operators.sketches import (
     hll_estimate,
     hll_registers,
@@ -39,10 +40,6 @@ from ds_caselaw_ingester_spark.operators.sketches import (
 )
 
 logger = logging.getLogger(__name__)
-
-
-def _local(path: str) -> str:
-    return path[len("file:"):] if path.startswith("file:") else path
 
 
 def apply_sketch_batch(
@@ -66,7 +63,7 @@ def apply_sketch_batch(
     import os
 
     spark = batch.sparkSession
-    local = _local(path)
+    local = local_path(path)
     recover_swap(local, local + ".tmp", local + ".old", exclusive=True)
     # identity guard: registers built at a different p (bucket space)
     # or a different hashed column max-merge without any schema error,
@@ -119,7 +116,7 @@ def sink_estimate(
     240+ phantom empty buckets). Passing p explicitly is only for
     pre-sidecar tables, and it must agree with the sidecar if one
     exists."""
-    stored = _read_meta(_local(path))
+    stored = _read_meta(local_path(path))
     if stored is None:
         if p is None:
             raise ValueError(

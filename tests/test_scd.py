@@ -136,7 +136,9 @@ def test_out_of_order_batch_is_clamped_not_inverted(spark, tmp_path):
 
     from pyspark.sql import types as T
 
-    from ds_caselaw_ingester_spark.streaming.scd_sink import apply_scd2_batch
+    from ds_caselaw_ingester_spark.streaming.scd_sink import (
+        apply_scd2_batch_bucketed,
+    )
 
     schema = T.StructType(
         [
@@ -149,10 +151,10 @@ def test_out_of_order_batch_is_clamped_not_inverted(spark, tmp_path):
     t_late = dt.datetime(2024, 1, 1, 10, 2, 0)
     t_early_batch_first = dt.datetime(2024, 1, 1, 10, 5, 0)
     b1 = spark.createDataFrame([("a", "ewhc", t_early_batch_first)], schema)
-    apply_scd2_batch(b1, path, "uri", ["court"])
+    apply_scd2_batch_bucketed(b1, path, "uri", ["court"])
     # late batch: earlier event time, CHANGED payload
     b2 = spark.createDataFrame([("a", "ewca", t_late)], schema)
-    apply_scd2_batch(b2, path, "uri", ["court"])
+    apply_scd2_batch_bucketed(b2, path, "uri", ["court"])
     rows = sorted(
         spark.read.parquet(path).collect(), key=lambda r: r["effective_from"]
     )
@@ -201,69 +203,6 @@ def test_scd2_current_slice_equals_upsert_state(spark):
     # is a state the upsert table has already forgotten
     closed = hist.where("NOT is_current").count()
     assert closed == 2  # a's ewhc, c's first title
-
-
-def test_scd_sink_crash_between_renames_recovers_history(spark, tmp_path):
-    """Regression (ADVICE r6): a crash between rename(local, old) and
-    rename(tmp, local) left the history only in .old; the next
-    micro-batch read a missing path, bootstrapped fresh history, and
-    rmtree'd the only copy. apply_scd2_batch now reconciles the swap
-    state first — both the tmp-present (complete the swap) and
-    tmp-absent (restore the backup) crash points must preserve the
-    full history."""
-    import datetime as dt
-    import os
-    import shutil
-
-    from pyspark.sql import types as T
-
-    from ds_caselaw_ingester_spark.streaming.scd_sink import apply_scd2_batch
-
-    schema = T.StructType(
-        [
-            T.StructField("uri", T.StringType()),
-            T.StructField("court", T.StringType()),
-            T.StructField("event_time", T.TimestampType()),
-        ]
-    )
-    path = str(tmp_path / "hist")
-    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-    b1 = spark.createDataFrame([("a", "ewhc", t0)], schema)
-    apply_scd2_batch(b1, path, "uri", ["court"])
-    b2 = spark.createDataFrame(
-        [("a", "ewca", t0 + dt.timedelta(minutes=1))], schema
-    )
-    apply_scd2_batch(b2, path, "uri", ["court"])
-    assert spark.read.parquet(path).count() == 2
-
-    # crash point (a): local moved aside, tmp holds the NEXT merge
-    b3 = spark.createDataFrame(
-        [("a", "uksc", t0 + dt.timedelta(minutes=2))], schema
-    )
-    # build what the b3 apply would have staged, then simulate the crash
-    shutil.copytree(path, path + ".staging")
-    apply_scd2_batch(b3, path + ".staging", "uri", ["court"])
-    os.rename(path + ".staging", path + ".tmp")
-    os.rename(path, path + ".old")
-    # redelivered batch (checkpoint replays b3): must first complete
-    # the swap, then converge (same payload -> no double-apply)
-    apply_scd2_batch(b3, path, "uri", ["court"])
-    hist = spark.read.parquet(path)
-    assert hist.count() == 3
-    assert not os.path.exists(path + ".old")
-    current = hist.where("is_current").collect()
-    assert len(current) == 1 and current[0]["court"] == "uksc"
-
-    # crash point (b): local moved aside, no tmp — backup is the only
-    # copy; the next batch must restore it, never bootstrap over it
-    os.rename(path, path + ".old")
-    b4 = spark.createDataFrame(
-        [("a", "ukpc", t0 + dt.timedelta(minutes=3))], schema
-    )
-    apply_scd2_batch(b4, path, "uri", ["court"])
-    hist = spark.read.parquet(path)
-    assert hist.count() == 4  # full 3-state history + the new state
-    assert hist.where("is_current").collect()[0]["court"] == "ukpc"
 
 
 def test_scd2_apply_validate_rejects_out_of_order_batch(spark):
@@ -338,14 +277,15 @@ def _kb_state(d):
 
 
 def test_bucketed_scd_sink_equals_flat_sink(spark, tmp_path):
-    """Driving the SAME batch sequence through the flat and the bucketed
-    SCD2 sinks must produce identical histories (modulo the kb layout
-    column) — the bucketing is a write-amplification optimization, not
-    a semantics change."""
+    """Driving the SAME batch sequence through the bucketed SCD2 sink
+    and through scd2_apply chained over one flat history, each batch at
+    its max event time, must produce identical histories (modulo the kb
+    layout column) — the bucketing is a write-amplification
+    optimization, not a semantics change. (test_round6_property pins
+    scd2_apply against its Python model.)"""
     import datetime as dt
 
     from ds_caselaw_ingester_spark.streaming.scd_sink import (
-        apply_scd2_batch,
         apply_scd2_batch_bucketed,
     )
 
@@ -358,16 +298,22 @@ def test_bucketed_scd_sink_equals_flat_sink(spark, tmp_path):
          ("c", "ukpc", t0 + dt.timedelta(minutes=2))],
         [("b", "ewhc", t0 + dt.timedelta(minutes=3))],
     ]
-    flat, buck = str(tmp_path / "flat"), str(tmp_path / "buck")
+    buck = str(tmp_path / "buck")
+    flat = None
     for rows in batches:
         b = spark.createDataFrame(rows, schema)
-        apply_scd2_batch(b, flat, "uri", ["court"])
         apply_scd2_batch_bucketed(b, buck, "uri", ["court"], n_buckets=8)
+        # every batch is key-unique and later than the one before, so
+        # the sink neither collapses rows nor clamps its apply time
+        upd = spark.createDataFrame(
+            [(u, c) for u, c, _ in rows], "uri string, court string"
+        )
+        batch_ts = max(t for *_, t in rows).strftime("%Y-%m-%d %H:%M:%S.%f")
+        flat = scd2_apply(flat, upd, "uri", ["court"], batch_ts)
+        flat = flat.localCheckpoint(eager=True)
 
     cols = ["uri", "court", "effective_from", "effective_to", "is_current"]
-    got_flat = sorted(
-        tuple(r[c] for c in cols) for r in spark.read.parquet(flat).collect()
-    )
+    got_flat = sorted(tuple(r[c] for c in cols) for r in flat.collect())
     got_buck = sorted(
         tuple(r[c] for c in cols)
         for r in spark.read.parquet(buck).select(*cols).collect()
@@ -462,7 +408,6 @@ def test_bucketed_scd_sink_refuses_flat_history_and_bucket_change(spark, tmp_pat
     import datetime as dt
 
     from ds_caselaw_ingester_spark.streaming.scd_sink import (
-        apply_scd2_batch,
         apply_scd2_batch_bucketed,
     )
 
@@ -470,7 +415,7 @@ def test_bucketed_scd_sink_refuses_flat_history_and_bucket_change(spark, tmp_pat
     t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
     b1 = spark.createDataFrame([("a", "ewhc", t0)], schema)
     flat = str(tmp_path / "flat")
-    apply_scd2_batch(b1, flat, "uri", ["court"])
+    b1.write.parquet(flat)
     with pytest.raises(ValueError, match="FLAT"):
         apply_scd2_batch_bucketed(b1, flat, "uri", ["court"], n_buckets=8)
 
@@ -484,3 +429,46 @@ def test_bucketed_scd_sink_refuses_flat_history_and_bucket_change(spark, tmp_pat
     # same bucket count still applies cleanly
     apply_scd2_batch_bucketed(b2, buck, "uri", ["court"], n_buckets=8)
     assert spark.read.parquet(buck).count() == 2
+
+
+def test_bucketed_scd_sink_detects_concurrent_writer(spark, tmp_path, monkeypatch):
+    """The SCD2 sink runs the same single-writer check as the documents
+    upsert: a file appearing in a touched bucket between the read
+    snapshot and the swap aborts the batch with the history untouched."""
+    import datetime as dt
+    import os
+
+    from ds_caselaw_ingester_spark.streaming import scd_sink
+
+    schema = _evt_schema()
+    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
+    path = str(tmp_path / "hist")
+    seed = [(f"doc-{i}", "ewhc", t0) for i in range(20)]
+    scd_sink.apply_scd2_batch_bucketed(
+        spark.createDataFrame(seed, schema), path, "uri", ["court"], n_buckets=4
+    )
+    before = _kb_state(path)
+
+    real_apply = scd_sink.scd2_apply
+
+    def apply_and_race(*args, **kwargs):
+        # simulate the concurrent writer: drop a file into every bucket
+        # dir after the snapshot was taken but before the swap
+        for d in os.listdir(path):
+            if d.startswith("kb=") and not d.endswith((".old", ".tmp")):
+                with open(os.path.join(path, d, "intruder.parquet"), "wb") as f:
+                    f.write(b"x")
+        return real_apply(*args, **kwargs)
+
+    monkeypatch.setattr(scd_sink, "scd2_apply", apply_and_race)
+    upd = spark.createDataFrame(
+        [("doc-3", "ukSC", t0 + dt.timedelta(minutes=1))], schema
+    )
+    with pytest.raises(RuntimeError, match="another writer"):
+        scd_sink.apply_scd2_batch_bucketed(upd, path, "uri", ["court"], n_buckets=4)
+    # history untouched: no tmp left behind, original files in place
+    assert not os.path.exists(path + ".tmp")
+    after = _kb_state(path)
+    for files in after.values():
+        files.pop("intruder.parquet")
+    assert after == before

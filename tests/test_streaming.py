@@ -426,6 +426,8 @@ def test_scd2_stream_builds_history_across_triggers(spark, tmp_path):
     with _few_shuffle_partitions(spark):
         q = run_scd2_stream(stream, table, ckpt, "uri", ["court"])
         q.awaitTermination(120)
+    # the default layout is the bucketed one
+    assert any(e.startswith("kb=") for e in os.listdir(table))
 
     rows = {
         (r.uri, r.court, str(r.effective_from), str(r.effective_to), r.is_current)

@@ -7,7 +7,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ds_caselaw_ingester_spark.operators.upsert import merge_documents, upsert_parquet_table
+from ds_caselaw_ingester_spark.operators.upsert import (
+    merge_documents,
+    upsert_parquet_table_bucketed,
+)
 
 
 @pytest.fixture()
@@ -55,9 +58,9 @@ def test_merge_target_only_unchanged(base, updates):
 def test_parquet_upsert_idempotent_on_replay(spark, updates, tmp_path):
     """Applying the same batch twice must converge (replay safety)."""
     path = str(tmp_path / "documents")
-    upsert_parquet_table(updates, path, key="uri")
+    upsert_parquet_table_bucketed(updates, path, key="uri")
     first = sorted((r.uri, r.xml) for r in spark.read.parquet(path).collect())
-    upsert_parquet_table(updates, path, key="uri")  # redelivery
+    upsert_parquet_table_bucketed(updates, path, key="uri")  # redelivery
     second = sorted((r.uri, r.xml) for r in spark.read.parquet(path).collect())
     assert first == second
     assert len(second) == 2
@@ -69,7 +72,7 @@ def test_upsert_crash_safety_preserves_current_table(spark, tmp_path):
     never overwriting the path its own plan reads from."""
     path = str(tmp_path / "documents")
     ok = spark.createDataFrame([("a", "<j>1</j>")], "uri string, xml string")
-    upsert_parquet_table(ok, path, key="uri")
+    upsert_parquet_table_bucketed(ok, path, key="uri")
 
     @F.udf("string")
     def boom(x):
@@ -79,12 +82,18 @@ def test_upsert_crash_safety_preserves_current_table(spark, tmp_path):
         "uri", boom("xml").alias("xml")
     )
     with pytest.raises(Exception, match="poison|Job aborted|TASK"):
-        upsert_parquet_table(bad, path, key="uri")
+        upsert_parquet_table_bucketed(bad, path, key="uri")
     # current table intact and readable after the failed batch
     rows = spark.read.parquet(path).collect()
     assert [(r.uri, r.xml) for r in rows] == [("a", "<j>1</j>")]
+    # the next batch discards the failed batch's partial tmp and applies
     import os
-    assert not os.path.exists(path + ".tmp") or True  # tmp may remain; path must be clean
+
+    nxt = spark.createDataFrame([("b", "<j>2</j>")], "uri string, xml string")
+    upsert_parquet_table_bucketed(nxt, path, key="uri")
+    assert not os.path.exists(path + ".tmp")
+    got = sorted((r.uri, r.xml) for r in spark.read.parquet(path).collect())
+    assert got == [("a", "<j>1</j>"), ("b", "<j>2</j>")]
 
 
 def test_upsert_read_failure_does_not_clobber(spark, tmp_path):
@@ -92,15 +101,20 @@ def test_upsert_read_failure_does_not_clobber(spark, tmp_path):
     a first write (the old bare-except behavior destroyed the table)."""
     import os
 
-    path = str(tmp_path / "corrupt")
-    os.makedirs(path)
-    with open(os.path.join(path, "part-00000.parquet"), "wb") as fh:
-        fh.write(b"not a parquet file")
     df = spark.createDataFrame([("a", "x")], "uri string, xml string")
+    # the corrupt file sits in the bucket the batch touches, so the
+    # pruned read of that bucket must open it
+    (kb,) = df.select(F.pmod(F.xxhash64("uri"), F.lit(64))).first()
+    path = str(tmp_path / "corrupt")
+    bad = os.path.join(path, f"kb={kb}", "part-00000.parquet")
+    os.makedirs(os.path.dirname(bad))
+    with open(bad, "wb") as fh:
+        fh.write(b"not a parquet file")
     with pytest.raises(Exception):
-        upsert_parquet_table(df, path, key="uri")
-    # the corrupt-but-present table directory was not replaced
-    with open(os.path.join(path, "part-00000.parquet"), "rb") as fh:
+        upsert_parquet_table_bucketed(df, path, key="uri")
+    # the corrupt-but-present bucket was not replaced
+    assert os.listdir(path) == [f"kb={kb}"]
+    with open(bad, "rb") as fh:
         assert fh.read() == b"not a parquet file"
 
 
@@ -109,8 +123,6 @@ def test_bucketed_upsert_only_rewrites_touched_buckets(spark, tmp_path):
     physically untouched — the partition-pruning property that makes the
     per-batch cost O(touched buckets) instead of O(table)."""
     import os
-
-    from ds_caselaw_ingester_spark.operators.upsert import upsert_parquet_table_bucketed
 
     path = str(tmp_path / "docs")
     seed = spark.createDataFrame(
@@ -145,37 +157,12 @@ def test_bucketed_upsert_only_rewrites_touched_buckets(spark, tmp_path):
     assert rows2 == rows
 
 
-def test_flat_upsert_recovers_from_mid_swap_crash(spark, tmp_path):
-    """Regression (ADVICE r6 class): crash between the two renames
-    leaves the table only in .old; the next batch must restore it
-    instead of bootstrapping from the batch alone and deleting the
-    backup."""
-    import os
-
-    path = str(tmp_path / "docs")
-    seed = spark.createDataFrame(
-        [("uri/a", "A", 1), ("uri/b", "B", 1)], ["uri", "body", "version"]
-    )
-    upsert_parquet_table(seed, path, key="uri")
-    # simulate the crash point: local moved aside, no tmp
-    os.rename(path, path + ".old")
-    batch = spark.createDataFrame([("uri/c", "C", 1)], ["uri", "body", "version"])
-    upsert_parquet_table(batch, path, key="uri")
-    got = {r["uri"] for r in spark.read.parquet(path).collect()}
-    assert got == {"uri/a", "uri/b", "uri/c"}
-    assert not os.path.exists(path + ".old")
-
-
 def test_bucketed_upsert_recovers_bucket_left_only_in_old(spark, tmp_path):
     """A crash between the per-bucket renames leaves kb=N only in
     kb=N.old. The next batch must restore the bucket BEFORE reading,
     so the merge sees the full history and the backup is never
     deleted while it is the only copy."""
     import os
-
-    from ds_caselaw_ingester_spark.operators.upsert import (
-        upsert_parquet_table_bucketed,
-    )
 
     path = str(tmp_path / "docs")
     seed = spark.createDataFrame(
@@ -246,61 +233,3 @@ def test_bucketed_upsert_detects_concurrent_writer(spark, tmp_path, monkeypatch)
         if d.startswith("kb=")
     }
     assert after == before
-
-
-def test_upsert_table_backend_dispatch(spark, tmp_path):
-    """Round 14 (VERDICT r13 queue #4): upsert_table routes
-    backend='parquet' to the existing crash-tested protocols (flat
-    without n_buckets, bucketed with), refuses unknown backends, and —
-    in an environment without delta-spark — refuses backend='delta'
-    with an ImportError naming the remedy instead of silently falling
-    back to rename-swap. (With delta-spark installed, the delta branch
-    runs the equivalent MERGE through the transaction log; the matrix
-    below re-runs against it via the skip guard.)"""
-    from ds_caselaw_ingester_spark.operators.upsert import upsert_table
-
-    path = str(tmp_path / "tbl")
-    b0 = spark.createDataFrame(
-        [("uri/0", "B0"), ("uri/1", "B1")], ["uri", "body"]
-    )
-    b1 = spark.createDataFrame(
-        [("uri/1", "B1-v2"), ("uri/2", "B2")], ["uri", "body"]
-    )
-    upsert_table(b0, path, key="uri")
-    upsert_table(b1, path, key="uri")
-    got = {
-        r["uri"]: r["body"] for r in spark.read.parquet(path).collect()
-    }
-    assert got == {"uri/0": "B0", "uri/1": "B1-v2", "uri/2": "B2"}
-
-    bpath = str(tmp_path / "tbl_bucketed")
-    upsert_table(b0, bpath, key="uri", n_buckets=4)
-    upsert_table(b1, bpath, key="uri", n_buckets=4)
-    gotb = {
-        r["uri"]: r["body"] for r in spark.read.parquet(bpath).collect()
-    }
-    assert gotb == got
-
-    with pytest.raises(ValueError, match="unknown upsert backend"):
-        upsert_table(b0, str(tmp_path / "x"), backend="iceberg")
-
-    try:
-        import delta  # noqa: F401
-
-        have_delta = True
-    except ImportError:
-        have_delta = False
-    dpath = str(tmp_path / "tbl_delta")
-    if not have_delta:
-        with pytest.raises(ImportError, match="delta-spark"):
-            upsert_table(b0, dpath, key="uri", backend="delta")
-    else:  # pragma: no cover - exercised only where the jars exist
-        upsert_table(b0, dpath, key="uri", backend="delta")
-        upsert_table(b1, dpath, key="uri", backend="delta")
-        rows = {
-            r["uri"]: (r["body"], r["version_n"])
-            for r in spark.read.format("delta").load(dpath).collect()
-        }
-        assert rows == {
-            "uri/0": ("B0", 1), "uri/1": ("B1-v2", 2), "uri/2": ("B2", 1)
-        }
