@@ -116,17 +116,6 @@ def gate_documents(
     )
 
 
-def band_documents(gated: DataFrame, key_col: str, text_col: str) -> DataFrame:
-    """(key, band, band_key) for already-gated documents — the shared
-    banding pipeline (see _bands), exported for the streaming sink."""
-    return _bands(gated, key_col, text_col)
-
-
-def assign_ingest_seq(gated: DataFrame, id_col: str, start: int) -> DataFrame:
-    """Public alias of _assign_seq for the streaming sink."""
-    return _assign_seq(gated, id_col, start)
-
-
 def apply_quality_gates(
     gated: DataFrame,
     id_col: str = "doc_id",
@@ -762,168 +751,17 @@ def _bands(gated: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def curation_band_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 8,
-    min_alpha_ratio: float = 0.5,
-    **quality_gates,
-) -> DataFrame:
-    """(id, band, band_key) for the scrubbed+gated corpus — the
-    persisted state `curate_increment` probes (write it bucketed on
-    band_key so the probe join is co-located; incremental_lsh_pairs'
-    docstring covers the layout). Must be built with the SAME gate
-    parameters the increments will use: the equivalence contract
-    compares keep decisions, and a doc gated differently on the two
-    paths trivially diverges.
-
-    PERSIST/WRITE this frame before chaining into curate_increment:
-    the increment consumes it multiple times (max-id aggregate + the
-    probe join), and an unmaterialized frame replays the base corpus's
-    scrub/gate/shingle lineage per consumer."""
-    from ds_caselaw_ingester_spark.sources.catalog import spread_if_narrow
-
-    # production entry for an unseen frame (the curate_corpus guard):
-    # the gate scan + banding explode must not inherit a one-file
-    # corpus's 1-2 partitions; wide frames pass untouched
-    docs = spread_if_narrow(docs, id_col)
-    gated = _structural_gate(
-        _scrub(docs, id_col, text_col), id_col, text_col, min_tokens, min_alpha_ratio
+def _seq_bands(gated: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, _seq, band, band_key) for gated documents that carry SEQ_COL:
+    banded on the ingest sequence, with the id joined back on. ONE
+    definition for the batch index, the batch increment and the
+    streaming sink, so every index row and every probe row has the same
+    shape."""
+    return (
+        _bands(gated, SEQ_COL, text_col)
+        .join(gated.select(id_col, SEQ_COL), SEQ_COL)
+        .select(id_col, SEQ_COL, "band", "band_key")
     )
-    if quality_gates:
-        # the index must be gated EXACTLY like the increments probing
-        # it (forwarded to the shared apply_quality_gates): a base doc
-        # the full gate battery would have dropped could otherwise
-        # taint new arrivals the recompute keeps — the equivalence
-        # contract compares keep decisions under ONE gate
-        gated = apply_quality_gates(gated, id_col, text_col, **quality_gates)
-    return _bands(gated, id_col, text_col)
-
-
-def curate_increment(
-    new_docs: DataFrame,
-    band_index: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 8,
-    min_alpha_ratio: float = 0.5,
-    chunk_tokens: int = 128,
-    overlap: int = 16,
-    indexed_max=_UNSET,
-    **quality_gates,
-) -> "tuple[DataFrame, DataFrame]":
-    """Daily-increment curation: gate + near-dup-dedup ONLY the new
-    documents against the maintained band index, never recomputing the
-    base corpus. Returns (chunks, index_delta) — chunks for the new
-    KEEPERS only; APPEND index_delta (the new docs' band rows) to the
-    persisted index for tomorrow. A delta, deliberately NOT the full
-    union: returning base ∪ new invites `.write.mode("overwrite")`
-    onto the index's own path — which Spark either refuses or corrupts
-    mid-scan (the plan still reads it) — and rewrites O(corpus) per
-    day where an append writes O(increment). The ids are disjoint by
-    the checked precondition, so base ∪ delta IS the exact updated
-    index; use the bucketed-append layout (operators/bucketing.py) for
-    a co-located probe join.
-
-    Cost tracks the increment: the new docs scrub/gate/shingle
-    map-side, the probe equi-joins their band keys against the index,
-    and the connected components run over new-new pairs only.
-
-    **quality_gates: forwarded to apply_quality_gates (repetition_caps,
-    quality_model + min_quality_p, lm_logp + max_ppl +
-    lm_max_piece_len) — the per-document gates of the batch composite,
-    applied to the increment between the structural gate and banding.
-    Each is a pure per-document function, so incremental application
-    is recompute-equivalent BY CONSTRUCTION; pass the SAME gate config
-    the base index was built under (the streaming sink pins a
-    fingerprint of it; callers of this batch API own that discipline).
-
-    indexed_max: the indexed corpus's max id, when the caller already
-    maintains it as metadata (the streaming sink's per-epoch sidecar
-    does) — skips this function's O(index) column-pruned max aggregate,
-    which on a bucket-PRUNED index view would in any case understate
-    the true max and weaken the monotone check. Pass the TRUE max over
-    the whole index, or None for an empty index; omit to compute it
-    from `band_index` itself.
-
-    MONOTONE-ID PRECONDITION (checked, two column-pruned aggregates):
-    every new id must exceed every indexed id. The full-recompute
-    canonical is the MINIMUM id of a near-dup family; monotone ids make
-    that minimum always land in the base, so incremental keep decisions
-    match the recompute exactly. Without it, a new doc with a smaller
-    id would steal canonicality from an already-kept base doc and the
-    two paths would disagree.
-
-    Keep rule: connected components run over the new-new pairs; any
-    component ONE of whose members also pairs with an indexed doc is
-    dropped WHOLE (the recompute would connect the entire component
-    into that base family, whose canonical is in the base), and the
-    surviving components keep their min id. The index delta carries
-    gated new docs kept AND dropped — tomorrow's increment may
-    near-dup a doc that today's keep-one dropped, and the recompute
-    would still connect them transitively. (Gated docs with fewer than
-    3 tokens produce no shingles and hence no index rows — harmless,
-    since a shingle-less doc can never pair on either path, but note
-    the max-id check therefore sees only shingled ids.)
-
-    EQUIVALENCE CONTRACT (pinned in tests/test_curation_pipeline.py):
-    increment keepers == full-recompute keepers ∩ new ids, EXACTLY and
-    unconditionally under the monotone precondition — a new doc's full
-    component contains a base id iff its new-new component is tainted,
-    and a smaller (base) id then owns the canonical either way. BASE
-    decisions, by contrast, are APPEND-ONLY: a "bridge" increment doc
-    that connects two previously separate base families would make a
-    recompute retract the larger family's already-kept canonical; the
-    incremental path never retracts published keepers — deliberately,
-    because yesterday's corpus has already been shipped/trained on.
-    That is the one documented divergence from recompute semantics."""
-    from ds_caselaw_ingester_spark.sources.catalog import spread_if_narrow
-
-    # production entry for an unseen frame: a one-file increment would
-    # otherwise serialise the fused gate scan on 1-2 cores (the
-    # curate_corpus guard, same rationale); wide frames pass untouched
-    new_docs = spread_if_narrow(new_docs, id_col)
-    gated = apply_quality_gates(
-        _structural_gate(
-            _scrub(new_docs, id_col, text_col),
-            id_col,
-            text_col,
-            min_tokens,
-            min_alpha_ratio,
-        ),
-        id_col,
-        text_col,
-        **quality_gates,
-    ).localCheckpoint(eager=True)  # consumed by bands, CC spine, and chunking
-    if indexed_max is _UNSET:
-        mx = band_index.agg(F.max(id_col).alias("mx")).collect()[0]["mx"]
-    else:
-        mx = indexed_max
-    new_min = gated.agg(F.min(id_col).alias("mn")).collect()[0]["mn"]
-    if mx is not None and new_min is not None and new_min <= mx:
-        raise ValueError(
-            f"curate_increment needs monotone ids: new min {new_min} <= "
-            f"indexed max {mx} (the recompute-equivalence "
-            "contract assumes family minima stay in the base). For "
-            "uuid-or-otherwise-unordered id spaces use "
-            "curate_increment_seq, which orders on a surrogate ingest "
-            "sequence instead."
-        )
-    # probed twice (cross + the returned delta) — checkpoint once
-    new_bands = _bands(gated, id_col, text_col).localCheckpoint(eager=True)
-    chunks = _increment_core(
-        gated,
-        new_bands,
-        band_index,
-        mx,
-        key=id_col,
-        id_col=id_col,
-        text_col=text_col,
-        chunk_tokens=chunk_tokens,
-        overlap=overlap,
-    )
-    return chunks, new_bands
 
 
 def _increment_core(
@@ -931,28 +769,26 @@ def _increment_core(
     new_bands: DataFrame,
     band_index: DataFrame,
     mx,
-    key: str,
     id_col: str,
     text_col: str,
     chunk_tokens: int,
     overlap: int,
 ) -> DataFrame:
-    """The increment keep decision, shared by the monotone-id and
-    surrogate-seq paths: probe the index on (band, band_key), split
-    pairs into base-touching vs new-new on the base's max KEY, run
-    connected components over new-new, drop tainted components whole,
-    chunk the keepers. `key` is the canonical-ordering column (the id
-    itself on the monotone path, the ingest sequence on the seq path);
-    all frames must carry it, and every base key must be < every new
-    key (the callers' respective preconditions).
+    """The increment keep decision, shared by curate_increment_seq, the
+    streaming sink and its rebuild: probe the index on (band, band_key),
+    split pairs into base-touching vs new-new on the base's max ingest
+    sequence `mx`, run connected components over new-new, drop tainted
+    components whole, chunk the keepers. All frames carry SEQ_COL, and
+    every base seq is below every new one (the callers assign new seqs
+    from mx + 1).
 
-    The index is probed DIRECTLY: incremental_lsh_pairs' replace
-    anti-join exists for re-ingested ids, which the callers'
-    preconditions rule out — paying an O(index) anti-join for a
-    provable no-op is the whole-index-rewrite pattern this API is
-    built to avoid."""
-    old = band_index.select(F.col(key).alias("_old_id"), "band", "band_key")
-    nv = new_bands.select(F.col(key).alias("_new_id"), "band", "band_key")
+    The index is probed DIRECTLY, without incremental_lsh_pairs'
+    replace anti-join: that anti-join drops a re-ingested id's old
+    rows, but here a re-sent id is a new arrival that must still pair
+    with its earlier self (curate_increment_seq's re-sent-id rule) —
+    and the anti-join would cost an O(index) pass per increment."""
+    old = band_index.select(F.col(SEQ_COL).alias("_old_id"), "band", "band_key")
+    nv = new_bands.select(F.col(SEQ_COL).alias("_new_id"), "band", "band_key")
     cross = (
         nv.join(old, ["band", "band_key"])
         .select(
@@ -962,34 +798,34 @@ def _increment_core(
     )
     pairs = (
         cross.unionAll(
-            lsh_candidate_pairs(new_bands.select(key, "band", "band_key"), key)
+            lsh_candidate_pairs(new_bands.select(SEQ_COL, "band", "band_key"), SEQ_COL)
         ).distinct()
     ).localCheckpoint(eager=True)  # split two ways below
-    # keys <= indexed max are base docs (callers' precondition); an
-    # EMPTY index has no max and therefore no base side at all — an
-    # explicit branch, not a numeric sentinel (keys may be negative)
+    # seqs <= the indexed max are base docs; an EMPTY index has no max
+    # and therefore no base side at all — an explicit branch, not a
+    # numeric sentinel
     if mx is None:
-        base_hit = pairs.select(F.col("doc_b").alias(key)).limit(0)
+        base_hit = pairs.select(F.col("doc_b").alias(SEQ_COL)).limit(0)
         new_new = pairs
     else:
         base_hit = (
             pairs.where(F.col("doc_a") <= F.lit(mx))
-            .select(F.col("doc_b").alias(key))
+            .select(F.col("doc_b").alias(SEQ_COL))
             .distinct()
         )
         new_new = pairs.where(F.col("doc_a") > F.lit(mx))
-    assignment = canonical_assignment(gated, new_new, id_col=key)
+    assignment = canonical_assignment(gated, new_new, id_col=SEQ_COL)
     tainted = (
-        assignment.join(base_hit, key)
+        assignment.join(base_hit, SEQ_COL)
         .select(F.col("component").alias("_tc"))
         .distinct()
     )
     keep_keys = (
         assignment.where(~F.col("is_duplicate"))
         .join(tainted, assignment["component"] == F.col("_tc"), "left_anti")
-        .select(key)
+        .select(SEQ_COL)
     )
-    keepers = gated.join(keep_keys, key)
+    keepers = gated.join(keep_keys, SEQ_COL)
     return chunk_documents(
         keepers, id_col, text_col, chunk_tokens=chunk_tokens, overlap=overlap
     )
@@ -1028,6 +864,10 @@ def _assign_seq(gated: DataFrame, id_col: str, start: int) -> DataFrame:
         r["_pid"]: r["n"]
         for r in ranged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
     }
+    if not counts:
+        # an empty increment: nothing to number, and an empty offset
+        # map cannot be indexed by the int partition id
+        return ranged.withColumn(SEQ_COL, F.lit(None).cast("long")).drop("_pid")
     offsets, acc = {}, 0
     for pid in sorted(counts):
         offsets[pid] = acc
@@ -1056,12 +896,20 @@ def curation_band_index_seq(
     start: int = 0,
     **quality_gates,
 ) -> DataFrame:
-    """(id, _seq, band, band_key) — curation_band_index for corpora
-    whose ids carry no ingest order (the reference's own fallback URIs
-    are `d-<uuid>`, ingester.py:538): a surrogate ingest sequence
-    `_seq` is assigned (id order within this build, offset by `start`)
-    and the incremental canonical rule runs on it. PERSIST before
-    chaining into curate_increment_seq, same as the plain variant."""
+    """(id, _seq, band, band_key) for the scrubbed+gated corpus — the
+    persisted band index curate_increment_seq probes. Ids may be of any
+    type in any order (the reference's own fallback URIs are
+    `d-<uuid>`, ingester.py:538): a surrogate ingest sequence `_seq` is
+    assigned (id order within this build, offset by `start`) and the
+    incremental canonical rule runs on it.
+
+    Must be built with the SAME gate parameters the increments will
+    use: the equivalence contract compares keep decisions, and a doc
+    gated differently on the two paths trivially diverges. PERSIST/WRITE
+    this frame before chaining into curate_increment_seq: the increment
+    consumes it several times (the max-seq aggregate + the probe join),
+    and an unmaterialized frame replays the base corpus's
+    scrub/gate/shingle lineage per consumer."""
     from ds_caselaw_ingester_spark.sources.catalog import spread_if_narrow
 
     # production entry for an unseen frame (the curate_corpus guard):
@@ -1072,22 +920,22 @@ def curation_band_index_seq(
         _scrub(docs, id_col, text_col), id_col, text_col, min_tokens, min_alpha_ratio
     )
     if quality_gates:
-        # same rule as curation_band_index: one gate battery for the
-        # base and every increment. Gates run BEFORE seq assignment —
-        # the sequence numbers SURVIVORS, matching the sink's order, so
-        # a gated-out doc consumes no seq value on any path
+        # the index must be gated EXACTLY like the increments probing
+        # it: a base doc the full gate battery would have dropped could
+        # otherwise taint new arrivals the recompute keeps. Gates run
+        # BEFORE seq assignment — the sequence numbers SURVIVORS,
+        # matching the sink's order, so a gated-out doc consumes no seq
+        # value on any path
         gated = apply_quality_gates(gated, id_col, text_col, **quality_gates)
     gated = _assign_seq(gated, id_col, start)
     # no extra checkpoint here: _assign_seq already localCheckpoints its
     # `ranged` frame internally (to pin sampled partition boundaries), so
     # the fused gate scan is materialized exactly once — the two
-    # consumers below (banding + the seq join) replay only the cheap
-    # row_number window over that checkpoint, not the gate scan. A
+    # consumers in _seq_bands (banding + the seq join) replay only the
+    # cheap row_number window over that checkpoint, not the gate scan. A
     # second checkpoint would pay a full re-materialization to save a
     # window recompute (review finding, round 12).
-    return _bands(gated, SEQ_COL, text_col).join(
-        gated.select(id_col, SEQ_COL), SEQ_COL
-    ).select(id_col, SEQ_COL, "band", "band_key")
+    return _seq_bands(gated, id_col, text_col)
 
 
 def curate_increment_seq(
@@ -1102,9 +950,19 @@ def curate_increment_seq(
     base_max_seq=_UNSET,
     **quality_gates,
 ) -> "tuple[DataFrame, DataFrame]":
-    """curate_increment for ARBITRARY id types — uuid-keyed corpora
-    included — by ordering on a surrogate ingest sequence instead of
-    the id (lifts r8's checked monotone-id precondition).
+    """Daily-increment curation: gate + near-dup-dedup ONLY the new
+    documents against the maintained band index, never recomputing the
+    base corpus. Ids may be of ANY type in any order — uuid-keyed
+    corpora included — because the canonical order is a surrogate
+    ingest sequence, not the id.
+
+    Returns (chunks, index_delta) — chunks for the new KEEPERS only;
+    APPEND index_delta (the new docs' (id, _seq, band, band_key) rows)
+    to the persisted index for tomorrow. A delta, deliberately NOT the
+    full union: returning base ∪ new invites `.write.mode("overwrite")`
+    onto the index's own path — which Spark either refuses or corrupts
+    mid-scan (the plan still reads it) — and rewrites O(corpus) per day
+    where an append writes O(increment).
 
     band_index must carry (id_col, _seq, band, band_key) — built by
     curation_band_index_seq, or accumulated from this function's own
@@ -1112,15 +970,34 @@ def curate_increment_seq(
     base's max (computed here, or passed via `base_max_seq` when the
     caller maintains it as metadata — the streaming sink does, so no
     O(index) aggregate runs per micro-batch). Canonical minima are
-    then in the base BY CONSTRUCTION: the monotone precondition holds
-    on _seq for every id type, no check needed.
+    then in the base BY CONSTRUCTION, for every id type, no check
+    needed.
 
-    EQUIVALENCE CONTRACT (pinned in tests/test_curation_sink.py):
-    increment keepers == full-recompute keepers ∩ new ids, where the
-    recompute's canonical rule is ARRIVAL order (min _seq) rather than
-    min id — i.e. curate_corpus over the same documents keyed by their
-    _seq. Same base-decisions-are-append-only divergence as
-    curate_increment.
+    Cost tracks the increment: the new docs scrub/gate/shingle
+    map-side, the probe equi-joins their band keys against the index,
+    and the connected components run over new-new pairs only.
+
+    Keep rule: connected components run over the new-new pairs; any
+    component ONE of whose members also pairs with an indexed doc is
+    dropped WHOLE (the recompute would connect the entire component
+    into that base family, whose canonical is in the base), and the
+    surviving components keep their min _seq. The index delta carries
+    gated new docs kept AND dropped — tomorrow's increment may near-dup
+    a doc that today's keep-one dropped, and the recompute would still
+    connect them transitively.
+
+    EQUIVALENCE CONTRACT (pinned in tests/test_curation_pipeline.py and
+    tests/test_curation_sink.py): increment keepers == full-recompute
+    keepers ∩ new ids, where the recompute's canonical rule is ARRIVAL
+    order (min _seq) — i.e. curate_corpus over the same documents keyed
+    by their _seq. When every new id sorts above every indexed id,
+    _seq follows id order, so this is also the min-id recompute. BASE
+    decisions, by contrast, are APPEND-ONLY: a "bridge" increment doc
+    that connects two previously separate base families would make a
+    recompute retract the larger family's already-kept canonical; the
+    incremental path never retracts published keepers — deliberately,
+    because yesterday's corpus has already been shipped/trained on.
+    That is the one documented divergence from recompute semantics.
 
     Re-sent ids: an id already in the index is NOT an error here (the
     seq is the key, not the id). A re-sent identical document shares
@@ -1128,11 +1005,15 @@ def curate_increment_seq(
     near-dup of the base — arrival-time re-ingest semantics. Ids
     should still be unique WITHIN one increment.
 
-    Returns (chunks, index_delta); the delta carries
-    (id, _seq, band, band_key) — append it like the plain variant's.
-    **quality_gates forwards to apply_quality_gates exactly as in
-    curate_increment; gates run BEFORE seq assignment, so the ingest
-    sequence ranks only fully-gated documents."""
+    **quality_gates: forwarded to apply_quality_gates (repetition_caps,
+    quality_model + min_quality_p, lm_logp + max_ppl +
+    lm_max_piece_len) — the per-document gates of the batch composite,
+    applied between the structural gate and seq assignment, so the
+    ingest sequence ranks only fully-gated documents. Each is a pure
+    per-document function, so incremental application is
+    recompute-equivalent BY CONSTRUCTION; pass the SAME gate config the
+    base index was built under (the streaming sink pins a fingerprint
+    of it; callers of this batch API own that discipline)."""
     from ds_caselaw_ingester_spark.sources.catalog import spread_if_narrow
 
     # production entry for an unseen frame (the curate_corpus guard)
@@ -1159,18 +1040,13 @@ def curate_increment_seq(
     # the row_number window + seq map would replay three times over the
     # full increment without it
     gated = _assign_seq(gated, id_col, start).localCheckpoint(eager=True)
-    new_bands = (
-        _bands(gated, SEQ_COL, text_col)
-        .join(gated.select(id_col, SEQ_COL), SEQ_COL)
-        .select(id_col, SEQ_COL, "band", "band_key")
-        .localCheckpoint(eager=True)  # probed twice (cross + the delta)
-    )
+    # probed twice (cross + the delta) — checkpoint once
+    new_bands = _seq_bands(gated, id_col, text_col).localCheckpoint(eager=True)
     chunks = _increment_core(
         gated,
         new_bands,
         band_index,
         base_max_seq,
-        key=SEQ_COL,
         id_col=id_col,
         text_col=text_col,
         chunk_tokens=chunk_tokens,

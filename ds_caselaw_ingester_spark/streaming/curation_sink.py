@@ -3,7 +3,7 @@
 index as an EPOCH- and BUCKET-partitioned append-only log.
 
 The batch composite (curate_corpus) recomputes the whole corpus; the
-incremental API (curate_increment / curate_increment_seq) curates a
+incremental API (curate_increment_seq) curates a
 daily increment against a maintained index but leaves persistence to
 the caller. This sink closes the loop for a document STREAM: each
 micro-batch is gated, near-dup-deduplicated against everything already
@@ -16,7 +16,7 @@ additionally hash-bucketed on band_key so the per-epoch probe read is
 bounded by the increment, not the index:
 
     <index_path>/epoch=<n>/bucket=<b>/
-                              band rows (id, [_seq,] band, band_key) of
+                              band rows (id, _seq, band, band_key) of
                               ALL gated docs in epoch n (kept AND
                               dropped — the delta contract: a later doc
                               may near-dup one that keep-one dropped,
@@ -24,11 +24,11 @@ bounded by the increment, not the index:
                               transitively), bucketed by
                               pmod(xxhash64(band_key), n_buckets)
     <chunks_path>/epoch=<n>/  curated chunks of epoch n's KEEPERS
-    <index_path>.layout.json  pins n_buckets + the key mode (seq/id) —
-                              changing either silently orphans history,
-                              so mismatches raise
-    <index_path>.seqmeta.json per-epoch max key (the ingest sequence in
-                              seq mode, the id in monotone mode) — the
+    <index_path>.layout.json  pins n_buckets, the gate parameters and
+                              the canonical key ("seq") — changing any
+                              of them silently orphans history, so
+                              mismatches raise
+    <index_path>.seqmeta.json per-epoch max ingest sequence — the
                               base-max the next epoch needs, so NO
                               per-batch aggregate ever scans the index
 
@@ -37,7 +37,7 @@ swap, unlike the SemDeDup/SCD sinks): those sinks maintain MUTABLE
 state (replace semantics, history rewrites) so a batch must atomically
 supersede rows in place. This index is APPEND-ONLY by construction —
 an id is indexed at most once per epoch, and the canonical-ordering
-key (seq or monotone id) only grows — so the only replay hazard is
+key (the ingest sequence) only grows — so the only replay hazard is
 double-append, and epoch keying removes it: a replayed batch
 overwrites ITS OWN epoch directory with identical (deterministic)
 content, and its probe reads only `epoch < epoch_id` partitions, which
@@ -69,7 +69,7 @@ size. Measured at sf10 (docs/SCALE.md round 9),
 buckets and read 22.8% of the index bytes where the flat log read
 100%; a 5,496-doc DAILY increment saturates 64 buckets (read fraction
 1.0 — the per-epoch WARN fires) and belongs on the batch
-`curate_increment*` API, not a micro-batch sink. Storage trade (same
+`curate_increment_seq` API, not a micro-batch sink. Storage trade (same
 measurement): a moderate bucket count CLUSTERS band_key prefixes and
 compressed 2.9× smaller than the flat log (B=64, ~31k rows/bucket),
 while an oversized count fragments into under-filled files and cost
@@ -109,10 +109,10 @@ from ds_caselaw_ingester_spark.operators.compaction import (
 )
 from ds_caselaw_ingester_spark.operators.curation import (
     SEQ_COL,
+    _assign_seq,
     _increment_core,
+    _seq_bands,
     apply_quality_gates,
-    assign_ingest_seq,
-    band_documents,
     gate_documents,
 )
 
@@ -234,18 +234,16 @@ def _read_json(path: str) -> "dict | None":
         return json.load(f)
 
 
-def _check_layout(
-    local: str, n_buckets: int, key_mode: str, gate: "dict | None" = None
-) -> None:
+def _check_layout(local: str, n_buckets: int, gate: "dict | None" = None) -> None:
     """Refuse silent-corruption paths before touching the index (the
     ensure_partitioned_layout doctrine, specialized to the two-level
     epoch/bucket layout):
 
     - pinned layout disagrees on n_buckets → a probe hashed under B
       buckets silently misses history written under B' — raise;
-    - pinned layout disagrees on key mode → a seq-keyed index probed
-      in monotone-id mode (or vice versa) compares incomparable keys —
-      raise;
+    - pinned key mode is not "seq" → an id-keyed index from before the
+      ingest sequence has no `_seq` column, so no probe can compare its
+      keys — raise, pointing at rebuild_curation_index;
     - pinned layout disagrees on the GATE parameters → the index holds
       band rows of docs gated under different thresholds, and the
       recompute-equivalence contract compares keep decisions made
@@ -254,8 +252,9 @@ def _check_layout(
       docstring always said the params must stay constant; this makes
       drift raise instead of diverge;
     - epoch dirs exist but are FLAT (no bucket= subdirs — an r8-era
-      index) → raise with the migration pointer; proceeding would mix
-      two layouts under one root.
+      index) → raise, pointing at rebuild_curation_index; proceeding
+      would mix two layouts under one root, and an r8 index is id-keyed,
+      so no migration can give it an arrival order.
 
     A bucketed index with no layout sidecar (crash between the first
     delta write and the pin) is accepted and pinned after this batch;
@@ -265,13 +264,19 @@ def _check_layout(
     """
     meta = _read_json(_layout_path(local))
     if meta is not None:
-        if meta.get("n_buckets") != n_buckets or meta.get("key_mode") != key_mode:
+        if meta.get("key_mode") != "seq":
+            raise ValueError(
+                f"{local} is keyed by {meta.get('key_mode')!r}, not by the "
+                "ingest sequence: its band rows carry no _seq to probe. "
+                "Rebuild it from the corpus with rebuild_curation_index "
+                "(quiesced stream), then restart."
+            )
+        if meta.get("n_buckets") != n_buckets:
             raise ValueError(
                 f"{local} was laid out with n_buckets="
-                f"{meta.get('n_buckets')}, key_mode={meta.get('key_mode')!r} "
-                f"but this run uses n_buckets={n_buckets}, "
-                f"key_mode={key_mode!r}; changing either orphans the "
-                "index's history — rebuild (or migrate) the index instead."
+                f"{meta.get('n_buckets')} but this run uses n_buckets="
+                f"{n_buckets}; changing it orphans the index's history — "
+                "migrate the index (migrate_index_to_bucketed) instead."
             )
         pinned_gate = meta.get("gate")
         if gate is not None and pinned_gate is not None and pinned_gate != gate:
@@ -289,9 +294,9 @@ def _check_layout(
         if has_files and not has_buckets:
             raise ValueError(
                 f"{d} holds flat parquet files, not a {BUCKET_COL}= "
-                "layout — a pre-bucketing index. Run "
-                "migrate_index_to_bucketed(spark, index_path, n_buckets) "
-                "once (quiesced stream), then restart."
+                "layout — a pre-bucketing, id-keyed index. Rebuild it "
+                "from the corpus with rebuild_curation_index (quiesced "
+                "stream), then restart."
             )
 
 
@@ -342,10 +347,8 @@ def _resolve_n_buckets(
     return derived
 
 
-def _pin_layout(
-    local: str, n_buckets: int, key_mode: str, gate: "dict | None" = None
-) -> None:
-    payload = {"col": BUCKET_COL, "n_buckets": n_buckets, "key_mode": key_mode}
+def _pin_layout(local: str, n_buckets: int, gate: "dict | None" = None) -> None:
+    payload = {"col": BUCKET_COL, "n_buckets": n_buckets, "key_mode": "seq"}
     if gate is not None:
         payload["gate"] = gate
     write_json_atomic(_layout_path(local), payload)
@@ -357,7 +360,7 @@ def _read_epoch_meta(local: str) -> dict:
 
 
 def _base_max(meta: dict, epoch_id: int):
-    """Max canonical key over committed epochs STRICTLY BELOW epoch_id
+    """Max ingest sequence over committed epochs STRICTLY BELOW epoch_id
     (a replayed epoch must never see its own crashed attempt's entry).
     None when nothing below is indexed or every earlier epoch gated
     out to zero rows."""
@@ -369,28 +372,21 @@ def _base_max(meta: dict, epoch_id: int):
     return max(vals) if vals else None
 
 
-def rebuild_index_meta(spark, index_path: str, key_col: str) -> dict:
+def rebuild_index_meta(spark, index_path: str) -> dict:
     """Recover the .seqmeta.json sidecar from the index itself (one
-    column-pruned scan): per-epoch max of `key_col` (SEQ_COL for a
-    seq-keyed index, the id column for a monotone one) plus the
-    per-epoch kept-doc count (distinct keys — the undersize guard's
-    running total). For disaster recovery / migration only — the hot
-    path never scans."""
+    column-pruned scan): the per-epoch max ingest sequence. For
+    disaster recovery / migration only — the hot path never scans."""
     local = local_path(index_path)
-    meta = {"epochs": {}, "kept": {}}
+    meta = {"epochs": {}}
     if _epoch_values(local):
         rows = (
             spark.read.option("basePath", index_path)
             .parquet(index_path)
             .groupBy(EPOCH_COL)
-            .agg(
-                F.max(key_col).alias("mx"),
-                F.countDistinct(F.col(key_col)).alias("kept"),
-            )
+            .agg(F.max(SEQ_COL).alias("mx"))
             .collect()
         )
         meta["epochs"] = {str(r[EPOCH_COL]): r["mx"] for r in rows}
-        meta["kept"] = {str(r[EPOCH_COL]): int(r["kept"]) for r in rows}
     write_json_atomic(_meta_path(local), meta)
     return meta
 
@@ -455,29 +451,23 @@ def _gate(
     min_tokens: int,
     min_alpha_ratio: float,
     quality_gates: "dict | None",
-    use_seq: bool,
     seq_start: int,
-) -> "tuple[DataFrame, str]":
-    """Structural + quality gates, then the canonical key: the ONE
-    definition both writers share (apply_curation_batch and
-    rebuild_curation_index) — the layout sidecar pins the gate
-    PARAMETERS, but only a single code path can pin the gate
-    SEMANTICS; two copies could diverge in ways no sidecar sees.
-    Returns (gated docs, canonical key column), eagerly checkpointed
-    (every consumer reads it several times)."""
+) -> DataFrame:
+    """Structural + quality gates, then the ingest sequence from
+    seq_start: the ONE definition both writers share
+    (apply_curation_batch and rebuild_curation_index) — the layout
+    sidecar pins the gate PARAMETERS, but only a single code path can
+    pin the gate SEMANTICS; two copies could diverge in ways no sidecar
+    sees. Eagerly checkpointed (every consumer reads it several
+    times)."""
     gated = gate_documents(docs, id_col, text_col, min_tokens, min_alpha_ratio)
     if quality_gates:
         gated = apply_quality_gates(gated, id_col, text_col, **quality_gates)
-    if use_seq:
-        gated = assign_ingest_seq(gated, id_col, seq_start)
-        key = SEQ_COL
-    else:
-        key = id_col
-    return gated.localCheckpoint(eager=True), key
+    return _assign_seq(gated, id_col, seq_start).localCheckpoint(eager=True)
 
 
 def _band_bucketed(
-    gated: DataFrame, key: str, id_col: str, text_col: str, n_buckets: int
+    gated: DataFrame, id_col: str, text_col: str, n_buckets: int
 ) -> DataFrame:
     """Band the gated docs and attach the bucket column — the shared
     back half of both writers (see _gate). Eagerly checkpointed: the
@@ -493,13 +483,9 @@ def _band_bucketed(
     first makes every bucket land as ONE file per write, at the cost
     of one O(band rows) shuffle the write was going to pay in file
     handles anyway."""
-    bands = band_documents(gated, key, text_col)
-    if key == SEQ_COL:
-        bands = bands.join(gated.select(id_col, SEQ_COL), SEQ_COL).select(
-            id_col, SEQ_COL, "band", "band_key"
-        )
     return (
-        bands.withColumn(BUCKET_COL, _bucket_expr(n_buckets))
+        _seq_bands(gated, id_col, text_col)
+        .withColumn(BUCKET_COL, _bucket_expr(n_buckets))
         .repartition(F.col(BUCKET_COL))
         .localCheckpoint(eager=True)
     )
@@ -520,25 +506,20 @@ def apply_curation_batch(
     overlap: int = 16,
     epoch_id: int = 0,
     n_buckets: "int | str" = DEFAULT_BUCKETS,
-    use_seq: bool = True,
     quality_gates: "dict | None" = None,
     bootstrap_growth: float = BOOTSTRAP_GROWTH,
 ) -> None:
     """One micro-batch: curate `batch` against every earlier epoch's
     band rows (pruned to the batch's own touched buckets), overwrite
     this epoch's chunks and index-delta directories, record the
-    epoch's max canonical key in the sidecar. Empty batches are a
+    epoch's max ingest sequence in the sidecar. Empty batches are a
     no-op (no empty epoch dirs — a rate-limited stream would otherwise
     litter the index with thousands of zero-row partitions).
 
-    use_seq=True (default): ids may be ANY type in any order (the
-    reference's own fallback URIs are `d-<uuid>`, ingester.py:538) — a
-    surrogate ingest sequence is assigned per epoch, strictly above
-    every earlier epoch's, and the canonical rule runs on it.
-    use_seq=False is the monotone-id fast path (no per-increment sort):
-    every batch's min id must exceed every indexed id, checked here
-    against the sidecar's true max (never against the bucket-pruned
-    view, which would understate it).
+    Ids may be ANY type in any order (the reference's own fallback
+    URIs are `d-<uuid>`, ingester.py:538): a surrogate ingest sequence
+    is assigned per epoch, strictly above every earlier epoch's, and
+    the canonical rule runs on it.
 
     quality_gates: optional dict forwarded to
     operators/curation.py apply_quality_gates (langid_model +
@@ -580,9 +561,8 @@ def apply_curation_batch(
                 f"n_buckets must be an int or 'auto', got {n_buckets!r}"
             )
         n_buckets = _resolve_n_buckets(batch, local, bootstrap_growth)
-    key_mode = "seq" if use_seq else "id"
     gate = _gate_pin(min_tokens, min_alpha_ratio, quality_gates)
-    _check_layout(local, n_buckets, key_mode, gate)
+    _check_layout(local, n_buckets, gate)
     meta = _read_epoch_meta(local)
     if (
         not meta["epochs"]
@@ -591,24 +571,16 @@ def apply_curation_batch(
         raise RuntimeError(
             f"{_meta_path(local)} is missing but the index holds "
             "committed epochs — without the per-epoch max the next "
-            "canonical key cannot be assigned safely. Rebuild it once "
-            "with rebuild_index_meta(spark, index_path, key_col)."
+            "ingest sequence cannot be assigned safely. Rebuild it once "
+            "with rebuild_index_meta(spark, index_path)."
         )
     base_max = _base_max(meta, epoch_id)
-    start = 0 if base_max is None else (int(base_max) + 1 if use_seq else 0)
-    gated, key = _gate(
+    start = 0 if base_max is None else int(base_max) + 1
+    gated = _gate(
         batch, id_col, text_col, min_tokens, min_alpha_ratio,
-        quality_gates, use_seq, start,
+        quality_gates, start,
     )
-    if not use_seq:
-        new_min = gated.agg(F.min(id_col).alias("mn")).collect()[0]["mn"]
-        if base_max is not None and new_min is not None and new_min <= base_max:
-            raise ValueError(
-                f"monotone-id mode needs monotone ids: batch min "
-                f"{new_min} <= indexed max {base_max}; use the default "
-                "use_seq=True for unordered id spaces."
-            )
-    new_bands = _band_bucketed(gated, key, id_col, text_col, n_buckets)
+    new_bands = _band_bucketed(gated, id_col, text_col, n_buckets)
     touched = sorted(
         r[BUCKET_COL]
         for r in new_bands.select(BUCKET_COL).distinct().collect()
@@ -643,7 +615,6 @@ def apply_curation_batch(
         new_bands.drop(BUCKET_COL),
         prior,
         base_max,
-        key=key,
         id_col=id_col,
         text_col=text_col,
         chunk_tokens=chunk_tokens,
@@ -661,93 +632,19 @@ def apply_curation_batch(
     new_bands.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
         os.path.join(index_path, f"{EPOCH_COL}={epoch_id}")
     )
-    agg_new = new_bands.agg(
-        F.max(key).alias("mx"),
-        # one extra column on the agg the sidecar already pays (over the
-        # checkpointed bands, not a gate-scan replay): the epoch's kept-
-        # doc count, which min-key mode needs for the undersize guard —
-        # seq mode gets it free from the dense key but records it too
-        # for uniformity
-        F.countDistinct(F.col(key)).alias("kept"),
-    ).collect()[0]
-    mx_new, kept_new = agg_new["mx"], int(agg_new["kept"])
+    mx_new = new_bands.agg(F.max(SEQ_COL).alias("mx")).collect()[0]["mx"]
     meta["epochs"][str(epoch_id)] = mx_new
-    # replay-safe running count (VERDICT r11 #3): keyed by epoch like
-    # the max map, so a crashed epoch's re-run overwrites its own entry
-    # and the cumulative sum converges whatever the crash order
-    meta.setdefault("kept", {})[str(epoch_id)] = kept_new
     write_json_atomic(_meta_path(local), meta)
-    _pin_layout(local, n_buckets, key_mode, gate)
-    # cold-start undersize guard (VERDICT r10 #7, extended to min-key
-    # mode in r12): if the sizing rule on what the index now actually
-    # holds wants >= 4x the pinned count, the pin (often a degenerate
-    # tiny-first-batch auto-bootstrap) is underscaled for life: say so
-    # and name the remedy. 4x = one doubling past the bootstrap's own
-    # growth margin running out — early enough to act, late enough not
-    # to fire on normal growth into the margin. Seq mode reads the
-    # count from the dense key (mx+1, exact across restarts even where
-    # older sidecars predate the kept map); min-key mode sums the
-    # per-epoch kept map, and committed epochs the map predates
-    # (pre-r12 sidecars, or a pre-r13 rebuild's epoch=-1) are
-    # BACKFILLED ONCE from the index itself — a partition-pruned scan
-    # of exactly the missing epoch directories — so the guard counts
-    # the full history instead of silently undercounting (VERDICT r12
-    # #2). If that one-time scan fails the guard says it is blind and
-    # names the remedy; it never sums a knowingly partial map without
-    # saying so.
-    if use_seq:
-        held = int(mx_new) + 1 if mx_new is not None else 0
-    else:
-        kept_map = meta["kept"]
-        missing = sorted(
-            (e for e in meta["epochs"]
-             if int(e) <= epoch_id and kept_map.get(e) is None),
-            key=int,
-        )
-        if missing:
-            import logging
-
-            log = logging.getLogger(__name__)
-            try:
-                found = {
-                    str(r[EPOCH_COL]): int(r["kept"])
-                    for r in (
-                        batch.sparkSession.read
-                        .option("basePath", index_path)
-                        .parquet(index_path)
-                        .where(
-                            F.col(EPOCH_COL).isin([int(e) for e in missing])
-                        )
-                        .groupBy(EPOCH_COL)
-                        .agg(F.countDistinct(F.col(key)).alias("kept"))
-                        .collect()
-                    )
-                }
-                for e in missing:
-                    # an epoch dir absent from the scan held zero kept
-                    # docs (empty epochs are legal); record the zero so
-                    # the backfill never re-runs
-                    kept_map[e] = found.get(e, 0)
-                write_json_atomic(_meta_path(local), meta)
-                log.warning(
-                    "curation sink: sidecar predates the per-epoch kept "
-                    "map for epochs %s — backfilled once from the index "
-                    "(partition-pruned scan of those epochs only); the "
-                    "undersize guard now counts the full history.",
-                    missing,
-                )
-            except Exception as exc:  # noqa: BLE001 — guard must stay loud
-                log.warning(
-                    "curation sink: sidecar lacks kept counts for epochs "
-                    "%s and the backfill scan failed (%s) — the undersize "
-                    "guard UNDERCOUNTS until rebuild_index_meta(spark, "
-                    "index_path, %r) is run on a quiesced stream.",
-                    missing, exc, key,
-                )
-        held = sum(
-            v for e, v in kept_map.items()
-            if int(e) <= epoch_id and v is not None
-        )
+    _pin_layout(local, n_buckets, gate)
+    # cold-start undersize guard (VERDICT r10 #7): if the sizing rule on
+    # what the index now actually holds wants >= 4x the pinned count,
+    # the pin (often a degenerate tiny-first-batch auto-bootstrap) is
+    # underscaled for life: say so and name the remedy. 4x = one
+    # doubling past the bootstrap's own growth margin running out —
+    # early enough to act, late enough not to fire on normal growth into
+    # the margin. The ingest sequence is dense from 0 across epochs, so
+    # the indexed doc count is mx+1 — exact across restarts, no scan.
+    held = int(mx_new) + 1 if mx_new is not None else 0
     if held > 0:
         from ds_caselaw_ingester_spark.operators.sizing import (
             curation_n_buckets,
@@ -883,7 +780,7 @@ def compact_index_epochs(spark, index_path: str, upto_epoch: int) -> int:
             "committed epochs — compacting would fabricate a sidecar "
             "entry and bypass the batch path's missing-meta guard. "
             "Rebuild it once with rebuild_index_meta(spark, "
-            "index_path, key_col), then compact."
+            "index_path), then compact."
         )
     src, target = _fold_epochs(spark, index_path, upto_epoch)
     if not src:
@@ -896,17 +793,6 @@ def compact_index_epochs(spark, index_path: str, upto_epoch: int) -> int:
     ]
     vals = [v for v in folded_vals + [meta["epochs"].get(str(target))] if v is not None]
     meta["epochs"][str(target)] = max(vals) if vals else None
-    # fold the kept map the same direction: canonical keys are unique
-    # ACROSS epochs (each epoch keeps only new canonical docs), so the
-    # folded partition's distinct count is the SUM of the folded
-    # entries. If any folded epoch predates the kept map the sum is
-    # unknown — drop the target's entry so the undersize guard's
-    # backfill recomputes it from the folded partition instead of
-    # trusting a knowingly partial sum.
-    kept_map = meta.get("kept", {})
-    kept_vals = [kept_map.pop(str(e), None) for e in src]
-    if kept_vals and all(v is not None for v in kept_vals):
-        meta.setdefault("kept", {})[str(target)] = sum(kept_vals)
     write_json_atomic(_meta_path(local), meta)
     return len(src)
 
@@ -941,7 +827,6 @@ def rebuild_curation_index(
     min_tokens: int = 8,
     min_alpha_ratio: float = 0.5,
     n_buckets: int = DEFAULT_BUCKETS,
-    use_seq: bool = True,
     quality_gates: "dict | None" = None,
     chunks_path: "str | None" = None,
     chunk_tokens: int = 128,
@@ -963,7 +848,7 @@ def rebuild_curation_index(
     the rebuild) or the old one (epoch N+1 probes see the rebuild
     plus any post-rebuild epochs); neither can collide with or
     overwrite the rebuilt partition, by the same never-rewritable
-    argument the compaction clamp makes. Seq mode restarts the
+    argument the compaction clamp makes. The rebuild restarts the
     canonical order: `_seq` is assigned in id order from 0 and the
     sidecar pins epoch -1's max, so the next batch continues strictly
     above — the equivalence contract restarts from this rebuild as
@@ -1000,12 +885,10 @@ def rebuild_curation_index(
     os.makedirs(os.path.dirname(os.path.abspath(local)), exist_ok=True)
     with open(marker, "w") as f:
         f.write("1")
-    key_mode = "seq" if use_seq else "id"
-    gated, key = _gate(
-        docs, id_col, text_col, min_tokens, min_alpha_ratio,
-        quality_gates, use_seq, 0,
+    gated = _gate(
+        docs, id_col, text_col, min_tokens, min_alpha_ratio, quality_gates, 0
     )
-    new_bands = _band_bucketed(gated, key, id_col, text_col, n_buckets)
+    new_bands = _band_bucketed(gated, id_col, text_col, n_buckets)
     tmp = local + ".rebuild.tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     new_bands.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
@@ -1021,7 +904,6 @@ def rebuild_curation_index(
             new_bands.drop(BUCKET_COL),
             new_bands.drop(BUCKET_COL).limit(0),
             None,
-            key=key,
             id_col=id_col,
             text_col=text_col,
             chunk_tokens=chunk_tokens,
@@ -1047,53 +929,50 @@ def rebuild_curation_index(
         )
     os.makedirs(local, exist_ok=True)
     swap_partition_dirs(local, tmp, [-1], EPOCH_COL)
-    agg = new_bands.agg(
-        F.max(key).alias("mx"),
-        # the rebuilt epoch's kept count rides the same agg (VERDICT
-        # r12 #2): without it every post-rebuild min-key undersize
-        # check would hit the backfill path for epoch -1
-        F.countDistinct(F.col(key)).alias("kept"),
-    ).collect()[0]
-    mx = agg["mx"]
+    mx = new_bands.agg(F.max(SEQ_COL).alias("mx")).collect()[0]["mx"]
     n_rows = new_bands.count()
-    write_json_atomic(
-        _meta_path(local),
-        {"epochs": {"-1": mx}, "kept": {"-1": int(agg["kept"])}},
-    )
+    write_json_atomic(_meta_path(local), {"epochs": {"-1": mx}})
     _pin_layout(
-        local,
-        n_buckets,
-        key_mode,
-        _gate_pin(min_tokens, min_alpha_ratio, quality_gates),
+        local, n_buckets, _gate_pin(min_tokens, min_alpha_ratio, quality_gates)
     )
     os.remove(marker)
     return n_rows
 
 
 def migrate_index_to_bucketed(
-    spark,
-    index_path: str,
-    n_buckets: int = DEFAULT_BUCKETS,
-    key_col: str = "doc_id",
-    key_mode: str = "id",
+    spark, index_path: str, n_buckets: int = DEFAULT_BUCKETS
 ) -> int:
-    """One-time migration of a pre-bucketing (flat-epoch) band index
-    into the epoch/bucket layout, plus the two sidecars. Quiesced
-    stream required. Idempotent: a crashed run's tmp is discarded and
-    every epoch re-derived (re-bucketing an already-bucketed epoch
+    """Re-bucket a seq-keyed band index under a new bucket count (the
+    remedy the undersize guard names), rewriting both sidecars.
+    Quiesced stream required. Idempotent: a crashed run's tmp is
+    discarded and every epoch re-derived (re-bucketing an epoch
     recomputes the identical bucket values). Returns the number of
-    epoch directories migrated. `key_col` is the column the sidecar's
-    per-epoch max is computed over — the id column for an r8-era
-    monotone index (key_mode='id'), SEQ_COL for a seq-keyed one."""
+    epoch directories migrated.
+
+    An epoch without a `_seq` column (an id-keyed index from before
+    the ingest sequence, flat or bucketed) raises before anything is
+    written: the arrival order it lost cannot be recovered from the
+    index, so the remedy is rebuild_curation_index from the corpus."""
     local = local_path(index_path)
     recover_buckets(local, prefix=f"{EPOCH_COL}=")
     epochs = _epoch_values(local)
     if not epochs:
         return 0
+    frames = {
+        e: spark.read.parquet(os.path.join(index_path, f"{EPOCH_COL}={e}"))
+        for e in epochs
+    }
+    for e, df in frames.items():
+        if SEQ_COL not in df.columns:
+            raise ValueError(
+                f"{local}/{EPOCH_COL}={e} has no {SEQ_COL} column — an "
+                "id-keyed index, which no migration can give an arrival "
+                "order. Rebuild it from the corpus with "
+                "rebuild_curation_index (quiesced stream)."
+            )
     tmp = local + ".migrate-tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    for e in epochs:
-        df = spark.read.parquet(os.path.join(index_path, f"{EPOCH_COL}={e}"))
+    for e, df in frames.items():
         if BUCKET_COL in df.columns:
             df = df.drop(BUCKET_COL)
         df.withColumn(BUCKET_COL, _bucket_expr(n_buckets)).repartition(
@@ -1102,8 +981,8 @@ def migrate_index_to_bucketed(
             os.path.join("file:" + tmp, f"{EPOCH_COL}={e}")
         )
     swap_partition_dirs(local, tmp, epochs, EPOCH_COL)
-    _pin_layout(local, n_buckets, key_mode)
-    rebuild_index_meta(spark, index_path, key_col)
+    _pin_layout(local, n_buckets)
+    rebuild_index_meta(spark, index_path)
     return len(epochs)
 
 
@@ -1122,7 +1001,6 @@ def run_curation_stream(
     chunk_tokens: int = 128,
     overlap: int = 16,
     n_buckets: "int | str" = DEFAULT_BUCKETS,
-    use_seq: bool = True,
     quality_gates: "dict | None" = None,
     projected_docs: "int | None" = None,
     bootstrap_growth: float = BOOTSTRAP_GROWTH,
@@ -1163,7 +1041,6 @@ def run_curation_stream(
             overlap=overlap,
             epoch_id=epoch_id,
             n_buckets=n_buckets,
-            use_seq=use_seq,
             quality_gates=quality_gates,
             bootstrap_growth=bootstrap_growth,
         )

@@ -46,8 +46,8 @@ def main(spark, sf_dir: str, work_dir: str) -> dict:
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
     # uuid-SHAPED hex ids derived JVM-side (no Python UDF even in a demo):
-    # unordered, non-monotone — the id shape the monotone fast path
-    # cannot accept and the surrogate sequence exists for
+    # unordered, non-monotone — the id shape the surrogate ingest
+    # sequence exists for
     def uid(col):
         return F.concat(F.lit("d-"), F.md5(F.col(col).cast("string") if isinstance(col, str) else col.cast("string")))
     base = docs.where("doc_id % 3 = 0").select(

@@ -367,14 +367,13 @@ def test_curate_increment_equals_recompute_on_new_ids(spark):
     keepers ∩ new ids, with base decisions untouched. The corpus plants
     every interesting shape: a new near-dup of a KEPT base doc, a new
     near-dup of a DROPPED base doc, a fresh new-new family, and unique
-    new docs. Plus the monotone-id refusal and the empty-index
-    bootstrap."""
-    import pytest as _pytest
-
+    new docs. Plus the empty-index bootstrap. The ids arrive in
+    increasing order, so the ingest sequence follows the id and the
+    min-id recompute is the arrival-order one."""
     from ds_caselaw_ingester_spark.operators.curation import (
         curate_corpus,
-        curate_increment,
-        curation_band_index,
+        curate_increment_seq,
+        curation_band_index_seq,
     )
 
     fam_a = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
@@ -401,8 +400,8 @@ def test_curate_increment_equals_recompute_on_new_ids(spark):
     full = {r["doc_id"] for r in curate_corpus(bd.union(nd), **kw).select("doc_id").distinct().collect()}
     base_keep = {r["doc_id"] for r in curate_corpus(bd, **kw).select("doc_id").distinct().collect()}
 
-    index = curation_band_index(bd, min_tokens=5).localCheckpoint()
-    chunks, delta = curate_increment(nd, index, min_tokens=5, chunk_tokens=64, overlap=0)
+    index = curation_band_index_seq(bd, min_tokens=5).localCheckpoint()
+    chunks, delta = curate_increment_seq(nd, index, min_tokens=5, chunk_tokens=64, overlap=0)
     incr_keep = {r["doc_id"] for r in chunks.select("doc_id").distinct().collect()}
 
     assert incr_keep == {i for i in full if i > 10}
@@ -414,18 +413,13 @@ def test_curate_increment_equals_recompute_on_new_ids(spark):
         [(21, new[13] + " t"), (22, "wholly novel words never seen in any prior day at all")],
         "doc_id long, text string",
     )
-    c2, _ = curate_increment(day2, index.unionAll(delta), min_tokens=5, chunk_tokens=64, overlap=0)
+    c2, _ = curate_increment_seq(day2, index.unionByName(delta), min_tokens=5, chunk_tokens=64, overlap=0)
     # 21 near-dups day-one's kept doc 13 -> dropped; 22 is fresh -> kept
     assert {r["doc_id"] for r in c2.select("doc_id").distinct().collect()} == {22}
 
-    # monotone refusal: an id at-or-below the indexed max
-    stale = spark.createDataFrame([(3, "whatever text this is")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="monotone"):
-        curate_increment(stale, index, min_tokens=1)
-
     # empty-index bootstrap == plain curation of the increment
-    empty_index = curation_band_index(bd.where("doc_id < 0"), min_tokens=5)
-    boot_chunks, _ = curate_increment(nd, empty_index, min_tokens=5, chunk_tokens=64, overlap=0)
+    empty_index = curation_band_index_seq(bd.where("doc_id < 0"), min_tokens=5)
+    boot_chunks, _ = curate_increment_seq(nd, empty_index, min_tokens=5, chunk_tokens=64, overlap=0)
     want_boot = {r["doc_id"] for r in curate_corpus(nd, **kw).select("doc_id").distinct().collect()}
     assert {r["doc_id"] for r in boot_chunks.select("doc_id").distinct().collect()} == want_boot
 
@@ -711,16 +705,14 @@ def test_gate_battery_validates_driver_side(spark):
 
 
 def test_incremental_entries_self_defend_against_narrow_input(spark):
-    """Round 12 (VERDICT r11 #4): the four incremental production
-    entries — curation_band_index/_seq and curate_increment/_seq — run
+    """Round 12 (VERDICT r11 #4): the incremental production entries —
+    curation_band_index_seq and curate_increment_seq — run
     the same map-heavy stages curate_corpus guards with
     spread_if_narrow, so each must produce IDENTICAL results on a
     1-partition frame and a pre-spread frame (the repartition is a
     pure perf guard, never semantics)."""
     from ds_caselaw_ingester_spark.operators.curation import (
-        curate_increment,
         curate_increment_seq,
-        curation_band_index,
         curation_band_index_seq,
     )
     from ds_caselaw_ingester_spark.sources.catalog import spread
@@ -737,22 +729,15 @@ def test_incremental_entries_self_defend_against_narrow_input(spark):
     def _rows(df):
         return sorted(tuple(r) for r in df.collect())
 
-    for entry in (curation_band_index, curation_band_index_seq):
-        narrow = _rows(entry(base.coalesce(1)))
-        wide = _rows(entry(spread(base, "doc_id")))
-        assert narrow == wide, entry.__name__
+    narrow = _rows(curation_band_index_seq(base.coalesce(1)))
+    wide = _rows(curation_band_index_seq(spread(base, "doc_id")))
+    assert narrow == wide
 
-    for entry in (curate_increment, curate_increment_seq):
-        idx_builder = (
-            curation_band_index
-            if entry is curate_increment
-            else curation_band_index_seq
-        )
-        idx = idx_builder(base).localCheckpoint(eager=True)
-        chunks_n, delta_n = entry(inc.coalesce(1), idx)
-        chunks_w, delta_w = entry(spread(inc, "doc_id"), idx)
-        assert _rows(chunks_n) == _rows(chunks_w), entry.__name__
-        assert _rows(delta_n) == _rows(delta_w), entry.__name__
+    idx = curation_band_index_seq(base).localCheckpoint(eager=True)
+    chunks_n, delta_n = curate_increment_seq(inc.coalesce(1), idx)
+    chunks_w, delta_w = curate_increment_seq(spread(inc, "doc_id"), idx)
+    assert _rows(chunks_n) == _rows(chunks_w)
+    assert _rows(delta_n) == _rows(delta_w)
 
 
 def test_gate_spec_broadcast_is_reused_across_calls(spark):

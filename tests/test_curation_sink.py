@@ -1,6 +1,6 @@
 """Streaming curation sink: the epoch/bucket-partitioned band log's
-crash, replay, compaction, pruning, and layout invariants, plus the
-surrogate-seq path that lifts the monotone-id precondition (uuid-keyed
+crash, replay, compaction, pruning, and layout invariants, on the
+surrogate ingest sequence that orders any id space (uuid-keyed
 corpora — the reference's own fallback URIs are `d-<uuid>`,
 ingester.py:538).
 
@@ -20,7 +20,6 @@ from conftest import few_shuffle_partitions as _few_shuffle_partitions
 from ds_caselaw_ingester_spark.operators.curation import (
     SEQ_COL,
     curate_corpus,
-    curate_increment,
     curate_increment_seq,
     curation_band_index_seq,
 )
@@ -42,7 +41,7 @@ def _text(tag: str) -> str:
 
 
 # uuid-ish hex ids, deliberately NOT in arrival order: epoch-1 ids sort
-# below some epoch-0 ids, so the monotone-id path must refuse them
+# below some epoch-0 ids, so only the ingest sequence can order them
 EPOCH0 = [
     ("d-7f3a", _text("basea")),
     ("d-20c9", _text("baseb")),
@@ -96,7 +95,7 @@ def _apply(spark, rows, idx, chk, epoch, **kw):
 def test_seq_epochs_match_arrival_order_recompute(spark, tmp_path):
     """The headline contract: per-epoch streamed keepers equal the
     full arrival-order recompute's keepers ∩ that epoch's ids — on a
-    uuid-keyed corpus the monotone-id path cannot accept at all."""
+    uuid-keyed corpus whose ids carry no arrival order."""
     idx, chk = str(tmp_path / "idx"), str(tmp_path / "chunks")
     for e, rows in enumerate([EPOCH0, EPOCH1, EPOCH2]):
         _apply(spark, rows, idx, chk, e)
@@ -236,59 +235,76 @@ def test_probe_reads_only_touched_buckets(spark, tmp_path):
         _apply(spark, [("e-0002", _text("basea"))], idx, chk, 2)
 
 
-def test_monotone_id_fast_path(spark, tmp_path):
-    """use_seq=False: the r8 semantics — monotone ids work without the
-    per-increment sort, non-monotone ids raise (pointing at seq mode),
-    and the check runs against the sidecar's TRUE max, not the pruned
-    view."""
-    idx, chk = str(tmp_path / "idx"), str(tmp_path / "chunks")
-    b0 = [(10, _text("ma")), (11, _text("mb")), (12, _text("mc"))]
-    b1 = [(20, _text("ma")), (21, _text("uniq9"))]  # 20 dups base 10
-    df0 = spark.createDataFrame(b0, "doc_id long, text string")
-    df1 = spark.createDataFrame(b1, "doc_id long, text string")
-    kw = {**CHUNK_KW, "n_buckets": 8, "use_seq": False}
-    apply_curation_batch(df0, idx, chk, epoch_id=0, **kw)
-    apply_curation_batch(df1, idx, chk, epoch_id=1, **kw)
-    assert _kept(spark, chk, 1) == {21}
-    bad = spark.createDataFrame([(5, _text("zz"))], "doc_id long, text string")
-    with pytest.raises(ValueError, match="monotone"):
-        apply_curation_batch(bad, idx, chk, epoch_id=2, **kw)
-
-
 def test_layout_guards(spark, tmp_path):
-    """Changing n_buckets or the key mode against a pinned layout
-    raises instead of silently missing history."""
+    """Changing n_buckets against a pinned layout, or probing an index
+    whose sidecar pins a key other than the ingest sequence (an
+    id-keyed index has no _seq to compare), raises instead of silently
+    missing history."""
+    import json
+
+    from ds_caselaw_ingester_spark.streaming.curation_sink import _layout_path
+
     idx, chk = str(tmp_path / "idx"), str(tmp_path / "chunks")
     _apply(spark, EPOCH0, idx, chk, 0)
     with pytest.raises(ValueError, match="n_buckets"):
         _apply(spark, EPOCH1, idx, chk, 1, n_buckets=16)
-    with pytest.raises(ValueError, match="key_mode|n_buckets"):
-        df = spark.createDataFrame([(999, _text("mm"))], "doc_id long, text string")
-        apply_curation_batch(
-            df, idx, chk, epoch_id=1, use_seq=False, n_buckets=8, **CHUNK_KW
-        )
+    with open(_layout_path(idx)) as f:
+        layout = json.load(f)
+    assert layout["key_mode"] == "seq"
+    with open(_layout_path(idx), "w") as f:
+        json.dump({**layout, "key_mode": "id"}, f)
+    with pytest.raises(ValueError, match="rebuild_curation_index"):
+        _apply(spark, EPOCH1, idx, chk, 1)
 
 
-def test_legacy_flat_index_refused_then_migrated(spark, tmp_path):
-    """An r8-era flat epoch log is refused with the migration pointer;
-    after migrate_index_to_bucketed the stream resumes against it and
-    still pairs new docs with the migrated base rows."""
-    from ds_caselaw_ingester_spark.operators.curation import curation_band_index
+def _write_flat_id_index(spark, idx):
+    """An r8-era index: one flat epoch directory of (doc_id, band,
+    band_key) rows keyed by the id, no _seq and no bucket= layout."""
+    from ds_caselaw_ingester_spark.operators.curation import _bands, gate_documents
 
-    idx, chk = str(tmp_path / "idx"), str(tmp_path / "chunks")
     base = spark.createDataFrame(
         [(10, _text("la")), (11, _text("lb"))], "doc_id long, text string"
     )
-    curation_band_index(base, min_tokens=8, min_alpha_ratio=0.5).write.parquet(
+    _bands(gate_documents(base), "doc_id", "text").write.parquet(
         os.path.join(idx, "epoch=0")
     )
+    return base
+
+
+def test_legacy_flat_index_refused_then_rebuilt(spark, tmp_path):
+    """An r8-era flat, id-keyed epoch log is refused with the rebuild
+    pointer; after rebuild_curation_index from the corpus the stream
+    resumes and still pairs new docs with the rebuilt base rows."""
+    from ds_caselaw_ingester_spark.streaming.curation_sink import (
+        rebuild_curation_index,
+    )
+
+    idx, chk = str(tmp_path / "idx"), str(tmp_path / "chunks")
+    base = _write_flat_id_index(spark, idx)
     nxt = spark.createDataFrame([(20, _text("la"))], "doc_id long, text string")
-    kw = {**CHUNK_KW, "n_buckets": 8, "use_seq": False}
-    with pytest.raises(ValueError, match="migrate_index_to_bucketed"):
+    kw = {**CHUNK_KW, "n_buckets": 8}
+    with pytest.raises(ValueError, match="rebuild_curation_index"):
         apply_curation_batch(nxt, idx, chk, epoch_id=1, **kw)
-    assert migrate_index_to_bucketed(spark, idx, n_buckets=8, key_col="doc_id") == 1
+    rebuild_curation_index(
+        base, idx, n_buckets=8,
+        min_tokens=CHUNK_KW["min_tokens"],
+        min_alpha_ratio=CHUNK_KW["min_alpha_ratio"],
+    )
     apply_curation_batch(nxt, idx, chk, epoch_id=1, **kw)
-    assert _kept(spark, chk, 1) == set()  # 20 dups migrated base 10
+    assert _kept(spark, chk, 1) == set()  # 20 dups rebuilt base 10
+
+
+def test_migration_refuses_index_without_seq(spark, tmp_path):
+    """migrate_index_to_bucketed re-buckets a seq-keyed index only: an
+    epoch without _seq (an id-keyed r8 index) raises with the rebuild
+    pointer before anything under the index is rewritten."""
+    idx = str(tmp_path / "idx")
+    _write_flat_id_index(spark, idx)
+    before = sorted(os.listdir(os.path.join(idx, "epoch=0")))
+    with pytest.raises(ValueError, match="rebuild_curation_index"):
+        migrate_index_to_bucketed(spark, idx, n_buckets=8)
+    assert sorted(os.listdir(os.path.join(idx, "epoch=0"))) == before
+    assert not os.path.exists(idx + ".layout.json")
 
 
 def test_missing_sidecar_raises_then_rebuilds(spark, tmp_path):
@@ -303,7 +319,7 @@ def test_missing_sidecar_raises_then_rebuilds(spark, tmp_path):
     os.remove(idx + ".seqmeta.json")
     with pytest.raises(RuntimeError, match="rebuild_index_meta"):
         _apply(spark, EPOCH2, idx, chk, 2)
-    rebuilt = rebuild_index_meta(spark, idx, SEQ_COL)
+    rebuilt = rebuild_index_meta(spark, idx)
     import json
 
     assert rebuilt == json.loads(original)
@@ -312,23 +328,14 @@ def test_missing_sidecar_raises_then_rebuilds(spark, tmp_path):
 
 
 def test_batch_api_seq_contract_on_uuid_corpus(spark, tmp_path):
-    """curate_increment_seq (the batch API): monotone variant refuses
-    the uuid corpus; the seq variant's keepers equal the arrival-order
-    recompute ∩ new ids, and its delta chains into a second increment."""
+    """curate_increment_seq (the batch API) on the uuid corpus: its
+    keepers equal the arrival-order recompute ∩ new ids, and its delta
+    chains into a second increment."""
     base = _df(spark, EPOCH0)
     index = curation_band_index_seq(
         base, min_tokens=8, min_alpha_ratio=0.5
     ).localCheckpoint(eager=True)
     inc = _df(spark, EPOCH1)
-    with pytest.raises(ValueError, match="monotone"):
-        from ds_caselaw_ingester_spark.operators.curation import curation_band_index
-
-        curate_increment(
-            inc,
-            curation_band_index(base, min_tokens=8, min_alpha_ratio=0.5),
-            min_tokens=8,
-            min_alpha_ratio=0.5,
-        )[0].collect()
     chunks, delta = curate_increment_seq(
         inc, index, chunk_tokens=32, overlap=4, min_tokens=8, min_alpha_ratio=0.5
     )
@@ -636,7 +643,7 @@ def test_compaction_refuses_lost_sidecar(spark, tmp_path):
     with pytest.raises(RuntimeError, match="seqmeta"):
         compact_index_epochs(spark, idx, upto_epoch=99)
     # the documented recovery unblocks it
-    rebuild_index_meta(spark, idx, SEQ_COL)
+    rebuild_index_meta(spark, idx)
     assert compact_index_epochs(spark, idx, upto_epoch=99) == 2
 
 
@@ -752,7 +759,6 @@ def test_undersized_pin_warns_and_migration_recovers(spark, tmp_path,
     import logging
 
     from ds_caselaw_ingester_spark.operators import sizing as S
-    from ds_caselaw_ingester_spark.streaming.curation_sink import SEQ_COL
 
     idx, chk = str(tmp_path / "idx"), str(tmp_path / "chunks")
     _apply(spark, EPOCH0, idx, chk, 0, n_buckets="auto")  # pins min_b=8
@@ -777,241 +783,54 @@ def test_undersized_pin_warns_and_migration_recovers(spark, tmp_path,
     monkeypatch.setattr(S, "curation_n_buckets", real)
 
     # the named remedy: rebuild under the larger count, stream continues
-    assert migrate_index_to_bucketed(
-        spark, idx, n_buckets=64, key_col=SEQ_COL, key_mode="seq"
-    ) > 0
+    assert migrate_index_to_bucketed(spark, idx, n_buckets=64) > 0
     _apply(spark, EPOCH2, idx, chk, 2, n_buckets="auto")
     assert _kept(spark, chk, 2) == EXPECT_KEPT[2]
-
-
-def test_undersized_pin_warns_in_monotone_id_mode(spark, tmp_path,
-                                                  caplog, monkeypatch):
-    """VERDICT r11 #3: the undersize guard also fires in min-key mode,
-    where there is no dense seq to read the count from — the sidecar's
-    per-epoch `kept` map (replay-safe: keyed by epoch like the max map)
-    supplies the running kept-doc total. Same monkeypatched sizing rule
-    as the seq test: wiring, not arithmetic."""
-    import logging
-
-    from ds_caselaw_ingester_spark.operators import sizing as S
-
-    idx, chk = str(tmp_path / "idx"), str(tmp_path / "chunks")
-    kw = {**CHUNK_KW, "use_seq": False}
-    b0 = [(10, _text("ma")), (11, _text("mb")), (12, _text("mc"))]
-    apply_curation_batch(
-        _df_long(spark, b0), idx, chk, epoch_id=0, n_buckets=8, **kw
-    )
-    # the sidecar records the epoch's kept count for min-key mode
-    import json
-
-    with open(idx + ".seqmeta.json") as f:
-        meta = json.load(f)
-    assert meta["kept"] == {"0": 3}
-
-    real = S.curation_n_buckets
-
-    def huge_corpus_rule(projected_docs, **kwargs):
-        return 64 if not kwargs else real(projected_docs, **kwargs)
-
-    monkeypatch.setattr(S, "curation_n_buckets", huge_corpus_rule)
-    with caplog.at_level(
-        logging.WARNING,
-        logger="ds_caselaw_ingester_spark.streaming.curation_sink",
-    ):
-        apply_curation_batch(
-            _df_long(spark, [(20, _text("uniq7"))]),
-            idx, chk, epoch_id=1, n_buckets=8, **kw,
-        )
-    msgs = [r.getMessage() for r in caplog.records]
-    assert any(
-        "sizing rule would choose n_buckets=64" in m
-        and "migrate_index_to_bucketed" in m
-        for m in msgs
-    ), msgs
 
 
 def _df_long(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_old_sidecar_kept_backfills_and_guard_fires(spark, tmp_path,
-                                                    caplog, monkeypatch):
-    """VERDICT r12 #2: a pre-r12 sidecar (committed epochs present,
-    `kept` map absent) must not make the min-key undersize guard
-    silently undercount. The guard backfills the missing entries ONCE
-    from the index itself (partition-pruned to the missing epochs),
-    persists them, and then fires the 4x WARN on the FULL history."""
-    import json
-    import logging
-
-    from ds_caselaw_ingester_spark.operators import sizing as S
-
-    idx, chk = str(tmp_path / "idx"), str(tmp_path / "chunks")
-    kw = {**CHUNK_KW, "use_seq": False}
-    apply_curation_batch(
-        _df_long(spark, [(10, _text("ka")), (11, _text("kb")),
-                         (12, _text("kc"))]),
-        idx, chk, epoch_id=0, n_buckets=8, **kw,
-    )
-    apply_curation_batch(
-        _df_long(spark, [(20, _text("kd"))]),
-        idx, chk, epoch_id=1, n_buckets=8, **kw,
-    )
-    # simulate the old format: epochs present, kept absent
-    meta_path = idx + ".seqmeta.json"
-    with open(meta_path) as f:
-        meta = json.load(f)
-    del meta["kept"]
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-
-    real = S.curation_n_buckets
-
-    def huge_corpus_rule(projected_docs, **kwargs):
-        return 64 if not kwargs else real(projected_docs, **kwargs)
-
-    monkeypatch.setattr(S, "curation_n_buckets", huge_corpus_rule)
-    with caplog.at_level(
-        logging.WARNING,
-        logger="ds_caselaw_ingester_spark.streaming.curation_sink",
-    ):
-        apply_curation_batch(
-            _df_long(spark, [(30, _text("ke"))]),
-            idx, chk, epoch_id=2, n_buckets=8, **kw,
-        )
-    msgs = [r.getMessage() for r in caplog.records]
-    assert any("backfilled once" in m for m in msgs), msgs
-    assert any("sizing rule would choose n_buckets=64" in m for m in msgs), msgs
-    # the backfill persisted: epochs 0/1 recounted from the index, 2 fresh
-    with open(meta_path) as f:
-        meta = json.load(f)
-    assert meta["kept"] == {"0": 3, "1": 1, "2": 1}
-    # and it never re-runs: a fourth epoch sees a complete map
-    caplog.clear()
-    with caplog.at_level(
-        logging.WARNING,
-        logger="ds_caselaw_ingester_spark.streaming.curation_sink",
-    ):
-        apply_curation_batch(
-            _df_long(spark, [(40, _text("kf"))]),
-            idx, chk, epoch_id=3, n_buckets=8, **kw,
-        )
-    assert not any(
-        "backfilled once" in r.getMessage() for r in caplog.records
-    )
-
-
-def test_rebuild_writes_kept_for_epoch_minus1(spark, tmp_path):
-    """The rebuilt epoch=-1 sidecar entry carries its kept count, so a
-    post-rebuild min-key stream never needs the backfill path."""
-    import json
-
-    from ds_caselaw_ingester_spark.streaming.curation_sink import (
-        rebuild_curation_index,
-    )
-
-    idx, chk = str(tmp_path / "idx"), str(tmp_path / "chunks")
-    docs = _df_long(
-        spark, [(10, _text("ra")), (11, _text("rb")), (12, _text("ra"))]
-    )
-    rebuild_curation_index(
-        docs, idx, use_seq=False, n_buckets=8, chunks_path=chk,
-        **{k: CHUNK_KW[k] for k in
-           ("min_tokens", "min_alpha_ratio", "chunk_tokens", "overlap")},
-    )
-    with open(idx + ".seqmeta.json") as f:
-        meta = json.load(f)
-    # the map counts INDEXED canonical keys (all gated docs — the
-    # quantity the n_buckets sizing rule is about), so the within-batch
-    # dup (12 dups 10) still counts: 3 gated, 3 indexed
-    assert meta["kept"] == {"-1": 3}
-
-
-def test_compaction_folds_kept_map(spark, tmp_path):
-    """compact_index_epochs folds the kept map the same direction as
-    the max map (canonical keys are unique across epochs, so counts
-    SUM); a folded epoch that predates the map drops the target's
-    entry so the guard's backfill recomputes it instead of trusting a
-    partial sum."""
-    import json
-
-    idx, chk = str(tmp_path / "idx"), str(tmp_path / "chunks")
-    for e, rows in enumerate([EPOCH0, EPOCH1, EPOCH2]):
-        _apply(spark, rows, idx, chk, e)
-    meta_path = idx + ".seqmeta.json"
-    # indexed canonical keys per epoch: EPOCH1's too-short row is gated
-    # out (4 of 5 indexed), its tainted dup still indexes
-    with open(meta_path) as f:
-        assert json.load(f)["kept"] == {"0": 4, "1": 4, "2": 2}
-    assert compact_index_epochs(spark, idx, upto_epoch=99) == 2  # 0,1 -> 1
-    with open(meta_path) as f:
-        assert json.load(f)["kept"] == {"1": 8, "2": 2}
-    # partial map: strip the target-to-be's entry, fold 1,2 -> 2
-    _apply(spark, [("d-zz91", _text("uniq9"))], idx, chk, 3)
-    with open(meta_path) as f:
-        meta = json.load(f)
-    del meta["kept"]["1"]
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    assert compact_index_epochs(spark, idx, upto_epoch=99) == 2  # 1,2 -> 2
-    with open(meta_path) as f:
-        kept = json.load(f)["kept"]
-    assert "2" not in kept  # unknown sum -> entry dropped, not fabricated
-    assert kept == {"3": 1}
-
-
-def test_undersize_guard_held_count_agrees_across_key_modes(
-    spark, tmp_path
-):
-    """VERDICT r13 queue #6: seq mode derives the undersize guard's
-    held count as mx+1 from the dense key; min-key mode sums the
-    per-epoch kept map. Nothing structural forces the two derivations
-    to agree, so run BOTH modes over the identical three-batch corpus
-    (same gating, same dedup drops) and assert the sidecars imply the
-    same held count — and that it equals the index's true cardinality.
-    (`held` counts docs the INDEX holds — every gate-passing doc,
-    tainted ones included, since a later dup of a DROPPED doc must
-    still find it — not the smaller set of docs whose chunks were
-    kept.)"""
+def test_undersize_guard_held_count_is_index_cardinality(spark, tmp_path):
+    """The undersize guard reads the index's doc count as mx+1 from the
+    dense ingest sequence. Pin that against the index itself (its
+    distinct _seq count) over a three-batch corpus with gating and
+    dedup drops, and pin the kept ids per epoch to the literal id-order
+    answer: the ids arrive in increasing order, so the sequence follows
+    the id and the keep decisions are the min-id ones. (`held` counts
+    docs the INDEX holds — every gate-passing doc, tainted ones
+    included, since a later dup of a DROPPED doc must still find it —
+    not the smaller set of docs whose chunks were kept.)"""
     import json
 
     b0 = [(10, _text("xa")), (11, _text("xb")), (12, _text("xc"))]
     b1 = [
         (20, _text("xa")),      # dup of base 10 -> dropped
-        (21, _text("pairp")),   # new-new pair: arrival keeps 21
+        (21, _text("pairp")),   # new-new pair: min id keeps 21
         (22, _text("pairp")),
         (23, "too short"),      # gated out
     ]
     b2 = [(30, _text("pairp")), (31, _text("xz"))]  # 30 dups a dropped doc
 
-    held_by_mode, kept_docs_by_mode = {}, {}
-    for mode, use_seq in (("seq", True), ("minkey", False)):
-        idx = str(tmp_path / f"idx_{mode}")
-        chk = str(tmp_path / f"chk_{mode}")
-        kw = {**CHUNK_KW, "n_buckets": 8, "use_seq": use_seq}
-        for epoch, rows in enumerate((b0, b1, b2)):
-            apply_curation_batch(
-                _df_long(spark, rows), idx, chk, epoch_id=epoch, **kw
-            )
-        with open(idx + ".seqmeta.json") as f:
-            meta = json.load(f)
-        if use_seq:
-            held = max(int(v) for v in meta["epochs"].values()) + 1
-        else:
-            held = sum(meta["kept"].values())
-        # both modes also record the kept map; its sum must agree with
-        # the mode's own held derivation
-        assert sum(meta["kept"].values()) == held, (mode, meta)
-        held_by_mode[mode] = held
-        kept_docs_by_mode[mode] = set().union(
-            *(_kept(spark, chk, e) for e in range(3))
+    idx, chk = str(tmp_path / "idx"), str(tmp_path / "chunks")
+    for epoch, rows in enumerate((b0, b1, b2)):
+        apply_curation_batch(
+            _df_long(spark, rows), idx, chk, epoch_id=epoch, n_buckets=8,
+            **CHUNK_KW,
         )
-
-    assert held_by_mode["seq"] == held_by_mode["minkey"], held_by_mode
-    # ground truth: every gate-passing doc is index-held (3 in b0,
-    # 3 in b1 — 23 is gated out — and 2 in b2), dropped-by-dedup or not
-    assert held_by_mode["seq"] == 8, held_by_mode
-    # while the kept CHUNKS are the dedup survivors, identical across
-    # modes
-    assert kept_docs_by_mode["seq"] == kept_docs_by_mode["minkey"]
-    assert kept_docs_by_mode["minkey"] == {10, 11, 12, 21, 31}
+    with open(idx + ".seqmeta.json") as f:
+        meta = json.load(f)
+    held = max(int(v) for v in meta["epochs"].values()) + 1
+    indexed = (
+        spark.read.option("basePath", idx).parquet(idx)
+        .select(SEQ_COL).distinct().count()
+    )
+    # every gate-passing doc is index-held (3 in b0, 3 in b1 — 23 is
+    # gated out — and 2 in b2), dropped-by-dedup or not
+    assert held == indexed == 8, (held, indexed)
+    assert {e: _kept(spark, chk, e) for e in range(3)} == {
+        0: {10, 11, 12},
+        1: {21},
+        2: {31},
+    }

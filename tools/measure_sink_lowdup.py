@@ -11,8 +11,8 @@ mode), then run two 64-doc micro-batches as epochs 1-2, measuring for
 each: wall, touched buckets (the epoch's own bucket dirs — exactly
 the sink's probe filter), probe bytes (file bytes under PRIOR epochs'
 touched-bucket dirs — what the pruned probe may read) vs total prior
-index bytes. Then compact epochs <= 2 and assert the sidecar's kept
-map folded. One JSON line per measurement.
+index bytes. Then compact epochs <= 2 and check that the sidecar's
+max ingest sequence survived the fold. One JSON line per measurement.
 
 Usage: python tools/measure_sink_lowdup.py [corpus_dir] [bulk_docs]
 (default /tmp/sf10_lowdup, all docs minus the 128 held out for the
@@ -131,12 +131,12 @@ def main() -> None:
     compact_index_epochs(spark, idx, upto_epoch=2)
     with open(idx + ".seqmeta.json") as f:
         after = json.load(f)
-    held_before = sum(before["kept"].values())
-    held_after = sum(after["kept"].values())
+    max_before = max(v for v in before["epochs"].values() if v is not None)
+    max_after = max(v for v in after["epochs"].values() if v is not None)
     print(json.dumps({
         "stage": "compaction", "wall_s": round(time.time() - t0, 1),
-        "kept_sum_before": held_before, "kept_sum_after": held_after,
-        "kept_fold_ok": held_before == held_after,
+        "max_seq_before": max_before, "max_seq_after": max_after,
+        "max_fold_ok": max_before == max_after,
         "epochs_after": sorted(after["epochs"], key=int),
     }))
     spark.stop()
