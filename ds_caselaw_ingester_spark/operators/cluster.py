@@ -449,9 +449,9 @@ def leakage_safe_split(
     not stable — a document split to train today can join a component
     containing a val document tomorrow (a new arrival bridges the
     two), and its already-consumed split cannot be retracted. Splits
-    are a decision over a CLOSED corpus; take them from a snapshot
-    (operators/snapshot.py) after the dedup index stops moving, not
-    from inside a sink.
+    are a decision over a CLOSED corpus; take them from a frozen copy
+    of the corpus after the dedup index stops moving, not from inside
+    a sink.
     """
     total = sum(splits.values())
     if abs(total - 1.0) > 1e-9:

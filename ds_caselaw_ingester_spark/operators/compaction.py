@@ -24,8 +24,7 @@ choices encoded here:
 - the rewrite uses coalesce() when shrinking (no shuffle — partitions
   are concatenated) and repartitionByRange on sort keys when the
   caller wants clustering restored (one shuffle, buys back min/max
-  pruning the tiny appends destroyed; see operators/layout.py for the
-  multi-column Z-order variant);
+  pruning the tiny appends destroyed);
 - hive-partitioned directories (`col=value/` subdirs) are REFUSED: a
   flat rewrite would silently collapse the partition layout readers
   key on — compact each partition directory individually instead;
@@ -87,9 +86,9 @@ def recover_swap(local: str, tmp: str, old: str, exclusive: bool = False) -> Non
     write-tmp → rename-local-to-old → rename-tmp-in → drop-old swap
     protocol, before doing anything destructive. Invariant: never
     delete `old` unless `local` holds a complete table that SUPERSEDES
-    it. Shared by compact_parquet_dir, migrate_to_partitioned, the
-    drift and HLL sketch sinks and the SemDeDup index retrain; the
-    bucketed sinks heal per bucket with recover_buckets instead.
+    it. Shared by compact_parquet_dir, migrate_to_partitioned, the HLL
+    sketch sink and the SemDeDup index retrain; the bucketed sinks
+    heal per bucket with recover_buckets instead.
     (ADVICE r6: the sinks previously rmtree'd `old` unconditionally,
     so a crash between the two renames destroyed the only copy on the
     next micro-batch).
@@ -339,8 +338,8 @@ def merge_touched_buckets(
     n_buckets: int,
     merge: "Callable[[DataFrame | None, DataFrame], DataFrame]",
 ) -> None:
-    """The touched-bucket MERGE of the keyed sinks (the documents
-    upsert, the SCD2 history): the table at `path` is laid out as
+    """The touched-bucket MERGE of the keyed documents sink
+    (upsert_parquet_table_bucketed): the table at `path` is laid out as
     ``kb=<pmod(xxhash64(key), n_buckets)>`` partitions, and a batch
     reads, merges and swaps only the buckets its keys hash into —
     O(touched buckets) per batch, not O(table).

@@ -799,7 +799,7 @@ def incremental_lsh_pairs(
       bands, the input for tomorrow.
 
     Re-ingestion has REPLACE semantics (this engine's documents get
-    updated — the whole upsert/SCD2 theme): an id present in the
+    updated — the whole upsert theme): an id present in the
     increment supersedes its old index rows entirely. The probe runs
     against the SURVIVING old rows only (a dead version's band keys
     must not generate candidates the documented recompute would not),

@@ -16,7 +16,7 @@ aggregation per iteration whose result is order-independent up to fp
 summation noise, which the kmeans_fit rounding convention (round the
 aggregated double far above 1e-15 noise, far below data scale) makes
 engine-portable and replay-exact — the same contract every other
-iterative trainer in this repo pins (BPE, unigram-LM, Lloyd's).
+iterative trainer in this repo pins (unigram-LM, Lloyd's).
 
 Scale shape per iteration:
 - the feature frame (doc_id, idx, x) is built ONCE and cached: one

@@ -70,14 +70,6 @@ def cosine_topk(
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def hyperplane_sign(plane: Column, dim: Column) -> Column:
-    """Deterministic ±1 from md5(plane || '_' || dim) — the engine-portable
-    substitute for a seeded RNG hyperplane matrix. (Column form; the hot
-    path uses the Python-precomputed table below with identical values.)"""
-    first_hex = F.substring(F.md5(F.concat(plane.cast("string"), F.lit("_"), dim.cast("string"))), 1, 1)
-    return F.when(first_hex.isin(*HEX_HIGH), F.lit(1.0)).otherwise(F.lit(-1.0))
-
-
 _MAX_HYPERPLANE_DIM = 256
 
 
@@ -116,11 +108,13 @@ def _lit_long_array(vals: "list[int]") -> Column:
 
 
 def _plane_signs(plane: int, n_dims: int = _MAX_HYPERPLANE_DIM) -> list[float]:
-    """Same values as hyperplane_sign(plane, 1..n_dims), computed once on
-    the driver. The hyperplane matrix depends only on (plane, dim) — never
-    on data — so hashing it per ROW (planes × dims md5 calls each) was
-    pure waste; at 100 TB it's md5 × rows × 512. A literal array ships to
-    executors inside the plan instead."""
+    """Hyperplane `plane`'s signs for dims 1..n_dims: +1.0 when the first
+    hex digit of md5(f"{plane}_{dim}") is in HEX_HIGH, else -1.0 — the
+    engine-portable substitute for a seeded RNG hyperplane matrix.
+    Computed once on the driver: the matrix depends only on (plane, dim),
+    never on data, so hashing it per ROW (planes × dims md5 calls each)
+    was pure waste; at 100 TB it's md5 × rows × 512. A literal array
+    ships to executors inside the plan instead."""
     import hashlib
 
     return [

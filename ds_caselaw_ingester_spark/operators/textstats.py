@@ -115,26 +115,10 @@ def word_ngrams(toks: Column, n: int) -> Column:
     return F.element_at(F.transform(F.array(toks), _grams), 1)
 
 
-def char_ngrams(text: Column, n: int) -> Column:
-    """Array of character n-grams over the string (spaces included —
-    word-boundary structure is real language signal); shorter than n →
-    empty array. Length/substr count CODE POINTS in Spark, DuckDB, and
-    Python alike, so the replay contract holds for non-ASCII text.
-
-    Let-bound like word_ngrams (same O(L²) hazard): the text value is
-    bound once per row via the one-element-array transform; the inner
-    per-index lambda substrings the BOUND value, O(1) per element."""
-
-    def _grams(t: Column) -> Column:
-        idx = F.when(
-            F.length(t) >= n, F.sequence(F.lit(1), F.length(t) - (n - 1))
-        ).otherwise(F.array().cast("array<int>"))
-        return F.transform(idx, lambda i: t.substr(i, F.lit(n)))
-
-    return F.element_at(F.transform(F.array(text), _grams), 1)
-
-
 def py_char_ngrams(text: str, n: int) -> "list[str]":
-    """Pure-Python replay of `char_ngrams` (code-point slicing matches
-    Spark's UTF8String semantics)."""
+    """Character n-grams of `text` (spaces included — word-boundary
+    structure is real language signal); shorter than n → empty list.
+    Slices count CODE POINTS, as length/substr do in Spark
+    (UTF8String) and DuckDB, so the replay contract holds for
+    non-ASCII text."""
     return [text[i : i + n] for i in range(len(text) - n + 1)]

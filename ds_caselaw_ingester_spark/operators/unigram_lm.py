@@ -3,15 +3,15 @@
 counts in place of full forward-backward, the standard hard-EM
 simplification).
 
-Where BPE (operators/bpe.py) grows a vocabulary bottom-up one merge at
-a time, the unigram LM starts from an OVER-complete candidate vocab
-(frequent substrings) and fits piece probabilities by EM:
+The unigram LM starts from an OVER-complete candidate vocab (frequent
+substrings) and fits piece probabilities by EM:
 
   E-step: segment every word with Viterbi under current log-probs;
   M-step: re-estimate probs from the weighted piece usage counts.
 
-Scale decomposition mirrors bpe_learn:
-- corpus-sized work happens ONCE (the word-frequency table);
+Scale decomposition:
+- corpus-sized work happens ONCE (the word-frequency table,
+  word_frequencies);
 - the candidate vocab is seeded by one substring-explode + count
   shuffle over the word table, capped to the top-N pieces (single
   characters always kept so every word stays segmentable);
@@ -38,6 +38,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _NEG_INF = float("-inf")
+
+
+def word_frequencies(docs: DataFrame, text_col: str) -> DataFrame:
+    """(word, freq): the one corpus-sized scan. Map-side combine
+    collapses repeats before the shuffle carries one row per distinct
+    word per partition."""
+    from ds_caselaw_ingester_spark.operators.textstats import tokens
+    from ds_caselaw_ingester_spark.sources.catalog import spread_if_narrow
+
+    # Production entry for an UNSEEN frame (feeds seed_vocab and
+    # unigram_fit): the token explode touches every byte — widen a
+    # 1-2-partition single-file corpus, no-op otherwise. Keyless
+    # round-robin (there is no id contract here); word counts are
+    # placement-invariant.
+    docs = spread_if_narrow(docs)
+    return (
+        docs.select(F.explode(tokens(F.col(text_col))).alias("word"))
+        .groupBy("word")
+        .agg(F.count("*").alias("freq"))
+    )
 
 
 def seed_vocab(

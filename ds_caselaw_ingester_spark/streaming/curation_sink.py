@@ -33,8 +33,8 @@ bounded by the increment, not the index:
                               per-batch aggregate ever scans the index
 
 Why epoch partitioning does all the crash/replay work here (no rename
-swap, unlike the SemDeDup/SCD sinks): those sinks maintain MUTABLE
-state (replace semantics, history rewrites) so a batch must atomically
+swap, unlike the SemDeDup sink and the documents upsert): those
+maintain MUTABLE state (replace semantics) so a batch must atomically
 supersede rows in place. This index is APPEND-ONLY by construction —
 an id is indexed at most once per epoch, and the canonical-ordering
 key (the ingest sequence) only grows — so the only replay hazard is

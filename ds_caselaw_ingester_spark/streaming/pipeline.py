@@ -15,13 +15,10 @@ re-expression:
   update, exactly like the reference re-running an ingest).
 - partial-batch failure: the quarantine split (C6) writes failed rows to
   a DLQ table instead of failing the trigger.
-- no watermarks: the reference has no event-time logic (§2.7); windowed
-  aggs are available via the normal API when extensions need them.
+- no watermarks: the reference has no event-time logic (§2.7).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,72 +42,6 @@ def read_message_stream(spark: SparkSession, path: str, max_files: int = 1) -> D
     )
 
 
-def read_message_stream_rate(
-    spark: SparkSession,
-    rows_per_second: int = 10,
-    rows_per_batch: int | None = None,
-) -> DataFrame:
-    """Queue-shaped (SQS/Kafka analog) UNBOUNDED message stream from the
-    rate family of sources — completes the delivery-model picture next to
-    the file-arrival source (read_message_stream): files model a drained
-    queue directory; this models the live continuous feed where
-    micro-batches are cut by time, not file boundaries. Swapping in a
-    real Kafka source changes only this reader — every downstream plan
-    (parse -> classify -> cascade -> route in foreachBatch) is identical,
-    which is the point: source choice is a deployment detail, not a
-    pipeline rewrite.
-
-    Each rate row (timestamp, value) becomes a deterministic V2 SQS
-    record derived from `value`: the body is the double-encoded SNS
-    envelope the reference unwraps (messages.py:108-127), originators
-    rotate TDR / FCL S3 / FCL, and every 7th message carries an empty
-    consignment reference so the invalid -> quarantine branch stays
-    exercised under continuous delivery.
-
-    rows_per_batch: when set, uses the `rate-micro-batch` source
-    (exactly that many rows per trigger, values dense from 0) —
-    deterministic for tests; otherwise the wall-clock `rate` source at
-    rows_per_second.
-    """
-    if rows_per_batch is not None:
-        raw = (
-            spark.readStream.format("rate-micro-batch")
-            .option("rowsPerBatch", rows_per_batch)
-            .load()
-        )
-    else:
-        raw = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", rows_per_second)
-            .load()
-        )
-    v = F.col("value")
-    ref = F.when(v % 7 == 0, F.lit("")).otherwise(
-        F.concat(F.lit("TDR-R-"), v.cast("string"))
-    )
-    originator = (
-        F.when(v % 3 == 0, F.lit("TDR"))
-        .when(v % 3 == 1, F.lit("FCL S3"))
-        .otherwise(F.lit("FCL"))
-    )
-    payload = F.to_json(
-        F.struct(
-            F.struct(
-                ref.alias("reference"),
-                originator.alias("originator"),
-                F.lit("ingest-bucket").alias("s3Bucket"),
-                F.concat(ref, F.lit(".tar.gz")).alias("s3Key"),
-            ).alias("parameters")
-        )
-    )
-    body = F.to_json(F.struct(payload.alias("Message")))
-    return raw.select(
-        F.concat(F.lit("rate-"), v.cast("string")).alias("message_id"),
-        F.lit("aws:sqs").alias("event_source"),
-        body.alias("body"),
-    )
-
-
 # Off by default: AQE then leaves a cached plan's output partitioning
 # alone, and every frame an epoch persists keeps
 # spark.sql.shuffle.partitions partitions however few rows it holds.
@@ -126,41 +57,6 @@ def _size_epoch_caches(batch_df: DataFrame) -> None:
     conf set here reaches neither the caller's session nor any batch
     plan built outside the stream."""
     batch_df.sparkSession.conf.set(CACHED_PLAN_REPARTITION, "true")
-
-
-def run_ingest_stream(
-    records: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    analyze: Callable[[DataFrame], DataFrame] | None = None,
-):
-    """Wire the analyze plan into foreachBatch with a quarantine split.
-
-    Writes two parquet tables under out_dir: `processed/` (kind != invalid)
-    and `quarantine/` (the DLQ — invalid rows with their message_id so a
-    redrive can retry exactly these, per ReportBatchItemFailures).
-    """
-    analyze = analyze or parse_messages
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        _size_epoch_caches(batch_df)
-        analyzed = analyze(batch_df)
-        analyzed.persist()
-        try:
-            ok = analyzed.where(F.col("kind") != "invalid").drop("payload")
-            bad = analyzed.where(F.col("kind") == "invalid").drop("payload")
-            # Fixed effect order (K13 analog): processed before quarantine.
-            ok.write.mode("append").parquet(f"{out_dir}/processed")
-            bad.write.mode("append").parquet(f"{out_dir}/quarantine")
-        finally:
-            analyzed.unpersist()
-
-    return (
-        records.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def run_full_ingest_stream(
@@ -260,100 +156,6 @@ def run_full_ingest_stream(
 
     return (
         records.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def windowed_ingest_counts(
-    events: DataFrame,
-    ts_col: str = "event_time",
-    key_col: str = "originator",
-    window: str = "1 hour",
-    late: str = "2 hours",
-):
-    """Event-time windowed ingest-rate aggregation with a watermark.
-
-    The reference has no event-time logic (SURVEY.md §2.7) — this is the
-    monitoring extension a pipeline at scale needs: tumbling-window counts
-    per originator, late rows beyond the watermark dropped so state is
-    bounded. State size = |keys| × (late/window) windows per partition;
-    the watermark is what makes this runnable forever on a real cluster
-    (without it, window state grows without bound).
-    """
-    return (
-        events.withWatermark(ts_col, late)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), F.col(key_col))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            key_col,
-            "n_events",
-        )
-    )
-
-
-def run_windowed_counts_stream(events: DataFrame, out_dir: str, checkpoint_dir: str):
-    """Materialize the windowed counts with append-mode semantics: a
-    window's row is emitted exactly once, when the watermark passes its
-    end — the idempotent-sink analog for time-series rollups."""
-    agg = windowed_ingest_counts(events)
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", f"{out_dir}/windowed_counts")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def sessionized_counts(
-    events: DataFrame,
-    ts_col: str = "event_time",
-    key_col: str = "originator",
-    gap: str = "15 minutes",
-    late: str = "2 hours",
-):
-    """Event-time SESSION windows (gap-based, variable length) with a
-    watermark — the streaming incrementalization of the batch
-    sessionize query (plans/queries_relational.py user_sessions, which
-    builds sessions with lag()+cumsum window functions).
-
-    Spark-first: `F.session_window` keeps one open window per key in
-    the state store, MERGES windows when a row bridges two (state-store
-    native — no shuffle beyond the groupBy's), closes a session when
-    `gap` passes without a row, and the watermark bounds state: a
-    session older than (max event time - late) is finalized, emitted
-    once (append mode), and evicted. State size = |active keys|, not
-    |history| — the property that makes per-user sessionization over an
-    unbounded event stream runnable forever.
-    """
-    return (
-        events.withWatermark(ts_col, late)
-        .groupBy(
-            F.session_window(F.col(ts_col), gap).alias("win"), F.col(key_col)
-        )
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            key_col,
-            "n_events",
-        )
-    )
-
-
-def run_sessionized_stream(events: DataFrame, out_dir: str, checkpoint_dir: str):
-    """Materialize finalized sessions append-only: each session row is
-    emitted exactly once, when the watermark passes its end."""
-    agg = sessionized_counts(events)
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", f"{out_dir}/sessions")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

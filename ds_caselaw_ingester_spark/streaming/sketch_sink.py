@@ -2,23 +2,23 @@
 table from a stream via foreachBatch — "distinct users per key, ever /
 so far today" over an unbounded feed at fixed state size.
 
-Why this is the EASY exactly-once sink (contrast drift.py, whose count
-merge needs the `_applied_epoch` sidecar): the HLL register merge is
-register-wise MAX, which is idempotent AND commutative — a redelivered
-epoch max-merged a second time produces the byte-identical table, so
-crash-between-commit-and-checkpoint replays are harmless by algebra,
-not by bookkeeping. No epoch sidecar exists here on purpose; the test
-pins the double-apply no-op so the property is load-bearing, not
-incidental. The crash-safety contract for the table file itself is the
-shared one: recover_swap before reading, tmp-dir write, rename commit
-(operators/compaction.py).
+Why this is the EASY exactly-once sink (a count merge is not
+idempotent and would need an applied-epoch sidecar): the HLL register
+merge is register-wise MAX, which is idempotent AND commutative — a
+redelivered epoch max-merged a second time produces the byte-identical
+table, so crash-between-commit-and-checkpoint replays are harmless by
+algebra, not by bookkeeping. No epoch sidecar exists here on purpose;
+the test pins the double-apply no-op so the property is load-bearing,
+not incidental. The crash-safety contract for the table file itself is
+the shared one: recover_swap before reading, tmp-dir write, rename
+commit (operators/compaction.py).
 
 State size: at most m = 2^p rows per group forever (p=8 → 256), so the
-per-epoch rewrite is sketch-sized — the same O(state) floor argument as
-drift.py's vocab-sized table, except this state doesn't even grow with
-vocabulary. At 100 TB/day this sink's table is kilobytes per group; the
-stream's cost is the map-side register build (an ordinary partial-max
-groupBy per micro-batch).
+per-epoch rewrite is sketch-sized — O(state) is the floor for any
+register merge, and this state does not grow with vocabulary. At
+100 TB/day this sink's table is kilobytes per group; the stream's cost
+is the map-side register build (an ordinary partial-max groupBy per
+micro-batch).
 
 Reading the dashboard number is `sink_estimate` — hll_estimate over the
 stored registers; it equals the batch hll_distinct over everything ever

@@ -66,17 +66,13 @@ _SLOW_TESTS = {
     "test_quality_clf.py::test_train_is_replay_exact",
     "test_repetition_property.py::test_profile_matches_python_model",
     "test_report.py::test_report_langid_metrics",
-    "test_round6_property.py::test_scd2_matches_python_model",
     "test_round7_property.py::test_span_detect_and_cut_match_python_model",
     "test_scalars_property.py::test_scalar_functions_match_reference_models",
     "test_semdedup.py::test_kmeans_driver_and_loop_paths_agree",
     "test_sketches.py::test_sketches_match_python_model_on_adversarial_unicode",
-    "test_snapshot.py::test_jsd_property_arbitrary_corpora",
     "test_streaming_full_ingest.py::test_bucket_backup_is_recovered_before_state_read",
     "test_streaming_full_ingest.py::test_full_stream_redelivery_converges",
     "test_streaming_full_ingest.py::test_invalid_messages_land_in_quarantine_not_void",
-    "test_streaming_neardup.py::test_cross_trigger_pairs_found",
-    "test_streaming_neardup.py::test_streamed_pairs_equal_batch_detector",
     "test_streaming_semdedup.py::test_pca_projected_stream_pins_projection",
     "test_streaming_semdedup.py::test_quantizer_retrain_loop_end_to_end",
 }

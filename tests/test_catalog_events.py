@@ -252,11 +252,8 @@ def test_dsir_entries_narrow_equals_wide(spark):
     assert sorted(map(tuple, rn.collect())) == sorted(map(tuple, rw.collect()))
 
 
-def test_bpe_word_frequencies_narrow_equals_wide(spark):
-    from ds_caselaw_ingester_spark.operators.bpe import (
-        bpe_learn,
-        word_frequencies,
-    )
+def test_word_frequencies_narrow_equals_wide(spark):
+    from ds_caselaw_ingester_spark.operators.unigram_lm import word_frequencies
     from ds_caselaw_ingester_spark.sources.catalog import spread
 
     docs = _docs_sf0001(spark).limit(120)
@@ -265,7 +262,6 @@ def test_bpe_word_frequencies_narrow_equals_wide(spark):
     assert sorted(map(tuple, wf_n.collect())) == sorted(
         map(tuple, wf_w.collect())
     )
-    assert bpe_learn(wf_n, 6) == bpe_learn(wf_w, 6)
 
 
 def test_mix_corpus_narrow_equals_wide(spark):
@@ -293,33 +289,11 @@ def test_mix_corpus_narrow_equals_wide(spark):
     assert out_n == out_w
 
 
-def test_snapshot_entries_narrow_equals_wide(spark):
-    from pyspark.sql import functions as F
-
-    from ds_caselaw_ingester_spark.operators.snapshot import (
-        corpus_diff,
-        js_divergence,
-        vocab_shift,
-    )
-    from ds_caselaw_ingester_spark.sources.catalog import spread
-
-    docs = _docs_sf0001(spark).limit(150)
-    old = docs.where(F.col("doc_id") % 3 != 0)
-    new = docs.where(F.col("doc_id") % 5 != 0)
-    assert js_divergence(old.coalesce(1), new.coalesce(1)) == js_divergence(
-        spread(old, "doc_id"), spread(new, "doc_id")
-    )
-    vs_n = sorted(map(tuple, vocab_shift(old.coalesce(1), new.coalesce(1)).collect()))
-    vs_w = sorted(map(tuple, vocab_shift(spread(old, "doc_id"), spread(new, "doc_id")).collect()))
-    assert vs_n == vs_w
-    cd_n = sorted(map(tuple, corpus_diff(old.coalesce(1), new.coalesce(1)).collect()))
-    cd_w = sorted(map(tuple, corpus_diff(spread(old, "doc_id"), spread(new, "doc_id")).collect()))
-    assert cd_n == cd_w
-
-
 def test_vocab_entries_narrow_equals_wide(spark):
-    from ds_caselaw_ingester_spark.operators.bpe import word_frequencies
-    from ds_caselaw_ingester_spark.operators.unigram_lm import seed_vocab
+    from ds_caselaw_ingester_spark.operators.unigram_lm import (
+        seed_vocab,
+        word_frequencies,
+    )
     from ds_caselaw_ingester_spark.operators.vocab import vocab_topk
     from ds_caselaw_ingester_spark.sources.catalog import spread
 

@@ -21,13 +21,6 @@ def test_semantic_dedup_empty_corpus(spark):
     assert semantic_dedup(empty, "v", "vec_id", cents).count() == 0
 
 
-def test_bpe_learn_empty_word_table(spark):
-    from ds_caselaw_ingester_spark.operators.bpe import bpe_learn, word_frequencies
-
-    wf = word_frequencies(_empty_docs(spark), "text")
-    assert bpe_learn(wf, 5) == []
-
-
 def test_incremental_lsh_empty_increment(spark, sf_dir):
     from ds_caselaw_ingester_spark.operators.dedup import (
         doc_shingles,
@@ -73,18 +66,6 @@ def test_pq_encode_empty_frame(spark):
     out = pq_encode(empty, "v", "c_id", cb)
     assert out.count() == 0
     assert set(out.columns) == {"c_id", "codes", "recon_norm"}
-
-
-def test_scd2_empty_batch_and_empty_history(spark):
-    from ds_caselaw_ingester_spark.operators.scd import scd2_apply
-
-    empty = spark.createDataFrame([], "uri string, court string")
-    boot = scd2_apply(None, empty, "uri", ["court"], "2024-01-01 00:00:00")
-    assert boot.count() == 0
-    some = spark.createDataFrame([("a", "x")], "uri string, court string")
-    hist = scd2_apply(None, some, "uri", ["court"], "2024-01-01 00:00:00")
-    after = scd2_apply(hist, empty, "uri", ["court"], "2024-02-01 00:00:00")
-    assert sorted(map(tuple, after.collect())) == sorted(map(tuple, hist.collect()))
 
 
 def test_expectations_on_empty_table(spark):

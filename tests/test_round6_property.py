@@ -1,71 +1,11 @@
 """Property tests for the round-6 operators against pure-Python models:
-SCD2 batch sequences, Viterbi segmentation optimality, and the LSH
-band-planner formula. Spark-touching properties keep examples small
-(one job per example); pure-Python properties run at full breadth."""
+Viterbi segmentation optimality and the LSH band-planner formula. Both
+are pure-Python properties and run at full breadth."""
 
 from __future__ import annotations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-KEYS = ("a", "b", "c")
-VALS = (None, "x", "y")
-
-
-def _py_scd2(batches):
-    """Reference SCD2: state[key] -> (value, from_ts); history rows
-    (key, value, from, to, current)."""
-    closed = []
-    current: dict = {}
-    for ts, batch in batches:
-        for k, v in batch.items():
-            if k in current:
-                old_v, old_from = current[k]
-                if old_v != v:
-                    closed.append((k, old_v, old_from, ts, False))
-                    current[k] = (v, ts)
-            else:
-                current[k] = (v, ts)
-    return set(closed) | {
-        (k, v, f, None, True) for k, (v, f) in current.items()
-    }
-
-
-BATCH = st.dictionaries(st.sampled_from(KEYS), st.sampled_from(VALS), max_size=3)
-
-
-@settings(max_examples=15, deadline=None)
-@given(batches=st.lists(BATCH, min_size=1, max_size=4))
-def test_scd2_matches_python_model(spark, batches):
-    from ds_caselaw_ingester_spark.operators.scd import scd2_apply
-
-    stamped = [
-        (f"2024-01-{i + 1:02d} 00:00:00", b) for i, b in enumerate(batches)
-    ]
-    hist = None
-    for ts, batch in stamped:
-        if not batch:
-            continue
-        updates = spark.createDataFrame(
-            [(k, v) for k, v in batch.items()], "uri string, court string"
-        )
-        hist = scd2_apply(hist, updates, "uri", ["court"], ts)
-        hist = hist.localCheckpoint(eager=True)
-    if hist is None:
-        return
-    got = {
-        (
-            r["uri"],
-            r["court"],
-            str(r["effective_from"]),
-            str(r["effective_to"]) if r["effective_to"] else None,
-            r["is_current"],
-        )
-        for r in hist.collect()
-    }
-    want = _py_scd2([(ts, b) for ts, b in stamped if b])
-    assert got == want
-
 
 WORD = st.text(alphabet="abc", min_size=1, max_size=8)
 EXTRA_PIECES = st.lists(

@@ -1,8 +1,6 @@
-"""Property tests for the round-7 machinery: the BPE engines agree on
-arbitrary corpora (including the single-symbol words that crashed the
-expression fold under ANSI), the sizing rules keep their occupancy
-invariants over the whole input range, and the swap-recovery state
-machine never deletes the only copy from ANY crash state."""
+"""Property tests for the round-7 machinery: the sizing rules keep their
+occupancy invariants over the whole input range, and the swap-recovery
+state machine never deletes the only copy from ANY crash state."""
 
 from __future__ import annotations
 
@@ -11,10 +9,6 @@ import os
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from ds_caselaw_ingester_spark.operators.bpe import (
-    END_OF_WORD,
-    _segment_word,
-)
 from ds_caselaw_ingester_spark.operators.sizing import (
     LSH_TARGET_OCCUPANCY,
     duplication_scaled_df_cap,
@@ -55,24 +49,6 @@ def test_df_cap_monotone_and_floored(typical_df):
     cap = duplication_scaled_df_cap(typical_df)
     assert cap >= 50
     assert duplication_scaled_df_cap(typical_df + 1) >= cap
-
-
-# ---------------------------------------------------------------------------
-# BPE: the pure-Python segmenter is total and lossless for ANY word and
-# merge list (the Spark engines are pinned equal to it in test_bpe.py)
-# ---------------------------------------------------------------------------
-
-_sym = st.text(alphabet="ab</w>", min_size=1, max_size=4)
-
-
-@given(
-    st.text(alphabet="ab", min_size=1, max_size=8),
-    st.lists(st.tuples(_sym, _sym), max_size=6),
-)
-def test_segment_word_is_total_and_lossless(word, merges):
-    pieces = _segment_word(word, merges)
-    assert pieces
-    assert "".join(pieces) == word + END_OF_WORD
 
 
 # ---------------------------------------------------------------------------

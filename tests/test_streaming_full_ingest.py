@@ -230,7 +230,8 @@ def test_parse_invalid_and_routing_errors_share_one_dlq_partition(
         f.write(json.dumps(_record("m-err", "TDR-2", "WEIRD")) + "\n")
 
     sink_root = str(tmp_path / "sinks")
-    _run_stream(spark, src, sink_root, str(tmp_path / "ckpt"), context_tables)
+    ckpt = str(tmp_path / "ckpt")
+    _run_stream(spark, src, sink_root, ckpt, context_tables)
     q = spark.read.parquet(f"{sink_root}/quarantine")
     assert set(q.columns) == {"msg_id", "message_id", "status", "write_route", "batch_id"}
     rows = {r.message_id: r for r in q.collect()}
@@ -239,6 +240,27 @@ def test_parse_invalid_and_routing_errors_share_one_dlq_partition(
     assert rows["m-bad"].status == "invalid"
     assert rows["m-err"].status != "invalid"
     assert spark.read.parquet(f"{sink_root}/documents").count() == 1
+
+    # restart with the same checkpoint and no new data: no sink effects
+    def sink_counts():
+        counts = {}
+        for t in ("documents", "quarantine", *EFFECT_TABLES):
+            d = os.path.join(sink_root, t)
+            written = any(n.endswith(".parquet") for _, _, fs in os.walk(d) for n in fs)
+            counts[t] = spark.read.parquet(d).count() if written else 0
+        return counts
+
+    def sink_files():
+        return {
+            os.path.join(root, n): os.stat(os.path.join(root, n)).st_mtime_ns
+            for root, _, fs in os.walk(sink_root)
+            for n in fs
+        }
+
+    before, files_before = sink_counts(), sink_files()
+    _run_stream(spark, src, sink_root, ckpt, context_tables)
+    assert sink_counts() == before
+    assert sink_files() == files_before  # no epoch re-ran
 
 
 def test_epoch_caches_are_sized_released_and_stream_scoped(

@@ -9,12 +9,12 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from ds_caselaw_ingester_spark.operators.bpe import word_frequencies
 from ds_caselaw_ingester_spark.operators.unigram_lm import (
     seed_vocab,
     unigram_fit,
     unigram_segment,
     viterbi_segment,
+    word_frequencies,
 )
 from ds_caselaw_ingester_spark.sources.catalog import spread, table
 

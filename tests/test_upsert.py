@@ -233,3 +233,25 @@ def test_bucketed_upsert_detects_concurrent_writer(spark, tmp_path, monkeypatch)
         if d.startswith("kb=")
     }
     assert after == before
+
+
+def test_bucketed_upsert_refuses_flat_table_and_bucket_change(spark, tmp_path):
+    """Pointing the bucketed upsert at a flat table must raise (not
+    bootstrap a mixed layout), and changing n_buckets across runs must
+    raise (a re-hashed key would silently miss its own row and insert a
+    duplicate)."""
+    b1 = spark.createDataFrame([("a", "<j>1</j>")], "uri string, xml string")
+    flat = str(tmp_path / "flat")
+    b1.write.parquet(flat)
+    with pytest.raises(ValueError, match="FLAT"):
+        upsert_parquet_table_bucketed(b1, flat, key="uri", n_buckets=8)
+
+    buck = str(tmp_path / "buck")
+    upsert_parquet_table_bucketed(b1, buck, key="uri", n_buckets=8)
+    b2 = spark.createDataFrame([("a", "<j>2</j>")], "uri string, xml string")
+    with pytest.raises(ValueError, match="bucket"):
+        upsert_parquet_table_bucketed(b2, buck, key="uri", n_buckets=16)
+    # same bucket count still applies cleanly
+    upsert_parquet_table_bucketed(b2, buck, key="uri", n_buckets=8)
+    rows = [(r.uri, r.xml) for r in spark.read.parquet(buck).collect()]
+    assert rows == [("a", "<j>2</j>")]

@@ -52,17 +52,12 @@ def main() -> int:
             "  cosine_topk             tests/test_oracle_parity.py (slot -> bm25_search r7)",
             "  top_orders_global       tests/test_oracle_parity.py (slot -> repetition_profile r8)",
             "  repeated_spans          tests/test_oracle_parity.py (positional passage dedup)",
-            "  zorder layout (op)      tests/test_layout.py (footer-stat pruning measured)",
             "  corpus_mixture          tests/test_oracle_parity.py + test_mixture.py",
-            "  streaming sessions (op) tests/test_streaming.py (merge + emit-once pinned)",
             "  bucketed layout (op)    tests/test_bucketing.py (exchange-free join plans)",
-            "  stream-stream join (op) tests/test_streaming_joins.py (interval + leftOuter)",
             "  pq rerank / ivfadc      tests/test_pq.py (ADC core registered as pq_adc_topk)",
             "  simhash_signatures      tests/test_oracle_parity.py (slot -> pq_adc_topk r7)",
             "  auto-sizing (op)        tests/test_sizing.py (LSH planes / k / df-cap rules)",
-            "  bpe merge learning      tests/test_bpe.py (replay-exact vs paper algorithm)",
             "  unigram-LM tokenizer    tests/test_unigram_lm.py (hard EM, replay-exact)",
-            "  scd2 history merge      tests/test_scd.py + test_streaming.py (event-time stream sink)",
             "  shuffled export (op)    tests/test_export.py (deterministic balanced shards)",
             "  table expectations (op) tests/test_expectations.py (one-pass check battery)",
             "  incremental LSH (op)    tests/test_dedup.py (new-vs-index == recompute)",

@@ -63,12 +63,14 @@ def main() -> None:
         "overwrite"
     ).format("noop").save()
 
-    from ds_caselaw_ingester_spark.operators.bpe import word_frequencies
     from ds_caselaw_ingester_spark.operators.curation import (
         apply_quality_gates,
         curate_corpus,
     )
-    from ds_caselaw_ingester_spark.operators.unigram_lm import seed_vocab
+    from ds_caselaw_ingester_spark.operators.unigram_lm import (
+        seed_vocab,
+        word_frequencies,
+    )
     from ds_caselaw_ingester_spark.sources.catalog import spread
 
     gates = standard_gates()
