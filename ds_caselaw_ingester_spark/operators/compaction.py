@@ -1,38 +1,20 @@
-"""Small-file compaction — the maintenance job every streaming sink
-needs.
+"""Crash-safe swap protocols for the sinks that rewrite parquet tables
+on local storage (plain parquet has no transaction log, so each rewrite
+is staged in a sibling directory and renamed in):
 
-Each micro-batch append writes its own parquet files; after a week a
-streaming table is millions of kilobyte-sized files and every reader
-pays file-open latency, footer parsing, and scheduler overhead per
-file instead of per row group (the classic small-files problem — at
-100 TB the NAMENODE/listing cost alone can dominate a scan).
+- **whole directory**: write `<table>.tmp` -> rename the table to
+  `.old` -> rename tmp in -> drop `.old` (commit_swap), with
+  recover_swap reconciling every crash point before the next run's
+  first destructive step (the HLL sketch sink, the SemDeDup index
+  retrain);
+- **per partition**: the same three steps for each touched `col=<v>`
+  directory only (swap_partition_dirs), healed by recover_buckets,
+  guarded by ensure_partitioned_layout / pin_partitioned_layout and
+  the partition_file_snapshot concurrent-writer check — assembled for
+  the keyed sinks by merge_touched_buckets.
 
-Compaction rewrites a directory into ~target-sized files. Design
-choices encoded here:
-
-- **single-writer contract**: the caller must quiesce appends for the
-  duration (run it from the sink's own foreachBatch turn, or between
-  triggers) — plain parquet has no transaction log to reconcile a
-  concurrent append against (table formats like Delta/Iceberg do this
-  with optimistic commits; that is the production substitute). The
-  operator still DETECTS violation: after materializing the rewrite it
-  re-lists the directory and aborts — original untouched — if any
-  file appeared or vanished since the snapshot.
-- file count is computed from the table's ACTUAL on-disk bytes, not
-  row counts — compression ratios vary too much across tables for a
-  rows-per-file heuristic;
-- the rewrite uses coalesce() when shrinking (no shuffle — partitions
-  are concatenated) and repartitionByRange on sort keys when the
-  caller wants clustering restored (one shuffle, buys back min/max
-  pruning the tiny appends destroyed);
-- hive-partitioned directories (`col=value/` subdirs) are REFUSED: a
-  flat rewrite would silently collapse the partition layout readers
-  key on — compact each partition directory individually instead;
-- the swap is crash-recoverable: write tmp -> rename original to
-  .compact-old -> rename tmp in -> drop .compact-old, with an explicit
-  recovery step for every crash point and no path that deletes the
-  only remaining copy (a crash can leave a backup to reconcile, never
-  silent loss).
+No path deletes the only remaining copy: a crash can leave a backup to
+reconcile, never silent loss.
 """
 
 from __future__ import annotations
@@ -61,47 +43,22 @@ def write_json_atomic(path: str, obj, **dump_kw) -> None:
     os.replace(tmp, path)
 
 
-def dir_stats(path: str) -> "tuple[int, int]":
-    """(n_parquet_files, total_bytes) for a parquet directory."""
-    n, total = 0, 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                n += 1
-                total += os.path.getsize(os.path.join(root, f))
-    return n, total
-
-
-def _parquet_files(path: str) -> "set[str]":
-    out = set()
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                out.add(os.path.relpath(os.path.join(root, f), path))
-    return out
-
-
-def recover_swap(local: str, tmp: str, old: str, exclusive: bool = False) -> None:
+def recover_swap(local: str, tmp: str, old: str) -> None:
     """Reconcile a previous run's crash point in the
     write-tmp → rename-local-to-old → rename-tmp-in → drop-old swap
     protocol, before doing anything destructive. Invariant: never
     delete `old` unless `local` holds a complete table that SUPERSEDES
-    it. Shared by compact_parquet_dir, migrate_to_partitioned, the HLL
-    sketch sink and the SemDeDup index retrain; the bucketed sinks
-    heal per bucket with recover_buckets instead.
+    it. Shared by the HLL sketch sink and the SemDeDup index retrain;
+    the bucketed sinks heal per bucket with recover_buckets instead.
     (ADVICE r6: the sinks previously rmtree'd `old` unconditionally,
     so a crash between the two renames destroyed the only copy on the
     next micro-batch).
 
-    `exclusive=True` is for sinks that are the SOLE writer of `local`
-    (checkpointed foreachBatch): there, `local` can only exist via a
-    completed rename from a fully-written tmp, so local+old both
-    existing means old is a stale backup from a crash after the second
-    rename — safe to drop. Maintenance jobs over shared directories
-    (compaction) must pass exclusive=False: another writer may have
-    recreated `local` after a mid-swap crash, leaving `old` the only
-    full copy — indistinguishable from the filesystem alone, so refuse
-    to guess."""
+    The caller must be the SOLE writer of `local` (a checkpointed
+    foreachBatch sink, or a maintenance job that quiesced it): then
+    `local` can only exist via a completed rename from a fully-written
+    tmp, so local+old both existing means old is a stale backup from a
+    crash after the second rename — safe to drop."""
     if not os.path.exists(old):
         shutil.rmtree(tmp, ignore_errors=True)  # stale partial rewrite
         return
@@ -115,17 +72,8 @@ def recover_swap(local: str, tmp: str, old: str, exclusive: bool = False) -> Non
             # crashed right after moving the original aside: restore it
             os.rename(old, local)
         return
-    if exclusive:
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-        return
-    backup_name = os.path.basename(old)
-    raise RuntimeError(
-        f"found both {local} and {old}; a previous run crashed "
-        "mid-swap and the directory was written to since. Reconcile "
-        f"manually (merge or discard the {backup_name} backup) before "
-        "running again."
-    )
+    shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def read_parquet_or_none(spark: SparkSession, path: str):
@@ -223,7 +171,7 @@ def ensure_partitioned_layout(
        table written by the pre-partitioned version of the same sink):
        treating it as "no table yet" would bootstrap over it, write
        `col=` dirs NEXT TO the flat files, and leave a mixed layout no
-       reader can load. Raise with the migration instruction instead.
+       reader can load. Raise with the rebuild instruction instead.
     2. **Changed bucket count** (hash-bucketed layouts only): a key
        hashed with n_buckets=32 looks up a bucket written under 64 and
        silently misses its own history. n_buckets is pinned in a
@@ -239,19 +187,6 @@ def ensure_partitioned_layout(
        under. Pass n_buckets=None for layouts whose partition values
        are data-derived (SemDeDup cells) rather than a modulus.
     """
-    # a half-finished migration must be completed (rerun
-    # migrate_to_partitioned — its recover_swap reconciles every crash
-    # point) before any sink touches the path: proceeding could
-    # bootstrap a near-empty table beside the full migrated copy
-    leftover = [
-        s for s in (".migrate-tmp", ".migrate-old") if os.path.exists(local + s)
-    ]
-    if leftover:
-        raise RuntimeError(
-            f"{local}{leftover[0]} exists — a migration of this table "
-            "crashed mid-swap; rerun migrate_to_partitioned to complete "
-            "it before starting the sink."
-        )
     partitions = []
     if os.path.isdir(local):
         entries = os.listdir(local)
@@ -259,10 +194,10 @@ def ensure_partitioned_layout(
         if flat:
             raise ValueError(
                 f"{local} holds root-level parquet files ({flat[0]}, ...) — "
-                f"a FLAT table, not a {col}= partitioned layout. Migrate "
-                "first (read the flat table, write it partitioned, swap), "
-                "or point the sink at a fresh path; proceeding would "
-                "bootstrap over the existing data and mix two layouts."
+                f"a FLAT table, not a {col}= partitioned layout. Rebuild "
+                "it under the partitioned layout (or point the sink at a "
+                "fresh path); proceeding would bootstrap over the "
+                "existing data and mix two layouts."
             )
         partitions = [e for e in entries if e.startswith(f"{col}=")]
     if n_buckets is None:
@@ -407,114 +342,3 @@ def merge_touched_buckets(
     swap_partition_dirs(local, tmp, touched, "kb")
     pin_partitioned_layout(local, "kb", n_buckets)
 
-
-def compact_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_cols: "list[str] | None" = None,
-) -> "tuple[int, int]":
-    """Rewrite `path` into ceil(bytes / target_file_bytes) files.
-    Returns (files_before, files_after). sort_cols: restore range
-    clustering on these columns during the rewrite (adds one shuffle;
-    without it compaction is a shuffle-free coalesce). Raises if the
-    directory is hive-partitioned or if a concurrent writer modified it
-    during the rewrite (original left untouched in both cases)."""
-    local = local_path(path)
-    tmp, old = local + ".compact-tmp", local + ".compact-old"
-    recover_swap(local, tmp, old)
-    partition_dirs = [
-        e
-        for e in os.listdir(local)
-        if "=" in e and os.path.isdir(os.path.join(local, e))
-    ]
-    if partition_dirs:
-        raise ValueError(
-            f"compact_parquet_dir: {local} is hive-partitioned "
-            f"({partition_dirs[0]}, ...); a flat rewrite would collapse the "
-            "partition layout — compact each partition directory instead"
-        )
-    snapshot = _parquet_files(local)
-    if not snapshot:
-        return 0, 0
-    before, total = dir_stats(local)
-    n_files = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(path)
-    if sort_cols:
-        out = df.repartitionByRange(n_files, *[F.col(c) for c in sort_cols])
-        out = out.sortWithinPartitions(*sort_cols)
-    else:
-        out = df.coalesce(n_files)
-    shutil.rmtree(tmp, ignore_errors=True)
-    out.write.mode("overwrite").parquet(tmp)
-    # single-writer violation check: the rewrite covered exactly the
-    # snapshot; any concurrent append/delete means swapping would lose
-    # rows Spark never read. Abort with the original untouched.
-    if _parquet_files(local) != snapshot:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"compact_parquet_dir: {local} was modified during the rewrite "
-            "(concurrent writer?); aborted with the original untouched — "
-            "quiesce the sink and rerun"
-        )
-    os.rename(local, old)
-    os.rename(tmp, local)
-    shutil.rmtree(old, ignore_errors=True)
-    after, _ = dir_stats(local)
-    return before, after
-
-
-def migrate_to_partitioned(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    n_buckets: "int | None" = None,
-    key: "str | None" = None,
-) -> int:
-    """One-time migration of a FLAT parquet table into the `col=`
-    partitioned layout the bucketed sinks require (the operation
-    ensure_partitioned_layout's refusal points at). Returns the row
-    count migrated.
-
-    - Modulus layouts (kb): pass `key` and `n_buckets` — the partition
-      value is computed as pmod(xxhash64(key), n_buckets), the same
-      expression the sinks use, and the sidecar is pinned afterwards.
-    - Data-derived layouts (SemDeDup's centroid_id): the column must
-      already exist in the flat table; pass n_buckets=None.
-
-    Crash-safe via the standard swap, under migration-OWNED suffixes
-    (`.migrate-tmp` / `.migrate-old`, NOT the sinks' `.tmp`/`.old`): a
-    sink started against a half-migrated path must never mistake the
-    migration's artifacts for its own — the sinks rmtree their `.tmp`
-    unconditionally, which with shared names would delete the only
-    migrated copy after a mid-commit crash. ensure_partitioned_layout
-    additionally refuses to run a sink while migration artifacts
-    exist. recover_swap runs exclusive=True: `local` is only ever
-    (re)created by this migration's own completed rename (the caller
-    quiesces the sink — this is a maintenance operation, like
-    compaction), so local+backup both present means the backup is
-    stale, and every crash point reconciles on the next run. The
-    migrated row count is read from the rewrite's parquet footers —
-    the source is scanned exactly once."""
-    local = local_path(path)
-    tmp, old = local + ".migrate-tmp", local + ".migrate-old"
-    recover_swap(local, tmp, old, exclusive=True)
-    df = spark.read.parquet(path)
-    if n_buckets is not None:
-        if key is None:
-            raise ValueError("modulus migration needs `key` with n_buckets")
-        df = df.withColumn(
-            col, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-        )
-    elif col not in df.columns:
-        raise ValueError(
-            f"{path} has no `{col}` column; data-derived migration needs "
-            "it (e.g. rebuild a SemDeDup index with semdedup_build_index)"
-        )
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.write.mode("overwrite").partitionBy(col).parquet(tmp)
-    n = spark.read.parquet(tmp).count()  # footer metadata, no data scan
-    commit_swap(local, tmp, old)
-    if n_buckets is not None:
-        pin_partitioned_layout(local, col, n_buckets)
-    return n

@@ -15,9 +15,7 @@ the benchmarks it will be evaluated on. Spark-first shape:
   quotes); callers tune it per suite.
 - Exactness: the flag is a set-membership test, no hashing involved —
   gram strings join directly, so there are no false positives to argue
-  about. At extreme benchmark sizes, `decontaminate_bloom` swaps the
-  broadcast for a Bloom pre-probe (+ confirming join by default, so the
-  output stays exact); the corpus-side plan shape is unchanged.
+  about.
 """
 
 from __future__ import annotations
@@ -43,37 +41,6 @@ def benchmark_ngrams(
     )
 
 
-def _doc_grams(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """One (id, gram) row per n-gram OCCURRENCE of each document —
-    the corpus-side frame both decontamination variants probe. Shared
-    so the exact and bloom paths can never drift apart on the
-    short-document rule or the gram construction (their equivalence is
-    a pinned contract, tests/test_decontam.py)."""
-    tok = tokens(F.col(text_col))
-    grams = F.when(F.size(tok) >= n, word_ngrams(tok, n)).otherwise(
-        F.array().cast("array<string>")
-    )
-    return docs.select(F.col(id_col), F.explode(grams).alias("gram"))
-
-
-def _verdict(docs: DataFrame, hits: DataFrame, id_col: str) -> DataFrame:
-    """(id, n_contaminated_grams, is_contaminated) for EVERY document —
-    the left-join + zero-fill tail shared by both variants."""
-    return (
-        docs.select(id_col)
-        .join(hits, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(
-                F.col("n_contaminated_grams"), F.lit(0).cast("long")
-            ).alias("n_contaminated_grams"),
-            (F.coalesce(F.col("n_contaminated_grams"), F.lit(0)) > 0).alias(
-                "is_contaminated"
-            ),
-        )
-    )
-
-
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -94,191 +61,29 @@ def decontaminate(
     bench = F.broadcast(
         benchmark_ngrams(benchmark, bench_text_col or text_col, n)
     )
+    tok = tokens(F.col(text_col))
+    grams = F.when(F.size(tok) >= n, word_ngrams(tok, n)).otherwise(
+        F.array().cast("array<string>")
+    )
     hits = (
-        _doc_grams(docs, id_col, text_col, n)
+        docs.select(F.col(id_col), F.explode(grams).alias("gram"))
         .join(bench, "gram")
         .groupBy(id_col)
         .agg(F.count("*").alias("n_contaminated_grams"))
     )
-    return _verdict(docs, hits, id_col)
-
-
-# ---------------------------------------------------------------------------
-# Bloom-filter pre-probe — the extreme-benchmark-size escape hatch the
-# decontaminate docstring promises.
-# ---------------------------------------------------------------------------
-
-_BLOOM_SALT = "bloom:h2"
-
-
-def _gram_hash_cols(gram):
-    """The two 64-bit hashes Kirsch-Mitzenmacher double hashing derives
-    every probe position from (g_i = h1 + i*h2 mod m, "Less Hashing,
-    Same Performance", 2006). Computed JVM-SIDE on both the build and
-    probe paths — the one way to guarantee the two sides hash
-    identically without a Python xxhash implementation."""
     return (
-        F.xxhash64(gram).alias("_h1"),
-        F.xxhash64(gram, F.lit(_BLOOM_SALT)).alias("_h2"),
-    )
-
-
-def bloom_bits_build(h1, h2, m: int, j: int):
-    """Set the j double-hash positions of every (h1, h2) pair in a fresh
-    m-bit bitmap (numpy uint8 array). h1/h2: SIGNED int64 arrays — they
-    are reinterpreted as uint64 (a direct uint64 conversion of negative
-    Python ints raises OverflowError under NumPy >= 2.0). The ONE
-    bit-path implementation: bloom_build, the probe UDF, and the
-    property tests all call this pair, so build and probe can never
-    drift (tests/test_round8_property.py)."""
-    import numpy as np
-
-    a = np.asarray(h1, dtype=np.int64).astype(np.uint64)
-    b = np.asarray(h2, dtype=np.int64).astype(np.uint64)
-    bitmap = np.zeros((m + 7) // 8, dtype=np.uint8)
-    for i in range(j):
-        # uint64 wraparound is fine: both sides compute the identical
-        # sequence, which is all a Bloom position needs
-        idx = (a + np.uint64(i) * b) % np.uint64(m)
-        np.bitwise_or.at(bitmap, (idx >> np.uint64(3)).astype(np.int64),
-                         np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8))
-    return bitmap
-
-
-def bloom_bits_probe(bitmap, h1, h2, m: int, j: int):
-    """Boolean array: all j positions set for each (h1, h2) pair.
-    Signed-int64 inputs, same reinterpretation as bloom_bits_build."""
-    import numpy as np
-
-    bm = np.asarray(bitmap, dtype=np.uint8)
-    a = np.asarray(h1, dtype=np.int64).astype(np.uint64)
-    b = np.asarray(h2, dtype=np.int64).astype(np.uint64)
-    hit = np.ones(len(a), dtype=bool)
-    for i in range(j):
-        idx = (a + np.uint64(i) * b) % np.uint64(m)
-        hit &= (bm[(idx >> np.uint64(3)).astype(np.int64)]
-                >> (idx & np.uint64(7)).astype(np.uint8)) & 1 > 0
-    return hit
-
-
-def bloom_build(
-    benchmark: DataFrame,
-    text_col: str,
-    n: int = 8,
-    bits_per_element: int = 10,
-    _grams: "DataFrame | None" = None,
-) -> "tuple[bytes, int, int]":
-    """(bitmap, m_bits, n_hashes) over the benchmark's distinct n-grams.
-
-    10 bits/element with k = round(ln2 * 10) = 7 hashes gives ~1% false
-    positives — the standard sizing. The transfer is BENCHMARK-sized
-    and Arrow-batched (two int64 columns, 16 bytes per distinct gram —
-    never the gram strings, never driver-side Row objects): eval suites
-    are MBs-GBs against a 100 TB corpus, and the resulting bitmap is
-    ~1.25 bytes/gram — an order of magnitude under the per-executor
-    hash-table a broadcast join would build from the gram strings.
-
-    _grams: a precomputed benchmark_ngrams frame (decontaminate_bloom
-    passes its checkpointed one so the benchmark tokenizes once)."""
-    import math
-
-    grams = _grams if _grams is not None else benchmark_ngrams(
-        benchmark, text_col, n
-    )
-    hashed = grams.select(*_gram_hash_cols(F.col("gram")))
-    tbl = hashed.toArrow()  # Arrow columns -> numpy, no Row objects
-    h1 = tbl.column("_h1").to_numpy(zero_copy_only=False)
-    h2 = tbl.column("_h2").to_numpy(zero_copy_only=False)
-    n_grams = max(1, len(h1))
-    m = max(64, n_grams * bits_per_element)
-    j = max(1, round(math.log(2) * bits_per_element))
-    return bloom_bits_build(h1, h2, m, j).tobytes(), m, j
-
-
-def decontaminate_bloom(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    id_col: str,
-    text_col: str,
-    bench_text_col: "str | None" = None,
-    n: int = 8,
-    bits_per_element: int = 10,
-    confirm: bool = True,
-) -> DataFrame:
-    """`decontaminate` with a Bloom pre-probe on the corpus side — for
-    benchmark sets too large to broadcast as a join hash-table.
-
-    The corpus's (doc, gram) rows are filtered MAP-SIDE by a
-    ~1.25-byte/gram bitmap (numpy-vectorized bit tests in one
-    Arrow-batched pandas UDF over the two JVM-computed xxhash64s); only
-    the ~contamination + ~1% false-positive survivors reach anything
-    downstream. confirm=True (default) then re-joins the survivors
-    against the exact gram set, so the OUTPUT IS EXACTLY
-    `decontaminate`'s — the bloom is purely a scan-side prefilter that
-    keeps the shuffle bounded by contamination volume even when the
-    corpus is dirty and the benchmark huge. confirm=False skips the
-    join and accepts the ~1% PER-GRAM false-positive rate (never false
-    negatives: every truly contaminated gram passes its own bits).
-    CAUTION — the per-gram rate COMPOUNDS per document: a clean
-    800-gram document is 800 independent ~1% trials, so its chance of
-    a false is_contaminated flag approaches 1 (measured at sf1: 23,942
-    flagged vs the true 10,860 — BENCH_SF1.md r8). confirm=False is
-    for gram-level prefiltering or count-tolerant weighting, NEVER for
-    doc-level drop decisions on long documents; either keep the
-    confirming join or size bits_per_element for the DOCUMENT-level
-    target: optimal-bloom FPR ≈ 0.6185^bits, so holding the DOC-level
-    rate needs ~1.44·log2(avg_grams_per_doc) extra bits on top of the
-    per-gram sizing (~10 + 1.44·log2(800) ≈ 24 bits for 800-gram docs
-    at a ~1% doc-level target).
-
-    Scale shape: the bitmap broadcasts once per executor
-    (sc.broadcast); the corpus never shuffles un-filtered rows; the
-    confirming join's probe side is survivor-sized. With confirm=True
-    the benchmark gram frame is localCheckpointed so the benchmark
-    tokenize + distinct runs ONCE, feeding both the bitmap build and
-    the confirming join (distinct-gram-sized executor storage,
-    MEMORY_AND_DISK).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    spark = docs.sparkSession
-    bench_grams = benchmark_ngrams(benchmark, bench_text_col or text_col, n)
-    if confirm:
-        bench_grams = bench_grams.localCheckpoint(eager=True)
-    bitmap_bytes, m, j = bloom_build(
-        benchmark, bench_text_col or text_col, n, bits_per_element,
-        _grams=bench_grams,
-    )
-    bc = spark.sparkContext.broadcast(bitmap_bytes)
-
-    @pandas_udf("boolean")
-    def _might_contain(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        import numpy as np
-
-        bm = np.frombuffer(bc.value, dtype=np.uint8)
-        return pd.Series(
-            bloom_bits_probe(
-                bm, h1.to_numpy(dtype=np.int64), h2.to_numpy(dtype=np.int64),
-                m, j,
-            )
+        docs.select(id_col)
+        .join(hits, id_col, "left")
+        .select(
+            id_col,
+            F.coalesce(
+                F.col("n_contaminated_grams"), F.lit(0).cast("long")
+            ).alias("n_contaminated_grams"),
+            (F.coalesce(F.col("n_contaminated_grams"), F.lit(0)) > 0).alias(
+                "is_contaminated"
+            ),
         )
-
-    survivors = (
-        _doc_grams(docs, id_col, text_col, n)
-        .select(id_col, "gram", *_gram_hash_cols(F.col("gram")))
-        .where(_might_contain(F.col("_h1"), F.col("_h2")))
     )
-    if confirm:
-        # deliberately hint-free: if the gram set were broadcastable we
-        # would not need the bloom — the confirming join shuffles
-        # benchmark grams + survivors on `gram` (both bounded: benchmark
-        # size and contamination volume), never the unfiltered corpus.
-        # AQE still broadcasts it when it is actually small.
-        survivors = survivors.join(bench_grams, "gram")
-    hits = survivors.groupBy(id_col).agg(
-        F.count("*").alias("n_contaminated_grams")
-    )
-    return _verdict(docs, hits, id_col)
 
 
 # ---------------------------------------------------------------------------

@@ -342,87 +342,6 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def exact_jaccard_pairs_prefix(
-    shingles: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Exact set-Jaccard >= threshold via PREFIX FILTERING (AllPairs /
-    PPJoin, Bayardo et al. 2007; Xiao et al. 2008) — the scale path when
-    hot shingles make full inverted-index pair generation quadratic
-    (sum df^2 over buckets; 169M candidate structs at the sf1 bench where
-    the verified output is a few thousand pairs).
-
-    Principle: order all grams by a GLOBAL total order (document
-    frequency ascending, gram as tie-break — rare grams first). For
-    Jaccard >= t, any qualifying pair must overlap within the first
-    |d| - ceil(t*|d|) + 1 grams of each side's sorted gram set (the
-    minimum-partner-size bound |B| >= t|A| gives overlap >= ceil(t*|A|)).
-    So candidates are generated ONLY from these short, rare-gram
-    prefixes; the hot grams sit at the end of the order and almost never
-    enter a prefix bucket. Candidates are then verified EXACTLY from the
-    full per-doc gram arrays (array_intersect) — the filter affects
-    completeness-preserving candidate generation, never the reported
-    values.
-
-    Shuffles: gram-df agg, per-doc gram-set agg, prefix-bucket agg, and
-    the two verification joins — all keyed, none quadratic in documents.
-    """
-    # distinct (doc, gram) + per-gram document frequency (the global order)
-    dg = shingles.select(id_col, "gram").distinct()
-    df_map = dg.groupBy("gram").agg(F.count(F.lit(1)).alias("gram_df"))
-    ranked = dg.join(df_map, "gram")
-
-    # per-doc gram set, sorted rare-first ((df, gram) struct sort = total order)
-    docs = ranked.groupBy(id_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("gram_df", "gram"))), lambda s: s["gram"]
-        ).alias("grams"),
-        F.count(F.lit(1)).alias("n_grams"),
-    )
-    prefix_len = F.col("n_grams") - F.ceil(F.lit(threshold) * F.col("n_grams")) + 1
-    prefixes = docs.select(
-        F.col(id_col), F.explode(F.slice("grams", 1, prefix_len)).alias("gram")
-    )
-
-    # candidate pairs: only docs sharing a PREFIX gram
-    cand = (
-        prefixes.groupBy("gram")
-        .agg(F.array_sort(F.collect_set(F.col(id_col))).alias("ids"))
-        .where(F.size("ids") >= 2)
-        .select(F.explode(ordered_pairs(F.col("ids"))).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .distinct()
-    )
-
-    # exact verification from the full gram sets
-    ga = docs.select(
-        F.col(id_col).alias("doc_a"), F.col("grams").alias("grams_a"),
-        F.col("n_grams").alias("n_a"),
-    )
-    gb = docs.select(
-        F.col(id_col).alias("doc_b"), F.col("grams").alias("grams_b"),
-        F.col("n_grams").alias("n_b"),
-    )
-    # shuffle-hash hints: the gram-array frames look small to the
-    # estimator but carry ~|grams| strings per row — a mis-broadcast
-    # OOMs a small-driver session, and SMJ would sort arrays for nothing
-    verified = (
-        cand.join(ga.hint("shuffle_hash"), "doc_a")
-        .join(gb.hint("shuffle_hash"), "doc_b")
-        .withColumn("n_common", F.size(F.array_intersect("grams_a", "grams_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                4,
-            ),
-        )
-    )
-    return verified.where(F.col("jaccard") >= threshold).select(
-        "doc_a", "doc_b", "n_common", "jaccard"
-    )
-
-
 def repeated_spans(
     docs: DataFrame, id_col: str, text_col: str, n: int = 8
 ) -> DataFrame:
@@ -724,108 +643,3 @@ def strip_common_paragraphs(
             "n_paras_removed"
         ),
     )
-
-
-# ---------------------------------------------------------------------------
-# LSH design tooling: the bands/rows trade, made explicit
-# ---------------------------------------------------------------------------
-
-
-def lsh_collision_probability(s: float, bands: int, rows: int) -> float:
-    """P(candidate pair | Jaccard similarity s) for MinHash-LSH with
-    `bands` bands of `rows` hashes: 1 - (1 - s^rows)^bands — the
-    standard S-curve (Mining of Massive Datasets §3.4). The curve's
-    inflection sits near the implied threshold (1/bands)^(1/rows)."""
-    if not 0.0 <= s <= 1.0:
-        raise ValueError(f"similarity must be in [0, 1], got {s}")
-    return 1.0 - (1.0 - s**rows) ** bands
-
-
-def plan_lsh_bands(num_hashes: int, threshold: float) -> "tuple[int, int]":
-    """Pick (bands, rows) for a hash budget and target Jaccard
-    threshold: among the factorizations bands*rows == num_hashes,
-    return the one whose implied threshold (1/bands)^(1/rows) is
-    closest to the target, breaking ties toward MORE bands (recall over
-    precision — a missed near-dup ships a duplicate at 100 TB, a false
-    candidate only costs one verification).
-
-    This is a DESIGN-time helper, not a runtime operator: the engine's
-    default (16 hashes, 4 bands x 4 rows, implied threshold 0.71) is
-    what it returns for the registered minhash_lsh_pairs configuration;
-    changing a pipeline's threshold should go through this function
-    instead of hand-picking bands."""
-    if num_hashes <= 0:
-        raise ValueError(f"num_hashes must be positive, got {num_hashes}")
-    if not 0.0 < threshold < 1.0:
-        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
-    best: "tuple[float, int, int] | None" = None
-    for rows in range(1, num_hashes + 1):
-        if num_hashes % rows:
-            continue
-        bands = num_hashes // rows
-        implied = (1.0 / bands) ** (1.0 / rows) if bands > 1 else 1.0
-        gap = abs(implied - threshold)
-        # ties toward more bands == smaller rows
-        cand = (gap, rows, -bands)
-        if best is None or cand < (best[0], best[1], -best[2]):
-            best = (gap, rows, bands)
-    assert best is not None
-    return best[2], best[1]
-
-
-# ---------------------------------------------------------------------------
-# Incremental near-dup: new-vs-index instead of all-pairs recompute
-# ---------------------------------------------------------------------------
-
-
-def incremental_lsh_pairs(
-    band_index: DataFrame,
-    new_bands: DataFrame,
-    id_col: str,
-) -> "tuple[DataFrame, DataFrame]":
-    """Daily-increment dedup: candidate pairs INVOLVING a new document,
-    against a persisted band index of everything already ingested.
-
-    Recomputing all-pairs LSH nightly is O(corpus) per day — at 100 TB
-    the index must be incremental. The band index is just the
-    (id, band, band_key) frame lsh_bands produces, persisted (parquet
-    bucketed on band_key makes the probe co-located); each increment:
-
-    - new-vs-OLD pairs: equi-join of the new docs' band keys against
-      the index — cost tracks the increment, never the corpus;
-    - new-vs-NEW pairs: the ordinary in-bucket combination over just
-      the increment;
-    - returns (pairs, updated_index) where updated_index = index ∪ new
-      bands, the input for tomorrow.
-
-    Re-ingestion has REPLACE semantics (this engine's documents get
-    updated — the whole upsert theme): an id present in the
-    increment supersedes its old index rows entirely. The probe runs
-    against the SURVIVING old rows only (a dead version's band keys
-    must not generate candidates the documented recompute would not),
-    and updated_index carries exactly one version per id — without the
-    anti-join the index would accumulate stale bands forever and the
-    equivalence contract below would break on the first update.
-
-    Equivalence contract (pinned in tests/test_dedup.py): the union of
-    both pair sets over an increment EQUALS the full-corpus
-    lsh_candidate_pairs (over old-non-superseded + new docs) restricted
-    to pairs touching a new document — incremental ingestion finds
-    exactly what a recompute would.
-    """
-    surviving = band_index.join(
-        new_bands.select(id_col).distinct(), id_col, "left_anti"
-    )
-    old = surviving.select(F.col(id_col).alias("_old_id"), "band", "band_key")
-    nv = new_bands.select(F.col(id_col).alias("_new_id"), "band", "band_key")
-    cross = (
-        nv.join(old, ["band", "band_key"])
-        .where(F.col("_old_id") != F.col("_new_id"))
-        .select(
-            F.least(F.col("_old_id"), F.col("_new_id")).alias("doc_a"),
-            F.greatest(F.col("_old_id"), F.col("_new_id")).alias("doc_b"),
-        )
-    )
-    within = lsh_candidate_pairs(new_bands, id_col)
-    pairs = cross.unionAll(within).distinct()
-    return pairs, surviving.unionAll(new_bands)

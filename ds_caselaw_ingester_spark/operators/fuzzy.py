@@ -1,18 +1,5 @@
-"""Edit-distance (fuzzy) join — two exact blocking schemes.
-
-Two candidate generators ship, both exact (blocking only generates a
-candidate superset; the levenshtein DP decides):
-
-- edit_distance_join — SymSpell deletion neighborhoods: ~len^2/2
-  variants per DISTINCT string on BOTH sides. Wins when the distinct
-  string count is small (the distinct-collapse does the work) or
-  strings are short.
-- passjoin_edit_distance_join — PassJoin segment signatures: k+1
-  signatures per indexed string, all quadratic-ish fan-out moved to the
-  probe side. Wins when the indexed side's distinct count is large
-  (200k distinct 30-char names: 600k signatures vs ~93M deletion
-  variants) — the scale-safe default for catalog-sized right sides.
-
+"""Edit-distance (fuzzy) join — PassJoin segment signatures
+(Li/Deng/Feng, ICDE'12).
 
 The naive fuzzy join is a cross product with a levenshtein post-filter:
 O(|L| x |R|) dynamic programs, unusable at scale (231 s of a 319 s sf1
@@ -21,105 +8,27 @@ suite before this operator existed). The scalable exact composition:
 1. collapse both sides to DISTINCT strings (duplicate strings multiply
    pair work quadratically if matched per-row, linearly if expanded
    after matching);
-2. explode each distinct string's <=k-deletion variant set. SymSpell
-   property: ed(a,b) <= k  =>  some string reachable by <=k deletions
-   from a EQUALS one reachable by <=k deletions from b (every edit is
-   covered by deleting the affected position on the appropriate side);
-3. equi-join the variant sets (hash join, never a nested loop), guard
-   with |len(a) - len(b)| <= k (implied by ed <= k);
-4. run the EXACT levenshtein only on the candidate pairs.
+2. split each indexed (right-side) string r into k+1 disjoint segments.
+   Pigeonhole: any edit touches at most one segment, so ed(s, r) <= k
+   guarantees at least one segment of r appears in s EXACTLY, and
+   (shift argument) it appears at a start position within +-k of its
+   position in r;
+3. the indexed side emits only k+1 signatures per string; the
+   ~(2k+1)^2-ish substring fan-out moves to the probe side, which in a
+   lookup join is the tiny side (200k distinct 30-char catalog names:
+   600k signatures, where a deletion-neighbourhood scheme would explode
+   ~93M variants);
+4. equi-join the signatures (hash join, never a nested loop) and run
+   the EXACT levenshtein only on the candidate pairs.
 
-Blocking only generates candidates — the DP decides, so the result is
-exactly the cross product's. Fan-out is ~len^2/2 variants per distinct
-string, the right trade for the short strings edit distance is used on
-(for long strings prefer q-gram count filtering, whose lower bound
-max(len)-q+1-qk starts pruning once len >> q(k+1)).
+Blocking only generates a candidate superset — the DP decides, so the
+result is exactly the cross product's.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _del1(s: Column) -> Column:
-    """All strings obtained by deleting exactly one char of s."""
-    return F.transform(
-        F.sequence(F.lit(1), F.length(s)),
-        lambda i: F.concat(
-            F.substring(s, F.lit(1), i - 1), F.substring(s, i + 1, F.length(s))
-        ),
-    )
-
-
-def deletion_variants(s: Column, k: int = 2) -> Column:
-    """Distinct set of strings reachable from s by 0..k deletions."""
-    if k not in (1, 2):
-        raise ValueError("deletion_variants supports k in {1, 2}")
-    d1 = _del1(s)
-    parts = [F.array(s), d1]
-    if k == 2:
-        parts.append(F.flatten(F.transform(d1, _del1)))
-    return F.array_distinct(F.concat(*parts))
-
-
-def edit_distance_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-    max_dist: int = 2,
-) -> DataFrame:
-    """Exact fuzzy join on DISTINCT string values: returns
-    (left_col, right_col, dist) for every distinct string pair with
-    levenshtein <= max_dist. Callers expand back to row level by joining
-    on the string columns (see queries_relational.q_fuzzy_part_match).
-
-    The smaller side's variants are broadcast; flip the arguments so
-    `left` is the probe/dirty side when it is the small one.
-    """
-    dl = left.select(left_col).distinct()
-    dr = right.select(right_col).distinct()
-    lv = dl.select(
-        left_col,
-        F.length(left_col).alias("_llen"),
-        F.explode(deletion_variants(F.col(left_col), max_dist)).alias("_variant"),
-    )
-    rv = dr.select(
-        right_col,
-        F.length(right_col).alias("_rlen"),
-        F.explode(deletion_variants(F.col(right_col), max_dist)).alias("_variant"),
-    )
-    cand = (
-        rv.join(
-            F.broadcast(lv),
-            (rv["_variant"] == lv["_variant"])
-            & (F.abs(F.col("_llen") - F.col("_rlen")) <= max_dist),
-        )
-        .select(left_col, right_col)
-        .distinct()
-    )
-    dist = F.levenshtein(F.col(left_col), F.col(right_col))
-    return cand.where(dist <= max_dist).select(
-        left_col, right_col, dist.alias("dist")
-    )
-
-
-# ---------------------------------------------------------------------------
-# PassJoin — partition-based signatures (Li/Deng/Feng, ICDE'12)
-# ---------------------------------------------------------------------------
-#
-# SymSpell blocking fans the BIG side out by ~len^2/2 deletion variants
-# per string (a 30-char catalog name emits ~466 variants; at sf1 that is
-# ~93M exploded rows before the first join). The pigeonhole alternative:
-# split each indexed string r into k+1 disjoint segments — any edit
-# touches at most one segment, so ed(s, r) <= k guarantees at least one
-# segment of r appears in s EXACTLY, and (shift argument) it appears at
-# a start position within +-k of its position in r. The indexed side
-# then emits only k+1 signatures per string; the ~(2k+1)^2-ish substring
-# fan-out moves to the probe side, which in a lookup join is the tiny
-# side. Exactness never depends on the blocking: it only generates a
-# candidate superset, the levenshtein DP decides.
 
 
 def _segment_bounds(n, q: int, i: int):
@@ -142,7 +51,8 @@ def passjoin_edit_distance_join(
 ) -> DataFrame:
     """Exact fuzzy join on DISTINCT string values via PassJoin
     partitioning: (left_col, right_col, dist) for every distinct pair
-    with levenshtein <= max_dist. Same contract as edit_distance_join;
+    with levenshtein <= max_dist. Callers expand back to row level by
+    joining on the string columns (see queries_relational.q_fuzzy_part_match).
     `left` is the probe side (broadcast — keep it the small one), `right`
     the indexed catalog side (k+1 signatures per row, map-side explode,
     linear in catalog size with NO quadratic-in-length fan-out).

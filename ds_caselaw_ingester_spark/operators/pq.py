@@ -1,8 +1,8 @@
-"""Product quantization (PQ) — the storage tier below int8 for vector
+"""Product quantization (PQ) — the compressed storage tier for vector
 search (Jégou et al. 2011, "Product quantization for nearest neighbor
 search").
 
-Scalar int8 (operators/quantize.py) is 1 byte/dim. PQ goes further:
+Scalar int8 quantization would store 1 byte/dim. PQ goes further:
 split each vector into `m` subspaces, k-means each subspace into `k`
 codewords, and store ONE code per subspace — m bytes per vector
 regardless of dimension (64-dim float64 = 512 B -> 8 B at m=8, 64×).

@@ -312,8 +312,7 @@ def semantic_dedup_incremental(
 ) -> "tuple[DataFrame, DataFrame]":
     """Daily-increment semantic dedup: near-duplicate pairs INVOLVING a
     new vector, probed against a persisted cell index
-    (semdedup_build_index output) — the embedding-space analog of
-    incremental_lsh_pairs, with the same shape and contract:
+    (semdedup_build_index output). Shape and contract:
 
     - new-vs-OLD pairs: the new vectors' cells equi-join the index —
       cost tracks the increment times cell occupancy, never the corpus;

@@ -304,14 +304,15 @@ def py_doc_perplexity(
     oov_logp: "float | None" = None,
 ) -> dict:
     """Pure-Python replay of unigram_perplexity for ONE document — the
-    row-local engine of unigram_perplexity_mapside and the fused
-    curation gate scan. Same arithmetic as the relational path: Viterbi
-    per token (viterbi_segment, the shared DP), per-token micro-rounding
-    to integer partials, exact integer sum, ppl = exp(-lp/n_pieces)
-    HALF_UP-rounded at 4 (Spark ROUND). Returns {n_tokens, n_pieces,
-    total_logprob, ppl}; a tokenless document gets ppl=None — the
-    relational NULL, which the gate KEEPS. Equality with the relational
-    path is pinned by tests/test_unigram_lm.py."""
+    per-document reference the fused curation gate's batch engine
+    (make_batch_perplexity) is pinned against. Same arithmetic as the
+    relational path: Viterbi per token (viterbi_segment, the shared
+    DP), per-token micro-rounding to integer partials, exact integer
+    sum, ppl = exp(-lp/n_pieces) HALF_UP-rounded at 4 (Spark ROUND).
+    Returns {n_tokens, n_pieces, total_logprob, ppl}; a tokenless
+    document gets ppl=None — the relational NULL, which the gate KEEPS.
+    Equality with the relational path is pinned by
+    tests/test_unigram_lm.py."""
     from decimal import ROUND_HALF_UP, Decimal
 
     from ds_caselaw_ingester_spark.operators.textstats import py_tokens
@@ -412,64 +413,3 @@ def make_batch_perplexity(
 
     return ppl_of
 
-
-def unigram_perplexity_mapside(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    logp: "dict[str, float] | None" = None,
-    max_piece_len: int = 6,
-    oov_logp: "float | None" = None,
-    out_col: str = "ppl",
-) -> DataFrame:
-    """Shuffle-FREE perplexity: appends `out_col` to `docs` via one
-    Arrow mapInPandas pass running py_doc_perplexity per document.
-
-    Why this exists alongside unigram_perplexity: the Viterbi pass was
-    already row-local Arrow, but the relational form still explodes
-    tokens, reduces the partials through an id-keyed groupBy exchange,
-    and joins the keep set back — and its curation consumer had to
-    localCheckpoint the shortlist so multiple downstream consumers
-    would not replay the scoring. Computing ppl in the SAME pass that
-    segments removes the exchange, the join-back, and the checkpoint
-    workaround: the gate becomes a pure map (the langid lesson). The
-    relational form remains for callers that want the full
-    (n_tokens, n_pieces, total_logprob) accounting frame.
-
-    Values equal the relational path post-rounding — same viterbi DP,
-    same per-token micro-rounding and integer sum (shuffle-order
-    stability is trivial here: there is no shuffle), same HALF_UP
-    round at 4. Pinned by tests/test_unigram_lm.py."""
-    from pyspark.sql import types as T
-
-    if logp is None:
-        raise ValueError("logp (trained {piece: log_prob}) is required")
-    if not logp:
-        raise ValueError("logp must be a non-empty trained vocab")
-    if out_col in docs.columns:
-        raise ValueError(
-            f"out_col {out_col!r} already exists on the input frame; "
-            "pass a different name (the scorer appends, never replaces)"
-        )
-    for c in (id_col, text_col):
-        # driver-side, not a KeyError inside an executor's Arrow batch
-        if c not in docs.columns:
-            raise ValueError(f"{c!r} is not a column of the input frame")
-    schema = T.StructType(
-        list(docs.schema.fields) + [T.StructField(out_col, T.DoubleType(), True)]
-    )
-    model = dict(logp)
-    floor = float(oov_logp) if oov_logp is not None else min(model.values())
-    mpl = max_piece_len
-
-    def _score(batches):
-        # batch engine, not py_doc_perplexity per row: identical values
-        # (make_batch_perplexity's contract) with the per-word Viterbi
-        # memoized for the whole partition
-        ppl_of = make_batch_perplexity(model, mpl, floor)
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [ppl_of(t)["ppl"] for t in pdf[text_col]]
-            yield pdf
-
-    return docs.mapInPandas(_score, schema)

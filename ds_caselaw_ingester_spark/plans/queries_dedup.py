@@ -114,16 +114,10 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the shingle->md5->groupBy-min subtree runs once, not three times
     sigs = minhash_signatures(shingles, "doc_id", num_seeds=16).persist()
     bands = lsh_bands(sigs, "doc_id", rows_per_band=4)
-    # SPARK_GRAFT_OCCUPANCY_GUARD=1: one extra agg that WARNs before the
-    # pair explode when a hot band would make the in-bucket work
-    # quadratic (sizing.occupancy_guard). Off by default so the
-    # oracle/bench path pays nothing; flip it on for unseen corpora.
-    from ds_caselaw_ingester_spark.session import env_flag
-
-    pairs = lsh_candidate_pairs(
-        bands, "doc_id",
-        guard_occupancy=env_flag("SPARK_GRAFT_OCCUPANCY_GUARD"),
-    )
+    # guard_occupancy stays off: its extra agg (a WARN before the pair
+    # explode on a hot band, sizing.occupancy_guard) is for unseen
+    # corpora, and the oracle/bench path pays nothing for it here
+    pairs = lsh_candidate_pairs(bands, "doc_id")
     return estimate_jaccard(pairs, sigs, "doc_id", num_seeds=16)
 
 
@@ -178,9 +172,8 @@ WHERE round(CAST(c.n_common AS DOUBLE) / (sa.n_grams + sb.n_grams - c.n_common),
     "corpus (short docs, max gram df ~300) the in-bucket pair fan-out "
     "beats prefix filtering 4x (24 s vs 104 s at sf1) because the "
     "candidates are cheap structs while PPJoin's verification joins "
-    "carry full gram arrays; exact_jaccard_pairs_prefix remains the "
-    "right operator when documents are long or the gram vocabulary has "
-    "heavy hot keys. The registered plan carries max_doc_freq so one "
+    "carry full gram arrays, so the prefix-filtering operator is not "
+    "kept. The registered plan carries max_doc_freq so one "
     "hot shingle can never make the in-bucket fan-out O(df²).",
     survey_ops=("ext:dedup-ngram-jaccard",),
 )

@@ -712,7 +712,7 @@ FROM probes pr JOIN part p ON levenshtein(pr.probe, p.p_name) <= 2
     "string against the probe side's substring windows, and EXACT "
     "levenshtein runs on survivors only. The big side fans out x(k+1) "
     "(vs ~len^2/2 deletion variants for SymSpell — 3 vs ~466 rows per "
-    "30-char string; both operators ship, see operators/fuzzy.py, and "
+    "30-char string, so only PassJoin ships, see operators/fuzzy.py; "
     "the naive broadcast cross product cost 230 s of a 320 s sf1 suite). "
     "The expansion back to id rows is driven by an EXPLICIT broadcast of "
     "the matched string pairs (bounded by distinct-pair count): without "

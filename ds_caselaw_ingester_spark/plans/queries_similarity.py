@@ -480,16 +480,12 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # production callers use num_planes="auto", which at the measured
     # 220k-vector scale picks 12 and avoids the 8-plane saturation
     # abort (BENCH_SF1.md sf10).
-    # SPARK_GRAFT_OCCUPANCY_GUARD=1: measure what the hash actually did
-    # and WARN pre-join on skew (sizing.occupancy_guard). Off by default
-    # HERE because this row pins literal planes (bench/oracle path pays
-    # nothing); the production num_planes="auto" path runs the guard by
-    # default (lsh_neardup_pairs guard_occupancy=None semantics).
-    from ds_caselaw_ingester_spark.session import env_flag
-
+    # No occupancy guard HERE: this row pins literal planes, so the
+    # bench/oracle path pays nothing; the production num_planes="auto"
+    # path runs the guard by default (lsh_neardup_pairs
+    # guard_occupancy=None semantics).
     pairs = lsh_neardup_pairs(
         corpus, "v", "vec_id", threshold=0.9, num_planes=8, num_tables=4,
-        log_bucket_stats=env_flag("SPARK_GRAFT_OCCUPANCY_GUARD"),
     )
     return pairs.select(
         F.col("vec_id_a").alias("vec_a"),

@@ -54,12 +54,3 @@ def ensure_oracle_safe(spark: SparkSession) -> None:
     rendering of parquet timestamps agree with DuckDB's UTC-naive reads.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
-def env_flag(name: str) -> bool:
-    """Boolean env-var parse where '0'/'false'/'no'/'off'/'' all mean
-    OFF — bool(os.environ.get(...)) treats the string '0' as on, which
-    is exactly backwards for a caller exporting FLAG=0 to disable."""
-    return os.environ.get(name, "").strip().lower() not in (
-        "", "0", "false", "no", "off",
-    )

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from ds_caselaw_ingester_spark.operators.compaction import (
     ensure_partitioned_layout,
     local_path,
+    partition_file_snapshot,
     recover_buckets,
     swap_partition_dirs,
     write_json_atomic,
@@ -326,8 +327,8 @@ def apply_semdedup_batch(
             "swap before restarting the stream"
         )
     # refuse a FLAT index (written by the pre-partitioned version of
-    # this sink): bootstrapping over it would mix two layouts — migrate
-    # with semdedup_build_index + a partitioned write first
+    # this sink): bootstrapping over it would mix two layouts — rebuild
+    # it with semdedup_build_index + a partitioned write first
     ensure_partitioned_layout(local, CELL_COL)
     # reconcile any per-cell crash point BEFORE reading: a crash between
     # the two renames leaves centroid_id=N only in centroid_id=N.old
@@ -361,6 +362,18 @@ def apply_semdedup_batch(
     # partition-pruning predicate and the swap's touched set
     touched = {r[CELL_COL] for r in new_assigned.select(CELL_COL).distinct().collect()}
 
+    # This touched-cell swap stays separate from
+    # compaction.merge_touched_buckets: the cells come from the data
+    # (centroid ids), not a key modulus; the touched set grows AFTER the
+    # read (cells holding stale ids); and the merge has a second output,
+    # the epoch's pairs. It keeps the same single-writer check: snapshot
+    # the increment's cells before the read lists the index, the stale
+    # cells once the probe has found them, and abort the swap if any
+    # touched cell's files changed since (a stale cell changed between
+    # the listing and its snapshot goes unseen — plain parquet has no
+    # commit log).
+    snapshot = partition_file_snapshot(local, sorted(touched), CELL_COL)
+
     # presence = at least one cell partition dir (read_parquet_or_none
     # would raise on an empty-but-existing dir — a crash window between
     # the swap's makedirs and its first rename)
@@ -385,21 +398,19 @@ def apply_semdedup_batch(
                 .collect()
             )
             touched |= {r[CELL_COL] for r in stale}
-        touched_cells = sorted(touched)
-        current = index.where(F.col(CELL_COL).isin(touched_cells))
-        pairs, updated = semantic_dedup_incremental(
-            current, batch, vec_col, id_col, centroids,
-            threshold=threshold, new_assigned=new_assigned,
-        )
+        current = index.where(F.col(CELL_COL).isin(sorted(touched)))
     else:
-        touched_cells = sorted(touched)
         # in-batch pairs still matter on bootstrap: probe against an
         # empty index of the same schema
-        empty = new_assigned.limit(0)
-        pairs, updated = semantic_dedup_incremental(
-            empty, batch, vec_col, id_col, centroids,
-            threshold=threshold, new_assigned=new_assigned,
-        )
+        current = new_assigned.limit(0)
+    touched_cells = sorted(touched)
+    snapshot.update(
+        partition_file_snapshot(local, sorted(touched.difference(snapshot)), CELL_COL)
+    )
+    pairs, updated = semantic_dedup_incremental(
+        current, batch, vec_col, id_col, centroids,
+        threshold=threshold, new_assigned=new_assigned,
+    )
     # epoch-keyed pair output: replaying the same epoch overwrites its
     # own directory (idempotent) instead of double-appending
     pairs.write.mode("overwrite").parquet(
@@ -418,6 +429,18 @@ def apply_semdedup_batch(
     updated.repartition(F.col(CELL_COL)).write.mode("overwrite").partitionBy(
         CELL_COL
     ).parquet(tmp)
+    after = partition_file_snapshot(local, touched_cells, CELL_COL)
+    changed = [c for c in touched_cells if after[c] != snapshot[c]]
+    if changed:
+        # the epoch's pairs are already written; a redelivery of the
+        # epoch overwrites them, so aborting here leaves nothing to undo
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise RuntimeError(
+            f"cell(s) {changed} of {local} were modified by another "
+            "writer during the merge; aborting without swapping "
+            "(single-writer contract — serialize batches or use a "
+            "transactional table format)."
+        )
     swap_partition_dirs(local, tmp, touched_cells, CELL_COL)
     # amortized: the growth check lists every cell partition (footer
     # metadata only, but O(index files)) — running it every epoch would
@@ -459,7 +482,7 @@ def retrain_semdedup_index(
     (the failure the in-dir `_quantizer.json` location exists to
     prevent; a root-level sidecar could not be swapped with the data).
     Crash recovery reuses the standard swap protocol
-    (compaction.recover_swap, exclusive — single maintenance writer);
+    (compaction.recover_swap — single maintenance writer);
     a stale legacy sidecar is removed after the swap so it can never
     shadow a future missing in-dir file with pre-retrain centroids.
     A `.retraining` marker brackets the whole operation: written before
@@ -483,7 +506,7 @@ def retrain_semdedup_index(
     tmp, old = local + ".retrain-tmp", local + ".retrain-old"
     # marker FIRST: from here until commit_swap completes, a concurrent
     # or restarted stream must refuse to touch the index (see
-    # apply_semdedup_batch) — recover_swap's exclusive-mode precondition
+    # apply_semdedup_batch) — recover_swap's sole-writer precondition
     # ("local only exists via a completed whole-dir rename") does not
     # hold for an index the sink maintains via per-cell swaps, so the
     # marker is what closes the crash-between-renames window where a
@@ -491,7 +514,7 @@ def retrain_semdedup_index(
     marker = local + ".retraining"
     with open(marker, "w") as f:
         f.write("retrain_semdedup_index in progress\n")
-    recover_swap(local, tmp, old, exclusive=True)
+    recover_swap(local, tmp, old)
     recover_buckets(local, prefix=f"{CELL_COL}=")
     from ds_caselaw_ingester_spark.sources.catalog import spread_if_narrow
 

@@ -64,7 +64,7 @@ def apply_sketch_batch(
 
     spark = batch.sparkSession
     local = local_path(path)
-    recover_swap(local, local + ".tmp", local + ".old", exclusive=True)
+    recover_swap(local, local + ".tmp", local + ".old")
     # identity guard: registers built at a different p (bucket space)
     # or a different hashed column max-merge without any schema error,
     # and the corruption would be silent and permanent — afterwards the

@@ -1,173 +1,7 @@
-"""Compaction: many tiny appends become few right-sized files with
-identical content; the sorted variant restores min/max pruning."""
+"""The per-partition swap protocol: an emptied touched partition is
+removed, and the layout guard validates legacy tables before pinning."""
 
 from __future__ import annotations
-
-import os
-
-import pyarrow.parquet as pq
-from pyspark.sql import functions as F
-
-from ds_caselaw_ingester_spark.operators.compaction import (
-    compact_parquet_dir,
-    dir_stats,
-)
-from ds_caselaw_ingester_spark.sources.catalog import table
-
-
-def _fragmented(spark, sf_dir, out, n_appends=12):
-    """Simulate a streaming sink: many small appends."""
-    orders = table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    for i in range(n_appends):
-        orders.where(F.col("o_orderkey") % n_appends == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(out)
-    return orders
-
-
-def test_compaction_preserves_content_and_shrinks_file_count(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "t")
-    orders = _fragmented(spark, sf_dir, out)
-    before_rows = sorted(map(tuple, spark.read.parquet(out).collect()))
-    n_before, total = dir_stats(out)
-    assert n_before >= 12
-    fb, fa = compact_parquet_dir(spark, out, target_file_bytes=total)
-    assert (fb, fa) == (n_before, 1)
-    after_rows = sorted(map(tuple, spark.read.parquet(out).collect()))
-    assert after_rows == before_rows
-
-
-def test_compaction_respects_target_size(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "t")
-    _fragmented(spark, sf_dir, out)
-    _n, total = dir_stats(out)
-    fb, fa = compact_parquet_dir(spark, out, target_file_bytes=total // 4 + 1)
-    assert 2 <= fa <= 6, (fb, fa)
-
-
-def test_sorted_compaction_restores_minmax_pruning(spark, sf_dir, tmp_path):
-    """The modulo appends interleave keys, so every tiny file spans the
-    whole o_orderkey range (row-group stats prune nothing). Sorted
-    compaction makes ranges disjoint: a point predicate's qualifying
-    key range lives in exactly one file."""
-    import os
-
-    out = str(tmp_path / "t")
-    _fragmented(spark, sf_dir, out)
-
-    def key_ranges(d):
-        spans = []
-        for f in sorted(os.listdir(d)):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(d, f)).metadata
-            los, his = [], []
-            for rg in range(md.num_row_groups):
-                col = md.row_group(rg).column(0)  # o_orderkey
-                los.append(col.statistics.min)
-                his.append(col.statistics.max)
-            spans.append((min(los), max(his)))
-        return spans
-
-    frag_spans = key_ranges(out)
-    overlap_before = sum(
-        1
-        for i, a in enumerate(frag_spans)
-        for b in frag_spans[i + 1 :]
-        if a[0] <= b[1] and b[0] <= a[1]
-    )
-    assert overlap_before > 0, "fragmented files should overlap in key range"
-    _n, total = dir_stats(out)
-    compact_parquet_dir(
-        spark, out, target_file_bytes=total // 4 + 1, sort_cols=["o_orderkey"]
-    )
-    spans = key_ranges(out)
-    overlap_after = sum(
-        1
-        for i, a in enumerate(spans)
-        for b in spans[i + 1 :]
-        if a[0] <= b[1] and b[0] <= a[1]
-    )
-    assert overlap_after == 0, spans
-
-
-def test_partitioned_dir_is_refused(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "p")
-    import pytest
-
-    docs = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    docs.write.partitionBy("o_orderstatus").parquet(out)
-    with pytest.raises(ValueError, match="hive-partitioned"):
-        compact_parquet_dir(spark, out)
-
-
-def test_concurrent_append_aborts_with_original_intact(spark, sf_dir, tmp_path):
-    """The single-writer violation detector: a file that appears between
-    the snapshot and the swap aborts the compaction; nothing is lost."""
-    import pytest
-
-    from ds_caselaw_ingester_spark.operators import compaction as C
-
-    out = str(tmp_path / "t")
-    _fragmented(spark, sf_dir, out)
-    rows_before = spark.read.parquet(out).count()
-    extra = table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    ).limit(7)
-
-    real = C._parquet_files
-    calls = {"n": 0}
-
-    def racing(path):
-        calls["n"] += 1
-        if calls["n"] == 2:  # the post-rewrite check: simulate an append
-            extra.coalesce(1).write.mode("append").parquet(out)
-        return real(path)
-
-    C._parquet_files = racing
-    try:
-        with pytest.raises(RuntimeError, match="modified during the rewrite"):
-            compact_parquet_dir(spark, out, target_file_bytes=10**9)
-    finally:
-        C._parquet_files = real
-    # original intact INCLUDING the concurrently appended rows
-    assert spark.read.parquet(out).count() == rows_before + 7
-    assert not os.path.exists(out + ".compact-tmp")
-
-
-def test_crash_recovery_never_deletes_the_only_copy(spark, sf_dir, tmp_path):
-    """Crash points of the swap, replayed: (a) original moved aside,
-    tmp complete -> next run completes the swap; (b) original moved
-    aside, tmp gone -> restored; (c) both local and backup present ->
-    refuse loudly, delete nothing."""
-    import shutil
-
-    out = str(tmp_path / "t")
-    _fragmented(spark, sf_dir, out, n_appends=4)
-    rows = spark.read.parquet(out).count()
-    tmp, old = out + ".compact-tmp", out + ".compact-old"
-
-    # (a) simulate crash between renames: local -> old, tmp holds rewrite
-    spark.read.parquet(out).coalesce(1).write.parquet(tmp)
-    os.rename(out, old)
-    compact_parquet_dir(spark, out, target_file_bytes=10**9)
-    assert spark.read.parquet(out).count() == rows
-    assert not os.path.exists(old) and not os.path.exists(tmp)
-
-    # (b) crash right after moving aside, no tmp
-    os.rename(out, old)
-    compact_parquet_dir(spark, out, target_file_bytes=10**9)
-    assert spark.read.parquet(out).count() == rows
-
-    # (c) both present: refuse, delete nothing
-    shutil.copytree(out, old)
-    import pytest
-
-    with pytest.raises(RuntimeError, match="Reconcile"):
-        compact_parquet_dir(spark, out, target_file_bytes=10**9)
-    assert os.path.exists(out) and os.path.exists(old)
 
 
 def test_swap_partition_dirs_removes_emptied_partition(tmp_path):
@@ -239,53 +73,3 @@ def test_layout_guard_validates_legacy_tables_and_pins_after_write(tmp_path):
     pin_partitioned_layout(fresh, "kb", 8)
     with pytest.raises(ValueError, match="bucket"):
         ensure_partitioned_layout(fresh, "kb", 16)
-
-
-def test_migrate_flat_to_partitioned_feeds_the_bucketed_sinks(spark, tmp_path):
-    """The migration the layout guard's refusal demands: a flat table
-    rewritten under kb= partitions (modulus path) must then accept
-    bucketed upserts; a flat SemDeDup index with its centroid_id column
-    (data-derived path) must then accept the cell-partitioned sink."""
-    from pyspark.sql import functions as F
-
-    from ds_caselaw_ingester_spark.operators.compaction import (
-        migrate_to_partitioned,
-    )
-    from ds_caselaw_ingester_spark.operators.upsert import (
-        upsert_parquet_table_bucketed,
-    )
-
-    flat = str(tmp_path / "docs")
-    spark.createDataFrame(
-        [(f"doc-{i}", f"title {i}") for i in range(30)], "uri string, title string"
-    ).write.parquet(flat)
-    n = migrate_to_partitioned(spark, flat, "kb", n_buckets=8, key="uri")
-    assert n == 30
-    import os
-
-    assert not any(e.endswith(".parquet") for e in os.listdir(flat))
-    upd = spark.createDataFrame([("doc-3", "updated")], "uri string, title string")
-    upsert_parquet_table_bucketed(upd, flat, key="uri", n_buckets=8)
-    got = spark.read.parquet(flat)
-    assert got.count() == 30
-    assert got.where("uri = 'doc-3'").collect()[0]["title"] == "updated"
-
-    # data-derived path: a flat semdedup index migrates on its own column
-    from ds_caselaw_ingester_spark.operators.semdedup import semdedup_build_index
-    from ds_caselaw_ingester_spark.operators.similarity import kmeans_fit
-    from ds_caselaw_ingester_spark.streaming.semdedup_sink import (
-        apply_semdedup_batch,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents = kmeans_fit(emb.limit(60), "v", "vec_id", k=4, max_iter=1)
-    flat_idx = str(tmp_path / "index")
-    semdedup_build_index(emb, "v", "vec_id", cents).write.parquet(flat_idx)
-    migrate_to_partitioned(spark, flat_idx, "centroid_id")
-    inc = emb.limit(5).select((F.col("vec_id") + 900000).alias("vec_id"), "v")
-    apply_semdedup_batch(
-        inc, flat_idx, str(tmp_path / "pairs"), "v", "vec_id", cents, epoch_id=0
-    )
-    assert spark.read.parquet(flat_idx).count() == emb.count() + 5

@@ -71,67 +71,6 @@ def test_decontaminate_broadcasts_benchmark_side(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_bloom_confirmed_equals_exact(spark):
-    """decontaminate_bloom with the confirming join is EXACTLY the exact
-    operator — the bloom is a scan-side prefilter, not an approximation
-    of the output."""
-    from ds_caselaw_ingester_spark.operators.decontam import decontaminate_bloom
-
-    docs = table(spark, SF, "documents").select("doc_id", "text")
-    bench = docs.where(F.col("doc_id") % 50 == 0).select("text")
-    exact = {
-        (r.doc_id, r.n_contaminated_grams, r.is_contaminated)
-        for r in decontaminate(docs, bench, "doc_id", "text", n=N).collect()
-    }
-    bloomed = {
-        (r.doc_id, r.n_contaminated_grams, r.is_contaminated)
-        for r in decontaminate_bloom(
-            docs, bench, "doc_id", "text", n=N, confirm=True
-        ).collect()
-    }
-    assert bloomed == exact
-    assert any(flag for (_, _, flag) in bloomed)
-
-
-def test_bloom_unconfirmed_has_no_false_negatives_and_bounded_fp(spark):
-    """confirm=False: every truly contaminated document must still be
-    flagged (a bloom never false-negatives its own members), and the
-    per-gram false-positive rate on clean grams must stay near the
-    ~1%-at-10-bits design point (<= 5% leaves generous engine slack)."""
-    from ds_caselaw_ingester_spark.operators.decontam import decontaminate_bloom
-
-    docs = table(spark, SF, "documents").select("doc_id", "text")
-    bench = docs.where(F.col("doc_id") % 50 == 0).select("text")
-    exact = {
-        r.doc_id: r.n_contaminated_grams
-        for r in decontaminate(docs, bench, "doc_id", "text", n=N).collect()
-    }
-    approx = {
-        r.doc_id: r.n_contaminated_grams
-        for r in decontaminate_bloom(
-            docs, bench, "doc_id", "text", n=N, confirm=False
-        ).collect()
-    }
-    # no false negatives: the approx count dominates the exact count
-    assert set(approx) == set(exact)
-    for d, n_exact in exact.items():
-        assert approx[d] >= n_exact, (d, approx[d], n_exact)
-    # bounded false positives PER GRAM — the unit the 10-bit design
-    # point (~1% FPR) is stated in. Doc-level rates are necessarily
-    # higher (a 40-gram clean doc is 40 independent ~1% trials).
-    extra = sum(approx[d] - c for d, c in exact.items())
-    n_tok = {
-        r["doc_id"]: r["nt"]
-        for r in docs.select(
-            "doc_id", F.size(F.split(F.trim("text"), r"\s+")).alias("nt")
-        ).collect()
-    }
-    total_gram_occurrences = sum(max(0, t - N + 1) for t in n_tok.values())
-    clean_gram_occurrences = total_gram_occurrences - sum(exact.values())
-    fpr = extra / max(1, clean_gram_occurrences)
-    assert fpr <= 0.05, (extra, clean_gram_occurrences, fpr)
-
-
 # ---------------------------------------------------------------------------
 # semantic_decontam
 # ---------------------------------------------------------------------------

@@ -1,131 +1,4 @@
-
-
-def test_lsh_collision_curve_and_band_planner():
-    """The S-curve math the banding design rests on: monotone in s,
-    steep near the implied threshold, and the planner recovers the
-    engine's 16-hash default and prefers recall on ties."""
-    from ds_caselaw_ingester_spark.operators.dedup import (
-        lsh_collision_probability,
-        plan_lsh_bands,
-    )
-
-    # monotone, with the boundary values exact
-    probs = [lsh_collision_probability(s / 10, 4, 4) for s in range(11)]
-    assert probs == sorted(probs)
-    assert probs[0] == 0.0 and probs[-1] == 1.0
-    # the implied threshold (1/4)^(1/4) ~ 0.707: well below it the pair
-    # is nearly never a candidate, well above nearly always
-    assert lsh_collision_probability(0.4, 4, 4) < 0.1
-    assert lsh_collision_probability(0.9, 4, 4) > 0.95
-    # the registered pipeline's configuration is what the planner picks
-    assert plan_lsh_bands(16, 0.7) == (4, 4)
-    # lower threshold -> more bands (recall); higher -> more rows
-    b_lo, r_lo = plan_lsh_bands(16, 0.3)
-    b_hi, r_hi = plan_lsh_bands(16, 0.95)
-    assert b_lo > 4 and r_hi > 4
-    import pytest
-
-    with pytest.raises(ValueError):
-        plan_lsh_bands(16, 1.5)
-    with pytest.raises(ValueError):
-        lsh_collision_probability(-0.1, 4, 4)
-
-
-def test_incremental_lsh_matches_full_recompute(spark, sf_dir):
-    """Splitting the corpus into base + increment and probing the band
-    index must find EXACTLY the full-recompute pairs that touch an
-    increment document — plus, chaining two increments reproduces the
-    full pair set."""
-    from ds_caselaw_ingester_spark.operators.dedup import (
-        doc_shingles,
-        incremental_lsh_pairs,
-        lsh_bands,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-    from ds_caselaw_ingester_spark.sources.catalog import spread, table
-
-    from pyspark.sql import functions as F
-
-    corpus = spread(
-        table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
-    )
-
-    def bands_of(df):
-        return lsh_bands(minhash_signatures(doc_shingles(df, "doc_id", "text"), "doc_id"), "doc_id")
-
-    full_pairs = {
-        (r["doc_a"], r["doc_b"])
-        for r in lsh_candidate_pairs(bands_of(corpus), "doc_id").collect()
-    }
-    base = corpus.where(F.col("doc_id") % 3 != 0)
-    inc = corpus.where(F.col("doc_id") % 3 == 0)
-    index = bands_of(base)
-    pairs, updated = incremental_lsh_pairs(index, bands_of(inc), "doc_id")
-    got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-
-    inc_ids = {r["doc_id"] for r in inc.select("doc_id").collect()}
-    want = {p for p in full_pairs if p[0] in inc_ids or p[1] in inc_ids}
-    assert got == want
-    assert want, "increment must actually touch some pairs"
-    # base-only pairs were NOT recomputed (cost tracks the increment)
-    assert all(p[0] in inc_ids or p[1] in inc_ids for p in got)
-    # the updated index is complete: probing an empty increment later
-    # finds nothing, and its band set equals the full corpus's
-    full_bands = bands_of(corpus)
-    assert updated.count() == full_bands.count()
-
-
-def test_incremental_lsh_reingest_replaces_stale_bands(spark, sf_dir):
-    """Review finding pinned: re-ingesting an id with CHANGED text must
-    supersede its old index rows — the updated index holds exactly one
-    version per id, and the probe never pairs against a dead version's
-    band keys."""
-    from pyspark.sql import functions as F
-
-    from ds_caselaw_ingester_spark.operators.dedup import (
-        doc_shingles,
-        incremental_lsh_pairs,
-        lsh_bands,
-        minhash_signatures,
-    )
-    from ds_caselaw_ingester_spark.sources.catalog import spread, table
-
-    corpus = spread(
-        table(spark, sf_dir, "documents").select("doc_id", "text").limit(60),
-        "doc_id",
-    )
-
-    def bands_of(df):
-        return lsh_bands(
-            minhash_signatures(doc_shingles(df, "doc_id", "text"), "doc_id"),
-            "doc_id",
-        )
-
-    index = bands_of(corpus)
-    # re-ingest 10 docs with rewritten text
-    changed = corpus.where(F.col("doc_id") % 6 == 0).select(
-        "doc_id", F.concat(F.lit("totally rewritten body now "), F.col("text")).alias("text")
-    )
-    pairs, updated = incremental_lsh_pairs(index, bands_of(changed), "doc_id")
-    changed_ids = {r["doc_id"] for r in changed.select("doc_id").collect()}
-    # one version per id: the updated index equals a fresh index over
-    # the replaced corpus
-    replaced = corpus.where(F.col("doc_id") % 6 != 0).unionAll(changed)
-    fresh = bands_of(replaced)
-    got = {tuple(r) for r in updated.collect()}
-    want = {tuple(r) for r in fresh.collect()}
-    assert got == want
-    # and the pairs equal a full recompute over the replaced corpus,
-    # restricted to pairs touching a re-ingested doc
-    from ds_caselaw_ingester_spark.operators.dedup import lsh_candidate_pairs
-
-    full = {
-        (r["doc_a"], r["doc_b"])
-        for r in lsh_candidate_pairs(fresh, "doc_id").collect()
-    }
-    want_pairs = {p for p in full if p[0] in changed_ids or p[1] in changed_ids}
-    assert {(r["doc_a"], r["doc_b"]) for r in pairs.collect()} == want_pairs
+"""Span-level duplicate detection: duplicate_spans / strip_spans geometry."""
 
 
 def test_duplicate_spans_exact_geometry(spark):

@@ -1,10 +1,11 @@
-"""edit_distance_join (SymSpell deletion-neighborhood blocking) must be
-VALUE-IDENTICAL to the brute-force cross join + levenshtein filter — the
-blocking is a completeness-preserving candidate generator, and the
-SymSpell property (ed(a,b) <= k => shared <=k-deletion variant) is load-
-bearing, so it gets an adversarial randomized check: 200 base strings,
-mutated by 0-3 random edits (insert/delete/substitute, which also
-composes transpositions), over a tiny alphabet to force collisions."""
+"""passjoin_edit_distance_join (PassJoin segment-signature blocking) must
+be VALUE-IDENTICAL to the brute-force cross join + levenshtein filter —
+the blocking is a completeness-preserving candidate generator, and the
+pigeonhole property (ed(s,r) <= k => some segment of r appears in s
+within +-k of its position) is load-bearing, so it gets an adversarial
+randomized check: 100 base strings, mutated by 0-3 random edits
+(insert/delete/substitute, which also composes transpositions), over a
+tiny alphabet to force collisions."""
 
 from __future__ import annotations
 
@@ -14,7 +15,6 @@ import string
 from pyspark.sql import functions as F
 
 from ds_caselaw_ingester_spark.operators.fuzzy import (
-    edit_distance_join,
     passjoin_edit_distance_join,
 )
 
@@ -36,42 +36,11 @@ def _mutate(rng: random.Random, s: str, n_edits: int) -> str:
     return s
 
 
-def test_blocked_join_equals_brute_force(spark):
-    rng = random.Random(20260813)
-    bases = [
-        "".join(rng.choice(ALPHABET) for _ in range(rng.randint(1, 12)))
-        for _ in range(100)
-    ]
-    rights = [(s,) for s in bases]
-    lefts = [(_mutate(rng, rng.choice(bases), rng.randint(0, 3)),) for _ in range(100)]
-    L = spark.createDataFrame(lefts, "l string").where(F.length("l") > 0)
-    R = spark.createDataFrame(rights, "r string").where(F.length("r") > 0)
-
-    blocked = {
-        (x.l, x.r, x.dist)
-        for x in edit_distance_join(L, R, "l", "r", max_dist=2).collect()
-    }
-    dist = F.levenshtein(F.col("l"), F.col("r"))
-    brute = {
-        (x.l, x.r, x.dist)
-        for x in (
-            L.distinct()
-            .crossJoin(R.distinct())
-            .where(dist <= 2)
-            .select("l", "r", dist.alias("dist"))
-            .collect()
-        )
-    }
-    assert blocked == brute
-    assert brute  # sanity: mutations produced matches
-
-
 def test_passjoin_equals_brute_force(spark):
     """PassJoin's pigeonhole blocking (k+1 segments, +-k position
-    windows, length-banded short-string branch) must also be
-    VALUE-IDENTICAL to the brute-force join — same adversarial
-    randomized pressure as the SymSpell check, with 1-2 char strings
-    included to exercise the unsegmentable-catalog-string branch."""
+    windows, length-banded short-string branch) against the brute-force
+    join, with 1-2 char strings included to exercise the
+    unsegmentable-catalog-string branch."""
     rng = random.Random(20260814)
     bases = [
         "".join(rng.choice(ALPHABET) for _ in range(rng.randint(1, 12)))
@@ -131,16 +100,6 @@ def test_passjoin_empty_strings(spark):
     }
     assert got == brute
     assert ("", "", 0) in got and ("", "a", 1) in got and ("ab", "", 2) in got
-
-
-def test_blocked_join_k1(spark):
-    L = spark.createDataFrame([("abc",), ("zzz",)], "l string")
-    R = spark.createDataFrame([("abcd",), ("abc",), ("bbc",), ("abab",)], "r string")
-    got = {
-        (x.l, x.r, x.dist)
-        for x in edit_distance_join(L, R, "l", "r", max_dist=1).collect()
-    }
-    assert got == {("abc", "abcd", 1), ("abc", "abc", 0), ("abc", "bbc", 1)}
 
 
 def test_passjoin_unicode_codepoints(spark):

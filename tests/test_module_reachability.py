@@ -6,8 +6,8 @@ follows every import, including the ones inside functions, through the
 package and through ``tools.*`` (perfbench imports
 ``tools.measure_sf10_composite``). A module only tests import is dead
 weight: give it a caller the system runs, or delete it with its tests.
-The modules still in that state are listed in ``TEST_ONLY``.
-Pure ``ast``, no Spark session."""
+The only modules left unreached are the ``EXAMPLE_BACKED`` ones, so a
+new test-only module fails here. Pure ``ast``, no Spark session."""
 
 from __future__ import annotations
 
@@ -38,16 +38,6 @@ EXAMPLE_BACKED = {
     "ds_caselaw_ingester_spark.streaming.curation_sink",
     "ds_caselaw_ingester_spark.streaming.semdedup_sink",
     "ds_caselaw_ingester_spark.streaming.sketch_sink",
-}
-
-# Reached only from their own tests. They are queued for deletion on
-# ROADMAP.md (direction 4); this list may only shrink.
-TEST_ONLY = {
-    "ds_caselaw_ingester_spark.operators.bucketing",
-    "ds_caselaw_ingester_spark.operators.expectations",
-    "ds_caselaw_ingester_spark.operators.packing",
-    "ds_caselaw_ingester_spark.operators.quantize",
-    "ds_caselaw_ingester_spark.operators.vocab",
 }
 
 
@@ -114,5 +104,4 @@ def test_every_package_module_is_reached_from_a_system_root():
         _module_name(p) for p in (ROOT / PACKAGE).rglob("*.py")
     }
     unreached = modules - _reached()
-    expected = EXAMPLE_BACKED | TEST_ONLY
-    assert unreached == expected, sorted(unreached ^ expected)
+    assert unreached == EXAMPLE_BACKED, sorted(unreached ^ EXAMPLE_BACKED)

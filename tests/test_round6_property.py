@@ -1,6 +1,6 @@
-"""Property tests for the round-6 operators against pure-Python models:
-Viterbi segmentation optimality and the LSH band-planner formula. Both
-are pure-Python properties and run at full breadth."""
+"""Property test for the round-6 operators against a pure-Python model:
+Viterbi segmentation optimality, a pure-Python property run at full
+breadth."""
 
 from __future__ import annotations
 
@@ -48,30 +48,3 @@ def test_viterbi_is_optimal_and_lossless(word, extra, seed):
     assert best is not None
     assert got_score >= best - 1e-12, (got, best)
 
-
-@given(
-    num_hashes=st.sampled_from([8, 12, 16, 20, 24, 32, 48, 64]),
-    threshold=st.floats(min_value=0.05, max_value=0.95),
-)
-@settings(max_examples=200, deadline=None)
-def test_band_planner_is_optimal_over_factorizations(num_hashes, threshold):
-    """The planner's pick must minimize |implied - target| over ALL
-    factorizations, with ties broken toward more bands."""
-    from ds_caselaw_ingester_spark.operators.dedup import plan_lsh_bands
-
-    bands, rows = plan_lsh_bands(num_hashes, threshold)
-    assert bands * rows == num_hashes
-
-    def implied(b, r):
-        return (1.0 / b) ** (1.0 / r) if b > 1 else 1.0
-
-    gaps = []
-    for r in range(1, num_hashes + 1):
-        if num_hashes % r == 0:
-            b = num_hashes // r
-            gaps.append((abs(implied(b, r) - threshold), -b, (b, r)))
-    best_gap = min(g[0] for g in gaps)
-    assert abs(implied(bands, rows) - threshold) <= best_gap + 1e-15
-    # tie-break: among minimal-gap factorizations, max bands wins
-    tied = [g for g in gaps if abs(g[0] - best_gap) < 1e-15]
-    assert bands == max(-g[1] for g in tied)

@@ -1,79 +1,14 @@
-"""Property tests for the round-8 machinery: the Bloom filter never
-false-negatives any member under ANY (benchmark, probe) pair and stays
-consistent between its numpy build and probe bit-paths — exercised via
-the PRODUCTION bloom_bits_build/bloom_bits_probe pair (the per-query
-RRF composition law is pinned deterministically in test_search.py); the
-touched-partition swap state machine preserves exactly the intended
-post-state from any crash point recover_buckets can see; the occupancy
-guard's healthy bound is tight at the boundary."""
+"""Property tests for the round-8 machinery: the touched-partition swap
+state machine preserves exactly the intended post-state from any crash
+point recover_buckets can see; the occupancy guard's healthy bound is
+tight at the boundary."""
 
 from __future__ import annotations
 
-import math
 import os
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-# ---------------------------------------------------------------------------
-# Bloom bit-path consistency (pure numpy — no Spark in the loop)
-# ---------------------------------------------------------------------------
-
-
-from ds_caselaw_ingester_spark.operators.decontam import (  # noqa: E402
-    bloom_bits_build,
-    bloom_bits_probe,
-)
-
-
-def _build(h1s, h2s, m, j):
-    # the PRODUCTION bit-path (bloom_build and the probe UDF call the
-    # same two functions) — a regression there fails here
-    return bloom_bits_build(np.array(h1s, dtype=np.int64),
-                            np.array(h2s, dtype=np.int64), m, j)
-
-
-def _probe(bitmap, h1s, h2s, m, j):
-    return bloom_bits_probe(bitmap, np.array(h1s, dtype=np.int64),
-                            np.array(h2s, dtype=np.int64), m, j)
-
-
-i64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
-
-
-@given(
-    st.lists(st.tuples(i64, i64), min_size=1, max_size=64),
-    st.integers(min_value=64, max_value=4096),
-    st.integers(min_value=1, max_value=9),
-)
-@settings(max_examples=200, deadline=None)
-def test_bloom_members_always_hit(members, m, j):
-    """No false negatives, for ANY signed-64 hash pairs (including the
-    negative half that crashed the pre-fix build under NumPy 2) and any
-    (m, j) sizing: every inserted member's probe must return True."""
-    bm = _build([a for a, _ in members], [b for _, b in members], m, j)
-    assert _probe(bm, [a for a, _ in members], [b for _, b in members], m, j).all()
-
-
-@given(
-    st.lists(st.tuples(i64, i64), min_size=1, max_size=32, unique=True),
-    st.tuples(i64, i64),
-)
-@settings(max_examples=200, deadline=None)
-def test_bloom_nonmember_rate_is_sane(members, probe):
-    """A non-member CAN collide, but with the design sizing (10
-    bits/element, k=7) a single fixed probe against <=32 members in a
-    >=320-bit filter must not be a guaranteed hit: the bitmap is not
-    saturated (some bit stays clear)."""
-    if probe in members:
-        return
-    m = max(64, len(members) * 10)
-    bm = _build([a for a, _ in members], [b for _, b in members], m, 7)
-    # structural sanity: at 10 bits/element some bits remain clear
-    total_set = int(np.unpackbits(bm).sum())
-    assert total_set < m
-
 
 # ---------------------------------------------------------------------------
 # occupancy guard boundary

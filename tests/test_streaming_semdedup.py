@@ -219,6 +219,56 @@ def test_reingested_id_moving_cells_leaves_no_stale_row(
     assert rows[0]["centroid_id"] == donor_cell
 
 
+def test_semdedup_sink_detects_concurrent_writer(
+    spark, corpus, quantizer, tmp_path, monkeypatch
+):
+    """Single-writer contract, detected: a file appearing in a touched
+    cell between the snapshot and the swap must abort the batch loudly
+    with the index untouched — a silent swap would drop the other
+    writer's rows."""
+    import ds_caselaw_ingester_spark.streaming.semdedup_sink as sink_mod
+
+    emb, planted = corpus
+    idx = str(tmp_path / "index")
+    prs = str(tmp_path / "pairs")
+    apply_semdedup_batch(
+        emb, idx, prs, "v", "vec_id", quantizer, threshold=0.9, epoch_id=0
+    )
+
+    def _cells():
+        return {
+            d: sorted(
+                e for e in os.listdir(os.path.join(idx, d))
+                if e != "intruder.parquet"
+            )
+            for d in os.listdir(idx)
+            if d.startswith("centroid_id=")
+        }
+
+    before = _cells()
+    real_incremental = sink_mod.semantic_dedup_incremental
+
+    def incremental_and_race(*args, **kwargs):
+        # the concurrent writer: a file in every cell dir after the
+        # sink took its snapshot, before the swap
+        for d in os.listdir(idx):
+            if d.startswith("centroid_id=") and not d.endswith(".old"):
+                with open(os.path.join(idx, d, "intruder.parquet"), "wb") as f:
+                    f.write(b"x")
+        return real_incremental(*args, **kwargs)
+
+    monkeypatch.setattr(
+        sink_mod, "semantic_dedup_incremental", incremental_and_race
+    )
+    with pytest.raises(RuntimeError, match="another writer"):
+        apply_semdedup_batch(
+            planted, idx, prs, "v", "vec_id", quantizer, threshold=0.9,
+            epoch_id=1,
+        )
+    assert not os.path.exists(idx + ".tmp")
+    assert _cells() == before
+
+
 def test_streaming_end_to_end_matches_batch(spark, corpus, quantizer, tmp_path):
     """Real readStream run (file source, one file per trigger): the
     union of per-epoch pair logs equals the one-shot recompute."""

@@ -176,16 +176,16 @@ def test_unigram_perplexity_replay_and_discrimination(spark):
         assert got[d]["n_tokens"] == 0 and got[d]["ppl"] is None
 
 
-def test_unigram_perplexity_mapside_matches_relational(spark):
-    """unigram_perplexity_mapside appends the SAME ppl the relational
-    path computes (incl. the NULL-for-tokenless rule) with an
-    Exchange-free plan — the round-11 gate shape (VERDICT r10 #2)."""
+def test_batch_perplexity_matches_relational(spark):
+    """The curation LM gate's engine (make_batch_perplexity, run inside
+    the fused gate scan) gives each document the SAME ppl the relational
+    unigram_perplexity computes, incl. the NULL-for-tokenless rule."""
     from pyspark.sql import functions as F
 
     from ds_caselaw_ingester_spark.operators.unigram_lm import (
+        make_batch_perplexity,
         unigram_fit,
         unigram_perplexity,
-        unigram_perplexity_mapside,
     )
 
     base = [
@@ -214,18 +214,11 @@ def test_unigram_perplexity_mapside_matches_relational(spark):
             docs, "doc_id", "text", logp, max_piece_len=4
         ).collect()
     }
-    mapside = unigram_perplexity_mapside(
-        docs, "doc_id", "text", logp, max_piece_len=4
-    )
-    got = {r["doc_id"]: r["ppl"] for r in mapside.collect()}
+    ppl_of = make_batch_perplexity(logp, max_piece_len=4)
+    got = {i: ppl_of(t)["ppl"] for i, t in rows}
     assert got == rel
     assert got[98] is None and got[99] is None  # tokenless -> NULL (keep)
     assert got[97] is not None
-
-    plan = mapside._sc._jvm.PythonSQLUtils.explainString(
-        mapside._jdf.queryExecution(), "simple"
-    )
-    assert "Exchange" not in plan, plan
 
 
 def test_batch_perplexity_equals_py_doc_perplexity():

@@ -47,29 +47,22 @@ def main() -> int:
             "  decontaminate (op)      tests/test_decontam.py",
             "  hash/stratified sample  tests/test_sampling.py + test_curation_property.py",
             "  chunk_documents (op)    tests/test_chunking.py + test_curation_property.py",
-            "  token_frequencies/vocab tests/test_vocab.py",
-            "  edit_distance_join      tests/test_fuzzy_join.py (SymSpell variant)",
             "  cosine_topk             tests/test_oracle_parity.py (slot -> bm25_search r7)",
             "  top_orders_global       tests/test_oracle_parity.py (slot -> repetition_profile r8)",
             "  repeated_spans          tests/test_oracle_parity.py (positional passage dedup)",
             "  corpus_mixture          tests/test_oracle_parity.py + test_mixture.py",
-            "  bucketed layout (op)    tests/test_bucketing.py (exchange-free join plans)",
             "  pq rerank / ivfadc      tests/test_pq.py (ADC core registered as pq_adc_topk)",
             "  simhash_signatures      tests/test_oracle_parity.py (slot -> pq_adc_topk r7)",
             "  auto-sizing (op)        tests/test_sizing.py (LSH planes / k / df-cap rules)",
             "  unigram-LM tokenizer    tests/test_unigram_lm.py (hard EM, replay-exact)",
             "  shuffled export (op)    tests/test_export.py (deterministic balanced shards)",
-            "  table expectations (op) tests/test_expectations.py (one-pass check battery)",
-            "  incremental LSH (op)    tests/test_dedup.py (new-vs-index == recompute)",
             "  incremental semdedup    tests/test_semdedup.py + test_streaming_semdedup.py",
-            "  compaction (op)         tests/test_compaction.py (crash-safe, writer-detecting)",
+            "  swap protocols (op)     tests/test_compaction.py + test_round7/8_property.py",
             "  corpus report (op)      tests/test_report.py (two-pass health metrics)",
             "  doc_fingerprint         tests/test_oracle_parity.py (slot -> hybrid_search r8)",
-            "  bloom decontam (op)     tests/test_decontam.py (confirmed == exact; FPR measured)",
             "  matmul ivf_assign (op)  tests/test_ann_recall.py (== literal path, large-k route)",
             "  occupancy guard (op)    tests/test_sizing.py (pre-join skew WARN)",
             "  unigram perplexity (op) tests/test_unigram_lm.py (replay-exact LM filter)",
-            "  layout migration (op)   tests/test_compaction.py (flat -> partitioned)",
             "  multi-query bm25 (op)   tests/test_search.py (DuckDB-gated per-query ranks)",
             "  langid gate (op)        tests/test_langid.py (char-ngram clf, replay-exact + DuckDB)",
             "  hybrid_search           tests/test_oracle_parity.py (slot -> neardup_quality_keepers r10)",
