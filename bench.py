@@ -1,9 +1,11 @@
 """Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints the
-full JSON line {"metric", "value", "unit", "queries", "sf", ...}, then a
-paired host-factor line vs the newest committed BENCH_r*.json, then a
-minimal tail line with the suite total (see the capture-window notes
-below for why three lines).
+(default: the sf0.1 test tables) on the package's session, local[N] with
+N shuffle partitions (N = $SPARK_GRAFT_CPUS, else the CPUs this process
+may run on; BENCH_r15 and earlier ran 32 shuffle partitions at every core
+count), and prints the full JSON line {"metric", "value", "unit",
+"queries", "sf", ...}, then a paired host-factor line vs the newest
+committed BENCH_r*.json, then a minimal tail line with the suite total
+(see the capture-window notes below for why three lines).
 
 Each query is forced end-to-end with the noop sink (full computation of
 every output column, no driver collect, no disk write) — the honest

@@ -782,11 +782,11 @@ def _increment_core(
     every base seq is below every new one (the callers assign new seqs
     from mx + 1).
 
-    The index is probed DIRECTLY, without incremental_lsh_pairs'
-    replace anti-join: that anti-join drops a re-ingested id's old
-    rows, but here a re-sent id is a new arrival that must still pair
-    with its earlier self (curate_increment_seq's re-sent-id rule) —
-    and the anti-join would cost an O(index) pass per increment."""
+    The index is probed DIRECTLY, with no anti-join dropping a re-sent
+    id's earlier rows: a re-sent id is a new arrival (a new seq) that
+    must still pair with its earlier self (curate_increment_seq's
+    re-sent-id rule), and such an anti-join would cost an O(index) pass
+    per increment."""
     old = band_index.select(F.col(SEQ_COL).alias("_old_id"), "band", "band_key")
     nv = new_bands.select(F.col(SEQ_COL).alias("_new_id"), "band", "band_key")
     cross = (

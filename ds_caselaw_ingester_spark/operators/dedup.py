@@ -240,12 +240,11 @@ def exact_jaccard_pairs(
     log_drop_stats: bool = False,
     gram_fraction: float = 1.0,
 ) -> DataFrame:
-    """Exact n-gram Jaccard via an inverted index built in ONE shuffle:
-    groupBy(gram) → collect_set(doc) — simultaneously dedups shingles and
-    buckets documents. Pairs come from in-bucket array combination (no
-    self-join); doc sizes are re-derived from the same index (the re-
-    explode shuffles one row per DISTINCT (doc, gram) — the same rows the
-    old distinct() pass shuffled, but here it's the only extra pass).
+    """Exact n-gram Jaccard via an inverted index built from ONE shuffle:
+    the shingles are partitioned by gram once, and that exchange feeds
+    both groupBy(gram) → collect_set(doc) (which dedups shingles and
+    buckets documents) and the per-document sizes (distinct grams per
+    doc). Pairs come from in-bucket array combination (no self-join).
 
     jaccard = common / (|A| + |B| - common) — integer inputs, one double
     division, engine-exact.
@@ -278,18 +277,26 @@ def exact_jaccard_pairs(
     if log_drop_stats and max_doc_freq is not None:
         # reuses the auto path's vocabulary scan when one ran
         hot_gram_drop_stats(shingles, id_col, max_doc_freq, _df_stats=df_stats)
-    # NOT persisted: both consumers (sizes, pairable) sit in the one final
-    # plan, and Spark's exchange-reuse rule dedupes the identical
-    # hashpartitioning(gram) shuffle there (verified: ReusedExchange in the
-    # final adaptive plan). A persist here would leak executor memory for
-    # the life of the session since no unpersist point exists post-return.
-    inv = shingles.groupBy("gram").agg(
+    # NOT persisted: both consumers (the index, the sizes) read the one
+    # gram-partitioned exchange, and Spark's exchange-reuse rule dedupes it
+    # in the final plan, so the corpus explode runs once. The sizes count
+    # distinct (doc, gram) rows there rather than re-exploding the index,
+    # which would be a third Generate over every gram's doc list. A persist
+    # would leak executor memory for the life of the session since no
+    # unpersist point exists post-return. The null-id filter is the one
+    # the optimizer infers for the sizes joins and pushes down their side
+    # only; stated here, it keeps the two consumers' exchanges identical
+    # (collect_set and the size joins drop null ids either way).
+    by_gram = (
+        shingles.select(F.col(id_col), "gram")
+        .where(F.col(id_col).isNotNull())
+        .repartition("gram")
+    )
+    inv = by_gram.groupBy("gram").agg(
         F.array_sort(F.collect_set(F.col(id_col))).alias("docs")
     )
-    sizes = (
-        inv.select(F.explode("docs").alias(id_col))
-        .groupBy(id_col)
-        .agg(F.count("*").alias("n_grams"))
+    sizes = by_gram.dropDuplicates([id_col, "gram"]).groupBy(id_col).agg(
+        F.count("*").alias("n_grams")
     )
     pairable = inv.where(F.size("docs") >= 2)
     if max_doc_freq is not None:

@@ -240,8 +240,9 @@ def perform_ingest(
     by two) are persisted and released before returning. A cached plan
     keeps its output partitioning unless
     ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is on,
-    so a small batch cached under 32 shuffle partitions runs 32 tasks per
-    sink and leaves up to 32 files per append. run_full_ingest_stream
+    so a batch cached under far more shuffle partitions than it has rows
+    runs one task per partition in every sink and leaves up to one file
+    per partition in every append. run_full_ingest_stream
     turns the conf on for its epochs' session clone; it is not a
     localCheckpoint because local checkpoints are never released.
     """

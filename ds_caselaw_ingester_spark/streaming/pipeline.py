@@ -44,7 +44,8 @@ def read_message_stream(spark: SparkSession, path: str, max_files: int = 1) -> D
 
 # Off by default: AQE then leaves a cached plan's output partitioning
 # alone, and every frame an epoch persists keeps
-# spark.sql.shuffle.partitions partitions however few rows it holds.
+# spark.sql.shuffle.partitions partitions however few rows it holds —
+# far more partitions than the epoch has rows on a wide session.
 CACHED_PLAN_REPARTITION = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 
@@ -100,10 +101,11 @@ def run_full_ingest_stream(
 
     Per-epoch caches: each epoch persists its parsed messages, and
     perform_ingest its analysis and asset fan-out. AQE does not change a
-    cached plan's output partitioning by default, so a 25-message epoch
-    cached under 32 shuffle partitions ran 32 tasks per sink write and
-    left up to 32 files per append sink (884 tasks per epoch at
-    local[4]). _size_epoch_caches turns
+    cached plan's output partitioning by default, so an epoch cached
+    under far more shuffle partitions than it has rows ran one task per
+    partition in every sink write and left up to one file per partition
+    in every append sink (884 tasks per 25-message epoch at local[4]
+    with 32 shuffle partitions). _size_epoch_caches turns
     ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` on for
     the query's own session clone only: the caller's session, and every
     batch plan and oracle run in it, keep their conf. localCheckpoint

@@ -87,8 +87,6 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     from ds_caselaw_ingester_spark.session import get_spark
 
@@ -105,20 +103,3 @@ def sf_dir():
 def sf_correctness_dir():
     return SF_CORRECTNESS
 
-
-class few_shuffle_partitions:
-    """Stateful streaming runs one state-store task per shuffle partition
-    per micro-batch; 32 partitions x N triggers dominates test wall time.
-    The partition count is baked into each NEW checkpoint, so lowering it
-    only affects queries started inside this context. Shared by the
-    streaming test modules."""
-
-    def __init__(self, spark, n=4):
-        self.spark, self.n = spark, str(n)
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.n)
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)

@@ -16,7 +16,6 @@ import string
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import few_shuffle_partitions as _few_shuffle_partitions
 from ds_caselaw_ingester_spark.operators.curation import (
     SEQ_COL,
     curate_corpus,
@@ -123,18 +122,17 @@ def test_streaming_end_to_end_uuid_ids(spark, tmp_path):
     src = str(tmp_path / "src")
     idx, chk = str(tmp_path / "idx"), str(tmp_path / "chunks")
     ckpt = str(tmp_path / "ckpt")  # ONE checkpoint: epoch ids continue
-    with _few_shuffle_partitions(spark):
-        for e, rows in enumerate([EPOCH0, EPOCH1, EPOCH2]):
-            _df(spark, rows).coalesce(1).write.mode("append").parquet(src)
-            stream = (
-                spark.readStream.schema("doc_id string, text string")
-                .option("maxFilesPerTrigger", 1000)
-                .parquet(src)
-            )
-            q = run_curation_stream(stream, idx, chk, ckpt, n_buckets=8, **CHUNK_KW)
-            q.awaitTermination(120)
-            q.stop()
-            assert _kept(spark, chk, e) == EXPECT_KEPT[e], f"epoch {e}"
+    for e, rows in enumerate([EPOCH0, EPOCH1, EPOCH2]):
+        _df(spark, rows).coalesce(1).write.mode("append").parquet(src)
+        stream = (
+            spark.readStream.schema("doc_id string, text string")
+            .option("maxFilesPerTrigger", 1000)
+            .parquet(src)
+        )
+        q = run_curation_stream(stream, idx, chk, ckpt, n_buckets=8, **CHUNK_KW)
+        q.awaitTermination(120)
+        q.stop()
+        assert _kept(spark, chk, e) == EXPECT_KEPT[e], f"epoch {e}"
 
 
 def test_replay_last_epoch_idempotent(spark, tmp_path):
@@ -709,19 +707,18 @@ def test_auto_n_buckets_from_projected_docs(spark, tmp_path):
     projected = 500_000_000  # a corpus the floor rule does NOT flatten
     want = curation_n_buckets(projected)
     assert want > 8  # non-vacuous: proves the rule, not the floor
-    with _few_shuffle_partitions(spark):
-        _df(spark, EPOCH0).coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema("doc_id string, text string")
-            .option("maxFilesPerTrigger", 1000)
-            .parquet(src)
-        )
-        q = run_curation_stream(
-            stream, idx, chk, ckpt, n_buckets="auto",
-            projected_docs=projected, **CHUNK_KW,
-        )
-        q.awaitTermination(120)
-        q.stop()
+    _df(spark, EPOCH0).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema("doc_id string, text string")
+        .option("maxFilesPerTrigger", 1000)
+        .parquet(src)
+    )
+    q = run_curation_stream(
+        stream, idx, chk, ckpt, n_buckets="auto",
+        projected_docs=projected, **CHUNK_KW,
+    )
+    q.awaitTermination(120)
+    q.stop()
     with open(_layout_path(idx)) as f:
         assert json.load(f)["n_buckets"] == want
     assert _kept(spark, chk, 0) == EXPECT_KEPT[0]

@@ -10,7 +10,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import few_shuffle_partitions as _few_shuffle_partitions
 from ds_caselaw_ingester_spark.streaming.semdedup_sink import (
     apply_semdedup_batch,
     run_semdedup_stream,
@@ -285,17 +284,16 @@ def test_streaming_end_to_end_matches_batch(spark, corpus, quantizer, tmp_path):
     planted.coalesce(1).write.parquet(os.path.join(src, "b1"))
     idx = str(tmp_path / "index")
     prs = str(tmp_path / "pairs")
-    with _few_shuffle_partitions(spark):
-        stream = (
-            spark.readStream.schema("vec_id long, v array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*")
-        )
-        q = run_semdedup_stream(
-            stream, idx, prs, str(tmp_path / "ckpt"), "v", "vec_id",
-            quantizer, threshold=0.9,
-        )
-        q.awaitTermination(180)
+    stream = (
+        spark.readStream.schema("vec_id long, v array<double>")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/*")
+    )
+    q = run_semdedup_stream(
+        stream, idx, prs, str(tmp_path / "ckpt"), "v", "vec_id",
+        quantizer, threshold=0.9,
+    )
+    q.awaitTermination(180)
     got = _all_pairs(spark, prs)
     full_corpus = emb.unionByName(planted)
     empty = semdedup_build_index(
