@@ -19,6 +19,7 @@ reconcile, never silent loss.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -82,7 +83,11 @@ def read_parquet_or_none(spark: SparkSession, path: str):
     corrupt footer, transient IO — propagates: silently treating it as
     "no table yet" is how a sink clobbers its own history. One
     definition shared by every swap-protocol sink (previously four
-    hand-copied try/excepts that had to stay in sync)."""
+    hand-copied try/excepts that had to stay in sync). A `kb=` bucketed
+    table is read by read_buckets, with no Spark job."""
+    buckets = bucket_dirs(local_path(path))
+    if buckets:
+        return read_buckets(spark, path, buckets)
     try:
         return spark.read.parquet(path)
     except Exception as e:  # noqa: BLE001 — narrowed by message below
@@ -90,6 +95,57 @@ def read_parquet_or_none(spark: SparkSession, path: str):
         if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
             raise
         return None
+
+
+def bucket_dirs(local: str) -> "list[str]":
+    """The `kb=<n>` partition directories of a bucketed table, by name
+    (none when `local` is not a directory)."""
+    if not os.path.isdir(local):
+        return []
+    return sorted(e for e in os.listdir(local) if e.startswith("kb=") and e[3:].isdigit())
+
+
+def read_buckets(spark: SparkSession, path: str, buckets: "list[str]") -> DataFrame:
+    """Read the `buckets` (names from bucket_dirs) of the `kb=` table at
+    `path` with zero Spark jobs. A plain ``spark.read.parquet`` of the
+    table schedules two: a parallel listing of its partition directories
+    (one task per bucket once there are more than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold``) and a
+    footer-inference job. Here the driver names the bucket directories,
+    in chunks no longer than that threshold (each chunk is listed on the
+    driver, one scan each), and the schema is one footer's
+    (catalog._footer_schema) plus ``kb int``, which is what inference
+    gives. When no footer converts, the table is read with inference
+    and filtered to `buckets`, so every error still surfaces."""
+    from pyspark.sql import types as T
+
+    from ds_caselaw_ingester_spark.sources.catalog import _footer_schema, _infer_ntz
+
+    local = local_path(path)
+    footer = next(
+        (
+            os.path.join(local, b, f)
+            for b in bucket_dirs(local)
+            for f in sorted(os.listdir(os.path.join(local, b)))
+            if f.endswith(".parquet")
+        ),
+        None,
+    )
+    schema = footer and _footer_schema(footer, _infer_ntz(spark))
+    if schema is None:
+        return spark.read.parquet(path).where(
+            F.col("kb").isin([int(b[3:]) for b in buckets])
+        )
+    schema = schema.add("kb", T.IntegerType())
+    if not buckets:
+        return spark.createDataFrame([], schema)
+    width = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    reader = spark.read.schema(schema).option("basePath", local)
+    chunks = [
+        reader.parquet(*[os.path.join(local, b) for b in buckets[i : i + width]])
+        for i in range(0, len(buckets), width)
+    ]
+    return functools.reduce(DataFrame.unionAll, chunks)
 
 
 def commit_swap(local: str, tmp: "str | None" = None, old: "str | None" = None) -> None:
@@ -315,13 +371,13 @@ def merge_touched_buckets(
     touched = sorted(
         r.kb for r in updates.select(kb.alias("kb")).distinct().collect()
     )
-    has_table = os.path.isdir(local) and any(
-        e.startswith("kb=") for e in os.listdir(local)
-    )
+    existing = set(bucket_dirs(local))
     snapshot = partition_file_snapshot(local, touched, "kb")
     current = (
-        spark.read.parquet(local).where(F.col("kb").isin(touched)).drop("kb")
-        if has_table
+        read_buckets(
+            spark, local, [f"kb={b}" for b in touched if f"kb={b}" in existing]
+        ).drop("kb")
+        if existing
         else None
     )
     tmp = local + ".tmp"

@@ -9,12 +9,14 @@ Analyze (pure, one row per message — all lookups are joins):
       -> URI cascade (J1-J3, A1)
       -> routing decisions (C1-C5, P15)
 
-Execute (effects, fixed K13 order — driver-side sequencing because Spark
-gives no cross-sink ordering guarantee, mirroring perform_ingest,
-ingester.py:540-575):
-    documents MERGE (K1/K2+K3) -> versions append -> identifiers append
-    (C5) -> properties upsert (K4/K5) -> notifications (K12) -> asset
-    fan-out (K6-K10, save_files_to_s3) -> publish asset-copies (K11).
+Execute (the K13 effects; the batch, not the effect, is the unit of
+atomicity — each effect converges under redelivery on its own, so they
+run concurrently and a failed batch is retried whole):
+    documents MERGE (K1/K2+K3) | versions append | identifiers append
+    (C5) | properties (K4/K5) | notifications (K12) | quarantine (C6) |
+    asset fan-out (K6-K10, save_files_to_s3) -> publish asset-copies (K11)
+The reference's per-message order (perform_ingest, ingester.py:540-575)
+is kept as data, in the asset rows' `effect_seq`.
 External notifications (K12) are modeled as an appended `notifications`
 effect-log table — observable, replayable, idempotent.
 
@@ -25,7 +27,11 @@ consignment_ref; execute shuffles each sink once on `uri`.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor, wait
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ds_caselaw_ingester_spark.functions.scalars import (
@@ -45,6 +51,9 @@ from ds_caselaw_ingester_spark.operators.uri_cascade import (
     resolve_uris,
 )
 from ds_caselaw_ingester_spark.sources.messages import KIND_INVALID
+
+# The independent effects perform_ingest runs at once, one thread each.
+_EFFECTS = 7
 
 
 def analyze(
@@ -191,6 +200,20 @@ def analyze(
     )
 
 
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Label every Spark job this thread submits inside the block
+    (``spark.job.description``, shown with the job and its SQL
+    execution), then restore the previous label."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
 def perform_ingest(
     analysis: DataFrame,
     sink_root: str,
@@ -199,42 +222,50 @@ def perform_ingest(
     archives: DataFrame | None = None,
     invalid: DataFrame | None = None,
 ) -> dict[str, int]:
-    """Execute phase: apply effects in the reference's fixed order (K13).
+    """Execute phase: apply every effect of the batch (K13) and return
+    the row count of each effect table (``Observation`` metrics computed
+    by the write itself, so no sink plan runs twice).
+
+    The batch, not the effect, is the unit of atomicity. The seven
+    effects write disjoint tables, none reads another's output, and each
+    converges under redelivery on its own: the documents MERGE by `uri`,
+    every append by its `batch_id` overwrite. So they run concurrently
+    and a failed batch is retried whole; the reference's per-message
+    order (ingester.py:540-575) is kept as data (`effect_seq` in the
+    asset rows), and no reader can see a write order once a batch has
+    completed or been replayed.
+
+    Execution: `analysis` is persisted and filled by one noop write on a
+    worker thread while this thread builds every sink frame (plan
+    construction takes about as long as the fill). Then a pool of seven
+    threads runs one effect each: the assets -> asset_copies chain
+    (the longest, submitted first), the documents MERGE, versions,
+    identifiers, properties, notifications and quarantine. The workers
+    inherit the caller's job group (a stopped stream cancels their jobs)
+    and label their jobs ``ingest.<table>``. Every effect is waited for
+    before `analysis` is released, also when one fails; the first
+    failure is then raised.
 
     Rows routed to error states (cascade cardinality errors, C3
-    error_existing) are quarantined, not written — per-record containment.
-    Returns row counts per effect table for observability.
+    error_existing, unknown originator) are quarantined, not written —
+    per-record containment. invalid: optional parse_messages rows with
+    kind='invalid'; analyze() drops them, so they join the routing
+    errors in the ONE quarantine write, with status 'invalid' (two
+    dynamic overwrites of one ``batch_id=<n>`` partition would each
+    replace the other's rows); counts['quarantine'] counts both.
 
-    invalid: optional parse_messages rows with kind='invalid' (no usable
-    envelope or reference). analyze() drops them, so they join the
-    routing errors in the ONE quarantine write, with status 'invalid'.
-    One write per batch matters under batch_id: two dynamic overwrites
-    of the same ``batch_id=<n>`` partition would each replace the other's
-    rows. The quarantine schema is (msg_id, message_id, status,
-    write_route) for both kinds; counts['quarantine'] counts both.
-
-    Counts come from ``Observation`` metrics attached to each sink plan —
-    the write action itself computes them, so no sink plan ever runs
-    twice (a second action per sink is O(batch) wasted work at scale).
-
-    members: optional tar member rows (consignment_ref, member_name) used
-    to gate the parser.log asset on the member actually existing
-    (reference suppress(FileNotFoundException), ingester.py:396-405).
-    Without it every consignment is assumed to carry a parser.log. When
-    the rows also carry a `content` column (explode_tar_members output),
-    asset rows additionally get `content_md5` of the member bytes the
-    reference would copy — see operators/assets.py.
-
-    archives: optional raw (consignment_ref, content) archive frame; with
-    it the tar asset row's content_md5 is the md5 of the whole tar.gz
-    (the reference stores the original archive, ingester.py:373-380).
+    members: optional exploded tar members (explode_tar_members output):
+    they gate the parser.log asset on a parser.log member existing
+    (reference suppress(FileNotFoundException), ingester.py:396-405) and
+    give the asset rows the `content_md5` of the member bytes the
+    reference copies (operators/assets.py). archives: optional raw
+    (consignment_ref, content) frame; with it the tar asset row's
+    content_md5 is the md5 of the whole tar.gz (ingester.py:373-380).
 
     batch_id: when set (the foreachBatch epoch), append sinks become
-    dynamic partition OVERWRITES of the `batch_id=<n>` partition — an
-    at-least-once redelivery of the same epoch replaces its own rows
-    instead of appending duplicates, so every sink table converges on
-    replay (the documents MERGE is already idempotent by key). This is
-    the standard Spark epoch-keyed exactly-once-ish sink pattern.
+    dynamic partition OVERWRITES of the `batch_id=<n>` partition, so a
+    redelivered epoch replaces its own rows instead of appending
+    duplicates.
 
     Caches: `analysis` (read by every sink) and the asset fan-out (read
     by two) are persisted and released before returning. A cached plan
@@ -242,58 +273,120 @@ def perform_ingest(
     ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is on,
     so a batch cached under far more shuffle partitions than it has rows
     runs one task per partition in every sink and leaves up to one file
-    per partition in every append. run_full_ingest_stream
-    turns the conf on for its epochs' session clone; it is not a
-    localCheckpoint because local checkpoints are never released.
+    per partition in every append. run_full_ingest_stream turns the conf
+    on for its epochs' session clone; it is not a localCheckpoint
+    because local checkpoints are never released.
     """
+    from pyspark import inheritable_thread_target
     from pyspark.sql import Observation
 
-    analysis = analysis.persist()
-    # A row errors out of the happy path when resolution errored, the
-    # insert-vs-update gate refused, OR the routing ladder hit an
-    # unknown originator (email_action == 'error'; the reference raises
-    # RuntimeError there, failing the message into the DLQ —
-    # ingester.py's originator dispatch). Review regression: the third
-    # clause was missing, so unknown-originator rows sailed through
-    # every sink while their 'error' action was silently dropped by the
-    # notifications filter — no quarantine row, no operator signal.
-    bad = (
-        F.col("status").startswith("error")
-        | (F.col("write_route") == "error_existing")
-        | (F.col("email_action") == "error")
+    from ds_caselaw_ingester_spark.operators.assets import asset_rows, publish_copies
+    from ds_caselaw_ingester_spark.operators.routing import (
+        document_noun,
+        personalisation_json,
     )
-    # not cached: a filter over the cached analysis (caching it measured neutral)
-    ok = analysis.where(~bad)
-    try:
-        counts: dict[str, int] = {}
 
-        def append_counted(df: DataFrame, name: str) -> None:
-            obs = Observation(f"ingest_{name}")
-            observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-            if batch_id is None:
-                observed.write.mode("append").parquet(f"{sink_root}/{name}")
-            else:
-                (
-                    observed.withColumn("batch_id", F.lit(int(batch_id)))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(f"{sink_root}/{name}")
-                )
+    spark = analysis.sparkSession
+    counts: dict[str, int] = {}
+
+    def effect(name: str, df: DataFrame, write) -> "Callable[[], None]":
+        """The action that runs write(df observed) and records its count."""
+        obs = Observation(f"ingest_{name}")
+        observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+        def run() -> None:
+            with job_description(spark, f"ingest.{name}"):
+                write(observed)
             counts[name] = obs.get["n"]
+
+        return run
+
+    def append(name: str, df: DataFrame) -> "Callable[[], None]":
+        path = f"{sink_root}/{name}"
+        if batch_id is None:
+            return effect(name, df, lambda d: d.write.mode("append").parquet(path))
+        return effect(
+            name,
+            df.withColumn("batch_id", F.lit(int(batch_id))),
+            lambda d: d.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(path),
+        )
+
+    analysis = analysis.persist()
+    pool = ThreadPoolExecutor(max_workers=_EFFECTS, thread_name_prefix="ingest")
+
+    def submit(fn: "Callable[[], None]") -> Future:
+        # the wrapper gives the worker its own copy of this thread's local
+        # properties (the stream's job group among them) and session tags;
+        # one copy shared by two workers would share their job labels too
+        return pool.submit(inheritable_thread_target(spark)(fn))
+
+    def fill() -> None:
+        with job_description(spark, "ingest.analysis"):
+            analysis.write.format("noop").mode("overwrite").save()
+
+    futures = [submit(fill)]
+    try:
+        # A row errors out of the happy path when resolution errored, the
+        # insert-vs-update gate refused, OR the routing ladder hit an
+        # unknown originator (email_action == 'error'; the reference
+        # raises RuntimeError there, failing the message into the DLQ —
+        # ingester.py's originator dispatch). Review regression: the third
+        # clause was missing, so unknown-originator rows sailed through
+        # every sink while their 'error' action was silently dropped by
+        # the notifications filter — no quarantine row, no operator signal.
+        bad = (
+            F.col("status").startswith("error")
+            | (F.col("write_route") == "error_existing")
+            | (F.col("email_action") == "error")
+        )
+        # not cached: a filter over the cached analysis (caching it measured neutral)
+        ok = analysis.where(~bad)
+
+        # K6-K10 — asset fan-out (reference save_files_to_s3), then K11 —
+        # publish: copy every asset under the published uri's prefix
+        # private -> public (docs/workflow.md:169-175); unpublish is the
+        # is_published=false flag the documents MERGE writes.
+        assets = asset_rows(
+            ok.select(
+                "uri",
+                # PRE-override ref: file operations use the Ingest.__init__
+                # snapshot in the reference (see analyze), and tar members
+                # are keyed by the archive filename stem — the post-P10 TRE
+                # ref would miss every member join and misname the tar
+                F.col("raw_consignment_ref").alias("ref"),
+                "source_filename",
+                "images",
+            ),
+            ["uri"],
+            members=members,
+            archives=archives,
+        )
+        write_assets = append("assets", assets)
+        pub_uris = ok.where(F.col("will_publish") == F.lit(True)).select("uri")
+        write_copies = append("asset_copies", publish_copies(assets, pub_uris))
+
+        def asset_chain() -> None:
+            # persisted: two writes read the fan-out, and left lazy its
+            # whole plan (md5 over every member and archive) runs twice
+            assets.persist()
+            try:
+                write_assets()
+                write_copies()
+            finally:
+                assets.unpersist()
 
         # K1/K2 — documents upsert: partition-pruned MERGE (only the
         # key-hash buckets this batch touches are read and rewritten —
         # O(touched buckets) per batch, not O(table))
-        docs_obs = Observation("ingest_documents")
         docs = ok.select(
             "uri",
             F.col("best_xml").alias("xml"),
             F.col("doc_kind").alias("doc_type"),
             F.col("will_publish").alias("is_published"),
-        ).observe(docs_obs, F.count(F.lit(1)).alias("n"))
-        upsert_parquet_table_bucketed(docs, f"{sink_root}/documents", key="uri")
-        counts["documents"] = docs_obs.get["n"]
+        )
 
         # versions append (annotation payload, P7/C4)
         versions = ok.select(
@@ -304,7 +397,6 @@ def perform_ingest(
                 "annotation_type"
             ),
         )
-        append_counted(versions, "versions")
 
         # C5 — identifiers: only types with an identifier class AND an
         # NCN. Falsy filter, not just null (reference: `if ncn:` —
@@ -319,7 +411,6 @@ def perform_ingest(
                 F.col("extracted_ncn").alias("value"),
             )
         )
-        append_counted(idents, "identifiers")
 
         # K4/K5 — properties (TDR rows only; parser-run-id iff present)
         tdr_props = ok.where(F.col("is_tdr")).selectExpr(
@@ -335,18 +426,11 @@ def perform_ingest(
         parser_props = ok.where(F.col("parser_run_id").isNotNull()).select(
             "uri", F.lit("parser-run-id").alias("name"), F.col("parser_run_id").alias("value")
         )
-        props = tdr_props.unionByName(parser_props)
-        append_counted(props, "properties")
 
         # K12 — notifications effect log, with the personalise_email
         # payload the reference sends per message (ingester.py:100-125).
         # New-judgment sends carry an extra trailing 'doctype' key
         # (ingester.py:305-306); update sends stay doctype-free.
-        from ds_caselaw_ingester_spark.operators.routing import (
-            document_noun,
-            personalisation_json,
-        )
-
         notifications = ok.where(F.col("email_action").startswith("email")).select(
             "msg_id",
             "uri",
@@ -360,59 +444,6 @@ def perform_ingest(
                 ),
             ).alias("personalisation_json"),
         )
-        append_counted(notifications, "notifications")
-
-        # K6-K10 — asset fan-out (reference save_files_to_s3, runs after
-        # metadata writes and before publish, ingester.py:560-562)
-        from ds_caselaw_ingester_spark.operators.assets import asset_rows, publish_copies
-
-        asset_src = ok.select(
-            "uri",
-            # PRE-override ref: file operations use the Ingest.__init__
-            # snapshot in the reference (see analyze), and tar members
-            # are keyed by the archive filename stem — the post-P10 TRE
-            # ref would miss every member join and misname the tar
-            F.col("raw_consignment_ref").alias("ref"),
-            "source_filename",
-            "images",
-        )
-        has_log = None
-        if members is not None:
-            logs_present = (
-                # containment, matching the reference scan (file_helpers
-                # .py:88) and sources/tar.py scan_parser_log
-                members.where(F.col("member_name").contains("parser.log"))
-                .select(F.col("consignment_ref").alias("ref"))
-                .distinct()
-                .withColumn("_has_log", F.lit(True))
-            )
-            asset_src = asset_src.join(logs_present, "ref", "left")
-            has_log = F.col("_has_log").isNotNull()
-        # persist: TWO sinks consume the fan-out (assets, then the K11
-        # asset_copies projection of it). Left lazy, the whole plan —
-        # including md5 over every tar member's bytes and the
-        # whole-archive digests — re-executes for the second write
-        # (review regression vs this function's own "no sink plan runs
-        # twice" contract).
-        assets = asset_rows(
-            asset_src,
-            ["uri"],
-            has_parser_log=has_log,
-            members=members,
-            archives=archives,
-        ).persist()
-        try:
-            append_counted(assets, "assets")
-
-            # K11 — publish: copy every asset under the published uri's
-            # prefix private -> public (docs/workflow.md:169-175);
-            # unpublish is the is_published=false flag already written
-            # in the documents MERGE
-            pub_uris = ok.where(F.col("will_publish") == F.lit(True)).select("uri")
-            copies = publish_copies(assets, pub_uris)
-            append_counted(copies, "asset_copies")
-        finally:
-            assets.unpersist()
 
         # C6 — quarantine/DLQ: routing errors and parse-invalid messages
         q = analysis.where(bad).select("msg_id", "message_id", "status", "write_route")
@@ -425,7 +456,27 @@ def perform_ingest(
                     F.lit(None).cast("string").alias("write_route"),
                 )
             )
-        append_counted(q, "quarantine")
-        return counts
+
+        effects = [
+            asset_chain,
+            effect(
+                "documents",
+                docs,
+                lambda d: upsert_parquet_table_bucketed(d, f"{sink_root}/documents", key="uri"),
+            ),
+            append("versions", versions),
+            append("identifiers", idents),
+            append("properties", tdr_props.unionByName(parser_props)),
+            append("notifications", notifications),
+            append("quarantine", q),
+        ]
+        futures[0].result()
+        futures += [submit(e) for e in effects]
     finally:
+        # no write may still be reading `analysis` when it is released
+        wait(futures)
+        pool.shutdown()
         analysis.unpersist()
+    for f in futures:
+        f.result()
+    return counts

@@ -112,13 +112,23 @@ def run_full_ingest_stream(
     would size the frames as well, but its blocks are never released,
     so a long-running stream would leak every epoch's data; persist +
     unpersist frees them when the epoch ends.
+
+    Every job of an epoch runs in the query's job group and is labelled
+    ``ingest.<step>`` (messages, analysis, then one label per sink
+    table; see perform_ingest), so a job's description says which step
+    launched it even while the sink writes overlap. The documents state
+    read launches no job (compaction.read_buckets).
     """
     from ds_caselaw_ingester_spark.operators.compaction import (
         local_path,
         read_parquet_or_none,
         recover_buckets,
     )
-    from ds_caselaw_ingester_spark.operators.ingest import analyze, perform_ingest
+    from ds_caselaw_ingester_spark.operators.ingest import (
+        analyze,
+        job_description,
+        perform_ingest,
+    )
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -141,7 +151,8 @@ def run_full_ingest_stream(
             # `msgs` at several sites, and AQE fills a still-empty cache
             # from each of them in its own job (7 more jobs per
             # 25-message epoch).
-            msgs.write.format("noop").mode("overwrite").save()
+            with job_description(spark, "ingest.messages"):
+                msgs.write.format("noop").mode("overwrite").save()
             a = analyze(
                 msgs, metadata, best_xmls, identifiers, state, environment=environment
             )

@@ -423,6 +423,55 @@ def test_asset_round_trip_from_sink_rows(pipeline_out):
         assert _md5(_reextract(ref, member_for(a))) == c.content_md5, c
 
 
+def test_assets_write_explodes_each_tar_once(pipeline_out):
+    """The parser.log gate and every content md5 come from one md5
+    index, so the executed plan of the assets write (the SQL execution
+    labelled ingest.assets, its persisted fan-out included) runs
+    explode_tar_members' MapInPandas once. The gate used to explode the
+    members a second time."""
+    spark = pipeline_out[0]
+    store = spark._jsparkSession.sharedState().statusStore()
+    it = store.executionsList().iterator()
+    ids = []
+    while it.hasNext():
+        e = it.next()
+        if e.description() == "ingest.assets":
+            ids.append(e.executionId())
+    assert ids
+    # the final plan, with every cached plan it scans (SparkPlanInfo)
+    nodes = store.planGraph(ids[-1]).allNodes().iterator()
+    names = []
+    while nodes.hasNext():
+        names.append(nodes.next().name())
+    assert names.count("MapInPandas") == 1, names
+
+
+def test_parser_log_gate_is_containment_and_md5_needs_the_exact_member(spark):
+    """The gate matches the reference scan (any member whose name
+    contains 'parser.log'), while the md5 is of exactly {ref}/parser.log,
+    the path copy_file reads: NULL when only another log member exists.
+    No such member at all drops the parser.log row."""
+    from ds_caselaw_ingester_spark.operators.assets import asset_rows
+
+    archives = spark.createDataFrame(
+        [
+            ("R1", _tar_gz({"R1/parser.log.txt": b"log", "R1/a.png": b"png"})),
+            ("R2", _tar_gz({"R2/parser.log": b"first", "R2/x.xml": b"x"})),
+            ("R3", _tar_gz({"R3/x.xml": b"x"})),
+        ],
+        "consignment_ref string, content binary",
+    )
+    src = spark.createDataFrame(
+        [("u1", "R1", None, ["a.png"]), ("u2", "R2", None, None), ("u3", "R3", None, None)],
+        "uri string, ref string, source_filename string, images array<string>",
+    )
+    rows = asset_rows(src, ["uri"], members=explode_tar_members(archives)).collect()
+    logs = {r.uri: r.content_md5 for r in rows if r.asset_kind == "parser_log"}
+    assert logs == {"u1": None, "u2": _md5(b"first")}
+    image = next(r for r in rows if r.asset_kind == "image")
+    assert image.content_md5 == _md5(b"png")
+
+
 def test_member_hash_index_last_occurrence_wins(spark):
     """Duplicate member names inside one tar: content_md5 must be the md5
     of the LAST occurrence's bytes — the same pick Python tarfile's

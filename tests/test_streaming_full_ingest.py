@@ -271,7 +271,8 @@ def test_epoch_caches_are_sized_released_and_stream_scoped(
     used to run 32 tasks per sink write and leave several files per
     append sink partition. Pins: the caller's conf is never written, every
     epoch cache is released, and each sink partition holds one file
-    (assets, a union of four fan-outs, at most four)."""
+    (assets too: the asset fan-out is one frame, no longer a union of
+    four)."""
     from ds_caselaw_ingester_spark.streaming.pipeline import CACHED_PLAN_REPARTITION
 
     src = tmp_path / "incoming"
@@ -322,9 +323,7 @@ def test_epoch_caches_are_sized_released_and_stream_scoped(
         ]
         for t in (*EFFECT_TABLES, "quarantine")
     }
-    assert all(files.values()), files  # every sink got rows this epoch
-    assert len(files["assets"]) <= 4, files
-    assert all(len(v) == 1 for t, v in files.items() if t != "assets"), files
+    assert all(len(v) == 1 for v in files.values()), files
 
 
 def test_bucket_backup_is_recovered_before_state_read(spark, tmp_path, context_tables):
@@ -354,3 +353,142 @@ def test_bucket_backup_is_recovered_before_state_read(spark, tmp_path, context_t
     # one row per uri (no .old double-read), backup reconciled
     assert len(rows) == len({r.uri for r in rows}) == 1
     assert not any(e.endswith(".old") for e in os.listdir(docs_dir))
+
+
+INGEST_LABELS = {
+    "ingest.messages",
+    "ingest.analysis",
+    "ingest.documents",
+    "ingest.quarantine",
+    *(f"ingest.{t}" for t in EFFECT_TABLES),
+}
+
+
+def _jobs_after(spark, last_id: int) -> list:
+    """(job id, group, description) of every job after `last_id`, read
+    from the status store once the listener bus has drained (no job)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    out = []
+    it = sc.statusStore().jobsList(None).iterator()
+    while it.hasNext():
+        jd = it.next()
+        if jd.jobId() > last_id:
+            group = jd.jobGroup().get() if jd.jobGroup().isDefined() else None
+            desc = jd.description().get() if jd.description().isDefined() else None
+            out.append((jd.jobId(), group, desc))
+    return out
+
+
+def test_epoch_jobs_carry_the_stream_group_and_a_sink_label(
+    spark, tmp_path, context_tables
+):
+    """The sink writes of an epoch run concurrently on worker threads.
+    Every job they launch, and every other job of the epoch, belongs to
+    the stream's job group (so stopping the query cancels it) and carries
+    an ``ingest.<step>`` description, the label per-sink job counts are
+    read from. No job goes unlabelled: the documents state read and the
+    MERGE's touched-bucket read (second epoch) launch none."""
+    from collections import Counter
+
+    src = tmp_path / "incoming"
+    src.mkdir()
+    with open(src / "f0.json", "w") as f:
+        for rec in (_record("m1", "TDR-1", "TDR"), _record("m-bad", "", "TDR")):
+            f.write(json.dumps(rec) + "\n")
+    with open(src / "f1.json", "w") as f:
+        f.write(json.dumps(_record("m4", "TDR-4", "FCL S3")) + "\n")
+    for i, name in enumerate(["f0.json", "f1.json"]):
+        os.utime(src / name, (1700000000 + i * 10, 1700000000 + i * 10))
+
+    metadata, best_xmls, identifiers = context_tables
+    last = max((j for j, _, _ in _jobs_after(spark, -1)), default=-1)
+    q = run_full_ingest_stream(
+        read_message_stream(spark, str(src), max_files=1),
+        metadata, best_xmls, identifiers,
+        str(tmp_path / "sinks"), str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(180)
+    jobs = _jobs_after(spark, last)
+    assert len([p for p in q.recentProgress if p.numInputRows > 0]) == 2
+    assert {g for _, g, _ in jobs} == {str(q.runId)}, jobs
+    labels = Counter(d for _, _, d in jobs)
+    assert set(labels) == INGEST_LABELS, labels
+
+
+def test_failed_effect_fails_the_epoch_and_restart_converges(
+    spark, tmp_path, context_tables, monkeypatch
+):
+    """One append (notifications) raises while the other sink writes are
+    running. The epoch must fail; the analysis cache (and the messages
+    cache) may be released only once no write is running, and no RDD
+    persisted during the stream survives; restarting the query on the
+    same checkpoint re-runs the epoch and leaves the same tables as a
+    clean run (every effect converges under redelivery)."""
+    import threading
+    import time
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    src = tmp_path / "incoming"
+    src.mkdir()
+    with open(src / "f0.json", "w") as f:
+        for rec in (
+            _record("m1", "TDR-1", "TDR"),
+            _record("m2", "TDR-2", "TDR"),
+            _record("m4", "TDR-4", "FCL S3"),
+            _record("m-bad", "", "TDR"),
+        ):
+            f.write(json.dumps(rec) + "\n")
+    sink_root, ckpt = str(tmp_path / "sinks"), str(tmp_path / "ckpt")
+
+    lock = threading.Lock()
+    running = [0]  # sink writes in flight
+    at_release = []  # writes in flight at each cache release off the pool
+    frame = type(spark.range(0))  # the session's DataFrame class
+    real_parquet, real_unpersist = DataFrameWriter.parquet, frame.unpersist
+
+    def parquet(writer, path, *args, **kwargs):
+        if path.endswith("/notifications"):
+            deadline = time.time() + 60
+            while running[0] == 0 and time.time() < deadline:
+                time.sleep(0.01)
+            assert running[0] > 0  # the failure lands mid-fan-out
+            raise RuntimeError("injected notifications write failure")
+        with lock:
+            running[0] += 1
+        try:
+            return real_parquet(writer, path, *args, **kwargs)
+        finally:
+            with lock:
+                running[0] -= 1
+
+    def unpersist(df, *args, **kwargs):
+        if not threading.current_thread().name.startswith("ingest"):
+            at_release.append(running[0])
+        return real_unpersist(df, *args, **kwargs)
+
+    jsc = spark.sparkContext._jsc
+    cached_before = set(jsc.getPersistentRDDs().keys())
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(frame, "unpersist", unpersist)
+    try:
+        with pytest.raises(Exception, match="injected notifications write failure"):
+            _run_stream(spark, src, sink_root, ckpt, context_tables)
+    finally:
+        monkeypatch.undo()
+    assert len(at_release) == 2 and at_release == [0, 0], at_release  # analysis, messages
+    assert set(jsc.getPersistentRDDs().keys()) <= cached_before
+    assert not os.path.exists(os.path.join(sink_root, "notifications"))
+
+    _run_stream(spark, src, sink_root, ckpt, context_tables)
+    clean_root = str(tmp_path / "clean")
+    _run_stream(spark, src, clean_root, str(tmp_path / "clean_ckpt"), context_tables)
+
+    def tables(root):
+        out = _snapshot(spark, root)
+        q = spark.read.parquet(f"{root}/quarantine")
+        out["quarantine"] = sorted(tuple(r) for r in q.collect())
+        return out
+
+    assert tables(sink_root) == tables(clean_root)

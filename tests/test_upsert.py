@@ -157,6 +157,56 @@ def test_bucketed_upsert_only_rewrites_touched_buckets(spark, tmp_path):
     assert rows2 == rows
 
 
+def test_bucketed_reads_launch_no_jobs_and_read_the_same_rows(spark, tmp_path):
+    """The documents state read (read_parquet_or_none) and the MERGE's
+    touched-bucket read (read_buckets) plan their scans without a Spark
+    job. A plain spark.read.parquet of the table launches two: a parallel
+    listing of the bucket directories (there are more of them than
+    spark.sql.sources.parallelPartitionDiscovery.threshold here) and a
+    footer-inference job. Both reads must still give its rows and schema."""
+    import uuid
+
+    from ds_caselaw_ingester_spark.operators.compaction import (
+        bucket_dirs,
+        read_buckets,
+        read_parquet_or_none,
+    )
+
+    path = str(tmp_path / "documents")
+    upsert_parquet_table_bucketed(
+        spark.createDataFrame(
+            [(f"doc/{i}", f"<j>{i}</j>", i % 3 == 0) for i in range(120)],
+            "uri string, xml string, is_published boolean",
+        ),
+        path,
+    )
+    buckets = bucket_dirs(path)
+    threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    assert len(buckets) > int(threshold)
+    some = buckets[::5]
+
+    sc = spark.sparkContext
+    group = f"bucket-reads-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "bucketed reads")
+    try:
+        whole = read_parquet_or_none(spark, path)
+        touched = read_buckets(spark, path, some)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    plain = spark.read.parquet(path)
+    assert whole.schema == touched.schema == plain.schema
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(whole) == rows(plain)
+    kbs = [int(b[len("kb="):]) for b in some]
+    assert rows(touched) == rows(plain.where(F.col("kb").isin(kbs)))
+    assert read_parquet_or_none(spark, str(tmp_path / "missing")) is None
+
+
 def test_bucketed_upsert_recovers_bucket_left_only_in_old(spark, tmp_path):
     """A crash between the per-bucket renames leaves kb=N only in
     kb=N.old. The next batch must restore the bucket BEFORE reading,
