@@ -78,22 +78,6 @@ def consignment_ref_from_key(key: Column) -> Column:
     return F.split(F.element_at(F.split(key, "/"), -1), "\\.", 2).getItem(0)
 
 
-# S6 — URL-decode of S3 keys (messages.py:96, unquote_plus). Spark 3.5+
-# has F.url_decode; the oracle-checked query uses an explicit replace
-# chain instead because DuckDB 1.0 lacks url_decode.
-def url_decode_key(key: Column) -> Column:
-    """LENIENT like the reference's unquote_plus: a stray '%' (legal in
-    S3 key names — 'report 100%.docx') passes through unchanged, where
-    a plain url_decode raises CANNOT_DECODE_URL and aborts the job
-    (verified). try_url_decode yields NULL on malformed input; fall
-    back to the plus-substituted original, which is exactly what
-    unquote_plus returns for undecodable sequences."""
-    plussed = F.replace(key, F.lit("+"), F.lit(" "))
-    return F.coalesce(
-        F.try_url_decode(F.replace(key, F.lit("+"), F.lit("%20"))), plussed
-    )
-
-
 # S11 — XML-escape for parser-log synth (file_helpers.py:85-95):
 # the three-entity escape (& first), then wrap in <error>.
 def xml_escape(col: Column) -> Column:

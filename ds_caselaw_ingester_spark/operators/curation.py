@@ -186,8 +186,8 @@ def apply_quality_gates(
         raise ValueError(f"{text_col!r} is not a column of the input frame")
 
     # (kind, payload) specs in CCNet order; payloads are plain
-    # dicts/scalars (the score_quality_mapside closure-minimal
-    # convention) — models are reconstructed inside the worker
+    # dicts/scalars (a closure-minimal convention) — models are
+    # reconstructed inside the worker
     specs: "list[tuple[str, tuple]]" = []
 
     def _clf_spec(model, threshold: float) -> "tuple[str, tuple]":

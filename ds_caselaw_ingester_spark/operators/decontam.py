@@ -90,6 +90,11 @@ def decontaminate(
 # Semantic decontamination — embedding-cosine overlap with a benchmark
 # ---------------------------------------------------------------------------
 
+# Benchmark size up to which semantic_decontam scores by broadcast pairs
+# (DuckDB-replayable); larger benchmarks take the BLAS matmul path.
+DECONTAM_PAIRS_MAX_ROWS = 256
+
+
 def semantic_decontam(
     corpus: DataFrame,
     bench: DataFrame,
@@ -99,7 +104,6 @@ def semantic_decontam(
     bench_id_col: str = "vec_id",
     bench_vec_col: str = "embedding",
     round_digits: int = 6,
-    method: str = "auto",
 ) -> DataFrame:
     """Flag corpus rows whose embedding is near-identical to any
     benchmark embedding (paraphrase-level contamination that the n-gram
@@ -116,14 +120,15 @@ def semantic_decontam(
     the corpus is not. Both paths stream the corpus exactly once with
     NO corpus shuffle wider than a groupBy on id:
 
-    - ``pairs`` (<= ~256 bench rows): broadcast nested-loop join +
-      one (id)-keyed min(struct) aggregation — all JVM expressions,
-      DuckDB-replayable (the oracle gate in tests/test_decontam.py).
-    - ``matmul``: one float64 BLAS matmul per Arrow batch against the
-      broadcast benchmark matrix (the _ivf_assign_matmul dispatch
-      lesson: plan-literal folds die past a few hundred vectors, BLAS
-      does 1000x1M in seconds). Tie-break replayed with a stable
-      argsort over the same rounded scores.
+    - pairs (<= DECONTAM_PAIRS_MAX_ROWS bench rows): broadcast
+      nested-loop join + one (id)-keyed min(struct) aggregation — all
+      JVM expressions, DuckDB-replayable (the oracle gate in
+      tests/test_decontam.py).
+    - matmul (larger benchmarks): one float64 BLAS matmul per Arrow
+      batch against the broadcast benchmark matrix (the
+      _ivf_assign_matmul dispatch lesson: plan-literal folds die past
+      a few hundred vectors, BLAS does 1000x1M in seconds). Tie-break
+      replayed with a stable argsort over the same rounded scores.
 
     Zero-norm embeddings: cosine is undefined, and the naive division
     is WORSE than undefined here — Spark 4's default ANSI mode raises
@@ -134,16 +139,14 @@ def semantic_decontam(
     skipped; a corpus doc with no defined cosine at all comes back as
     (NULL, NULL, contaminated=false) via the spine join.
     """
-    if method not in ("auto", "pairs", "matmul"):
-        raise ValueError(f"unknown method {method!r}")
     b = bench.select(
         F.col(bench_id_col).alias("_bid"), F.col(bench_vec_col).alias("_bvec")
     )
-    if method == "auto":
-        method = "pairs" if b.limit(257).count() <= 256 else "matmul"
+    cap = DECONTAM_PAIRS_MAX_ROWS
+    pairs = b.limit(cap + 1).count() <= cap
 
     c = corpus.select(F.col(id_col), F.col(vec_col).alias("_cvec"))
-    if method == "pairs":
+    if pairs:
         from ds_caselaw_ingester_spark.operators.similarity import (
             dot_product,
             l2_norm,
@@ -185,10 +188,7 @@ def semantic_decontam(
         import numpy as np
         from pyspark.sql import types as T
 
-        rows = b.collect()
-        if not rows:
-            raise ValueError("empty benchmark set")
-        rows = sorted(rows, key=lambda r: r["_bid"])
+        rows = sorted(b.collect(), key=lambda r: r["_bid"])
         bmat = np.array([list(r["_bvec"]) for r in rows], dtype=np.float64)
         bnorm = np.sqrt((bmat * bmat).sum(axis=1))
         # bench ids keep their NATIVE type (string ids crashed the old

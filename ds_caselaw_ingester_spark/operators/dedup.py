@@ -1,5 +1,5 @@
-"""Near-duplicate detection operators: MinHash+LSH, SimHash, n-gram
-Jaccard. Spark-first design notes:
+"""Near-duplicate detection operators: MinHash+LSH, n-gram Jaccard,
+exact-substring spans. Spark-first design notes:
 
 - Shingling/minhashing is explode + groupBy-min over documents — fully
   JVM-side; the only Python is plan construction.
@@ -34,9 +34,6 @@ from pyspark.sql import functions as F
 from ds_caselaw_ingester_spark.operators.textstats import tokens, word_ngrams
 
 _log = logging.getLogger(__name__)
-
-HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")
-
 
 def doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """Word n-gram shingles per document: (id, gram), MULTISET (duplicate
@@ -180,9 +177,7 @@ def estimate_jaccard(
     )
 
 
-def hot_gram_drop_stats(
-    shingles: DataFrame, id_col: str, max_doc_freq: int, _df_stats: "dict | None" = None
-) -> dict:
+def hot_gram_drop_stats(shingles: DataFrame, id_col: str, max_doc_freq: int) -> dict:
     """The no-silent-caps companion to `max_doc_freq`: {"n_grams",
     "n_pairable", "n_hot_dropped", "max_df"}. n_hot_dropped counts
     multi-document grams the cap excludes from pair generation;
@@ -193,13 +188,11 @@ def hot_gram_drop_stats(
     should check this before trusting an empty result;
     `max_doc_freq="auto"` sizes the cap from the same distribution.
 
-    All counts derive from gram_df_stats' per-df histogram — pass a
-    precomputed dict via `_df_stats` (the auto path does) and NO Spark
-    job runs here; otherwise the one vocabulary-sized aggregation is
-    executed. Either way the vocabulary shuffles at most once."""
+    All counts derive from gram_df_stats' per-df histogram: the
+    vocabulary shuffles once."""
     from ds_caselaw_ingester_spark.operators.sizing import gram_df_stats
 
-    base = _df_stats if _df_stats is not None else gram_df_stats(shingles, id_col)
+    base = gram_df_stats(shingles, id_col)
     hist = base["histogram"]
     n_multi = sum(n for df, n in hist if df >= 2)
     n_pairable = sum(n for df, n in hist if 2 <= df <= max_doc_freq)
@@ -237,8 +230,6 @@ def exact_jaccard_pairs(
     id_col: str,
     threshold: float,
     max_doc_freq: "int | str | None" = None,
-    log_drop_stats: bool = False,
-    gram_fraction: float = 1.0,
 ) -> DataFrame:
     """Exact n-gram Jaccard via an inverted index built from ONE shuffle:
     the shingles are partitioned by gram once, and that exchange feeds
@@ -262,21 +253,12 @@ def exact_jaccard_pairs(
     (one vocabulary-sized quantile job, operators/sizing.py): a cap
     pinned for a dup-free corpus drops EVERY gram once documents carry
     ~100 copies each and the query silently returns zero pairs
-    (measured, BENCH_SF1.md sf10). log_drop_stats=True additionally
-    logs how many hot grams the resolved cap excluded
-    (`hot_gram_drop_stats`) — one extra vocabulary-sized job.
+    (measured, BENCH_SF1.md sf10). `hot_gram_drop_stats` counts how
+    many hot grams a cap excludes.
     """
     from ds_caselaw_ingester_spark.operators.sizing import resolve_max_doc_freq
 
-    # gram_fraction < 1 samples the AUTO-sizing pre-pass only (see
-    # sizing.gram_df_stats) — the pair search itself always sees every
-    # gram; ignored unless max_doc_freq="auto"
-    max_doc_freq, df_stats = resolve_max_doc_freq(
-        max_doc_freq, shingles, id_col, gram_fraction=gram_fraction
-    )
-    if log_drop_stats and max_doc_freq is not None:
-        # reuses the auto path's vocabulary scan when one ran
-        hot_gram_drop_stats(shingles, id_col, max_doc_freq, _df_stats=df_stats)
+    max_doc_freq = resolve_max_doc_freq(max_doc_freq, shingles, id_col)
     # NOT persisted: both consumers (the index, the sizes) read the one
     # gram-partitioned exchange, and Spark's exchange-reuse rule dedupes it
     # in the final plan, so the corpus explode runs once. The sizes count
@@ -325,105 +307,17 @@ def exact_jaccard_pairs(
     )
 
 
-def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """16-bit SimHash from the first 16 hex digits of md5(token), token
-    multiplicity preserved: bit_p = 1 iff sum over tokens of ±1
-    (hex digit p high/low) is positive."""
-    tok = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token"))
-    hashed = tok.select(F.col(id_col), F.md5("token").alias("th"))
-    bit_aggs = [
-        F.when(
-            F.sum(
-                F.when(F.substring("th", p + 1, 1).isin(*HEX_HIGH), 1).otherwise(-1)
-            )
-            > 0,
-            F.lit("1"),
-        )
-        .otherwise(F.lit("0"))
-        .alias(f"b{p}")
-        for p in range(16)
-    ]
-    bits = hashed.groupBy(id_col).agg(*bit_aggs)
-    return bits.select(
-        F.col(id_col), F.concat(*[F.col(f"b{p}") for p in range(16)]).alias("simhash")
-    )
-
-
-def repeated_spans(
-    docs: DataFrame, id_col: str, text_col: str, n: int = 8
-) -> DataFrame:
-    """Cross-corpus duplicated-passage detection: for every position in
-    every document, take the word n-gram starting there; a position is
-    *duplicated* when its n-gram occurs ≥2 times anywhere in the corpus
-    (another document, or again in the same one). Returns per-doc
-    (doc_id, n_grams, n_dup_grams, dup_fraction) — the exact-substring
-    dedup signal (window granularity) that set-based Jaccard cannot see,
-    because Jaccard dedups shingles per document while a 200-token
-    boilerplate block repeated across 1M pages is a *positional* overlap.
-
-    Documents with fewer than `n` tokens produce no grams and no row
-    (documented; callers wanting zeros left-join back to the corpus).
-
-    Scale shape — ONE scan, THREE shuffles, bounded memory everywhere:
-      1. posexplode grams -> groupBy(gram_md5, doc) partial count: the
-         only position-row shuffle, and map-side combine collapses a
-         document's internal repeats before anything moves;
-      2. gram totals derive FROM that frame (groupBy gram_md5 over
-         distinct (gram, doc) rows — never re-reading the corpus: the
-         per-(gram, doc) frame is pinned with an eager localCheckpoint,
-         because with plain lineage the optimizer column-prunes the two
-         consumers into two SEPARATE full towers — the corpus would be
-         tokenized, exploded and hashed twice);
-      3. join per-(gram, doc) counts to totals on gram_md5 (both sides
-         derive from the one checkpointed frame), then one rollup by
-         doc. No collect_list inverted index, so a corpus-hot gram costs
-         a counter, not an unbounded array.
-    Grams shuffle as md5 hex (module convention: every hash bottoms out
-    in md5 — engine-exact, no murmur dependency).
-    """
-    if n < 2:
-        raise ValueError(f"n must be >= 2, got {n}")
-    toks = tokens(F.col(text_col))
-    grams = F.when(F.size(toks) >= n, word_ngrams(toks, n)).otherwise(
-        F.array().cast("array<string>")
-    )
-    ex = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(grams).alias("gram")
-    ).select("doc_id", F.md5(F.col("gram")).alias("g"))
-    # Eager, not lazy: per_dg has two consumers (the totals aggregation —
-    # a broadcast build job — and the join probe); lazy would let AQE
-    # race them into transiently computing the checkpoint twice.
-    per_dg = (
-        ex.groupBy("g", "doc_id").agg(F.count("*").alias("c"))
-        .localCheckpoint()
-    )
-    totals = per_dg.groupBy("g").agg(F.sum("c").alias("total"))
-    joined = per_dg.join(totals, "g")
-    return joined.groupBy("doc_id").agg(
-        F.sum("c").alias("n_grams"),
-        F.coalesce(
-            F.sum(F.when(F.col("total") >= 2, F.col("c"))), F.lit(0)
-        ).alias("n_dup_grams"),
-        F.round(
-            F.coalesce(F.sum(F.when(F.col("total") >= 2, F.col("c"))), F.lit(0))
-            .cast("double")
-            / F.sum("c"),
-            4,
-        ).alias("dup_fraction"),
-    )
-
-
 def duplicate_spans(
     docs: DataFrame, id_col: str, text_col: str, n: int = 8, min_count: int = 2
 ) -> DataFrame:
     """Maximal duplicated-passage extraction — the actionable output of
     exact-substring dedup (Lee et al. 2022, "Deduplicating Training Data
     Makes Language Models Better": remove the repeated byte ranges, keep
-    the rest). `repeated_spans` reports per-document *fractions*; this
-    operator returns the actual token ranges to cut: every position
-    whose word n-gram occurs >= `min_count` times anywhere in the corpus
-    covers tokens [i, i+n-1]; overlapping/adjacent covered intervals
-    merge into maximal spans (1-based inclusive token coordinates):
+    the rest). This operator returns the actual token ranges to cut:
+    every position whose word n-gram occurs >= `min_count` times
+    anywhere in the corpus covers tokens [i, i+n-1]; overlapping/adjacent
+    covered intervals merge into maximal spans (1-based inclusive token
+    coordinates):
 
         (doc_id, span_start, span_end, span_tokens)
 

@@ -48,6 +48,7 @@ from ds_caselaw_ingester_spark.operators.routing import (
 from ds_caselaw_ingester_spark.operators.upsert import upsert_parquet_table_bucketed
 from ds_caselaw_ingester_spark.operators.uri_cascade import (
     expected_namespace_col,
+    identifier_rows,
     resolve_uris,
 )
 from ds_caselaw_ingester_spark.sources.messages import KIND_INVALID
@@ -217,8 +218,8 @@ def job_description(spark: SparkSession, text: str):
 def perform_ingest(
     analysis: DataFrame,
     sink_root: str,
+    batch_id: int,
     members: DataFrame | None = None,
-    batch_id: int | None = None,
     archives: DataFrame | None = None,
     invalid: DataFrame | None = None,
 ) -> dict[str, int]:
@@ -262,10 +263,9 @@ def perform_ingest(
     (consignment_ref, content) frame; with it the tar asset row's
     content_md5 is the md5 of the whole tar.gz (ingester.py:373-380).
 
-    batch_id: when set (the foreachBatch epoch), append sinks become
-    dynamic partition OVERWRITES of the `batch_id=<n>` partition, so a
-    redelivered epoch replaces its own rows instead of appending
-    duplicates.
+    batch_id: the foreachBatch epoch. Append sinks are dynamic partition
+    OVERWRITES of the `batch_id=<n>` partition, so a redelivered epoch
+    replaces its own rows instead of appending duplicates.
 
     Caches: `analysis` (read by every sink) and the asset fan-out (read
     by two) are persisted and released before returning. A cached plan
@@ -303,8 +303,6 @@ def perform_ingest(
 
     def append(name: str, df: DataFrame) -> "Callable[[], None]":
         path = f"{sink_root}/{name}"
-        if batch_id is None:
-            return effect(name, df, lambda d: d.write.mode("append").parquet(path))
         return effect(
             name,
             df.withColumn("batch_id", F.lit(int(batch_id))),
@@ -398,19 +396,8 @@ def perform_ingest(
             ),
         )
 
-        # C5 — identifiers: only types with an identifier class AND an
-        # NCN. Falsy filter, not just null (reference: `if ncn:` —
-        # ingester.py:277): an empty-string cite must not write a bogus
-        # ('', ukncn) identifier row into the index J2 later probes.
-        idents = (
-            ok.where(F.col("doc_kind").isin("judgment", "pressSummary"))
-            .where(F.col("extracted_ncn").isNotNull() & (F.col("extracted_ncn") != ""))
-            .select(
-                "uri",
-                expected_namespace_col(F.col("doc_kind")).alias("namespace"),
-                F.col("extracted_ncn").alias("value"),
-            )
-        )
+        # C5 — identifiers: only types with an identifier class AND an NCN
+        idents = identifier_rows(ok)
 
         # K4/K5 — properties (TDR rows only; parser-run-id iff present)
         tdr_props = ok.where(F.col("is_tdr")).selectExpr(

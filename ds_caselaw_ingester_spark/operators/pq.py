@@ -581,7 +581,7 @@ def ivfadc_topk(
     cell is unreachable whatever the PQ precision. On the repo's
     near-uniform synthetic embeddings recall tracks the probed fraction
     (measured: 3/8 cells -> 0.56, 4/8 -> 0.71, 5/8 -> 0.80 recall@10,
-    vs 0.95 for flat pq_topk_rerank); clustered production embeddings
+    vs 0.95 for a flat ADC shortlist@100 + exact re-rank); clustered production embeddings
     concentrate neighbors, which is what lets FAISS-style deployments
     probe 1-5% of cells instead.
 
@@ -639,35 +639,6 @@ def ivfadc_topk(
         .where(F.col("rank") <= shortlist)
         .select("q_id", "c_id")
     )
-    return _exact_rerank(sl, queries, vectors, k, round_digits)
-
-
-def pq_topk_rerank(
-    queries: DataFrame,
-    encoded: DataFrame,
-    vectors: DataFrame,
-    codebook: dict,
-    k: int = 10,
-    shortlist: int = 100,
-    round_digits: int = 4,
-) -> DataFrame:
-    """The production PQ search shape: ADC shortlists `shortlist`
-    candidates per query from the m-byte codes, then ONLY the shortlist
-    rows re-join their float vectors for an exact cosine re-rank. The
-    expensive full-width scan is gone — per query the float tier is
-    touched `shortlist` times, however big the corpus — and the
-    quantization error only costs recall a true neighbor ADC ranked
-    below the shortlist (measured on the test embeddings, m=16 k=16:
-    ADC top-10 alone 0.20 recall@10; shortlist@100 + exact re-rank
-    0.95 — pinned in tests/test_pq.py).
-
-    vectors: (c_id, cv) — the float tier, e.g. the original embedding
-    table; joined by id (keyed equi-join, AQE-broadcast when the
-    shortlist is small).
-    """
-    sl = pq_topk(
-        queries, encoded, codebook, k=shortlist, round_digits=round_digits
-    ).select("q_id", "c_id")
     return _exact_rerank(sl, queries, vectors, k, round_digits)
 
 

@@ -49,7 +49,6 @@ __all__ = [
     "hashed_char_terms",
     "train_quality_classifier",
     "score_quality",
-    "score_quality_mapside",
     "make_batch_scorer",
     "py_hash_idx",
     "CHAR_NS",
@@ -323,75 +322,6 @@ def score_quality(
             ).alias("quality_p"),
         )
     )
-
-
-def score_quality_mapside(
-    docs: DataFrame,
-    model: QualityModel,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "quality_p",
-) -> DataFrame:
-    """Shuffle-FREE scoring: adds `out_col` to `docs` via one Arrow
-    mapInPandas pass running py_score per document — featurize, margin,
-    sigmoid all row-local, nothing crosses an exchange.
-
-    Why this exists alongside score_quality: the aggregation path
-    explodes hashed terms and reduces them through TWO id-keyed
-    exchanges, then joins the keep set back — per document that is
-    ~(distinct grams) exchange rows, which for the char featurizer is
-    ~70× the capped text's own bytes. As the FIRST gate of a 100 TB
-    pipeline the langid filter must be a pure map; this is the fastText
-    execution shape. Values equal score_quality's post-rounding: both
-    round the margin at 6 and the probability at 6 — py_score IS the
-    replay the engine-parity tests pin (and the curation keep-set test
-    compares this gate against py_score directly).
-
-    Trade: the per-gram work runs in Python (hashlib md5) instead of
-    codegen — ~3× the CPU of the aggregation path's scan stage — in
-    exchange for ZERO shuffle; with max_chars capping the gram count
-    the map cost is small and the exchange savings dominate (measured
-    in docs/SCALE.md). Keep score_quality for DuckDB-oracle paths and
-    exchange-cheap corpora; the curation gates use this one."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        list(docs.schema.fields) + [T.StructField(out_col, T.DoubleType(), True)]
-    )
-    cols = [f.name for f in docs.schema.fields]
-    if text_col not in cols:
-        raise ValueError(f"{text_col!r} is not a column of the input frame")
-    if out_col in cols:
-        raise ValueError(
-            f"out_col {out_col!r} already exists on the input frame; "
-            "pass a different name (the scorer appends, never replaces)"
-        )
-    # plain locals close over the worker function: dataclass instances
-    # pickle fine, but weights as a plain dict + scalars keeps the
-    # closure minimal
-    dim = model.dim
-    bias = model.bias
-    weights = dict(model.weights)
-    feature = getattr(model, "feature", "word")
-    max_chars = getattr(model, "max_chars", None)
-
-    def _score(batches):
-        # batch engine, not py_score per row: same bit-identical values
-        # (make_batch_scorer's contract) with the md5 gram hashing
-        # memoized for the whole partition
-        scorer = make_batch_scorer(
-            QualityModel(
-                dim=dim, bias=bias, weights=weights, feature=feature,
-                max_chars=max_chars,
-            )
-        )
-        for pdf in batches:
-            texts = pdf[text_col]
-            pdf = pdf.copy()
-            pdf[out_col] = [scorer(t) for t in texts]
-            yield pdf
-
-    return docs.mapInPandas(_score, schema)
 
 
 def _round_half_up(x: float, n: int) -> float:

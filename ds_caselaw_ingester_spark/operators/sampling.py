@@ -2,7 +2,7 @@
 
 Pipelines need REPRODUCIBLE samples (a rerun must pick the same rows —
 `df.sample()` is seed-stable only for identical partitioning, which no
-100 TB pipeline can promise across reruns). Both operators key the
+100 TB pipeline can promise across reruns). The operators key the
 decision off a content-derived hash, so the sample is a pure function
 of the data:
 
@@ -10,18 +10,11 @@ of the data:
   the first 13 hex digits of its key hash, as an integer, fall under
   p * 2^52. Map-side only, no shuffle, and trivially pushed into any
   scan-side filter chain.
-- stratified_hash_sample: the same test with a PER-GROUP p (small dict,
-  e.g. downsample the dominant language, keep the rare ones) — the
-  per-group rates become a CASE expression, still map-side.
-- group_topk: per-group deterministic top-k (rank by an explicit
-  ordering column, e.g. quality_score) — the "keep the k best per
-  bucket" curation step. One window over a single shuffle on the group
-  key; ties broken by the id column so reruns are stable.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # 16^13 = 2^52: the hash-fraction denominator. 13 hex digits fit a
@@ -77,49 +70,3 @@ def hash_sample(df: DataFrame, key_col: str, p: float) -> DataFrame:
     if not 0.0 <= p <= 1.0:
         raise ValueError(f"sampling fraction must be in [0, 1], got {p}")
     return df.where(hash_fraction(F.col(key_col)) < p)
-
-
-def stratified_hash_sample(
-    df: DataFrame, key_col: str, group_col: str, rates: dict[str, float]
-) -> DataFrame:
-    """Per-group deterministic sampling: group -> keep-rate. Groups not
-    in `rates` are DROPPED (an explicit allowlist beats silently keeping
-    unknown strata at full volume). The rates dict is plan-side — it
-    becomes one CASE expression, nothing is joined or shuffled."""
-    for g, p in rates.items():
-        if not 0.0 <= p <= 1.0:
-            raise ValueError(f"rate for {g!r} must be in [0, 1], got {p}")
-    frac = hash_fraction(F.col(key_col))
-    rate: Column = F.lit(-1.0)  # unknown stratum -> keep nothing
-    expr = None
-    for g, p in rates.items():
-        cond = F.col(group_col) == g
-        expr = F.when(cond, F.lit(p)) if expr is None else expr.when(cond, F.lit(p))
-    rate = expr.otherwise(rate) if expr is not None else rate
-    return df.where(frac < rate)
-
-
-def group_topk(
-    df: DataFrame,
-    group_col: str,
-    order_col: str,
-    id_col: str,
-    k: int,
-    descending: bool = True,
-) -> DataFrame:
-    """Deterministic per-group top-k: rank by order_col (ties broken by
-    id_col ascending so reruns agree), keep rank <= k. One shuffle on
-    the group key; the window ranks within each group without a global
-    sort. For heavily skewed groups at extreme scale, pre-filter with an
-    approximate per-group threshold before the exact window."""
-    ordering = (
-        [F.col(order_col).desc(), F.col(id_col).asc()]
-        if descending
-        else [F.col(order_col).asc(), F.col(id_col).asc()]
-    )
-    w = Window.partitionBy(group_col).orderBy(*ordering)
-    return (
-        df.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
-        .drop("_rk")
-    )

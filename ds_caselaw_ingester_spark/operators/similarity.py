@@ -152,107 +152,6 @@ def lsh_bucket(vec: Column, num_planes: int = 8, plane_offset: int = 0) -> Colum
     )
 
 
-def ann_lsh_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 10,
-    num_planes: "int | str" = 8,
-    round_digits: int = 4,
-    num_tables: int = 1,
-) -> DataFrame:
-    """Approximate top-k: only candidates sharing an LSH bucket with the
-    query are scored. The bucket equi-join replaces the cross join — at
-    scale this is the difference between O(n·q) and O(n·q / 2^planes).
-
-    num_tables: multi-table LSH (the standard recall lever). One table of
-    P planes shatters n candidates into 2^P buckets — high precision,
-    terrible recall (measured 0.01 recall@10 with P=8 on the 64-dim test
-    embeddings). L independent tables of fewer planes each union their
-    buckets: a true neighbor is found if it collides in ANY table
-    (miss probability q^L instead of q). Measured on the same data:
-    P=4, L=8 -> 0.75 mean recall@10 (tests/test_ann_recall.py). Table t
-    draws planes [t*P, (t+1)*P) from the same deterministic md5 family,
-    so the DuckDB oracle models every table exactly.
-
-    Cost shape at scale: candidate rows explode ×L into (table, bucket)
-    keys — the join stays keyed (never all-pairs); a pair colliding in j
-    tables is scored j times map-side and deduped on the deterministic
-    (q_id, c_id, cosine) row, which shuffles only ids+one double, not
-    vectors.
-
-    num_planes="auto": one count() of the candidate side sizes planes
-    as ceil(log2(n / target_occupancy)) — the sf10-measured rule that
-    bucket occupancy, not corpus size, bounds in-bucket pair work
-    (operators/sizing.py). Registered oracle queries pin literal plane
-    counts; auto is the production default for unseen corpora."""
-    from pyspark.sql import Window
-
-    from ds_caselaw_ingester_spark.operators.sizing import resolve_num_planes
-
-    num_planes = resolve_num_planes(num_planes, candidates)
-
-    if num_tables <= 1:
-        # single-table fast path (original shape: no explode, no dedup)
-        qb = queries.withColumn("bucket", lsh_bucket(F.col("qv"), num_planes)).withColumn(
-            "qv_norm", l2_norm(F.col("qv"))
-        )
-        cb = (
-            candidates.withColumn("bucket", lsh_bucket(F.col("cv"), num_planes))
-            .withColumn("cv_norm", l2_norm(F.col("cv")))
-            .persist()
-        )
-        scored = (
-            cb.join(F.broadcast(qb), "bucket")
-            .where(F.col("q_id") != F.col("c_id"))
-            .select(
-                "q_id",
-                "c_id",
-                F.round(
-                    dot_product(F.col("qv"), F.col("cv"))
-                    / (F.col("qv_norm") * F.col("cv_norm")),
-                    round_digits,
-                ).alias("cosine"),
-            )
-        )
-        w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-        return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-    def _table_buckets(vec: Column) -> Column:
-        return F.array(
-            *[
-                F.concat(
-                    F.lit(f"{t}:"),
-                    lsh_bucket(vec, num_planes, plane_offset=t * num_planes),
-                )
-                for t in range(num_tables)
-            ]
-        )
-
-    qb = queries.withColumn("qv_norm", l2_norm(F.col("qv"))).withColumn(
-        "bucket", F.explode(_table_buckets(F.col("qv")))
-    )
-    cb = (
-        candidates.withColumn("cv_norm", l2_norm(F.col("cv")))
-        .withColumn("bucket", F.explode(_table_buckets(F.col("cv"))))
-        .persist()
-    )
-    scored = (
-        cb.join(F.broadcast(qb), "bucket")
-        .where(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            F.round(
-                dot_product(F.col("qv"), F.col("cv")) / (F.col("qv_norm") * F.col("cv_norm")),
-                round_digits,
-            ).alias("cosine"),
-        )
-        .distinct()  # a pair collides in up to num_tables tables
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
 def lsh_neardup_pairs(
     vectors: DataFrame,
     vec_col: str,
@@ -919,16 +818,15 @@ def ivf_assign(
     nprobe: int = 1,
     round_digits: int = 4,
     keep_score: bool = False,
-    method: str = "auto",
 ) -> DataFrame:
     """Assign each vector to its `nprobe` nearest centroids (by cosine,
     rounded, centroid_id tie-break).
 
-    method: "literal" embeds the centroid matrix in the plan and folds
-    per row (the oracle-replayable path — registered queries pin it via
-    their small k); "matmul" ships the matrix once per executor and
-    scores each Arrow batch with one BLAS matmul; "auto" picks literal
-    for k <= IVF_LITERAL_MAX_K and matmul past it. The literal fold's
+    Two paths, chosen by k: up to IVF_LITERAL_MAX_K centroids the
+    centroid matrix is embedded in the plan and folded per row (the
+    oracle-replayable path — registered queries pin it via their small
+    k); past it the matrix ships once per executor and each Arrow batch
+    is scored with one BLAS matmul. The literal fold's
     cost is interpreted per-centroid work PLUS an array_sort of k
     structs per row — measured unusable at k=1000 over 196k vectors
     (did not finish in 25 min where k=220 took 91 s; BENCH_SF1.md r8),
@@ -938,7 +836,7 @@ def ivf_assign(
     tie-break (stable argsort over the ascending-id column order). Not
     DuckDB-replayable — BLAS sums in hardware order, not the fold's
     ascending-dim order; rounding makes a divergence astronomically
-    rare but the oracle-pinned configs stay on "literal".
+    rare but the oracle-pinned configs stay on the literal path.
 
     The centroid table is the IVF *coarse quantizer* — small by
     construction (k-means k, not data size) — so it is collected once and
@@ -969,11 +867,7 @@ def ivf_assign(
         )
     n_c = len(cents)
     dim = len(cents[0]["cvec"])
-    if method not in ("auto", "literal", "matmul"):
-        raise ValueError(f"method must be auto|literal|matmul, got {method!r}")
-    if method == "auto":
-        method = "literal" if n_c <= IVF_LITERAL_MAX_K else "matmul"
-    if method == "matmul":
+    if n_c > IVF_LITERAL_MAX_K:
         return _ivf_assign_matmul(
             df, vec_col, cents, nprobe, round_digits, keep_score
         )

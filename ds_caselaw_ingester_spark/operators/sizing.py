@@ -137,9 +137,7 @@ def duplication_scaled_df_cap(typical_df: int, rare_df_cap: int = RARE_DF_CAP) -
     return rare_df_cap * max(1, int(typical_df))
 
 
-def gram_df_stats(
-    shingles: DataFrame, id_col: str, gram_fraction: float = 1.0
-) -> dict:
+def gram_df_stats(shingles: DataFrame, id_col: str) -> dict:
     """ONE aggregation pass over the vocabulary-sized gram table:
     {"n_grams", "median_df", "max_df"}, where median_df is the
     INCIDENCE-WEIGHTED median document-frequency — the df of the
@@ -162,46 +160,16 @@ def gram_df_stats(
     to one row per DISTINCT df value (a tiny table) and finishes
     driver-side. The returned "histogram" [(df, n_grams_at_df), ...]
     lets consumers (hot_gram_drop_stats, the auto df-cap resolver)
-    derive their counts WITHOUT re-running the vocabulary shuffle.
-
-    gram_fraction < 1 makes the pre-pass a GRAM-HASH SAMPLE: keep only
-    grams whose md5 falls in the first `gram_fraction` of the hash
-    space (operators/sampling.py convention — deterministic, so reruns
-    and engines agree), then scale the histogram counts back by
-    1/gram_fraction. Sampling BY GRAM keeps each surviving gram's df
-    EXACT (every occurrence of a kept gram is kept), so the weighted
-    median is the median of an unbiased vocabulary subsample — the
-    right statistic at 100 TB where the full vocabulary shuffle is the
-    pre-pass's entire cost. Scaled counts are estimates; max_df is the
-    sample's max (a lower bound). The default stays exact."""
-    if not 0.0 < gram_fraction <= 1.0:
-        raise ValueError(f"gram_fraction must be in (0, 1], got {gram_fraction}")
-    src = shingles
-    if gram_fraction < 1.0:
-        from ds_caselaw_ingester_spark.operators.sampling import hash_fraction
-
-        src = shingles.where(hash_fraction(F.col("gram")) < gram_fraction)
-    scale = 1.0 / gram_fraction
+    derive their counts WITHOUT re-running the vocabulary shuffle."""
     per_df = (
-        src.groupBy("gram")
+        shingles.groupBy("gram")
         .agg(F.count_distinct(F.col(id_col)).alias("df"))
         .groupBy("df")
         .agg(F.count("*").alias("n_grams_at_df"))
         .orderBy("df")
         .collect()
     )
-    hist = [
-        (int(r["df"]), int(round(int(r["n_grams_at_df"]) * scale)))
-        for r in per_df
-    ]
-    if not hist and gram_fraction < 1.0 and shingles.take(1):
-        # no silent caps: a sample that caught NOTHING on a non-empty
-        # gram table would hand downstream auto-sizing fabricated
-        # statistics (median_df=1, n_grams=0)
-        raise ValueError(
-            f"gram_df_stats: gram_fraction={gram_fraction} sampled no grams "
-            "from a non-empty table; increase gram_fraction"
-        )
+    hist = [(int(r["df"]), int(r["n_grams_at_df"])) for r in per_df]
     n_grams = sum(n for _, n in hist)
     total_mass = sum(df * n for df, n in hist)
     median_df, cum = 1, 0
@@ -239,25 +207,21 @@ def resolve_max_doc_freq(
     max_doc_freq: "int | str | None",
     shingles: DataFrame,
     id_col: str,
-    gram_fraction: float = 1.0,
-) -> "tuple[int | None, dict | None]":
+) -> "int | None":
     """Resolve ``max_doc_freq="auto"`` from the gram-df distribution
-    (one vocabulary-sized aggregation). Returns (cap, stats) — stats is
-    the gram_df_stats dict when the scan ran, None otherwise, so a
-    caller that also wants drop diagnostics reuses the one scan instead
-    of shuffling the vocabulary twice. Logs the derived cap so a
+    (one vocabulary-sized aggregation). Logs the derived cap so a
     heavily-duplicated corpus is visible in the run record.
 
     Any string other than exactly "auto" raises here, at the call site
     — passed through, it would surface as a NumberFormatException deep
     inside the job when the Column comparison coerces it."""
     if max_doc_freq is None or isinstance(max_doc_freq, int):
-        return max_doc_freq, None
+        return max_doc_freq
     if max_doc_freq != "auto":
         raise ValueError(
             f"max_doc_freq must be an int, None, or 'auto'; got {max_doc_freq!r}"
         )
-    stats = gram_df_stats(shingles, id_col, gram_fraction=gram_fraction)
+    stats = gram_df_stats(shingles, id_col)
     cap = duplication_scaled_df_cap(stats["median_df"])
     log.info(
         "jaccard df-cap auto-sizing: %d grams, median df=%d, max df=%d "
@@ -268,7 +232,7 @@ def resolve_max_doc_freq(
         cap,
         max(1, stats["median_df"]),
     )
-    return cap, stats
+    return cap
 
 
 def bucket_occupancy_stats(keys: DataFrame, bucket_col: str = "bucket") -> dict:

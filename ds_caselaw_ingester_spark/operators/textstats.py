@@ -69,15 +69,6 @@ def token_count_of(toks: Column, word: str) -> Column:
     return F.size(F.filter(toks, lambda t: t == F.lit(word))).cast("bigint")
 
 
-def stopword_count(text: Column, word: str) -> Column:
-    """Occurrences of `word` as a whitespace token. Counted by token
-    equality, NOT by replacing ' word ' in the padded text — the
-    replace trick is non-overlapping, so adjacent occurrences sharing a
-    delimiter space undercount (verified: 'the the end' counted 1, not
-    2), skewing every quality signal built on these counts."""
-    return token_count_of(tokens(text), word)
-
-
 def alpha_ratio(text: Column) -> Column:
     """Share of alphabetic characters — doubles divided in a fixed
     order; NULL for empty text (an unguarded division throws

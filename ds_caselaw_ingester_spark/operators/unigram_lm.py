@@ -181,36 +181,6 @@ def unigram_fit(
     return logp
 
 
-def unigram_segment(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    logp: "dict[str, float]",
-    max_piece_len: int = 6,
-) -> DataFrame:
-    """Apply a trained model: (id, token, pieces array<string>). Same
-    Arrow path as training; the vocab rides in the closure."""
-    from ds_caselaw_ingester_spark.operators.textstats import tokens
-
-    tok = docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")
-    )
-    model = dict(logp)
-
-    def seg(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["pieces"] = [
-                viterbi_segment(t, model, max_piece_len) for t in pdf["token"]
-            ]
-            yield pdf
-
-    schema = f"{id_col} {dict(tok.dtypes)[id_col]}, token string, pieces array<string>"
-    return tok.mapInPandas(seg, schema)
-
-
 def unigram_perplexity(
     docs: DataFrame,
     id_col: str,
@@ -239,7 +209,7 @@ def unigram_perplexity(
     floor (min log-prob), the weakest in-model belief.
 
     Scale shape: one Arrow-batched pass over the exploded tokens (the
-    vocab rides the closure exactly like unigram_segment), one
+    vocab rides the closure), one
     groupBy(id) of three integer partial aggregates, and a left join
     back to the doc spine — the corpus never shuffles text.
     """

@@ -61,6 +61,25 @@ def expected_namespace_col(doc_kind: F.Column) -> F.Column:
     )
 
 
+def identifier_rows(docs: DataFrame, *carry: str) -> DataFrame:
+    """C5 — set_document_identifiers (ingester.py:263-284): one typed
+    (uri, namespace, value) row per document whose type has an identifier
+    class and whose NCN is truthy. Falsy, not just null (reference:
+    `if ncn:` — ingester.py:277): an empty-string cite must not write a
+    bogus ('', ukncn) identifier row into the index J2 later probes.
+    `docs` carries uri, doc_kind and extracted_ncn; `carry` columns lead
+    the output."""
+    ncn = F.col("extracted_ncn")
+    return docs.where(
+        F.col("doc_kind").isin("judgment", "pressSummary") & ncn.isNotNull() & (ncn != "")
+    ).select(
+        *carry,
+        "uri",
+        expected_namespace_col(F.col("doc_kind")).alias("namespace"),
+        ncn.alias("value"),
+    )
+
+
 def resolve_uris(messages: DataFrame, identifiers: DataFrame) -> DataFrame:
     """Run the J1->J2->J3 cascade set-at-a-time.
 

@@ -1,7 +1,8 @@
 """Near-dup dedup queries (SURVEY.md §2.9): MinHash+LSH, exact n-gram
-Jaccard, SimHash — over a corpus with *planted* near-duplicates so the
-pair-producing branches are verifiable (a purely random corpus would
-yield zero pairs and an empty — vacuous — correctness check).
+Jaccard, exact-substring spans — over a corpus with *planted*
+near-duplicates so the pair-producing branches are verifiable (a purely
+random corpus would yield zero pairs and an empty — vacuous —
+correctness check).
 
 Planted corpus: every doc_id % 10 == 0 document reappears as
 doc_id + 1000000000 with its last token dropped (a true near-duplicate).
@@ -19,7 +20,6 @@ from ds_caselaw_ingester_spark.operators.dedup import (
     lsh_bands,
     lsh_candidate_pairs,
     minhash_signatures,
-    simhash16,
 )
 from ds_caselaw_ingester_spark.operators.textstats import tokens
 from ds_caselaw_ingester_spark.plans.registry import register
@@ -270,11 +270,7 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# neardup_quality_keepers — keep the BEST member per cluster (registered
-# round 10 — see rotation note on the decorator; previously unregistered:
-# the cluster computation is registry-covered by neardup_clusters; the
-# keeper-rule variant keeps a full end-to-end oracle gate here and in
-# tests/test_oracle_parity.py so the composition cannot silently rot)
+# neardup_quality_keepers — keep the BEST member per cluster
 # ---------------------------------------------------------------------------
 
 # Same pipeline as neardup_clusters up to the components, then the keeper
@@ -350,10 +346,8 @@ FROM scored s JOIN keep k USING (component)
     "(shingle → minhash → LSH bands → connected components → arg-max-"
     "score keeper, operators/cluster.py quality_keep_one): each "
     "component keeps its longest member, ties → min id — the dedup "
-    "decision a production corpus actually ships. Round-10 rotation: "
-    "took hybrid_search's slot (its single-query RRF shape is a strict "
-    "subset of the registered hybrid_search_multi; it keeps an "
-    "identical pytest DuckDB gate). Scale shape: the keeper is ONE "
+    "decision a production corpus actually ships. Scale shape: the "
+    "keeper is ONE "
     "min(struct(-score, id)) aggregation — the shuffle carries combined "
     "partials, never raw membership (partial_min pinned in "
     "tests/test_plan_shapes.py).",
@@ -378,151 +372,12 @@ def q_neardup_quality_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# simhash_signatures — 16-bit SimHash per document
-# ---------------------------------------------------------------------------
-
-SIMHASH_ORACLE = f"""
-WITH {CORPUS_SQL},
-tok AS (
-  SELECT doc_id, unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS token FROM corpus
-),
-hashed AS (SELECT doc_id, md5(token) AS th FROM tok)
-SELECT doc_id,
-  {" || ".join(
-    "(CASE WHEN sum(CASE WHEN substr(th, %d, 1) IN ('8','9','a','b','c','d','e','f') "
-    "THEN 1 ELSE -1 END) > 0 THEN '1' ELSE '0' END)" % (p + 1)
-    for p in range(16)
-  )} AS simhash
-FROM hashed
-GROUP BY doc_id
-"""
-
-
-# UNREGISTERED (round 7): gave up its registry slot to pq_adc_topk
-# (queries_similarity.py) under the driver's 50-row cap. The SimHash
-# shape (explode + groupBy with conditional sums) stays registry-covered
-# by the minhash/ngram dedup family, and this exact query keeps an
-# identical pytest DuckDB gate in tests/test_oracle_parity.py.
-def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_oracle_safe(spark)
-    corpus = _corpus(spark, sf_dir)
-    return simhash16(corpus, "doc_id", "text")
-
-
-# ---------------------------------------------------------------------------
-# repeated_spans — cross-corpus duplicated-passage fractions (UNREGISTERED:
-# pytest-gated in tests/test_oracle_parity.py with the full DuckDB oracle;
-# the 50-row driver registry is at its cap)
+# strip_spans — maximal duplicated-passage ranges (duplicate_spans), then
+# the token-range cut, so one registry row gates the full detect -> cut
+# exact-substring pipeline end-to-end.
 # ---------------------------------------------------------------------------
 
 _SPAN_N = 8
-
-REPEATED_SPANS_ORACLE = f"""
-WITH {{corpus}},
-tok AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-  FROM corpus
-),
-pos AS (
-  SELECT doc_id, toks,
-         unnest(range(1, greatest(len(toks) - {_SPAN_N - 2}, 1))) AS i
-  FROM tok
-),
-ex AS (
-  SELECT doc_id,
-         md5(array_to_string(list_slice(toks, i, i + {_SPAN_N - 1}), ' ')) AS g
-  FROM pos
-),
-per_dg AS (SELECT g, doc_id, count(*) AS c FROM ex GROUP BY g, doc_id),
-totals AS (SELECT g, sum(c) AS total FROM per_dg GROUP BY g)
-SELECT doc_id,
-       sum(c) AS n_grams,
-       coalesce(sum(CASE WHEN total >= 2 THEN c END), 0) AS n_dup_grams,
-       round(coalesce(sum(CASE WHEN total >= 2 THEN c END), 0) / sum(c), 4)
-         AS dup_fraction
-FROM per_dg JOIN totals USING (g)
-GROUP BY doc_id
-""".format(corpus=CORPUS_SQL)
-
-
-def q_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Positional duplicated-passage fractions over the planted-dup
-    corpus: every planted near-copy shares nearly all its 8-token
-    windows with its original, so both sides of each planted pair must
-    report dup_fraction ≈ 1 while untouched documents stay near 0."""
-    ensure_oracle_safe(spark)
-    from ds_caselaw_ingester_spark.operators.dedup import repeated_spans
-
-    return repeated_spans(_corpus(spark, sf_dir), "doc_id", "text", n=_SPAN_N)
-
-
-# ---------------------------------------------------------------------------
-# duplicate_spans — maximal duplicated-passage ranges (UNREGISTERED:
-# pytest-gated in tests/test_oracle_parity.py with the full DuckDB
-# oracle; the 50-row driver registry is at its cap). The gaps-and-islands
-# extension of repeated_spans: instead of per-doc fractions it emits the
-# token ranges an exact-substring dedup pass would actually cut.
-# ---------------------------------------------------------------------------
-
-DUPLICATE_SPANS_ORACLE = f"""
-WITH {{corpus}},
-tok AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-  FROM corpus
-),
-pos AS (
-  SELECT doc_id, toks,
-         unnest(range(1, greatest(len(toks) - {_SPAN_N - 2}, 1))) AS i
-  FROM tok
-),
-ex AS (
-  SELECT doc_id, i,
-         md5(array_to_string(list_slice(toks, i, i + {_SPAN_N - 1}), ' ')) AS g
-  FROM pos
-),
-totals AS (SELECT g, count(*) AS total FROM ex GROUP BY g),
-dup AS (
-  SELECT doc_id, i FROM ex JOIN totals USING (g) WHERE total >= 2
-),
-isl AS (
-  SELECT doc_id, i,
-         sum(CASE WHEN prev IS NULL OR i - prev > {_SPAN_N} THEN 1 ELSE 0 END)
-           OVER (PARTITION BY doc_id ORDER BY i ROWS UNBOUNDED PRECEDING)
-           AS island
-  FROM (
-    SELECT doc_id, i,
-           lag(i) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-    FROM dup
-  )
-)
-SELECT doc_id,
-       min(i) AS span_start,
-       max(i) + {_SPAN_N - 1} AS span_end,
-       max(i) + {_SPAN_N - 1} - min(i) + 1 AS span_tokens
-FROM isl
-GROUP BY doc_id, island
-""".format(corpus=CORPUS_SQL)
-
-
-def q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximal duplicated token ranges over the planted-dup corpus: each
-    planted near-copy and its original must each report one span
-    covering (nearly) the whole document, while clean documents emit
-    either nothing or short boilerplate-collision spans."""
-    ensure_oracle_safe(spark)
-    from ds_caselaw_ingester_spark.operators.dedup import duplicate_spans
-
-    return duplicate_spans(_corpus(spark, sf_dir), "doc_id", "text", n=_SPAN_N)
-
-
-# ---------------------------------------------------------------------------
-# strip_spans — the cut applied (REGISTERED round 7, slot freed by
-# customers_without_orders). Composes duplicate_spans with the
-# token-range cut, so one driver row gates the full detect -> cut
-# exact-substring pipeline end-to-end.
-# ---------------------------------------------------------------------------
 
 STRIP_SPANS_ORACLE = f"""
 WITH {{corpus}},

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ds_caselaw_ingester_spark.operators.uri_cascade import (
     expected_namespace_col,
+    identifier_rows,
     resolve_uris,
 )
 from ds_caselaw_ingester_spark.operators.routing import document_noun
@@ -180,6 +181,7 @@ SELECT msg_id, uri,
 FROM msgs
 WHERE doc_kind IN ('judgment', 'pressSummary')  -- parserLog has no identifier class
   AND extracted_ncn IS NOT NULL                 -- no NCN -> no-op
+  AND extracted_ncn <> ''                       -- falsy NCN -> no-op
 """
 
 
@@ -207,18 +209,8 @@ def q_identifier_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("uri"),
         F.col("ncn_candidate").alias("extracted_ncn"),
     )
-    return (
-        msgs.where(F.col("doc_kind").isin("judgment", "pressSummary"))
-        .where(F.col("extracted_ncn").isNotNull())
-        .select(
-            "msg_id",
-            "uri",
-            F.when(F.col("doc_kind") == "judgment", F.lit("ukncn"))
-            .otherwise(F.lit("pressSummaryNcn"))
-            .alias("namespace"),
-            F.col("extracted_ncn").alias("value"),
-        )
-    )
+    # the ingest's own C5 rule (uri_cascade.identifier_rows), not a copy
+    return identifier_rows(msgs, "msg_id")
 
 
 # ---------------------------------------------------------------------------

@@ -305,44 +305,6 @@ def q_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# customers_without_orders — anti join (NOT EXISTS)
-# ---------------------------------------------------------------------------
-
-ANTI_JOIN_ORACLE = """
-SELECT c_custkey, c_name, c_mktsegment
-FROM customer c
-WHERE NOT EXISTS (
-  SELECT 1 FROM orders o
-  WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT'
-)
-"""
-
-
-# NOT @register-ed (round 7): the J4 coverage stays registered via
-# existence_guard and the equi-join shape via revenue_by_nation /
-# part_setops / fuzzy_part_match, so this slot was freed for
-# strip_spans (the exact-substring detect -> cut pipeline,
-# queries_dedup.py) under the driver's 50-row cap. The anti-join
-# physical shape keeps its identical oracle gate in pytest
-# (tests/test_oracle_parity.py::test_unregistered_anti_join_matches_oracle).
-#
-# Left-anti join (NOT EXISTS): customers with no URGENT order. Catalyst
-# plans a hash anti-join on the key with the priority filter pushed to
-# the orders scan — no fan-out, the probe side streams through once.
-# The set-difference counterpart of the J4 existence guard
-# (ingester.py:240).
-def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_oracle_safe(spark)
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
-    o = (
-        table(spark, sf_dir, "orders")
-        .where(F.col("o_orderpriority") == "1-URGENT")
-        .select(F.col("o_custkey").alias("c_custkey"))
-    )
-    return c.join(o, "c_custkey", "left_anti")
-
-
-# ---------------------------------------------------------------------------
 # part_setops — INTERSECT / EXCEPT over part-key sets
 # ---------------------------------------------------------------------------
 
@@ -371,72 +333,6 @@ def q_part_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     discounted = li.where(F.col("l_discount") > 0.05).select("l_partkey")
     taxfree = li.where(F.col("l_tax") == 0.0).select("l_partkey")
     return returned.intersect(discounted).subtract(taxfree)
-
-
-# ---------------------------------------------------------------------------
-# top_orders_global — global sort + limit (top-k)
-# ---------------------------------------------------------------------------
-
-TOPK_ORACLE = """
-SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS total
-FROM orders
-ORDER BY o_totalprice DESC, o_orderkey ASC
-LIMIT 100
-"""
-
-
-# NOT @register-ed since round 8: the slot went to repetition_profile
-# under the driver's 50-row cap. The TakeOrderedAndProject shape stays
-# registry-covered by every per-query top-k tail (bm25_search,
-# pq_adc_topk, hybrid_search) and this query keeps its identical DuckDB
-# oracle gate in pytest
-# (tests/test_oracle_parity.py::test_unregistered_top_orders_matches_oracle)
-# plus its plan-shape assertion (test_plan_shapes.py).
-def q_top_orders_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_oracle_safe(spark)
-    o = table(spark, sf_dir, "orders")
-    return (
-        o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-        .limit(100)
-        .select("o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("total"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# distinct_supplier_stats — distinct aggregation alongside plain aggs
-# ---------------------------------------------------------------------------
-
-DISTINCT_AGG_ORACLE = """
-SELECT l_returnflag,
-       count(DISTINCT l_suppkey) AS n_suppliers,
-       count(DISTINCT l_partkey) AS n_parts,
-       count(*) AS n_rows,
-       round(sum(l_quantity), 2) AS sum_qty
-FROM lineitem
-GROUP BY l_returnflag
-"""
-
-
-# NOT @register-ed: the mixed-distinct aggregation shape stays covered
-# in the registry by events_distinct_users_salted (exact distinct, plus
-# the skew-safe variant) and three further ext:agg rows, so this slot
-# was freed for decontam_flags under the driver's 50-row cap. The query
-# keeps its oracle gate in pytest
-# (tests/test_oracle_parity.py::test_unregistered_distinct_agg_matches_oracle).
-#
-# Mixed distinct + plain aggregation: Catalyst rewrites multiple
-# COUNT(DISTINCT) via Expand (one stream per distinct column) with
-# partial aggregation on (group, value) before the final merge —
-# distinct state never concentrates on one node.
-def q_distinct_supplier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_oracle_safe(spark)
-    li = table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.countDistinct("l_suppkey").alias("n_suppliers"),
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.count("*").alias("n_rows"),
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-    )
 
 
 # ---------------------------------------------------------------------------

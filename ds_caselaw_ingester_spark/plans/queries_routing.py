@@ -340,14 +340,3 @@ def q_batch_failures(spark: SparkSession, sf_dir: str) -> DataFrame:
             ",",
         ).alias("failed_ids"),
     )
-
-
-# ---------------------------------------------------------------------------
-# (former slot) parser_log_synth — S11 XML-escape + <error> wrap
-# ---------------------------------------------------------------------------
-# Consolidated into tar_best_xml_select (queries_tar.py, survey_ops S10-S12/
-# P11), whose oracle exercises the same parser_log_xml scalar including the
-# missing-log default — freeing a registry slot for neardup_clusters /
-# ann_ivf_trained_topk under the driver's 50-row cap. The scalar itself
-# (functions/scalars.py, create_parser_log_xml parity) remains pytest- and
-# oracle-covered.

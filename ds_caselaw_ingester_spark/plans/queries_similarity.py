@@ -6,11 +6,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ds_caselaw_ingester_spark.operators.multimodal import extract_asset_metadata
-from ds_caselaw_ingester_spark.operators.similarity import (
-    ann_lsh_topk,
-    cosine_topk,
-)
 from ds_caselaw_ingester_spark.plans.registry import register
 from ds_caselaw_ingester_spark.session import ensure_oracle_safe
 from ds_caselaw_ingester_spark.sources.catalog import spread, table
@@ -23,135 +18,8 @@ from ds_caselaw_ingester_spark.sources.catalog import spread, table
 # the fold-heavy map work; multi-split production inputs don't need it.
 
 # ---------------------------------------------------------------------------
-# cosine_topk — brute-force exact ANN baseline
-# ---------------------------------------------------------------------------
-
-COSINE_TOPK_ORACLE = """
-WITH q AS (
-  SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 8
-),
-c AS (
-  SELECT vec_id AS c_id, embedding::DOUBLE[] AS cv FROM embeddings
-),
-scored AS (
-  SELECT q_id, c_id,
-         round(list_dot_product(qv, cv)
-               / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))),
-               4) AS cosine
-  FROM c CROSS JOIN q
-  WHERE q_id <> c_id
-)
-SELECT * FROM (
-  SELECT q_id, c_id, cosine,
-         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id ASC) AS rank
-  FROM scored
-) WHERE rank <= 10
-"""
-
-
-# UNREGISTERED (round 7): gave up its registry slot to bm25_search
-# (queries_text.py) under the driver's 50-row cap. The exact rounded-
-# cosine scoring + rank tail stays registry-covered by
-# ann_ivf_trained_topk and hybrid_search_multi's dense shortlist (same
-# scoring expression over their candidate sets), and this brute-force
-# baseline keeps an identical pytest DuckDB gate in
-# tests/test_oracle_parity.py.
-def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_oracle_safe(spark)
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    candidates = spread(
-        emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv")), "c_id"
-    )
-    return cosine_topk(queries, candidates, k=10, round_digits=4)
-
-
-# ---------------------------------------------------------------------------
-# ann_lsh_topk — LSH-bucketed approximate ANN (the scale path)
-# ---------------------------------------------------------------------------
-
-# Multi-table LSH: 8 tables × 4 planes, table t = planes [4t, 4t+4) of
-# the same md5-derived family. One 8-plane table measured 0.01 recall@10
-# on these embeddings (256 buckets over few hundred vectors ≈ 2
-# candidates per query); 8×4 measured 0.75 (tests/test_ann_recall.py).
-ANN_LSH_ORACLE = """
-WITH base AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-),
-planes AS (SELECT unnest(generate_series(0, 31)) AS p),
-dims AS (SELECT unnest(generate_series(1, 64)) AS i),
-proj AS (
-  SELECT b.vec_id, pl.p,
-         sum(list_extract(b.v, d.i)
-             * (CASE WHEN substr(md5(CAST(pl.p AS VARCHAR) || '_' || CAST(d.i AS VARCHAR)), 1, 1)
-                      IN ('8','9','a','b','c','d','e','f') THEN 1.0 ELSE -1.0 END)) AS s
-  FROM base b CROSS JOIN planes pl CROSS JOIN dims d
-  GROUP BY b.vec_id, pl.p
-),
-buckets AS (
-  SELECT vec_id, CAST(p // 4 AS INTEGER) AS tbl,
-         string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
-  FROM proj GROUP BY vec_id, CAST(p // 4 AS INTEGER)
-),
-q AS (
-  SELECT b.vec_id AS q_id, base.v AS qv, b.tbl, b.bucket
-  FROM buckets b JOIN base USING (vec_id) WHERE vec_id < 8
-),
-c AS (
-  SELECT b.vec_id AS c_id, base.v AS cv, b.tbl, b.bucket
-  FROM buckets b JOIN base USING (vec_id)
-),
-scored AS (
-  SELECT DISTINCT q.q_id, c.c_id,
-         round(list_dot_product(q.qv, c.cv)
-               / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.cv, c.cv))),
-               4) AS cosine
-  FROM c JOIN q ON c.tbl = q.tbl AND c.bucket = q.bucket
-  WHERE q.q_id <> c.c_id
-)
-SELECT * FROM (
-  SELECT q_id, c_id, cosine,
-         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id ASC) AS rank
-  FROM scored
-) WHERE rank <= 10
-"""
-
-
-# UNREGISTERED (round 9): gave up its registry slot to
-# hybrid_search_multi (queries_text.py) under the driver's 50-row cap.
-# The multi-table LSH bucketing shape stays registry-covered by
-# embedding_neardup (same hyperplane-bucket machinery) and the IVF/PQ
-# rows' bucketed-candidate joins; this query keeps an identical pytest
-# DuckDB gate in tests/test_oracle_parity.py plus its recall
-# measurement (tests/test_ann_recall.py).
-def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-10 via MULTI-TABLE LSH: 8 independent tables of
-    4 md5-derived hyperplanes each; a candidate is scored if it shares
-    any table's bucket with the query (miss probability q^8 per true
-    neighbor vs q for one table — measured recall@10 0.75 vs 0.01).
-    Equi-join on (table, bucket) keys only; never all-pairs."""
-    ensure_oracle_safe(spark)
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    candidates = spread(
-        emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv")), "c_id"
-    )
-    return ann_lsh_topk(
-        queries, candidates, k=10, num_planes=4, round_digits=4, num_tables=8
-    )
-
-
-# ---------------------------------------------------------------------------
 # ann_ivf_trained_topk — IVF ANN over a TRAINED (Lloyd's k-means) quantizer
 # ---------------------------------------------------------------------------
-# (The former `embedding_buckets` occupancy-histogram slot was folded into
-# ann_lsh_topk — its bucket computation is a strict subset of that query's
-# plan — to keep the registry at the driver's cap while giving the trained
-# quantizer a first-class correctness row.)
 
 _KMEANS_ITERS = 3
 _KMEANS_K = 16
@@ -302,105 +170,6 @@ def q_ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# multimodal_meta — binary column + mapInPandas decode-stub plumbing
-# ---------------------------------------------------------------------------
-
-MULTIMODAL_ORACLE = """
-SELECT doc_id,
-       CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-       CAST(ascii(substr(text, 1, 1)) AS INTEGER) AS first_byte,
-       CAST(octet_length(encode(text)) % 997 AS INTEGER) AS fake_width,
-       CAST((octet_length(encode(text)) * 31 + ascii(substr(text, 1, 1))) % 997 AS INTEGER) AS fake_height,
-       CAST(ascii(substr(text, 1, 1)) % 4 + 1 AS INTEGER) AS fake_channels
-FROM documents
-"""
-
-
-# NOT @register-ed since round 6: its slot went to semantic_dedup (the
-# registry is capped at 50). Coverage keys stay green — ext:multimodal
-# via frame_sample (same mapInPandas decode-stub plumbing), K6/K9 via
-# asset_fanout — and the identical oracle check continues in
-# tests/test_oracle_parity.py::test_unregistered_multimodal_meta.
-def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_oracle_safe(spark)
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(F.col("text"), "UTF-8").alias("content")
-    )
-    return extract_asset_metadata(d, "doc_id", "content")
-
-
-# ---------------------------------------------------------------------------
-# ann_ivf_topk — IVF (inverted-file) ANN: centroid cells + nprobe search
-# ---------------------------------------------------------------------------
-
-ANN_IVF_ORACLE = """
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cvec
-  FROM embeddings WHERE vec_id >= 8 AND vec_id < 24
-),
-c AS (SELECT vec_id AS c_id, embedding::DOUBLE[] AS cv FROM embeddings),
-q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 8),
-cand_assign AS (
-  SELECT c_id, cv, centroid_id FROM (
-    SELECT c_id, cv, centroid_id,
-           row_number() OVER (
-             PARTITION BY c_id
-             ORDER BY round(list_dot_product(cv, cvec)
-                            / (sqrt(list_dot_product(cv, cv)) * sqrt(list_dot_product(cvec, cvec))), 4) DESC,
-                      centroid_id ASC) AS crn
-    FROM c CROSS JOIN cent
-  ) WHERE crn <= 1
-),
-q_assign AS (
-  SELECT q_id, qv, centroid_id FROM (
-    SELECT q_id, qv, centroid_id,
-           row_number() OVER (
-             PARTITION BY q_id
-             ORDER BY round(list_dot_product(qv, cvec)
-                            / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cvec, cvec))), 4) DESC,
-                      centroid_id ASC) AS crn
-    FROM q CROSS JOIN cent
-  ) WHERE crn <= 2
-),
-scored AS (
-  SELECT q_id, c_id,
-         round(list_dot_product(qv, cv)
-               / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))), 4) AS cosine
-  FROM cand_assign ca JOIN q_assign qa USING (centroid_id)
-  WHERE q_id <> c_id
-)
-SELECT * FROM (
-  SELECT q_id, c_id, cosine,
-         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id ASC) AS rank
-  FROM scored
-) WHERE rank <= 10
-"""
-
-
-# NOT @register-ed: the fixed-centroid IVF probe is a strict subset of
-# ann_ivf_trained_topk's computation (same ivf_topk operator, same
-# ext:ann-ivf coverage — the trained variant only swaps where the
-# centroids come from), so its registry slot was freed for pii_scrub
-# under the driver's 50-row cap. It stays oracle-checked in pytest
-# (tests/test_oracle_parity.py::test_unregistered_ivf_matches_oracle).
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ds_caselaw_ingester_spark.operators.similarity import ivf_topk
-
-    ensure_oracle_safe(spark)
-    emb = table(spark, sf_dir, "embeddings")
-    centroids = emb.where((F.col("vec_id") >= 8) & (F.col("vec_id") < 24)).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
-    )
-    queries = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    candidates = spread(
-        emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv")), "c_id"
-    )
-    return ivf_topk(queries, candidates, centroids, k=10, nprobe=2)
-
-
-# ---------------------------------------------------------------------------
 # embedding_neardup — embedding-cosine near-duplicate pairs (LSH-bucketed)
 # ---------------------------------------------------------------------------
 
@@ -448,8 +217,8 @@ SELECT vec_a, vec_b, cosine FROM pairs WHERE cosine >= 0.9
 @register(
     "embedding_neardup",
     EMB_NEARDUP_ORACLE,
-    doc="Embedding-cosine near-dup detection, LSH-bucketed (the dedup "
-    "counterpart of ann_lsh_topk): planted near-duplicates (first "
+    doc="Embedding-cosine near-dup detection, LSH-bucketed: planted "
+    "near-duplicates (first "
     "component zeroed, cosine ~0.99) must pair with their source inside "
     "a shared hyperplane bucket; in-bucket pairs below the 0.9 cosine "
     "threshold are dropped. At 100 TB the bucket equi-join bounds pair "
@@ -503,12 +272,6 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # centroids co-located only 40/50 planted pairs (boundary misses —
 # SemDeDup's known hazard); the trained cells co-locate 48/50 (measured
 # at sf0.001, pinned below the 0.9 bar in tests/test_oracle_parity.py).
-# Registered in multimodal_meta's former slot (registry at the driver's
-# 50-row cap): that query's coverage keys stay green elsewhere —
-# ext:multimodal via frame_sample, K6/K9 via asset_fanout — while its
-# oracle check continues pytest-gated below.
-
-
 def semantic_dedup_oracle() -> str:
     ctes, prev = _kmeans_train_ctes()
     asg = _COSINE_SQL.format(v="b.v", c="ct.cvec")
@@ -645,76 +408,8 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# audio_windows — multimodal audio windowing fan-out (UNREGISTERED:
-# pytest-gated in tests/test_oracle_parity.py; the 50-row registry is at
-# its cap and the mapInPandas fan-out shape is registry-covered by
-# frame_sample — this adds the overlapping-window arithmetic an
-# ASR/featurizer chunker needs, over the same stand-in bytes)
-# ---------------------------------------------------------------------------
-
-_AW_RATE = 16_000
-_AW_BPS = 2
-_AW_WIN_MS = 4   # 64 samples
-_AW_HOP_MS = 2   # 32 samples — overlapping windows + tail exercise
-
-_AW_WIN = _AW_RATE * _AW_WIN_MS // 1000
-_AW_HOP = _AW_RATE * _AW_HOP_MS // 1000
-
-AUDIO_WINDOWS_ORACLE = f"""
-WITH d AS (
-  SELECT doc_id, text, length(text) // {_AW_BPS} AS total
-  FROM documents WHERE length(text) >= {_AW_BPS}
-),
-w AS (
-  SELECT doc_id, text, total, CAST(j AS INTEGER) AS window_idx,
-         CAST(j * {_AW_HOP} AS BIGINT) AS start_sample,
-         CAST(LEAST({_AW_WIN}, total - j * {_AW_HOP}) AS INTEGER) AS n_samples
-  FROM d, unnest(generate_series(0, CAST((total - 1) // {_AW_HOP} AS BIGINT))) AS t(j)
-  WHERE j * {_AW_HOP} < total
-)
-SELECT w.doc_id, w.window_idx, w.start_sample, w.n_samples,
-       w.start_sample * 1000.0 / {_AW_RATE} AS start_ms,
-       CAST(sum(ascii(substr(w.text,
-                CAST(w.start_sample * {_AW_BPS} + k.k + 1 AS INTEGER), 1)))
-            % 32768 AS INTEGER) AS fake_rms
-FROM w, unnest(generate_series(0,
-       CAST(LEAST(64, w.n_samples * {_AW_BPS}) - 1 AS BIGINT))) AS k(k)
-GROUP BY w.doc_id, w.window_idx, w.start_sample, w.n_samples
-"""
-
-
-def q_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping fixed-duration windows over an opaque 'audio' binary
-    (operators/multimodal.py audio_windows): exact sample/byte
-    arithmetic, one output row per window, Arrow-batched fan-out.
-    Documents' text bytes stand in for PCM, per the module's stub
-    doctrine."""
-    from ds_caselaw_ingester_spark.operators.multimodal import audio_windows
-
-    ensure_oracle_safe(spark)
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(F.col("text"), "UTF-8").alias("content")
-    )
-    return audio_windows(
-        d,
-        "doc_id",
-        "content",
-        sample_rate=_AW_RATE,
-        bytes_per_sample=_AW_BPS,
-        window_ms=_AW_WIN_MS,
-        hop_ms=_AW_HOP_MS,
-    )
-
-
-# ---------------------------------------------------------------------------
 # pq_adc_topk — product quantization: trained codebooks, ADC top-k
 # ---------------------------------------------------------------------------
-# (Round 7 rotation: simhash_signatures gave up its registry slot — its
-# explode+groupBy shape stays covered by the minhash/ngram family and an
-# identical pytest gate — so the PQ/ADC stack (operators/pq.py) gets a
-# first-class driver correctness row. The oracle replays the JOINT
-# per-subspace Lloyd fit, the encode argmax, and the ADC scoring in
-# DuckDB under the repo's rounding conventions.)
 
 _PQ_M = 8        # subspaces (64-dim embeddings -> subdim 8)
 _PQ_K = 16       # codewords per subspace

@@ -2,16 +2,8 @@
 S7-S12, P11).
 
 `tar_pipeline` (queries_etl.py) exercises the binary path end-to-end but
-is rows-only (a tar.gz is not SQL-expressible). These queries close the
-oracle gap by splitting the path at its decision points:
-
-- ``tar_member_listing`` — build REAL tar.gz archives from a
-  deterministic rule, write them to local files, read them back through
-  ``read_archives`` (S7: binaryFile + filename-stem ref) and explode via
-  the genuine tarfile ``mapInPandas`` (S8). The DuckDB oracle predicts
-  the exact member listing (names, tar ordinals, md5 of content) from
-  the same construction rule — so the whole binary round-trip, including
-  the skip-non-file semantics and ordinal numbering, is value-checked.
+is rows-only (a tar.gz is not SQL-expressible). This query closes the
+oracle gap at the path's decision points:
 
 - ``tar_best_xml_select`` — the selection/fallback logic
   (file_helpers.py:76-115, ingester.py:215-223) over member rows
@@ -22,9 +14,8 @@ oracle gap by splitting the path at its decision points:
   the chosen XML (P11). Validity is *constructed* (doc_id mod rules),
   so the oracle predicts what the real XML parser must decide.
 
-At 100 TB: both plans are the production shapes — binaryFile streams
-archive bytes executor-side (driver never touches content), the explode
-is Arrow-batched, and the scans are windows/joins, not Python loops.
+At 100 TB: the plan is the production shape — the scans are
+windows/joins, not Python loops.
 """
 
 from __future__ import annotations
@@ -34,108 +25,6 @@ from pyspark.sql import functions as F
 
 from ds_caselaw_ingester_spark.plans.registry import register
 from ds_caselaw_ingester_spark.sources.catalog import table
-
-# ---------------------------------------------------------------------------
-# tar_member_listing — S7 (fetch) + S8 (member explode), value-checked
-# ---------------------------------------------------------------------------
-
-TAR_MEMBER_LISTING_ORACLE = """
-WITH r AS (SELECT i, printf('TDR-2031-%04d', i) AS ref FROM range(24) t(i))
-SELECT ref AS consignment_ref,
-       ref || '/TRE-' || ref || '-metadata.json' AS member_name,
-       CAST(1 AS BIGINT) AS member_index,
-       md5('{"i": ' || i || '}') AS content_md5,
-       CAST(length('{"i": ' || i || '}') AS BIGINT) AS content_len
-FROM r
-UNION ALL
-SELECT ref, ref || '/doc-' || i || '.xml', 2,
-       md5('<judgment><p>' || i || '</p></judgment>'),
-       length('<judgment><p>' || i || '</p></judgment>')
-FROM r
-UNION ALL
-SELECT ref, ref || '/parser.log', 3, md5('line ' || i), length('line ' || i)
-FROM r WHERE i % 4 <> 0
-"""
-
-
-# NOT @register-ed: S7/S8 coverage is a strict subset of tar_pipeline's
-# (S7-S12 composite over the same Arrow tarfile scan), so this slot was
-# freed for doc_chunks under the driver's 50-row cap. The round-trip
-# stays oracle-checked in pytest
-# (tests/test_oracle_parity.py::test_unregistered_tar_listing_matches_oracle).
-#
-# Genuine tar.gz round-trip: deterministic archives written to local
-# files, fetched via binaryFile with filename-stem consignment refs
-# (S7, messages.py:59-69,83-93), exploded member-by-member with tar
-# ordinals via the Arrow mapInPandas tarfile scan (S8,
-# file_helpers.py:24-29). A leading directory member pins the
-# skip-non-file + ordinal-still-counts semantics. The oracle predicts
-# every (name, ordinal, md5(content)) row from the construction rule.
-_TAR_LISTING_FIXTURE_DIR: "str | None" = None
-
-
-def q_tar_member_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import io
-    import os
-    import tarfile
-    import tempfile
-
-    from ds_caselaw_ingester_spark.sources.tar import explode_tar_members, read_archives
-
-    # ONE fixture dir per process, reused: mkdtemp per invocation leaked
-    # a 24-file directory every pytest/bench run (the archives must
-    # outlive the returned lazy frame, so a with-block can't own them)
-    global _TAR_LISTING_FIXTURE_DIR
-    try:
-        tmp = _TAR_LISTING_FIXTURE_DIR
-        if tmp is not None and os.path.isdir(tmp):
-            archives = read_archives(spark, tmp).coalesce(2)
-            members = explode_tar_members(archives)
-            return _tar_listing_projection(members)
-    except NameError:
-        pass
-    tmp = tempfile.mkdtemp(prefix="spark_tar_listing_")
-    _TAR_LISTING_FIXTURE_DIR = tmp
-    for i in range(24):
-        ref = f"TDR-2031-{i:04d}"
-        buf = io.BytesIO()
-        with tarfile.open(fileobj=buf, mode="w:gz") as tf:
-            # directory member at ordinal 0: skipped by the scan, but the
-            # reference's enumerate still counts it (tar order preserved)
-            d = tarfile.TarInfo(ref)
-            d.type = tarfile.DIRTYPE
-            d.mtime = 0
-            tf.addfile(d)
-
-            def add(name: str, data: bytes) -> None:
-                info = tarfile.TarInfo(name)
-                info.size = len(data)
-                info.mtime = 0
-                tf.addfile(info, io.BytesIO(data))
-
-            add(f"{ref}/TRE-{ref}-metadata.json", b'{"i": %d}' % i)
-            add(f"{ref}/doc-{i}.xml", b"<judgment><p>%d</p></judgment>" % i)
-            if i % 4 != 0:
-                add(f"{ref}/parser.log", b"line %d" % i)
-        with open(os.path.join(tmp, f"{ref}.tar.gz"), "wb") as fh:
-            fh.write(buf.getvalue())
-
-    # 24 small fixtures -> a couple of explode tasks, not 32 one-row ones;
-    # at real scale archive counts dwarf cores and the coalesce is a no-op.
-    archives = read_archives(spark, tmp).coalesce(2)
-    members = explode_tar_members(archives)
-    return _tar_listing_projection(members)
-
-
-def _tar_listing_projection(members: DataFrame) -> DataFrame:
-    return members.select(
-        "consignment_ref",
-        "member_name",
-        F.col("member_index").cast("long").alias("member_index"),
-        F.md5(F.col("content")).alias("content_md5"),
-        F.length(F.col("content")).cast("long").alias("content_len"),
-    )
-
 
 # ---------------------------------------------------------------------------
 # tar_best_xml_select — S10 + S11 + S12 + P11, value-checked

@@ -1,6 +1,7 @@
 """Text-analysis queries over `documents` — the LLM-data-pipeline surface
 (SURVEY.md §2.9): exact dedup, token statistics, language-ID heuristic +
-quality scoring, k-min fingerprint sketches.
+quality scoring, PII scrub, decontamination, retrieval, repetition
+signals.
 """
 
 from __future__ import annotations
@@ -176,8 +177,8 @@ def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         digits.alias("n_digit_tokens"),
         other.alias("n_other_tokens"),
         F.length("text").cast("long").alias("n_chars_exact"),
-        # count over the SAME tok array the other stats use — a
-        # per-word stopword_count(text, ...) re-derives the split
+        # count over the SAME tok array the other stats use — tokenizing
+        # per word re-derives the split
         token_count_of(tok, "the").alias("cnt_the"),
         token_count_of(tok, "data").alias("cnt_data"),
         token_count_of(tok, "query").alias("cnt_query"),
@@ -230,67 +231,6 @@ def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .alias("dup_3gram_ratio"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# doc_fingerprint — k-min sketch over word 4-grams (rolling-hash analog)
-# ---------------------------------------------------------------------------
-
-FINGERPRINT_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS tok FROM documents
-),
-grams AS (
-  SELECT DISTINCT doc_id,
-         md5(array_to_string(list_slice(tok, i, i + 3), ' ')) AS h
-  FROM toks, unnest(generate_series(1, len(tok) - 3)) AS t(i)
-  WHERE len(tok) >= 4
-),
-ranked AS (
-  SELECT doc_id, h,
-         row_number() OVER (PARTITION BY doc_id ORDER BY h) AS rn
-  FROM grams
-)
-SELECT doc_id,
-       string_agg(h, ',' ORDER BY h) AS fingerprint,
-       count(*) AS sketch_size
-FROM ranked WHERE rn <= 5
-GROUP BY doc_id
-"""
-
-
-# UNREGISTERED (round 8): gave up its registry slot to hybrid_search
-# under the driver's 50-row cap. The md5-fingerprint shape is coverage-
-# redundant with dedup_exact + the minhash family (VERDICT r7 #3); this
-# k-min sketch baseline keeps an identical pytest DuckDB gate in
-# tests/test_oracle_parity.py.
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ds_caselaw_ingester_spark.sources.catalog import spread
-
-    ensure_oracle_safe(spark)
-    d = spread(table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
-    tok = tokens(F.col("text"))
-    grams = d.select("doc_id", F.explode(word_ngrams(tok, 4)).alias("gram")).select(
-        "doc_id", F.md5("gram").alias("h")
-    )
-    # ONE aggregation instead of distinct + per-doc sort window + re-agg
-    # (three exchanges and a full sort of every gram hash): collect_set
-    # dedups map-side, the shuffle carries partial SETS (smaller than the
-    # raw gram rows the old distinct shuffled), and the k smallest fall out
-    # of one array_sort per doc. State is the doc's distinct-gram set — at
-    # 100 TB a pathological mega-doc bounds it; the escape hatch is a
-    # pre-bucketed two-level min (groupBy(doc_id, h-prefix) first), which
-    # keeps this plan's single-exchange shape per level.
-    mins = F.slice(F.array_sort(F.collect_set("h")), 1, 5)
-    return (
-        grams.groupBy("doc_id")
-        .agg(mins.alias("mins"))
-        .select(
-            "doc_id",
-            F.array_join(F.col("mins"), ",").alias("fingerprint"),
-            F.size(F.col("mins")).cast("long").alias("sketch_size"),
-        )
     )
 
 
@@ -448,13 +388,6 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ds_caselaw_ingester_spark.operators.scrub import (  # noqa: E402
-    EMAIL_RE as _EMAIL_RE,
-    IP_RE as _IP_RE,
-    PHONE_RE as _PHONE_RE,
-)
-
-
 @register(
     "pii_scrub",
     PII_ORACLE,
@@ -517,10 +450,6 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # bm25_search — lexical top-k retrieval
 # ---------------------------------------------------------------------------
-# (Round 7 rotation: cosine_topk gave up its registry slot — the exact
-# rounded-cosine scoring tail stays registered via the LSH/IVF ANN rows
-# and the brute baseline keeps its pytest gate — so lexical retrieval
-# gets a first-class driver correctness row.)
 
 _BM25_TERMS = ["spark", "window", "merge"]
 _BM25_K = 25
@@ -562,105 +491,8 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# hybrid_search — BM25 + dense shortlists fused with reciprocal-rank fusion
-# ---------------------------------------------------------------------------
-# (Round 8 rotation: doc_fingerprint gave up its registry slot — its
-# md5-fingerprint shape is coverage-redundant with dedup_exact + the
-# minhash family, and it keeps an identical pytest gate — so the hybrid
-# retrieval composition a RAG/data-curation user actually runs gets a
-# first-class driver correctness row.)
-
-_DENSE_QUERY_ID = 0
-_DENSE_K = 25
-_HYBRID_K = 15
-_RRF_K = 60
-
-
-def hybrid_search_oracle() -> str:
-    from ds_caselaw_ingester_spark.operators.search import bm25_oracle_sql
-
-    bm25 = bm25_oracle_sql(_BM25_TERMS, _BM25_K)
-    return f"""
-WITH lex AS (SELECT doc_id, rank FROM ({bm25}) lex_inner),
-qv AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {_DENSE_QUERY_ID}),
-dense AS (
-  SELECT c_id AS doc_id, rank FROM (
-    SELECT c.vec_id AS c_id,
-           row_number() OVER (
-             ORDER BY round(list_dot_product(q.qv, c.cv)
-               / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.cv, c.cv))),
-               4) DESC, c.vec_id ASC) AS rank
-    FROM (SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings
-          WHERE vec_id <> {_DENSE_QUERY_ID}) c
-    CROSS JOIN qv q
-  ) WHERE rank <= {_DENSE_K}
-),
-unioned AS (
-  SELECT doc_id, rank FROM lex UNION ALL SELECT doc_id, rank FROM dense
-),
-fused AS (
-  SELECT doc_id,
-         sum(CAST(round((1.0 / ({_RRF_K}.0 + rank)) * 1000000.0, 0) AS BIGINT))
-           / 1000000.0 AS rrf_score
-  FROM unioned GROUP BY doc_id
-)
-SELECT doc_id, rrf_score,
-       row_number() OVER (ORDER BY rrf_score DESC, doc_id ASC) AS rank
-FROM fused
-ORDER BY rrf_score DESC, doc_id ASC
-LIMIT {_HYBRID_K}
-"""
-
-
-# UNREGISTERED (round 10): gave up its registry slot to
-# neardup_quality_keepers (queries_dedup.py) under the driver's 50-row
-# cap. The single-query BM25+dense RRF shape is a strict subset of the
-# REGISTERED hybrid_search_multi (one corpus pass, per-query shortlists,
-# identical rrf_fuse semantics), and this exact query keeps an identical
-# pytest DuckDB gate in tests/test_oracle_parity.py
-# (test_unregistered_hybrid_search_matches_oracle). ext:search-hybrid
-# coverage rides hybrid_search_multi.
-def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 + dense cosine shortlists → RRF top-15 (operators/search.py
-    rrf_fuse; single-query lists, so query_col=None with its duplicate-
-    rank validation active)."""
-    ensure_oracle_safe(spark)
-    from ds_caselaw_ingester_spark.operators.search import bm25_topk, rrf_fuse
-    from ds_caselaw_ingester_spark.operators.similarity import cosine_topk
-    from ds_caselaw_ingester_spark.sources.catalog import spread
-
-    d = spread(
-        table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
-    )
-    lex = bm25_topk(d, "doc_id", "text", _BM25_TERMS, _BM25_K).select(
-        "doc_id", "rank"
-    )
-    emb = table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") == _DENSE_QUERY_ID).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    c = spread(
-        emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv")),
-        "c_id",
-    )
-    dense = cosine_topk(q, c, k=_DENSE_K, round_digits=4).select(
-        F.col("c_id").alias("doc_id"), "rank"
-    )
-    return rrf_fuse(
-        [lex, dense], id_col="doc_id", k=_HYBRID_K, rrf_k=_RRF_K
-    )
-
-
-# ---------------------------------------------------------------------------
 # hybrid_search_multi — per-QUERY hybrid retrieval over a queries TABLE
 # ---------------------------------------------------------------------------
-# (Round 9 rotation: ann_lsh_topk gave up its registry slot — its
-# LSH-bucketing shape stays registry-covered by embedding_neardup's
-# hyperplane buckets and the IVF/PQ ANN rows' bucketed-candidate joins,
-# and it keeps an identical pytest DuckDB gate plus its recall
-# measurement — so the multi-query retrieval composition a production
-# stack actually runs (a queries TABLE through one corpus pass, fused
-# per query) gets a first-class driver correctness row.)
 
 _MQ_QUERIES = [  # (q_id, terms) — distinct in-vocabulary bags per query
     (0, ["spark", "window", "merge"]),
@@ -669,6 +501,7 @@ _MQ_QUERIES = [  # (q_id, terms) — distinct in-vocabulary bags per query
 ]
 _MQ_SHORTLIST_K = 15
 _MQ_K = 10
+_RRF_K = 60
 
 
 def hybrid_search_multi_oracle() -> str:
@@ -786,64 +619,6 @@ def q_hybrid_search_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_MQ_K,
         rrf_k=_RRF_K,
     )
-
-
-# ---------------------------------------------------------------------------
-# corpus_mixture — weighted multi-source blend with upsampling epochs
-# (UNREGISTERED: pytest-gated in tests/test_oracle_parity.py; the 50-row
-# driver registry is at its cap)
-# ---------------------------------------------------------------------------
-
-_MIX_WEIGHTS = {"src0": 0.5, "src1": 0.3, "src2": 0.2}
-_MIX_BUDGET = 30000
-
-
-def q_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 3-source blend at a fixed token (char) budget:
-    the heavier-weighted sources up-sample (full epochs + hash-gated
-    fractional remainder), the lighter one down-samples — one scan,
-    map-side explode, driver collect bounded by |sources|."""
-    ensure_oracle_safe(spark)
-    from ds_caselaw_ingester_spark.operators.mixture import mix_corpus
-
-    d = table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    return mix_corpus(
-        d, "doc_id", "source", "n_chars", _MIX_WEIGHTS, _MIX_BUDGET
-    ).select("doc_id", "source", "epoch")
-
-
-def corpus_mixture_oracle() -> str:
-    # Normalized weights are Python-computed literals (full repr
-    # precision) so the SQL rate arithmetic replays the operator's
-    # driver-side float sequence op-for-op: (budget * nw) / total.
-    wsum = sum(_MIX_WEIGHTS.values())
-    vals = ", ".join(
-        f"('{s}', {w / wsum!r})" for s, w in _MIX_WEIGHTS.items()
-    )
-    srcs = ", ".join(f"'{s}'" for s in _MIX_WEIGHTS)
-    return f"""
-WITH totals AS (
-  SELECT source, sum(n_chars) AS tok FROM documents
-  WHERE source IN ({srcs}) GROUP BY source
-),
-rates AS (
-  SELECT source, ({_MIX_BUDGET} * nw) / tok AS rate
-  FROM totals JOIN (VALUES {vals}) AS w(source, nw) USING (source)
-),
-ex AS (
-  -- bounded cross join instead of lateral unnest (DuckDB 1.x binder
-  -- bug with unnest aliases referenced downstream); 102 covers the
-  -- operator's max_rate=100 cap plus the fractional epoch
-  SELECT d.doc_id, d.source, rate, t.epoch
-  FROM documents d JOIN rates USING (source)
-  CROSS JOIN range(0, 102) AS t(epoch)
-  WHERE t.epoch <= CAST(floor(rate) AS BIGINT)
-)
-SELECT doc_id, source, epoch FROM ex
-WHERE epoch < CAST(floor(rate) AS BIGINT)
-   OR ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#' || CAST(epoch AS VARCHAR)), 1, 13))::BIGINT
-      / 16.0^13 < rate - floor(rate)
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -1020,16 +795,3 @@ def q_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drop the carried text column: the appended profile fields follow it,
     # leaving exactly the relational form's (doc_id, profile...) shape.
     return repetition_profile_mapside(d).drop("text")
-
-
-def q_repetition_profile_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The relational explode/groupBy/window form of repetition_profile —
-    the cross-engine definition record, pytest-gated against the same
-    oracle (test_oracle_parity.py) since the registry row moved to the
-    mapside engine in round 11."""
-    ensure_oracle_safe(spark)
-    from ds_caselaw_ingester_spark.operators.repetition import repetition_profile
-    from ds_caselaw_ingester_spark.sources.catalog import spread
-
-    d = spread(table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
-    return repetition_profile(d)

@@ -3,8 +3,7 @@
 The reference downloads a consignment `.tar.gz` and scans members
 imperatively (file_helpers.py:24-115). Spark-first model:
 
-- archives arrive as a binary column (``spark.read.format("binaryFile")``
-  or any (ref, content) DataFrame);
+- archives arrive as any (consignment_ref, content) DataFrame;
 - ``explode_tar_members`` runs tarfile over each archive inside
   ``mapInPandas`` — Arrow-batched, executor-local, bytes never touch the
   driver — yielding one row per member with its tar ordinal;
@@ -27,20 +26,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-def read_archives(spark, path: str, glob: str = "*.tar.gz") -> DataFrame:
-    """S7 (messages.py:59-69): fetch consignment archives as a binary
-    DataFrame. ``binaryFile`` streams each object straight to an executor
-    (driver never touches bytes); consignment_ref is derived from the
-    filename stem exactly like the S3-key path (messages.py:83-93)."""
-    df = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select(F.col("path"), F.col("content"))
-    )
-    stem = F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\.", 2).getItem(0)
-    return df.select(stem.alias("consignment_ref"), "content")
 
 
 TAR_MEMBER_SCHEMA = T.StructType(

@@ -32,9 +32,7 @@ superseded ids. The second set exists because replace semantics must
 remove a re-ingested id's OLD row even when its new embedding landed
 in a different cell; finding those rows is a column-pruned (id,
 partition-dir) probe of the index — it reads only the id column, never
-the vectors that dominate the index's bytes. Streams whose ids are
-guaranteed novel (append-only ingest) pass check_replaced=False and
-skip that probe entirely, making the whole batch increment-sized.
+the vectors that dominate the index's bytes.
 
 The quantizer is FIXED for the life of the stream: cells are only
 comparable under one centroid set. Retraining it is an offline event —
@@ -272,7 +270,6 @@ def apply_semdedup_batch(
     centroids: "list | str",
     threshold: float = 0.95,
     epoch_id: int = 0,
-    check_replaced: bool = True,
     bootstrap_growth: float = BOOTSTRAP_GROWTH,
     growth_check_every: int = 16,
     pca_model: "dict | None" = None,
@@ -290,13 +287,6 @@ def apply_semdedup_batch(
     the index's life; once the corpus outgrows it, the sink WARNs (see
     _warn_if_under_partitioned) and the remedy is an offline retrain +
     rebuild.
-
-    check_replaced=False skips the superseded-id probe (the only
-    corpus-wide read in the batch, column-pruned to the id column) —
-    valid ONLY when the stream never re-delivers an id with a DIFFERENT
-    embedding. Checkpoint replay of an identical batch stays correct
-    either way: the same vector lands in the same cell, so its old row
-    is superseded inside a touched cell.
 
     pca_model: optional pca_fit output — the batch is PROJECTED
     map-side before assignment, probing, and indexing, so the stored
@@ -385,19 +375,18 @@ def apply_semdedup_batch(
         # partition-column round-trip: dirs come back as ints; the
         # assignment emits longs — align before joins/unions
         index = index.withColumn(CELL_COL, F.col(CELL_COL).cast("long"))
-        if check_replaced:
-            # replace semantics across cells: a re-ingested id whose new
-            # embedding moved cells leaves a stale row in its OLD cell —
-            # find those cells with a column-pruned id probe (reads the
-            # id column only; cell is free from the directory name)
-            batch_ids = new_assigned.select(id_col).distinct()
-            stale = (
-                index.join(F.broadcast(batch_ids), id_col, "semi")
-                .select(CELL_COL)
-                .distinct()
-                .collect()
-            )
-            touched |= {r[CELL_COL] for r in stale}
+        # replace semantics across cells: a re-ingested id whose new
+        # embedding moved cells leaves a stale row in its OLD cell —
+        # find those cells with a column-pruned id probe (reads the id
+        # column only; cell is free from the directory name)
+        batch_ids = new_assigned.select(id_col).distinct()
+        stale = (
+            index.join(F.broadcast(batch_ids), id_col, "semi")
+            .select(CELL_COL)
+            .distinct()
+            .collect()
+        )
+        touched |= {r[CELL_COL] for r in stale}
         current = index.where(F.col(CELL_COL).isin(sorted(touched)))
     else:
         # in-batch pairs still matter on bootstrap: probe against an
@@ -571,7 +560,6 @@ def run_semdedup_stream(
     id_col: str,
     centroids: "list | str",
     threshold: float = 0.95,
-    check_replaced: bool = True,
     pca_model: "dict | None" = None,
 ):
     """Materialize the embedding stream as a maintained cell index plus
@@ -588,7 +576,6 @@ def run_semdedup_stream(
             centroids,
             threshold=threshold,
             epoch_id=epoch_id,
-            check_replaced=check_replaced,
             pca_model=pca_model,
         )
 

@@ -131,26 +131,3 @@ def sink_estimate(
             )
         p = stored["p"]
     return hll_estimate(spark.read.parquet(path), group_cols, p)
-
-
-def run_hll_sink(
-    stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    group_cols: Sequence[str],
-    value_col: str,
-    p: int = 8,
-):
-    """Wire the rollup onto a streaming DataFrame. Returns the
-    StreamingQuery. The maintained table at `path` converges to the
-    batch hll_registers over everything streamed, whatever the
-    micro-batch boundaries (pinned in tests)."""
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        apply_sketch_batch(batch, path, group_cols, value_col, p)
-
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )

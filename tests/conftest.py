@@ -28,7 +28,6 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 # file.py::test_name (parametrized ids share the base name) — measured
 # >= 8 s each in the round-15 --durations=0 sweep
 _SLOW_TESTS = {
-    "test_ann_recall.py::test_multi_table_lsh_recall",
     "test_curation_pipeline.py::test_curation_dsir_final_selection",
     "test_curation_pipeline.py::test_curation_quality_model_gate",
     "test_curation_pipeline.py::test_curate_increment_equals_recompute_on_new_ids",

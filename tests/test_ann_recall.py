@@ -1,12 +1,6 @@
 """Retrieval QUALITY of the approximate similarity operators, measured
 against exact brute-force cosine — correctness-vs-oracle only proves the
 bucketing is implemented as specified, not that it finds neighbors.
-
-Measured on the sf0.001 embeddings (64-dim, few hundred vectors):
-single-table LSH with 8 planes -> 0.01 mean recall@10 (256 buckets over
-~500 vectors starves every query's candidate set); multi-table 8×4 ->
-0.75. These tests pin the multi-table win so a parameter regression
-can't silently return to the starved configuration.
 """
 
 from __future__ import annotations
@@ -14,8 +8,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ds_caselaw_ingester_spark.operators import similarity
 from ds_caselaw_ingester_spark.operators.similarity import (
-    ann_lsh_topk,
     cosine_topk,
     ivf_topk,
 )
@@ -47,18 +41,6 @@ def _topsets(df) -> dict[int, set[int]]:
 def _mean_recall(exact: dict, approx: dict) -> float:
     vals = [len(exact[q] & approx.get(q, set())) / len(exact[q]) for q in exact]
     return sum(vals) / len(vals)
-
-
-def test_multi_table_lsh_recall(frames):
-    qs, cs, _ = frames
-    exact = _topsets(cosine_topk(qs, cs, k=K))
-    multi = _topsets(ann_lsh_topk(qs, cs, k=K, num_planes=4, num_tables=8))
-    single = _topsets(ann_lsh_topk(qs, cs, k=K, num_planes=8))
-    r_multi, r_single = _mean_recall(exact, multi), _mean_recall(exact, single)
-    # the registered configuration must actually retrieve
-    assert r_multi >= 0.6, (r_multi, r_single)
-    # and the multi-table construction is what buys it
-    assert r_multi > r_single + 0.3, (r_multi, r_single)
 
 
 def test_ivf_nprobe_trades_recall(frames):
@@ -127,12 +109,13 @@ def test_lit_double_array_nonfinite_elements(spark):
     assert got[4] == 0.0 and math.copysign(1.0, got[4]) == -1.0
 
 
-def test_ivf_assign_matmul_equals_literal_path(spark):
+def test_ivf_assign_matmul_equals_literal_path(spark, monkeypatch):
     """The Arrow-matmul assignment (the large-k path the literal
     plan-fold cannot reach — BENCH_SF1.md r8) must agree with the
     literal path assignment-for-assignment at a k both can run:
     same centroid_id (incl. the ascending-id tie-break) and the same
-    rounded cosine."""
+    rounded cosine. The matmul side is forced by lowering the literal
+    path's k ceiling."""
     from pyspark.sql import functions as F
 
     from ds_caselaw_ingester_spark.operators.similarity import (
@@ -146,34 +129,26 @@ def test_ivf_assign_matmul_equals_literal_path(spark):
     cents = kmeans_fit(
         emb.where(F.col("vec_id") % 3 == 0), "v", "vec_id", k=8, max_iter=2
     )
+    def assign(**kw):
+        return ivf_assign(emb, "v", "vec_id", cents, **kw).collect()
+
     lit = {
         r["vec_id"]: (r["centroid_id"], r["centroid_cos"])
-        for r in ivf_assign(
-            emb, "v", "vec_id", cents, keep_score=True, method="literal"
-        ).collect()
+        for r in assign(keep_score=True)
     }
+    # nprobe > 1: same (id, centroid) multiset
+    lit2 = {(r["vec_id"], r["centroid_id"]) for r in assign(nprobe=2)}
+    monkeypatch.setattr(similarity, "IVF_LITERAL_MAX_K", 0)
     mm = {
         r["vec_id"]: (r["centroid_id"], r["centroid_cos"])
-        for r in ivf_assign(
-            emb, "v", "vec_id", cents, keep_score=True, method="matmul"
-        ).collect()
+        for r in assign(keep_score=True)
     }
     assert lit == mm and len(lit) == emb.count()
-    # nprobe > 1: same (id, centroid) multiset
-    lit2 = {
-        (r["vec_id"], r["centroid_id"])
-        for r in ivf_assign(emb, "v", "vec_id", cents, nprobe=2,
-                            method="literal").collect()
-    }
-    mm2 = {
-        (r["vec_id"], r["centroid_id"])
-        for r in ivf_assign(emb, "v", "vec_id", cents, nprobe=2,
-                            method="matmul").collect()
-    }
+    mm2 = {(r["vec_id"], r["centroid_id"]) for r in assign(nprobe=2)}
     assert lit2 == mm2
 
 
-def test_ivf_assign_matmul_nprobe1_argmax_matches_argsort(spark):
+def test_ivf_assign_matmul_nprobe1_argmax_matches_argsort(spark, monkeypatch):
     """Optimization round 14: the matmul path's nprobe=1 pick is a
     NaN-safe argmax (O(k)) instead of a stable argsort head
     (O(k log k)). Pins, against a reference stable argsort computed on
@@ -202,11 +177,10 @@ def test_ivf_assign_matmul_nprobe1_argmax_matches_argsort(spark):
     rows = [(int(i), [float(x) for x in vecs[i]]) for i in range(len(vecs))]
     df = spark.createDataFrame(rows, "vec_id long, v array<double>")
 
+    monkeypatch.setattr(similarity, "IVF_LITERAL_MAX_K", 0)  # matmul path
     got = {
         r["vec_id"]: r["centroid_id"]
-        for r in ivf_assign(
-            df, "v", "vec_id", cents, nprobe=1, method="matmul"
-        ).collect()
+        for r in ivf_assign(df, "v", "vec_id", cents, nprobe=1).collect()
     }
 
     # reference: the pre-change semantics, stable argsort on -s

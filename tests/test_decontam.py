@@ -79,6 +79,17 @@ def _emb(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
+def _semantic_decontam(monkeypatch, path, corpus, bench, **kw):
+    """semantic_decontam on one of its two paths: "matmul" is forced by
+    lowering the pairs path's benchmark-size ceiling to 0."""
+    from ds_caselaw_ingester_spark.operators import decontam
+
+    with monkeypatch.context() as m:
+        if path == "matmul":
+            m.setattr(decontam, "DECONTAM_PAIRS_MAX_ROWS", 0)
+        return decontam.semantic_decontam(corpus, bench, **kw)
+
+
 def test_semantic_decontam_matches_duckdb_oracle(spark, sf_dir):
     """Pairs path vs a DuckDB cross-join replay: same list_dot_product
     fold, same rounded-cosine struct argmax, same threshold."""
@@ -88,9 +99,7 @@ def test_semantic_decontam_matches_duckdb_oracle(spark, sf_dir):
     bench = emb.where(F.col("vec_id") < 6)
     got = {
         r["vec_id"]: (r["nearest_bench_id"], r["max_cos"], r["contaminated"])
-        for r in semantic_decontam(
-            emb, bench, threshold=0.9, method="pairs"
-        ).collect()
+        for r in semantic_decontam(emb, bench, threshold=0.9).collect()
     }
     sql = f"""
 WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS cv
@@ -117,45 +126,43 @@ SELECT vec_id, bid, cos, cos >= 0.9 FROM best WHERE rn = 1
     assert all(got[i][2] for i in range(6))
 
 
-def test_semantic_decontam_matmul_equals_pairs(spark, sf_dir):
+def test_semantic_decontam_matmul_equals_pairs(spark, sf_dir, monkeypatch):
     """The BLAS scale path must reproduce the JVM pairs path row-for-row
     (same rounding, same tie-break)."""
-    from ds_caselaw_ingester_spark.operators.decontam import semantic_decontam
-
     emb = _emb(spark, sf_dir).where(F.col("vec_id") < 120)
     bench = _emb(spark, sf_dir).where(F.col("vec_id").isin([3, 17, 44, 90]))
-    a = semantic_decontam(emb, bench, threshold=0.8, method="pairs")
-    b = semantic_decontam(emb, bench, threshold=0.8, method="matmul")
+    a = _semantic_decontam(monkeypatch, "pairs", emb, bench, threshold=0.8)
+    b = _semantic_decontam(monkeypatch, "matmul", emb, bench, threshold=0.8)
     ra = {r["vec_id"]: tuple(r)[1:] for r in a.collect()}
     rb = {r["vec_id"]: tuple(r)[1:] for r in b.collect()}
     assert ra == rb
 
 
-def test_semantic_decontam_validation_and_auto(spark, sf_dir):
-    import pytest as _pytest
-
-    from ds_caselaw_ingester_spark.operators.decontam import semantic_decontam
+def test_semantic_decontam_validation_and_auto(spark, sf_dir, monkeypatch):
+    from ds_caselaw_ingester_spark.operators import decontam
 
     emb = _emb(spark, sf_dir).limit(10)
-    with _pytest.raises(ValueError):
-        semantic_decontam(emb, emb, method="bogus")
-    with _pytest.raises(ValueError):
-        semantic_decontam(emb, emb.where(F.lit(False)), method="matmul")
-    # auto on a small bench picks the pairs plan (broadcast join visible)
-    plan = semantic_decontam(
-        emb, emb.limit(3), method="auto"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan
+
+    def plan(bench) -> str:
+        out = decontam.semantic_decontam(emb, bench)
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    # a small bench takes the pairs plan (broadcast join visible); past
+    # the ceiling the matmul plan runs instead
+    assert "BroadcastNestedLoopJoin" in plan(emb.limit(3))
+    # an empty bench flags nothing and keeps every corpus row
+    rows = decontam.semantic_decontam(emb, emb.where(F.lit(False))).collect()
+    assert len(rows) == 10 and not any(r["contaminated"] for r in rows)
+    monkeypatch.setattr(decontam, "DECONTAM_PAIRS_MAX_ROWS", 2)
+    assert "BroadcastNestedLoopJoin" not in plan(emb.limit(3))
 
 
-def test_semantic_decontam_zero_norm_and_string_ids(spark):
+def test_semantic_decontam_zero_norm_and_string_ids(spark, monkeypatch):
     """The review-found crashes: a zero-norm embedding must not abort
     the run (ANSI DIVIDE_BY_ZERO) or flag contaminated (Spark orders
     NaN above every double, so NaN >= threshold was TRUE); string bench
     ids must survive the matmul path (the old int() coercion crashed
     the moment auto tipped past 256 bench rows)."""
-    from ds_caselaw_ingester_spark.operators.decontam import semantic_decontam
-
     corpus = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.8, 0.6])],
         "vec_id long, embedding array<double>",
@@ -167,8 +174,8 @@ def test_semantic_decontam_zero_norm_and_string_ids(spark):
     for method in ("pairs", "matmul"):
         got = {
             r["vec_id"]: (r["nearest_bench_id"], r["max_cos"], r["contaminated"])
-            for r in semantic_decontam(
-                corpus, bench, threshold=0.95, method=method
+            for r in _semantic_decontam(
+                monkeypatch, method, corpus, bench, threshold=0.95
             ).collect()
         }
         assert got[1] == ("bA", 1.0, True), method
@@ -179,19 +186,19 @@ def test_semantic_decontam_zero_norm_and_string_ids(spark):
     # an all-zero benchmark defines no cosine for anyone
     zb = bench.where("vec_id = 'bZ'")
     for method in ("pairs", "matmul"):
-        rows = semantic_decontam(corpus, zb, threshold=0.5, method=method).collect()
+        rows = _semantic_decontam(
+            monkeypatch, method, corpus, zb, threshold=0.5
+        ).collect()
         assert {r["vec_id"] for r in rows} == {1, 2, 3}, method
         assert all(
             r["max_cos"] is None and not r["contaminated"] for r in rows
         ), method
 
 
-def test_semantic_decontam_null_embedding_both_paths(spark):
+def test_semantic_decontam_null_embedding_both_paths(spark, monkeypatch):
     """A NULL embedding row must come back (NULL, NULL, false) on BOTH
     paths — the matmul path used to crash in np.stack (review-found),
     diverging from pairs the moment auto crossed 256 bench rows."""
-    from ds_caselaw_ingester_spark.operators.decontam import semantic_decontam
-
     corpus = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0])],
         "vec_id long, embedding array<double>",
@@ -202,8 +209,8 @@ def test_semantic_decontam_null_embedding_both_paths(spark):
     for method in ("pairs", "matmul"):
         got = {
             r["vec_id"]: (r["nearest_bench_id"], r["max_cos"], r["contaminated"])
-            for r in semantic_decontam(
-                corpus, bench, threshold=0.9, method=method
+            for r in _semantic_decontam(
+                monkeypatch, method, corpus, bench, threshold=0.9
             ).collect()
         }
         assert got[2] == (None, None, False), method
@@ -212,5 +219,7 @@ def test_semantic_decontam_null_embedding_both_paths(spark):
     all_null = spark.createDataFrame(
         [(7, None)], "vec_id long, embedding array<double>"
     )
-    rows = semantic_decontam(all_null, bench, threshold=0.5, method="matmul").collect()
+    rows = _semantic_decontam(
+        monkeypatch, "matmul", all_null, bench, threshold=0.5
+    ).collect()
     assert [tuple(r) for r in rows] == [(7, None, None, False)]

@@ -175,7 +175,7 @@ def pipeline_out(spark, tmp_path_factory):
     )
     members = explode_tar_members(archives)
     a = analyze(messages, metadata, best_xmls, identifiers, documents_state)
-    counts = perform_ingest(a, sink_root, members=members, archives=archives)
+    counts = perform_ingest(a, sink_root, batch_id=0, members=members, archives=archives)
     return spark, a.collect(), counts, sink_root
 
 
@@ -560,7 +560,7 @@ def test_s3_tre_override_keeps_raw_ref_for_file_operations(spark, tmp_path):
     assert row.consignment_ref == "TRE-BULK-7"       # P10 override visible
     assert row.raw_consignment_ref == "BULK-7"       # snapshot preserved
     sink_root = str(tmp_path / "sinks")
-    perform_ingest(a, sink_root, members=members, archives=archives)
+    perform_ingest(a, sink_root, batch_id=0, members=members, archives=archives)
     assets = spark.read.parquet(f"{sink_root}/assets").collect()
     keys = {x.asset_kind: x.s3_key for x in assets}
     uri = row.uri
@@ -595,6 +595,6 @@ def test_duplicate_message_id_in_one_batch_does_not_fan_out(spark, tmp_path):
     a = analyze(messages, metadata, best_xmls, identifiers, state)
     assert a.count() == 1  # one analysis row, not 4
     sink_root = str(tmp_path / "sinks")
-    counts = perform_ingest(a, sink_root)
+    counts = perform_ingest(a, sink_root, batch_id=0)
     assert counts["documents"] == 1
     assert counts["versions"] == 1

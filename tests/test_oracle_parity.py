@@ -1,5 +1,7 @@
 """The local correctness gate: every registered query must hash-match its
-DuckDB oracle at sf0.001 (fast; the driver re-checks at sf0.01)."""
+DuckDB oracle at sf0.001 (fast; sf0.01 is the full correctness scale), and so
+must the operators no registered query runs at these configs
+(tests/operator_oracles.py)."""
 
 from __future__ import annotations
 
@@ -7,6 +9,8 @@ import pytest
 
 from ds_caselaw_ingester_spark.plans.oracle_check import check_query
 from ds_caselaw_ingester_spark.plans.registry import all_specs
+
+import operator_oracles as oo
 
 
 def _specs():
@@ -21,206 +25,75 @@ def test_query_matches_oracle(spark, sf_dir, spec):
 
 
 def test_unregistered_ivf_matches_oracle(spark, sf_dir):
-    """ann_ivf_topk gave up its registry slot (its computation is a strict
-    subset of ann_ivf_trained_topk's) but keeps the same oracle gate here
-    so the fixed-centroid path cannot silently rot."""
-    from ds_caselaw_ingester_spark.plans.queries_similarity import (
-        ANN_IVF_ORACLE,
-        q_ann_ivf_topk,
-    )
-
-    res = check_query(spark, sf_dir, "ann_ivf_topk", q_ann_ivf_topk, ANN_IVF_ORACLE)
-    assert res.ok, res.detail
-    assert res.spark_rows > 0
-
-
-def test_unregistered_distinct_agg_matches_oracle(spark, sf_dir):
-    """distinct_supplier_stats gave up its registry slot (the
-    mixed-distinct aggregation shape stays registry-covered by
-    events_distinct_users_salted and three further ext:agg rows) but
-    keeps the same oracle gate here."""
-    from ds_caselaw_ingester_spark.plans.queries_relational import (
-        DISTINCT_AGG_ORACLE,
-        q_distinct_supplier_stats,
-    )
-
+    """ivf_topk over FIXED centroids; the registered ann_ivf_trained_topk
+    runs the same operator over trained ones."""
     res = check_query(
-        spark, sf_dir, "distinct_supplier_stats", q_distinct_supplier_stats,
-        DISTINCT_AGG_ORACLE,
+        spark, sf_dir, "ann_ivf_topk", oo.ivf_topk_frame, oo.ANN_IVF_ORACLE
     )
     assert res.ok, res.detail
     assert res.spark_rows > 0
 
 
 def test_unregistered_hybrid_search_matches_oracle(spark, sf_dir):
-    """hybrid_search gave up its registry slot in round 10 to
-    neardup_quality_keepers (its single-query RRF shape is a strict
-    subset of the registered hybrid_search_multi) but keeps the same
-    oracle gate here so the single-query fusion path cannot silently
-    rot."""
-    from ds_caselaw_ingester_spark.plans.queries_text import (
-        hybrid_search_oracle,
-        q_hybrid_search,
-    )
-
+    """Single-query BM25 + dense RRF fusion (rrf_fuse with query_col=None,
+    its duplicate-rank validation active); the registered
+    hybrid_search_multi runs the per-query form."""
     res = check_query(
-        spark, sf_dir, "hybrid_search", q_hybrid_search, hybrid_search_oracle()
+        spark, sf_dir, "hybrid_search", oo.hybrid_search_frame,
+        oo.hybrid_search_oracle(),
     )
     assert res.ok, res.detail
     assert res.spark_rows > 0
 
 
 def test_relational_repetition_profile_matches_oracle(spark, sf_dir):
-    """The registered repetition_profile row switched its Spark side to
-    the shuffle-free mapside engine (round 11), so the driver now pins
-    mapside-vs-DuckDB. This identical gate keeps the relational
-    explode/groupBy/window form — the cross-engine definition record —
-    hash-matched to the same oracle so it cannot silently rot."""
+    """The registered repetition_profile row runs the shuffle-free mapside
+    engine. This gate keeps the relational explode/groupBy/window form —
+    the cross-engine definition record — hash-matched to the same
+    oracle so it cannot silently rot."""
     from ds_caselaw_ingester_spark.plans.queries_text import (
         REPETITION_PROFILE_ORACLE,
-        q_repetition_profile_relational,
     )
 
     res = check_query(
         spark, sf_dir, "repetition_profile_relational",
-        q_repetition_profile_relational, REPETITION_PROFILE_ORACLE,
-    )
-    assert res.ok, res.detail
-    assert res.spark_rows > 0
-
-
-def test_unregistered_tar_listing_matches_oracle(spark, sf_dir):
-    """tar_member_listing gave up its registry slot (S7/S8 are a strict
-    subset of tar_pipeline's coverage) but keeps the same oracle gate
-    here so the binaryFile -> tarfile round-trip cannot silently rot."""
-    from ds_caselaw_ingester_spark.plans.queries_tar import (
-        TAR_MEMBER_LISTING_ORACLE,
-        q_tar_member_listing,
-    )
-
-    res = check_query(
-        spark, sf_dir, "tar_member_listing", q_tar_member_listing,
-        TAR_MEMBER_LISTING_ORACLE,
-    )
-    assert res.ok, res.detail
-    assert res.spark_rows > 0
-
-
-def test_unregistered_top_orders_matches_oracle(spark, sf_dir):
-    """top_orders_global gave up its registry slot to repetition_profile
-    (round 8); the TakeOrderedAndProject shape stays registered via every
-    per-query top-k tail (bm25_search, pq_adc_topk, hybrid_search), and
-    this identical DuckDB gate plus the plan-shape test keep the global
-    sort-limit path from silently rotting."""
-    from ds_caselaw_ingester_spark.plans.queries_relational import (
-        TOPK_ORACLE,
-        q_top_orders_global,
-    )
-
-    res = check_query(
-        spark, sf_dir, "top_orders_global", q_top_orders_global, TOPK_ORACLE
+        oo.relational_repetition_profile_frame, REPETITION_PROFILE_ORACLE,
     )
     assert res.ok, res.detail
     assert res.spark_rows > 0
 
 
 def test_unregistered_cosine_topk_matches_oracle(spark, sf_dir):
-    """cosine_topk gave up its registry slot to bm25_search (round 7);
-    the exact scoring + rank tail stays registered via the LSH/IVF ANN
-    rows, and this identical DuckDB gate keeps the brute-force baseline
-    from silently rotting."""
-    from ds_caselaw_ingester_spark.plans.queries_similarity import (
-        COSINE_TOPK_ORACLE,
-        q_cosine_topk,
-    )
-
+    """The brute-force cosine_topk baseline over 8 queries (the registered
+    hybrid_search_multi runs it over 3)."""
     res = check_query(
-        spark, sf_dir, "cosine_topk", q_cosine_topk, COSINE_TOPK_ORACLE
+        spark, sf_dir, "cosine_topk", oo.cosine_topk_frame, oo.COSINE_TOPK_ORACLE
     )
     assert res.ok, res.detail
     assert res.spark_rows > 0
 
 
-def test_unregistered_repeated_spans_matches_oracle(spark, sf_dir):
-    """repeated_spans is pytest-gated (registry at its 50-row cap):
-    positional duplicated-passage fractions must hash-match the DuckDB
-    oracle, and the planted near-copies must actually read as
-    duplicated passages (dup_fraction ≈ 1 on both sides of each planted
-    pair) while most untouched documents stay clean — the semantic
-    check that distinguishes a working detector from one that merely
-    agrees with its oracle about noise."""
-    from ds_caselaw_ingester_spark.plans.queries_dedup import (
-        REPEATED_SPANS_ORACLE,
-        q_repeated_spans,
-    )
-
-    res = check_query(
-        spark, sf_dir, "repeated_spans", q_repeated_spans, REPEATED_SPANS_ORACLE
-    )
-    assert res.ok, res.detail
-    rows = {r["doc_id"]: r for r in q_repeated_spans(spark, sf_dir).collect()}
-    planted = [d for d in rows if d >= 1000000000]
-    assert planted, "corpus should contain planted near-copies"
-    for d in planted:
-        # The copy drops the original's last token, so every copy gram
-        # exists in the original (fraction 1.0) and at most ONE of the
-        # original's g grams (the final window) is unmatched: >= (g-1)/g.
-        assert rows[d]["dup_fraction"] >= 0.99, (d, rows[d])
-        orig = rows[d - 1000000000]
-        g = orig["n_grams"]
-        assert orig["dup_fraction"] >= round((g - 1) / g, 4) - 1e-9, (d, orig)
-    untouched = [
-        r["dup_fraction"]
-    for d, r in rows.items()
-        if d < 1000000000 and d % 10 != 0
-    ]
-    clean = sum(1 for f in untouched if f <= 0.1)
-    assert clean >= 0.8 * len(untouched), (clean, len(untouched))
-
-
 def test_unregistered_corpus_mixture_matches_oracle(spark, sf_dir):
-    """corpus_mixture is pytest-gated (registry at its 50-row cap): the
-    weighted blend must hash-match the DuckDB oracle AND actually mix —
+    """mix_corpus (no registered query runs it): the weighted blend must
+    hash-match the DuckDB oracle AND actually mix —
     up-weighted sources must emit repeat epochs, the down-weighted one
     must subsample, and realized token shares must sit near the target
     weights (the semantic check on top of replay parity)."""
-    from ds_caselaw_ingester_spark.plans.queries_text import (
-        _MIX_WEIGHTS,
-        corpus_mixture_oracle,
-        q_corpus_mixture,
-    )
-
     res = check_query(
-        spark, sf_dir, "corpus_mixture", q_corpus_mixture, corpus_mixture_oracle()
+        spark, sf_dir, "corpus_mixture", oo.corpus_mixture_frame,
+        oo.corpus_mixture_oracle(),
     )
     assert res.ok, res.detail
-    rows = q_corpus_mixture(spark, sf_dir).collect()
+    rows = oo.corpus_mixture_frame(spark, sf_dir).collect()
     by_src: dict = {}
     for r in rows:
         by_src.setdefault(r["source"], []).append(r["epoch"])
-    assert set(by_src) == set(_MIX_WEIGHTS)
+    assert set(by_src) == set(oo.MIX_WEIGHTS)
     assert max(by_src["src0"]) >= 1, "heaviest source should repeat epochs"
     # src2 is down-weighted below its natural share: no repeat epochs,
     # and strictly fewer kept rows than the 25 docs it holds per sf.
     assert max(by_src["src2"]) == 0
     assert len(by_src["src2"]) < 25, by_src["src2"]
-
-
-def test_unregistered_multimodal_meta_matches_oracle(spark, sf_dir):
-    """multimodal_meta gave up its registry slot to semantic_dedup
-    (ext:multimodal stays registry-covered by frame_sample, K6/K9 by
-    asset_fanout) but keeps the same oracle gate here so the
-    mapInPandas metadata-extraction plumbing cannot silently rot."""
-    from ds_caselaw_ingester_spark.plans.queries_similarity import (
-        MULTIMODAL_ORACLE,
-        q_multimodal_meta,
-    )
-
-    res = check_query(
-        spark, sf_dir, "multimodal_meta", q_multimodal_meta, MULTIMODAL_ORACLE
-    )
-    assert res.ok, res.detail
-    assert res.spark_rows > 0
 
 
 def test_semantic_dedup_actually_dedups(spark, sf_dir):
@@ -261,42 +134,21 @@ def test_semantic_dedup_actually_dedups(spark, sf_dir):
         assert all(m["keep_id"] == want["vec_id"] for m in members), comp
 
 
-def test_unregistered_simhash_matches_oracle(spark, sf_dir):
-    """simhash_signatures gave up its registry slot to pq_adc_topk
-    (round 7); the explode+groupBy signature shape stays registered via
-    the minhash family, and this identical DuckDB gate keeps the SimHash
-    bit rule from silently rotting."""
-    from ds_caselaw_ingester_spark.plans.queries_dedup import (
-        SIMHASH_ORACLE,
-        q_simhash_signatures,
-    )
-
-    res = check_query(
-        spark, sf_dir, "simhash_signatures", q_simhash_signatures, SIMHASH_ORACLE
-    )
-    assert res.ok, res.detail
-    assert res.spark_rows > 0
-
-
 def test_unregistered_duplicate_spans_matches_oracle(spark, sf_dir):
-    """duplicate_spans is pytest-gated (registry at its 50-row cap):
-    the maximal duplicated token ranges must hash-match the DuckDB
+    """duplicate_spans (the registered strip_spans cuts its output): the
+    maximal duplicated token ranges must hash-match the DuckDB
     gaps-and-islands oracle, and the planted near-copies must each
     collapse to ONE span covering the whole shared region — the
     semantic check that the island merge actually merges instead of
     emitting one span per window."""
-    from ds_caselaw_ingester_spark.plans.queries_dedup import (
-        DUPLICATE_SPANS_ORACLE,
-        q_duplicate_spans,
-    )
-
     res = check_query(
-        spark, sf_dir, "duplicate_spans", q_duplicate_spans, DUPLICATE_SPANS_ORACLE
+        spark, sf_dir, "duplicate_spans", oo.duplicate_spans_frame,
+        oo.DUPLICATE_SPANS_ORACLE,
     )
     assert res.ok, res.detail
     assert res.spark_rows > 0
     spans: dict[int, list] = {}
-    for r in q_duplicate_spans(spark, sf_dir).collect():
+    for r in oo.duplicate_spans_frame(spark, sf_dir).collect():
         spans.setdefault(r["doc_id"], []).append(r)
     planted = [d for d in spans if d >= 1000000000]
     assert planted, "corpus should contain planted near-copies"
@@ -330,74 +182,3 @@ def test_unregistered_strip_spans_matches_oracle(spark, sf_dir):
     assert planted, "corpus should contain planted near-copies"
     for d in planted:
         assert rows[d] == "", (d, rows[d][:80])
-
-
-def test_unregistered_anti_join_matches_oracle(spark, sf_dir):
-    """customers_without_orders gave up its registry slot to strip_spans
-    (round 7): J4 stays registered via existence_guard and the equi-join
-    shape via revenue_by_nation/part_setops, but the LeftAnti physical
-    shape keeps this identical DuckDB gate so it cannot silently rot."""
-    from ds_caselaw_ingester_spark.plans.queries_relational import (
-        ANTI_JOIN_ORACLE,
-        q_customers_without_orders,
-    )
-
-    res = check_query(
-        spark, sf_dir, "customers_without_orders",
-        q_customers_without_orders, ANTI_JOIN_ORACLE,
-    )
-    assert res.ok, res.detail
-    assert res.spark_rows > 0
-
-
-def test_unregistered_audio_windows_matches_oracle(spark, sf_dir):
-    """audio_windows is pytest-gated (registry at its 50-row cap; the
-    mapInPandas fan-out shape is registry-covered by frame_sample):
-    overlapping window sample/byte arithmetic and the stub RMS must
-    hash-match the DuckDB replay, including short tail windows."""
-    from ds_caselaw_ingester_spark.plans.queries_similarity import (
-        AUDIO_WINDOWS_ORACLE,
-        q_audio_windows,
-    )
-
-    res = check_query(
-        spark, sf_dir, "audio_windows", q_audio_windows, AUDIO_WINDOWS_ORACLE
-    )
-    assert res.ok, res.detail
-    assert res.spark_rows > 0
-
-
-def test_unregistered_ann_lsh_topk_matches_oracle(spark, sf_dir):
-    """ann_lsh_topk gave up its registry slot to hybrid_search_multi
-    (round 9); its multi-table LSH bucketing stays registry-covered by
-    embedding_neardup (same hyperplane-bucket machinery) and the IVF/PQ
-    candidate joins, and this identical DuckDB gate plus the recall
-    measurement (test_ann_recall.py) keep the LSH ANN path from
-    silently rotting."""
-    from ds_caselaw_ingester_spark.plans.queries_similarity import (
-        ANN_LSH_ORACLE,
-        q_ann_lsh_topk,
-    )
-
-    res = check_query(
-        spark, sf_dir, "ann_lsh_topk", q_ann_lsh_topk, ANN_LSH_ORACLE
-    )
-    assert res.ok, res.detail
-    assert res.spark_rows > 0
-
-
-def test_unregistered_doc_fingerprint_matches_oracle(spark, sf_dir):
-    """doc_fingerprint gave up its registry slot to hybrid_search
-    (round 8); its md5-fingerprint shape is coverage-redundant with
-    dedup_exact + the minhash family, and this identical DuckDB gate
-    keeps the k-min sketch baseline from silently rotting."""
-    from ds_caselaw_ingester_spark.plans.queries_text import (
-        FINGERPRINT_ORACLE,
-        q_doc_fingerprint,
-    )
-
-    res = check_query(
-        spark, sf_dir, "doc_fingerprint", q_doc_fingerprint, FINGERPRINT_ORACLE
-    )
-    assert res.ok, res.detail
-    assert res.spark_rows > 0

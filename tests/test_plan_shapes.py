@@ -52,20 +52,6 @@ def test_existence_guard_is_broadcast(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_top_orders_global_avoids_full_sort(spark, sf_dir):
-    """orderBy().limit(k) must plan as TakeOrderedAndProject (per-partition
-    top-k + single merge), never a full sort shuffle of the orders table.
-    (Query rotated out of the registry in round 8 — slot went to
-    repetition_profile — but the plan shape stays pinned here.)"""
-    from ds_caselaw_ingester_spark.plans.queries_relational import (
-        q_top_orders_global,
-    )
-
-    plan = _physical_plan(q_top_orders_global(spark, sf_dir))
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "Exchange rangepartitioning" not in plan, plan
-
-
 def test_part_setops_pushes_branch_filters(spark, sf_dir):
     """Each set-op branch's filter reaches its own parquet scan."""
     plan = _physical_plan(all_specs()["part_setops"].fn(spark, sf_dir))
@@ -103,20 +89,6 @@ def test_salted_distinct_shards_hot_keys(spark, sf_dir):
     assert "_salt" in plan, plan
     exchanges = [l for l in plan.splitlines() if "Exchange hashpartitioning" in l]
     assert any("_salt" in l for l in exchanges), plan
-
-
-def test_doc_fingerprint_single_aggregation_no_window(spark, sf_dir):
-    """The k-min sketch must be ONE bounded aggregation: no per-doc sort
-    window, no distinct pre-pass — at 100x the window's full sort of every
-    gram hash is the bottleneck the single collect_set plan avoids."""
-    from ds_caselaw_ingester_spark.plans.queries_text import q_doc_fingerprint
-
-    # (unregistered since the r8 hybrid_search rotation — the plan-shape
-    # contract outlives the registry slot)
-    plan = _physical_plan(q_doc_fingerprint(spark, sf_dir))
-    assert "Window" not in plan, plan
-    # spread() repartition + at most the aggregation exchange
-    assert plan.count("Exchange") <= 2, plan
 
 
 def test_text_profile_is_one_shuffle_free_scan(spark, sf_dir):
@@ -349,11 +321,10 @@ def test_hybrid_search_fusion_is_shortlist_bounded(spark, sf_dir):
     end in a TakeOrderedAndProject top-k (per-partition heap, no global
     sort shuffle), and the dense scorer's query side broadcasts. The
     localCheckpointed shortlists keep the fusion's own plan tiny.
-    (hybrid_search rotated out of the registry in round 10 — the plan
-    pin stays, on the function directly.)"""
-    from ds_caselaw_ingester_spark.plans.queries_text import q_hybrid_search
+    (Pinned on the single-query BM25 + dense rrf_fuse composition.)"""
+    from operator_oracles import hybrid_search_frame
 
-    plan = _physical_plan(q_hybrid_search(spark, sf_dir))
+    plan = _physical_plan(hybrid_search_frame(spark, sf_dir))
     # the only rows reaching the fused groupBy are the two checkpointed
     # k-row shortlists (rrf_fuse materializes them for the rank check)
     assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan, plan
@@ -473,22 +444,6 @@ def test_strip_spans_detect_tower_evaluated_once(spark, sf_dir):
     import re
 
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) <= 2, plan
-
-
-def test_repeated_spans_single_corpus_pass(spark, sf_dir):
-    """Same pin for the unregistered repeated_spans shape: totals must
-    derive from the checkpointed per-(gram, doc) frame, never from a
-    second corpus tokenize/explode tower."""
-    from ds_caselaw_ingester_spark.operators.dedup import repeated_spans
-    from ds_caselaw_ingester_spark.plans.queries_dedup import _SPAN_N, _corpus
-
-    df = repeated_spans(_corpus(spark, sf_dir), "doc_id", "text", n=_SPAN_N)
-    plan = _physical_plan(df)
-    assert "Scan ExistingRDD" in plan, plan
-    assert "Scan parquet" not in plan, (
-        "a corpus scan leaked back into repeated_spans' final plan — "
-        "the per-(gram, doc) checkpoint is not being read:\n" + plan
-    )
 
 
 def _executed_node_metrics(df):

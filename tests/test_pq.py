@@ -10,14 +10,23 @@ from decimal import ROUND_HALF_UP, Decimal
 import pytest
 from pyspark.sql import functions as F
 
+from ds_caselaw_ingester_spark.operators import similarity
 from ds_caselaw_ingester_spark.operators.pq import (
+    _exact_rerank,
     pq_encode,
     pq_fit,
     pq_topk,
-    pq_topk_rerank,
 )
 from ds_caselaw_ingester_spark.session import ensure_oracle_safe
 from ds_caselaw_ingester_spark.sources.catalog import spread, table
+
+
+def _flat_rerank(queries, encoded, vectors, codebook, k, shortlist):
+    """Flat PQ search: an ADC shortlist of `shortlist` candidates per
+    query, then the exact cosine re-rank of only those rows (the tail
+    ivfadc_topk runs after its cell filter)."""
+    sl = pq_topk(queries, encoded, codebook, k=shortlist).select("q_id", "c_id")
+    return _exact_rerank(sl, queries, vectors, k, 4)
 
 
 def _rnd(x: float, n: int = 4) -> float:
@@ -124,7 +133,7 @@ def test_shortlist_rerank_recall(spark, pq_ctx):
     for r in cosine_topk(qs, cand, k=10).collect():
         exact.setdefault(r["q_id"], set()).add(r["c_id"])
     got: dict = {}
-    reranked = pq_topk_rerank(qs, enc, cand, cb, k=10, shortlist=100)
+    reranked = _flat_rerank(qs, enc, cand, cb, k=10, shortlist=100)
     for r in reranked.collect():
         got.setdefault(r["q_id"], set()).add(r["c_id"])
     recalls = [len(exact[q] & got.get(q, set())) / len(exact[q]) for q in exact]
@@ -156,7 +165,7 @@ def test_ivfadc_recall_and_cell_restriction(spark, pq_ctx):
     ADC-rerank path (the IVF tier only loses neighbors whose cell was
     not probed), and every scored candidate verifiably came from a
     probed cell."""
-    from ds_caselaw_ingester_spark.operators.pq import ivfadc_topk, pq_topk_rerank
+    from ds_caselaw_ingester_spark.operators.pq import ivfadc_topk
     from ds_caselaw_ingester_spark.operators.similarity import (
         cosine_topk,
         ivf_assign,
@@ -235,7 +244,7 @@ def test_index_roundtrip_is_bit_identical(spark, pq_ctx, tmp_path):
 def test_ivfadc_with_pca_codebook_projects_coarse_tier(spark, pq_ctx):
     """A codebook carrying a PCA model projects the COARSE tier too
     (ADVICE r10): with reduced-space coarse centroids and every cell
-    probed, ivfadc_topk equals the flat pq_topk_rerank on the same
+    probed, ivfadc_topk equals the flat ADC shortlist + re-rank on the same
     codebook — cell filtering is vacuous at nprobe=n_cells, so any
     divergence would be a projection bug in the assign tier. A
     raw-space quantizer against the same codebook raises ivf_assign's
@@ -245,7 +254,6 @@ def test_ivfadc_with_pca_codebook_projects_coarse_tier(spark, pq_ctx):
         ivfadc_topk,
         pq_encode,
         pq_fit,
-        pq_topk_rerank,
     )
     from ds_caselaw_ingester_spark.operators.similarity import kmeans_fit
 
@@ -275,7 +283,7 @@ def test_ivfadc_with_pca_codebook_projects_coarse_tier(spark, pq_ctx):
     }
     want = {
         (r["q_id"], r["c_id"], r["cosine"])
-        for r in pq_topk_rerank(qs, enc, cand, cb, k=5, shortlist=400).collect()
+        for r in _flat_rerank(qs, enc, cand, cb, k=5, shortlist=400).collect()
     }
     assert got == want and got
 
@@ -290,22 +298,24 @@ def test_ivfadc_with_pca_codebook_projects_coarse_tier(spark, pq_ctx):
         ).collect()
 
 
-def test_ivf_assign_dim_guard_both_paths(spark, pq_ctx):
+def test_ivf_assign_dim_guard_both_paths(spark, pq_ctx, monkeypatch):
     """ivf_assign raises (naming the space mix) on a vector/centroid
     dimension mismatch in BOTH the literal and matmul paths, instead of
-    element_at null-padding into silently wrong cosines."""
+    element_at null-padding into silently wrong cosines. The matmul
+    path is forced by lowering the literal path's k ceiling."""
     from ds_caselaw_ingester_spark.operators.similarity import ivf_assign
 
     emb, _, _ = pq_ctx
     vecs = emb.where(F.col("vec_id") < 20).select("vec_id", "v")
     bad_cents = [{"centroid_id": 0, "cvec": [1.0] * 32}, {"centroid_id": 1, "cvec": [0.5] * 32}]
-    for method in ("literal", "matmul"):
+    for max_k in (similarity.IVF_LITERAL_MAX_K, 0):
+        monkeypatch.setattr(similarity, "IVF_LITERAL_MAX_K", max_k)
         with pytest.raises(Exception, match="space mix"):
-            ivf_assign(vecs, "v", "vec_id", bad_cents, nprobe=1, method=method).collect()
+            ivf_assign(vecs, "v", "vec_id", bad_cents, nprobe=1).collect()
 
 
 @pytest.mark.parametrize("method", ["literal", "matmul"])
-def test_ivf_assign_null_vector_flows_as_null_row(spark, pq_ctx, method):
+def test_ivf_assign_null_vector_flows_as_null_row(spark, pq_ctx, method, monkeypatch):
     """A NULL embedding row (upstream encoder failure) must NOT abort a
     corpus-wide assignment — on EITHER dispatch path (matmul is the
     auto-selected large-corpus one). It flows through as exactly ONE
@@ -316,13 +326,16 @@ def test_ivf_assign_null_vector_flows_as_null_row(spark, pq_ctx, method):
     Genuinely mis-sized vectors still raise (test above)."""
     from ds_caselaw_ingester_spark.operators.similarity import ivf_assign
 
+    if method == "matmul":
+        monkeypatch.setattr(similarity, "IVF_LITERAL_MAX_K", 0)
+
     emb, _, _ = pq_ctx
     good = emb.where(F.col("vec_id") < 5).select("vec_id", "v")
     nulled = good.withColumn(
         "v", F.when(F.col("vec_id") == 0, F.lit(None)).otherwise(F.col("v"))
     )
     rows = ivf_assign(
-        nulled, "v", "vec_id", keep_score=True, method=method, nprobe=2,
+        nulled, "v", "vec_id", keep_score=True, nprobe=2,
         centroids=[
             {"centroid_id": 0, "cvec": [1.0] * 64},
             {"centroid_id": 1, "cvec": [-1.0] * 64},

@@ -4,13 +4,9 @@ total matches the actual gram count for ANY text and cap; the capped
 featurizer is exactly the uncapped featurizer of the truncated canon;
 the PCA flush rule is exact and never lets an accumulator entry cross
 the bound; model/projection fingerprints are sensitive to exactly the
-fields that change meaning; the sizing rule is monotone; PCM RMS and
-the stdlib image headers round-trip."""
+fields that change meaning; the sizing rule is monotone."""
 
 from __future__ import annotations
-
-import math
-import struct
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -191,42 +187,3 @@ def test_curation_n_buckets_monotone_and_clamped(a, b):
     lo, hi = sorted((a, b))
     na, nb = curation_n_buckets(lo), curation_n_buckets(hi)
     assert 8 <= na <= nb <= (1 << 20)
-
-
-# ---------------------------------------------------------------------------
-# multimodal: PCM RMS law and image header round-trips
-# ---------------------------------------------------------------------------
-
-
-@given(st.lists(st.integers(min_value=-32768, max_value=32767), min_size=1, max_size=200))
-@settings(max_examples=150, deadline=None)
-def test_pcm_rms_matches_definition(samples):
-    from ds_caselaw_ingester_spark.operators.multimodal import _pcm_rms
-
-    chunk = struct.pack(f"<{len(samples)}h", *samples)
-    want = round(math.sqrt(sum(v * v for v in samples) / len(samples)), 6)
-    assert _pcm_rms(chunk, 2) == want
-
-
-@given(st.integers(min_value=1, max_value=60000), st.integers(min_value=1, max_value=60000))
-@settings(max_examples=150, deadline=None)
-def test_image_headers_roundtrip(w, h):
-    import zlib
-
-    from ds_caselaw_ingester_spark.operators.multimodal import decode_image_real
-
-    def chunk(tag, body):
-        return (
-            struct.pack(">I", len(body)) + tag + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-    )
-    m = decode_image_real(png)
-    assert (m["width"], m["height"], m["channels"]) == (w, h, 3)
-    gif = b"GIF87a" + struct.pack("<HH", w % 65536, h % 65536) + b"\x00"
-    g = decode_image_real(gif)
-    assert (g["width"], g["height"]) == (w % 65536, h % 65536)

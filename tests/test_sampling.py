@@ -1,17 +1,12 @@
 """Deterministic sampling: DuckDB-oracle replay of the hash decision,
-statistical sanity of the rates, rerun/partitioning invariance, and the
-per-group top-k contract."""
+statistical sanity of the rate, and rerun/partitioning invariance."""
 
 from __future__ import annotations
 
 import duckdb
 from pyspark.sql import functions as F
 
-from ds_caselaw_ingester_spark.operators.sampling import (
-    group_topk,
-    hash_sample,
-    stratified_hash_sample,
-)
+from ds_caselaw_ingester_spark.operators.sampling import hash_sample
 from ds_caselaw_ingester_spark.sources.catalog import table
 
 SF = "/root/testdata/sf0.001"
@@ -46,28 +41,3 @@ def test_hash_sample_is_partitioning_invariant(spark):
         for r in hash_sample(docs.repartition(17, "doc_id"), "doc_id", 0.5).collect()
     }
     assert a == b  # df.sample() cannot promise this; the hash gate must
-
-
-def test_stratified_rates_and_allowlist(spark):
-    ev = table(spark, SF, "events").select("event_id", "event_type")
-    rates = {"click": 0.1, "purchase": 1.0}
-    out = stratified_hash_sample(ev, "event_id", "event_type", rates)
-    got = {r["event_type"]: r["n"] for r in out.groupBy("event_type").agg(F.count("*").alias("n")).collect()}
-    totals = {
-        r["event_type"]: r["n"]
-        for r in ev.groupBy("event_type").agg(F.count("*").alias("n")).collect()
-    }
-    assert set(got) <= {"click", "purchase"}  # allowlist: other strata dropped
-    assert got["purchase"] == totals["purchase"]  # rate 1.0 keeps everything
-    assert 0.03 * totals["click"] < got.get("click", 0) < 0.2 * totals["click"]
-
-
-def test_group_topk_exact_per_group(spark):
-    rows = [
-        ("a", 1, 10.0), ("a", 2, 30.0), ("a", 3, 20.0), ("a", 4, 30.0),
-        ("b", 5, 1.0),
-    ]
-    df = spark.createDataFrame(rows, "g string, id long, score double")
-    got = {(r.g, r.id) for r in group_topk(df, "g", "score", "id", k=2).collect()}
-    # score ties (30.0 at ids 2 and 4) break by ascending id -> 2 wins rank 1
-    assert got == {("a", 2), ("a", 4), ("b", 5)}

@@ -8,7 +8,6 @@ single DataFrame, so 15 properties cost one tiny job each round."""
 
 from __future__ import annotations
 
-import urllib.parse
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -22,7 +21,6 @@ from ds_caselaw_ingester_spark.functions.scalars import (
     modify_filename,
     parse_bool_string,
     trimmed_uri,
-    url_decode_key,
     xml_escape,
 )
 
@@ -84,18 +82,16 @@ def model_trimmed_uri(s: str) -> str | None:
 @settings(max_examples=12, deadline=None)
 def test_scalar_functions_match_reference_models(spark, strings, default):
     uris = [f"https://caselaw.nationalarchives.gov.uk/id/{s}" for s in strings[:5]] + strings
-    rows = [(s, urllib.parse.quote_plus(s), u) for s, u in zip(uris, uris)]
-    df = spark.createDataFrame(rows, "s string, quoted string, uri string")
+    rows = [(s, u) for s, u in zip(uris, uris)]
+    df = spark.createDataFrame(rows, "s string, uri string")
     out = df.select(
         "s",
-        "quoted",
         parse_bool_string(F.col("s"), default).alias("b"),
         modify_filename(F.col("s"), "_nodocx").alias("mf"),
         xml_escape(F.col("s")).alias("esc"),
         consignment_ref_from_key(F.col("s")).alias("ref"),
         file_extension(F.col("s")).alias("ext"),
         trimmed_uri(F.col("uri")).alias("trimmed"),
-        url_decode_key(F.col("quoted")).alias("decoded"),
     ).collect()
     for r in out:
         assert r.b == model_parse_bool(r.s, default), r.s
@@ -103,20 +99,6 @@ def test_scalar_functions_match_reference_models(spark, strings, default):
         assert r.esc == model_xml_escape(r.s), r.s
         assert r.ref == model_consignment_ref(r.s), r.s
         assert r.ext == model_file_extension(r.s), r.s
-        assert r.decoded == r.s, (r.s, r.quoted)  # quote_plus round-trip (S6)
     uris_out = df.select("uri", trimmed_uri(F.col("uri")).alias("t")).collect()
     for r in uris_out:
         assert r.t == model_trimmed_uri(r.uri), r.uri
-
-
-def test_url_decode_is_lenient_on_stray_percent(spark):
-    """Parity regression (reference unquote_plus is lenient): a stray
-    '%' in an S3 key — legal in key names — must pass through instead
-    of aborting the job with CANNOT_DECODE_URL (verified crash)."""
-    from ds_caselaw_ingester_spark.functions.scalars import url_decode_key
-
-    df = spark.createDataFrame(
-        [("folder/report 100%.docx",), ("a%20b+c.pdf",)], "key string"
-    )
-    got = [r[0] for r in df.select(url_decode_key(F.col("key"))).collect()]
-    assert got == ["folder/report 100%.docx", "a b c.pdf"]

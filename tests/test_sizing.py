@@ -135,25 +135,6 @@ def test_gram_df_stats_measures_duplication(spark):
     assert stats["max_df"] == 25
 
 
-def test_ann_lsh_topk_auto_planes_runs_and_ranks(spark, sf_dir):
-    """num_planes='auto' end-to-end: sizes from the candidate count and
-    returns ranked neighbors with the same schema as the fixed config."""
-    from ds_caselaw_ingester_spark.operators.similarity import ann_lsh_topk
-    from ds_caselaw_ingester_spark.sources.catalog import table
-
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    queries = emb.limit(3).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    candidates = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
-    got = ann_lsh_topk(queries, candidates, k=5, num_planes="auto", num_tables=4)
-    rows = got.collect()
-    assert rows and {r["rank"] for r in rows} <= set(range(1, 6))
-    assert set(got.columns) == {"q_id", "c_id", "cosine", "rank"}
-
-
 def test_lsh_neardup_pairs_auto_finds_planted_dups(spark, sf_dir):
     """The operator form of embedding_neardup at num_planes='auto':
     planted 0.99-cosine near-dups must still pair with their source."""
@@ -296,19 +277,6 @@ def test_max_doc_freq_typo_raises_at_call_site(spark):
         exact_jaccard_pairs(shingles, "doc_id", 0.5, max_doc_freq="Auto")
 
 
-def test_drop_stats_reuse_matches_fresh_scan(spark):
-    """hot_gram_drop_stats fed the auto path's precomputed histogram
-    must equal a fresh scan — the one-vocabulary-shuffle contract."""
-    from ds_caselaw_ingester_spark.operators.sizing import gram_df_stats
-
-    shingles = doc_shingles(_dup_corpus(spark, 10), "doc_id", "text", n=3)
-    base = gram_df_stats(shingles, "doc_id")
-    reused = hot_gram_drop_stats(shingles, "doc_id", 5, _df_stats=base)
-    fresh = hot_gram_drop_stats(shingles, "doc_id", 5)
-    assert reused == fresh
-    assert reused["n_hot_dropped"] > 0  # the df=10 base grams exceed cap 5
-
-
 def test_semdedup_auto_sample_grows_with_k(spark):
     """Review regression: with a fixed sample cap, k = ceil(n/cell) can
     exceed the training sample and kmeans_fit's init raises. The sample
@@ -399,28 +367,6 @@ def test_lsh_candidate_pairs_guard_fires_on_hot_band(spark, caplog):
     with caplog.at_level(logging.WARNING, logger=sizing_mod.__name__):
         lsh_candidate_pairs(bands, "doc_id", guard_occupancy=True)
     assert any("skewed" in r.message for r in caplog.records)
-
-
-def test_gram_df_stats_sampled_matches_exact_median(spark):
-    """gram_fraction sampling keeps each surviving gram's df EXACT, so
-    the weighted median from the sample matches the full pass on a
-    duplicated corpus (the df distribution is tight there — exactly the
-    regime auto-sizing must get right); counts scale back ~1/f."""
-    import pytest as _pytest
-
-    shingles = doc_shingles(_dup_corpus(spark, 25), "doc_id", "text", n=3)
-    full = gram_df_stats(shingles, "doc_id")
-    half = gram_df_stats(shingles, "doc_id", gram_fraction=0.5)
-    assert half["median_df"] == full["median_df"] == 25
-    # the scaled vocabulary estimate lands in the right ballpark
-    assert 0.5 * full["n_grams"] <= half["n_grams"] <= 2.0 * full["n_grams"]
-    # deterministic: the hash-gated sample is a pure function of data
-    again = gram_df_stats(shingles, "doc_id", gram_fraction=0.5)
-    assert again == half
-    with _pytest.raises(ValueError, match="gram_fraction"):
-        gram_df_stats(shingles, "doc_id", gram_fraction=0.0)
-    with _pytest.raises(ValueError, match="gram_fraction"):
-        gram_df_stats(shingles, "doc_id", gram_fraction=1.5)
 
 
 def test_lsh_neardup_auto_guard_warns_on_skewed_corpus(spark, caplog):

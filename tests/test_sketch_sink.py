@@ -15,7 +15,6 @@ from ds_caselaw_ingester_spark.operators.sketches import (
 )
 from ds_caselaw_ingester_spark.streaming.sketch_sink import (
     apply_sketch_batch,
-    run_hll_sink,
     sink_estimate,
 )
 
@@ -81,30 +80,6 @@ def test_sink_estimate_equals_batch_hll_distinct(spark, tmp_path):
         for r in hll_distinct(ev, ["event_type"], "user_id", p=8).collect()
     }
     assert got == want
-
-
-def test_run_hll_sink_end_to_end(spark, tmp_path):
-    """File-source stream, one file per trigger: final state equals the
-    batch registers over everything streamed."""
-    ev = spark.read.parquet(f"{SF}/events.parquet").select(
-        "event_id", "event_type", "user_id"
-    )
-    src = str(tmp_path / "src")
-    ev.where("event_id % 2 = 0").coalesce(1).write.parquet(src)
-    ev.where("event_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    path = str(tmp_path / "regs")
-    q = run_hll_sink(
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src),
-        path,
-        checkpoint=str(tmp_path / "ckpt"),
-        group_cols=["event_type"],
-        value_col="user_id",
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert _registers(spark, path) == _batch_registers(ev)
 
 
 def test_mismatched_identity_is_refused(spark, tmp_path):

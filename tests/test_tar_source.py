@@ -134,20 +134,6 @@ def test_best_xml_happy_and_fallbacks(spark, members_df):
     assert got["TAR-NO-LOG"].best_xml == "<error>parser.log not found</error>"
 
 
-def test_read_archives_binaryfile(spark, tmp_path):
-    """S7: binaryFile source -> (consignment_ref, content) with the
-    filename-stem reference derivation."""
-    data = _make_tar([("X/parser.log", b"hi")])
-    p = tmp_path / "TDR-2030-ZZZZ.tar.gz"
-    p.write_bytes(data)
-    from ds_caselaw_ingester_spark.sources.tar import read_archives
-
-    rows = read_archives(spark, str(tmp_path)).collect()
-    assert len(rows) == 1
-    assert rows[0].consignment_ref == "TDR-2030-ZZZZ"
-    assert bytes(rows[0].content) == data
-
-
 def test_member_hash_index_last_occurrence_wins(spark):
     """A tar can contain the same member path twice (append-mode
     archives). Python's tarfile getmember — and therefore the reference's

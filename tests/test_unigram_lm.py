@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from ds_caselaw_ingester_spark.operators.unigram_lm import (
     seed_vocab,
     unigram_fit,
-    unigram_segment,
     viterbi_segment,
     word_frequencies,
 )
@@ -79,16 +78,13 @@ def test_viterbi_likelihood_is_nondecreasing(spark, wf):
 
 
 def test_segmentation_is_total_and_lossless(spark, wf):
+    """Every token, unseen characters included, segments into non-empty
+    pieces that concatenate back to it."""
     model = unigram_fit(wf, num_iters=1, max_piece_len=MAX_LEN, max_vocab=400)
-    docs = spark.createDataFrame(
-        [(1, "the quarterly ingest report"), (2, "zzzqqqxyz unseen™glyph")],
-        "doc_id long, text string",
-    )
-    rows = unigram_segment(docs, "doc_id", "text", model, MAX_LEN).collect()
-    assert rows
-    for r in rows:
-        assert "".join(r["pieces"]) == r["token"], r
-        assert all(r["pieces"]), r
+    for token in "the quarterly ingest report zzzqqqxyz unseen™glyph".split():
+        pieces = viterbi_segment(token, model, MAX_LEN)
+        assert "".join(pieces) == token, (token, pieces)
+        assert all(pieces), (token, pieces)
 
 
 def test_em_compresses_vs_characters(spark, wf):
