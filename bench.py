@@ -1,15 +1,20 @@
-"""Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
-(default: the sf0.1 test tables) on the package's session, local[N] with
-N shuffle partitions (N = $SPARK_GRAFT_CPUS, else the CPUs this process
-may run on; BENCH_r15 and earlier ran 32 shuffle partitions at every core
-count), and prints the full JSON line {"metric", "value", "unit",
-"queries", "sf", ...}, then a paired host-factor line vs the newest
-committed BENCH_r*.json, then a minimal tail line with the suite total
-(see the capture-window notes below for why three lines).
+"""Benchmark harness: runs every registered query (or the named ones) at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test tables) on the package's
+session, local[N] with N shuffle partitions (N = $SPARK_GRAFT_CPUS, else
+the CPUs this process may run on; BENCH_r15 and earlier ran 32 shuffle
+partitions at every core count), and prints a minimal tail line with the
+suite total, then the full JSON line {"metric", "value", "unit",
+"queries", "sf", ...}; a paired host-factor line vs the newest committed
+BENCH_r*.json goes to stderr (see the capture-window notes in main for
+why). BENCH_LAST.json gets the full artifact, including each query's
+layer split (`layers`, see measure_query).
+
+Usage: python bench.py [--paired OLD.json] [name ...]
 
 Each query is forced end-to-end with the noop sink (full computation of
 every output column, no driver collect, no disk write) — the honest
-measure of plan cost.
+measure of plan cost. `warm_up` and `measure_query` are the one
+sampling loop; the tools under tools/ import them instead of copying.
 """
 
 from __future__ import annotations
@@ -23,27 +28,51 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ds_caselaw_ingester_spark.plans.registry import all_specs  # noqa: E402
 from ds_caselaw_ingester_spark.session import get_spark  # noqa: E402
+from perfbench.measure import jobs_after  # noqa: E402
+
+BENCH_LAST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LAST.json")
+
+# Each query is sampled until its two FASTEST samples agree within
+# SPREAD_TARGET (or MAX_SAMPLES is hit) and the MIN is reported:
+# this VM shows bursty multi-second host stalls that land on random
+# queries, and rounds 10/11 each needed a judge to hand-adjudicate a
+# ~25% phantom suite delta caused by them. Escalating until the two
+# best samples REPRODUCE each other bounds the claim "min is the
+# plan's cost" per query; a query that exhausts MAX_SAMPLES still
+# above the target is explicitly FLAGGED in the artifact (its min is
+# still the defensible plan cost, but cross-round deltas on it are
+# host noise until proven otherwise). `spread` records the two-best
+# agreement, not the all-samples max: one stalled outlier among five
+# samples says nothing about the min's reproducibility.
+#
+# MAX_SAMPLES raised 5 -> 9 in round 13: the r12 flag on
+# hybrid_search_multi was a WARM-UP artifact, not plan instability —
+# repeated sweeps (docs/SCALE.md round-13) show its cost declining
+# MONOTONICALLY over the first ~5 samples (cold Janino codegen + JIT
+# across the suite's largest stage/job count), so a 5-sample window
+# ends with its two fastest samples on different points of the
+# decline curve. Converged queries still stop at 2 samples — the
+# higher cap costs extra wall time ONLY for queries that would
+# otherwise be flagged.
+SPREAD_TARGET = 0.15
+MAX_SAMPLES = 9
+# the driver keeps this many trailing characters of bench's stdout
+TAIL_CAPTURE = 2000
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    try:
-        sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    except ValueError:
-        sf = -1.0
-    spark = get_spark("bench")
-    specs = all_specs()
-
-    # Warm the Python worker pool once before timing: the first Arrow/pandas
-    # task in a session pays worker fork + pandas import (~5 s across the
-    # pool) — a session fixed cost, not a query cost. Steady-state numbers
-    # are what scale to a long-lived cluster.
+def warm_up(spark) -> None:
+    """Warm the Python worker pool and the JVM once before timing, one
+    task per core of the session."""
+    width = spark.sparkContext.defaultParallelism
+    # The first Arrow/pandas task in a session pays worker fork + pandas
+    # import (~5 s across the pool) — a session fixed cost, not a query
+    # cost. Steady-state numbers are what scale to a long-lived cluster.
     import pandas as _pd  # noqa: F401
 
     def _ident(it):
         yield from it
 
-    spark.range(0, 64, 1, 32).mapInPandas(_ident, "id long").write.mode(
+    spark.range(0, 64, 1, width).mapInPandas(_ident, "id long").write.mode(
         "overwrite"
     ).format("noop").save()
 
@@ -70,7 +99,7 @@ def main() -> None:
         from pyspark.sql import functions as _F
 
         _a = (
-            spark.range(0, 200_000, 1, 32)
+            spark.range(0, 200_000, 1, width)
             .select(
                 (_F.col("id") % 997).alias("k"),
                 (_F.col("id") % 31).alias("g"),
@@ -99,79 +128,75 @@ def main() -> None:
     finally:
         spark.catalog.clearCache()
 
-    # Each query is sampled until its two FASTEST samples agree within
-    # SPREAD_TARGET (or MAX_SAMPLES is hit) and the MIN is reported:
-    # this VM shows bursty multi-second host stalls that land on random
-    # queries, and rounds 10/11 each needed a judge to hand-adjudicate a
-    # ~25% phantom suite delta caused by them. Escalating until the two
-    # best samples REPRODUCE each other bounds the claim "min is the
-    # plan's cost" per query; a query that exhausts MAX_SAMPLES still
-    # above the target is explicitly FLAGGED in the artifact (its min is
-    # still the defensible plan cost, but cross-round deltas on it are
-    # host noise until proven otherwise). `spread` records the two-best
-    # agreement, not the all-samples max: one stalled outlier among five
-    # samples says nothing about the min's reproducibility.
-    #
-    # MAX_SAMPLES raised 5 -> 9 in round 13: the r12 flag on
-    # hybrid_search_multi was a WARM-UP artifact, not plan instability —
-    # repeated sweeps (docs/SCALE.md round-13) show its cost declining
-    # MONOTONICALLY over the first ~5 samples (cold Janino codegen + JIT
-    # across the suite's largest stage/job count), so a 5-sample window
-    # ends with its two fastest samples on different points of the
-    # decline curve. Converged queries still stop at 2 samples — the
-    # higher cap costs extra wall time ONLY for queries that would
-    # otherwise be flagged.
-    SPREAD_TARGET = 0.15
-    MAX_SAMPLES = 9
 
-    def _agreement(samples: "list[float]") -> float:
-        s = sorted(samples)
-        return (s[1] - s[0]) / s[0] if len(s) >= 2 and s[0] > 0 else 0.0
+def _agreement(samples: "list[float]") -> float:
+    s = sorted(samples)
+    return (s[1] - s[0]) / s[0] if len(s) >= 2 and s[0] > 0 else 0.0
 
-    def _run_query(spec) -> "float | None":
+
+def measure_query(spark, spec, sf_dir: str) -> "dict | None":
+    """Sample one registered query until its two fastest samples agree
+    (see SPREAD_TARGET). Returns None if no sample succeeded, else
+    {"min_s", "spread", "flagged", "layers"}: `layers` splits the min
+    sample into the builder call (`construct_s`: Py4J, analysis, any
+    construction-time jobs) and the noop write (`action_s`), with the
+    jobs, tasks, shuffle-write and spill bytes of that sample, read from
+    the status store afterwards (no extra Spark job)."""
+    sc = spark.sparkContext
+    samples: list[tuple[float, float, float, str]] = []  # wall, construct, action, group
+    while len(samples) < MAX_SAMPLES:
+        group = f"bench-{spec.name}-{len(samples)}"
+        sc.setJobGroup(group, spec.name)
         t0 = time.time()
         try:
             df = spec.fn(spark, sf_dir)
+            t1 = time.time()
             df.write.mode("overwrite").format("noop").save()
-            return round(time.time() - t0, 3)
+            t2 = time.time()
         except Exception as e:  # noqa: BLE001
             print(f"bench: {spec.name} failed: {e}", file=sys.stderr)
-            return None
+            break  # keep any earlier good sample (visible -1 if none)
         finally:
+            sc.setJobGroup(None, None)
             # queries may persist() shared subtrees; drop them so later
             # queries aren't squeezed by earlier queries' cache residency
             spark.catalog.clearCache()
+        samples.append((round(t2 - t0, 3), round(t1 - t0, 3), round(t2 - t1, 3), group))
+        if len(samples) >= 2 and _agreement([w for w, *_ in samples]) <= SPREAD_TARGET:
+            break
+    if not samples:
+        return None
+    wall, construct, action, group = min(samples)
+    # the group's job list is complete only once the listener bus has
+    # drained; last_job_id would instead read every retained job's stages
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ids = set(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = [j for j in jobs_after(spark, min(ids, default=0) - 1) if j.job_id in ids]
+    spread = _agreement([w for w, *_ in samples])
+    return {
+        "min_s": wall,
+        # Succeeded once, then failed on the re-sample: the min was
+        # never REPRODUCED, so recording spread 0.0 would make an
+        # unreproduced one-sample cost read as perfectly reproducible
+        # in the artifact. Record spread as null and flag it.
+        "spread": round(spread, 3) if len(samples) >= 2 else None,
+        "flagged": len(samples) < 2 or spread > SPREAD_TARGET,
+        "layers": {
+            "construct_s": construct,
+            "action_s": action,
+            "jobs": len(jobs),
+            "tasks": sum(j.tasks for j in jobs),
+            "shuffle_write_bytes": sum(j.shuffle_write_bytes for j in jobs),
+            "spill_bytes": sum(j.spill_bytes for j in jobs),
+        },
+    }
 
-    timings: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-    flagged: list[str] = []
-    for name, spec in sorted(specs.items()):
-        samples: list[float] = []
-        while True:
-            dt = _run_query(spec)
-            if dt is None:
-                break  # keep any earlier good sample (visible -1 if none)
-            samples.append(dt)
-            if len(samples) >= 2 and _agreement(samples) <= SPREAD_TARGET:
-                break
-            if len(samples) >= MAX_SAMPLES:
-                break
-        if not samples:
-            timings[name] = -1.0
-        elif len(samples) < 2:
-            # Succeeded once, then failed on the re-sample: the min was
-            # never REPRODUCED, so recording spread 0.0 would make an
-            # unreproduced one-sample cost read as perfectly reproducible
-            # in the artifact. Record spread as null and flag it.
-            timings[name] = min(samples)
-            spreads[name] = None
-            flagged.append(name)
-        else:
-            timings[name] = min(samples)
-            spreads[name] = round(_agreement(samples), 3)
-            if _agreement(samples) > SPREAD_TARGET:
-                flagged.append(name)
 
+def summarize(results: "dict[str, dict | None]", sf: float) -> dict:
+    """The full artifact (BENCH_LAST.json) from measure_query's results."""
+    timings = {n: (r["min_s"] if r else -1.0) for n, r in sorted(results.items())}
+    spreads = {n: r["spread"] for n, r in sorted(results.items()) if r}
+    flagged = sorted(n for n, r in results.items() if r and r["flagged"])
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     # failed queries must be VISIBLE in the JSON artifact: a silent
     # exclusion shrinks the headline total, so a regression that breaks
@@ -189,7 +214,7 @@ def main() -> None:
         "max_samples": MAX_SAMPLES,
         "median": round(vals[len(vals) // 2], 3) if vals else 0.0,
         "p90": round(vals[int(len(vals) * 0.9)], 3) if vals else 0.0,
-        "flagged": sorted(flagged),
+        "flagged": flagged,
     }
     out = {
         "metric": "total_query_wall_seconds",
@@ -200,9 +225,50 @@ def main() -> None:
         # per-query agreement of the two fastest samples (see above)
         "spread": spreads,
         "suite_spread": suite_spread,
+        # per-query layer split of the min sample (see measure_query)
+        "layers": {n: r["layers"] for n, r in sorted(results.items()) if r},
     }
     if errors:
         out["errors"] = errors
+    return out
+
+
+def stdout_lines(out: dict) -> "list[str]":
+    """The two stdout lines for an artifact: a minimal tail line, then
+    the queries-bearing line the driver parses (see main)."""
+    line = {k: v for k, v in out.items() if k not in ("spread", "paired", "layers")}
+    line["queries"] = {n: round(t, 4) for n, t in out["queries"].items()}
+    suite_spread = out["suite_spread"]
+    tail = {"metric": out["metric"], "value": out["value"], "unit": "sec",
+            "sf": out["sf"], "n_queries": len(out["queries"]),
+            "spread_median": suite_spread["median"],
+            "n_flagged": len(suite_spread["flagged"])}
+    if "paired" in out:
+        tail["host_factor_median_ratio"] = out["paired"]["host_factor_median_ratio"]
+    if "errors" in out:
+        tail["errors"] = out["errors"]
+    return [json.dumps(tail, separators=(",", ":")),
+            json.dumps(line, separators=(",", ":"))]
+
+
+def main(argv: "list[str] | None" = None) -> None:
+    args = sys.argv[1:] if argv is None else argv
+    explicit = None
+    if args[:1] == ["--paired"]:
+        explicit, args = args[1], args[2:]
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    try:
+        sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+    except ValueError:
+        sf = -1.0
+    specs = all_specs()
+    names = sorted(args or specs)
+    unknown = [n for n in names if n not in specs]
+    if unknown:
+        sys.exit(f"bench: unknown queries {unknown}; choose from {sorted(specs)}")
+    spark = get_spark("bench")
+    warm_up(spark)
+    out = summarize({n: measure_query(spark, specs[n], sf_dir) for n in names}, sf)
 
     # Output contract (round 15, per the r14 verdict "What's wrong" #1):
     # the driver parses the LAST stdout line, so the LAST line printed is
@@ -210,12 +276,13 @@ def main() -> None:
     # a slim summary line last and the driver's per-query PERF comparison
     # ran blind (PERF_r14.json per_query: {}). Defenses against the
     # bounded tail-capture window (BENCH_r09/r10 lost the total to it):
-    #   1. The FULL summary (full-precision timings + complete spread map)
-    #      is written to BENCH_LAST.json in the repo — a committed file can
-    #      never be truncated by an output-capture window.
-    #   2. The stdout line drops `spread` ENTIRELY and rounds per-query
-    #      timings to 4 decimals: measured 1.3 KB for the 50-query suite,
-    #      inside the window with margin.
+    #   1. The FULL summary (full-precision timings, the complete spread
+    #      map and the per-query layers) is written to BENCH_LAST.json in
+    #      the repo — a committed file can never be truncated by an
+    #      output-capture window.
+    #   2. The stdout line drops `spread` and `layers` ENTIRELY and rounds
+    #      per-query timings to 4 decimals: measured 1.3 KB for the
+    #      50-query suite, inside the window with margin.
     #   3. A minimal line {"value","sf","n_queries"} prints BEFORE the
     #      full line, and the paired-comparison diagnostic goes to
     #      stderr: a tail capture therefore always ENDS with the full
@@ -235,35 +302,25 @@ def main() -> None:
     # in the repo (the current round's artifact is written by the
     # driver only AFTER this run, so the newest on disk is always a
     # prior round).
-    explicit = sys.argv[2] if (
-        len(sys.argv) >= 3 and sys.argv[1] == "--paired"
-    ) else None
-    paired = _paired_summary(timings, set(flagged), sf, explicit)
+    paired = _paired_summary(
+        out["queries"], set(out["suite_spread"]["flagged"]), sf, explicit
+    )
     if paired:
         out["paired"] = paired
 
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LAST.json"),
-        "w",
-    ) as f:
+    with open(BENCH_LAST, "w") as f:
         json.dump(out, f, separators=(",", ":"))
         f.write("\n")
-    line = {k: v for k, v in out.items() if k not in ("spread", "paired")}
-    line["queries"] = {n: round(t, 4) for n, t in timings.items()}
     if paired:
         # diagnostic, not the artifact: stderr so the queries-bearing
         # line stays the last stdout line (the driver parses the last)
         print(json.dumps(paired, separators=(",", ":")), file=sys.stderr)
-    tail = {"metric": out["metric"], "value": total, "unit": "sec", "sf": sf,
-            "n_queries": len(timings),
-            "spread_median": suite_spread["median"],
-            "n_flagged": len(flagged)}
-    if paired:
-        tail["host_factor_median_ratio"] = paired["host_factor_median_ratio"]
-    if errors:
-        tail["errors"] = errors
-    print(json.dumps(tail, separators=(",", ":")))
-    print(json.dumps(line, separators=(",", ":")))
+    lines = stdout_lines(out)
+    if len(lines[-1]) > 0.9 * TAIL_CAPTURE:
+        print(f"bench: the queries line is {len(lines[-1])} characters, near "
+              f"the driver's {TAIL_CAPTURE}-character tail", file=sys.stderr)
+    for ln in lines:
+        print(ln)
 
 
 def _load_old_queries(path: str) -> "tuple[dict, set, float | None]":

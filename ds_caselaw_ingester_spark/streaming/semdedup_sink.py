@@ -82,13 +82,10 @@ BOOTSTRAP_GROWTH = 10.0
 # occupancy, so 4× the target cell size ≈ 16× the per-cell join cost.
 GROWTH_WARN_FACTOR = 4.0
 
-_QUANTIZER_SUFFIX = ".quantizer.json"
-# preferred location: INSIDE the index directory (underscore-prefixed,
+# the quantizer lives INSIDE the index directory (underscore-prefixed,
 # so Spark's file listing ignores it). A retrain can then swap index
 # and quantizer with ONE directory rename — no window where the cells
-# on disk and the centroid set that built them disagree. The root-level
-# `<index>.quantizer.json` sidecar remains a read fallback for indexes
-# written before this change.
+# on disk and the centroid set that built them disagree.
 _QUANTIZER_FILE = "_quantizer.json"
 # in-dir pin of the optional PCA projection in front of the sink (see
 # apply_semdedup_batch's pca_model): the stored cells hold PROJECTED
@@ -103,11 +100,11 @@ _PCA_FILE = "_pca.json"
 def _load_quantizer(local: str) -> "list | None":
     import json
 
-    for p in (os.path.join(local, _QUANTIZER_FILE), local + _QUANTIZER_SUFFIX):
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-    return None
+    p = os.path.join(local, _QUANTIZER_FILE)
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        return json.load(f)
 
 
 def _pca_fingerprint(model: dict) -> str:
@@ -211,8 +208,7 @@ def _resolve_centroids(
         # near-dups against the whole existing corpus silently missed.
         raise ValueError(
             f"{local} has {CELL_COL}= partitions but no quantizer at "
-            f"{local}/{_QUANTIZER_FILE} (or the legacy "
-            f"{local}{_QUANTIZER_SUFFIX}); cells are only comparable "
+            f"{local}/{_QUANTIZER_FILE}; cells are only comparable "
             "under the centroid set that built them — restore the "
             "quantizer file alongside the index, or rebuild the index "
             "(retrain_semdedup_index)."
@@ -229,8 +225,8 @@ def _resolve_centroids(
     logging.getLogger(__name__).info(
         "semdedup stream bootstrap: trained k=%d quantizer from the "
         "first batch (%d vectors × growth margin %.0f); persisted to "
-        "%s%s — retrain offline and rebuild the index to re-size",
-        k, n0, bootstrap_growth, local, _QUANTIZER_SUFFIX,
+        "%s — retrain offline and rebuild the index to re-size",
+        k, n0, bootstrap_growth, os.path.join(local, _QUANTIZER_FILE),
     )
     return cents
 
@@ -543,9 +539,6 @@ def retrain_semdedup_index(
     if os.path.exists(pca_pin):
         shutil.copyfile(pca_pin, os.path.join(tmp, _PCA_FILE))
     commit_swap(local, tmp, old)
-    legacy = local + _QUANTIZER_SUFFIX
-    if os.path.exists(legacy):
-        os.remove(legacy)
     # swap is complete and crash-consistent — lift the stream lockout
     os.remove(marker)
     return cents

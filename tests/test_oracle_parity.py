@@ -162,23 +162,25 @@ def test_unregistered_duplicate_spans_matches_oracle(spark, sf_dir):
         assert s["span_tokens"] == s["span_end"]
 
 
-def test_unregistered_strip_spans_matches_oracle(spark, sf_dir):
-    """strip_spans is pytest-gated (registry at its 50-row cap): the
-    full detect -> cut exact-substring pipeline must hash-match the
-    DuckDB oracle, every planted near-copy must come back EMPTY (its
-    whole text is one duplicated span), and untouched documents must
-    pass through verbatim."""
-    from ds_caselaw_ingester_spark.plans.queries_dedup import (
-        STRIP_SPANS_ORACLE,
-        q_strip_spans,
-    )
+def test_strip_spans_empties_planted_copies(spark, sf_dir):
+    """strip_spans' oracle match is test_query_matches_oracle[strip_spans];
+    this pins its semantics: every planted near-copy must come back EMPTY
+    (its whole text is one duplicated span), and documents with no
+    duplicated span must pass through verbatim."""
+    from ds_caselaw_ingester_spark.plans.queries_dedup import q_strip_spans
+    from ds_caselaw_ingester_spark.sources.catalog import table
 
-    res = check_query(
-        spark, sf_dir, "strip_spans", q_strip_spans, STRIP_SPANS_ORACLE
-    )
-    assert res.ok, res.detail
     rows = {r["doc_id"]: r["text"] for r in q_strip_spans(spark, sf_dir).collect()}
     planted = [d for d in rows if d >= 1000000000]
     assert planted, "corpus should contain planted near-copies"
     for d in planted:
         assert rows[d] == "", (d, rows[d][:80])
+    spanned = {r["doc_id"] for r in oo.duplicate_spans_frame(spark, sf_dir).collect()}
+    untouched = {
+        r["doc_id"]: r["text"]
+        for r in table(spark, sf_dir, "documents").collect()
+        if r["doc_id"] not in spanned
+    }
+    assert untouched
+    for d, text in untouched.items():
+        assert rows[d] == text, (d, rows[d][:80], text[:80])

@@ -40,15 +40,9 @@ def main() -> None:
     dirs = sys.argv[1:] or ["/tmp/sf50_lowdup", "/tmp/sf500_lowdup"]
     spark = get_spark("battery-scan")
     spark.sparkContext.setLogLevel("ERROR")
+    import bench
 
-    import pandas as _pd  # noqa: F401
-
-    def _ident(it):
-        yield from it
-
-    spark.range(0, 64, 1, 32).mapInPandas(_ident, "id long").write.mode(
-        "overwrite"
-    ).format("noop").save()
+    bench.warm_up(spark)
 
     from ds_caselaw_ingester_spark.operators.curation import apply_quality_gates
     from ds_caselaw_ingester_spark.operators.unigram_lm import (

@@ -4,9 +4,9 @@ reduction in front of it (r9 verdict queue #3's 'done' criterion).
 Runs the exact stage curate_corpus executes — kmeans_fit quantizer
 training + semantic_dedup pair search — over the sf embeddings table,
 once on the raw 64-dim vectors and once PCA-projected to k dims, and
-reports per-phase shuffle read/write bytes from Spark's status REST API
-(the UI is enabled on a private port for this tool only; the engine's
-sessions keep it off).
+reports each run's shuffle-write bytes from Spark's status store
+(perfbench.measure.jobs_after; every shuffled byte is read back once, so
+the write total is the shuffle volume).
 
 Usage: python tools/measure_pca_shuffle.py [sf_dir] [k] [replicate]
 `replicate` unions that many deterministically-perturbed copies of the
@@ -20,56 +20,23 @@ from __future__ import annotations
 import json
 import os
 import sys
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-UI_PORT = 4049
-
-
-def _get(path: str):
-    with urllib.request.urlopen(f"http://localhost:{UI_PORT}/api/v1{path}") as r:
-        return json.loads(r.read())
-
-
-def _stages():
-    app = _get("/applications")[0]["id"]
-    return _get(f"/applications/{app}/stages?status=complete")
-
-
-def _shuffle_totals(stages, after_stage_id: int):
-    w = sum(s["shuffleWriteBytes"] for s in stages if s["stageId"] > after_stage_id)
-    r = sum(s["shuffleReadBytes"] for s in stages if s["stageId"] > after_stage_id)
-    return r, w
-
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from ds_caselaw_ingester_spark.operators.pca import pca_fit, pca_project
     from ds_caselaw_ingester_spark.operators.semdedup import semantic_dedup
     from ds_caselaw_ingester_spark.operators.similarity import kmeans_fit
+    from ds_caselaw_ingester_spark.session import get_spark
+    from perfbench.measure import jobs_after, last_job_id
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     k_dims = int(sys.argv[2]) if len(sys.argv) > 2 else 16
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("measure_pca_shuffle")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-
     replicate = int(sys.argv[3]) if len(sys.argv) > 3 else 1
+    spark = get_spark("measure_pca_shuffle")
     base = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("_v")
     )
@@ -88,32 +55,28 @@ def main() -> None:
         from functools import reduce
 
         base = reduce(lambda a, b: a.unionByName(b), copies)
-    emb = base.repartition(32).localCheckpoint(eager=True)
+    width = spark.sparkContext.defaultParallelism
+    emb = base.repartition(width).localCheckpoint(eager=True)
     n = emb.count()
     dim = len(emb.first()["_v"])
     model = pca_fit(emb, "_v", dim, k=k_dims)
 
-    def stage(vecs, kq: int):
-        cents = kmeans_fit(vecs, "_v", "vec_id", k=kq, max_iter=3, round_centroids=6)
-        sem = semantic_dedup(vecs, "_v", "vec_id", cents, threshold=0.95)
-        sem.write.mode("overwrite").format("noop").save()
-
     kq = max(4, int(n ** 0.5) // 8)
     out = {"sf_dir": sf_dir, "n_vectors": n, "dim": dim, "pca_k": k_dims, "kmeans_k": kq}
 
-    marker = max((s["stageId"] for s in _stages()), default=-1)
-    stage(emb, kq)
-    raw_r, raw_w = _shuffle_totals(_stages(), marker)
-    out["raw_shuffle_read_mb"] = round(raw_r / 1e6, 2)
-    out["raw_shuffle_write_mb"] = round(raw_w / 1e6, 2)
+    def shuffle_write(vecs) -> int:
+        floor = last_job_id(spark)
+        cents = kmeans_fit(vecs, "_v", "vec_id", k=kq, max_iter=3, round_centroids=6)
+        sem = semantic_dedup(vecs, "_v", "vec_id", cents, threshold=0.95)
+        sem.write.mode("overwrite").format("noop").save()
+        return sum(j.shuffle_write_bytes for j in jobs_after(spark, floor))
 
+    raw_w = shuffle_write(emb)
+    out["raw_shuffle_write_mb"] = round(raw_w / 1e6, 2)
     proj = pca_project(emb, "_v", model, out_col="_p").select(
         "vec_id", F.col("_p").alias("_v")
     )
-    marker = max(s["stageId"] for s in _stages())
-    stage(proj, kq)
-    p_r, p_w = _shuffle_totals(_stages(), marker)
-    out["pca_shuffle_read_mb"] = round(p_r / 1e6, 2)
+    p_w = shuffle_write(proj)
     out["pca_shuffle_write_mb"] = round(p_w / 1e6, 2)
     out["write_ratio"] = round(raw_w / p_w, 2) if p_w else None
     print(json.dumps(out))

@@ -53,15 +53,9 @@ def standard_gates() -> dict:
 def main() -> None:
     dirs = sys.argv[1:] or ["/tmp/sf10_dup", "/tmp/sf10_lowdup"]
     spark = get_spark("sf10-composite")
+    import bench
 
-    import pandas as _pd  # noqa: F401
-
-    def _ident(it):
-        yield from it
-
-    spark.range(0, 64, 1, 32).mapInPandas(_ident, "id long").write.mode(
-        "overwrite"
-    ).format("noop").save()
+    bench.warm_up(spark)
 
     from ds_caselaw_ingester_spark.operators.curation import (
         apply_quality_gates,

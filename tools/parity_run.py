@@ -3,14 +3,15 @@ session. Usage: python tools/parity_run.py [sf_dir] [name ...]"""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ds_caselaw_ingester_spark.plans.oracle_check import check_query
-from ds_caselaw_ingester_spark.plans.registry import all_specs
-from ds_caselaw_ingester_spark.session import get_spark
+from ds_caselaw_ingester_spark.plans.oracle_check import check_query  # noqa: E402
+from ds_caselaw_ingester_spark.plans.registry import all_specs  # noqa: E402
+from ds_caselaw_ingester_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:

@@ -9,7 +9,8 @@ the measure-BEFORE-touching gate of the r12 queue discipline: attack
 a term only when its share and a paired >= 1.5x are both on the table.
 
 Usage: python tools/profile_battery.py [sf_dir] (default /tmp/sf1.0;
-falls back to /root/testdata/sf0.1 if absent).
+falls back to /root/testdata/sf0.1 if absent). The corpus text is
+collected to the driver: at sf1 give it SPARK_GRAFT_DRIVER_MEM=16g.
 """
 from __future__ import annotations
 
@@ -24,15 +25,11 @@ def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else (
         "/tmp/sf1.0" if os.path.isdir("/tmp/sf1.0") else "/root/testdata/sf0.1"
     )
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    from ds_caselaw_ingester_spark.session import get_spark
+
+    spark = get_spark("profile_battery")
     spark.sparkContext.setLogLevel("ERROR")
     from ds_caselaw_ingester_spark.operators.quality_clf import (
         QualityModel,
