@@ -5,9 +5,10 @@ the CPUs this process may run on; BENCH_r15 and earlier ran 32 shuffle
 partitions at every core count), and prints a minimal tail line with the
 suite total, then the full JSON line {"metric", "value", "unit",
 "queries", "sf", ...}; a paired host-factor line vs the newest committed
-BENCH_r*.json goes to stderr (see the capture-window notes in main for
-why). BENCH_LAST.json gets the full artifact, including each query's
-layer split (`layers`, see measure_query).
+BENCH_r*.json recorded at the same width goes to stderr (see the
+capture-window notes in main for why). BENCH_LAST.json gets the full
+artifact, including each query's layer split (`layers`, see
+measure_query).
 
 Usage: python bench.py [--paired OLD.json] [name ...]
 
@@ -27,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ds_caselaw_ingester_spark.plans.registry import all_specs  # noqa: E402
-from ds_caselaw_ingester_spark.session import get_spark  # noqa: E402
+from ds_caselaw_ingester_spark.session import execution_width, get_spark  # noqa: E402
 from perfbench.measure import jobs_after  # noqa: E402
 
 BENCH_LAST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LAST.json")
@@ -299,9 +300,10 @@ def main(argv: "list[str] | None" = None) -> None:
     #
     # `--paired OLD.json` pins the baseline explicitly; with no flag
     # the sweep AUTO-PAIRS against the newest committed BENCH_r*.json
-    # in the repo (the current round's artifact is written by the
-    # driver only AFTER this run, so the newest on disk is always a
-    # prior round).
+    # or BENCH_r*_c<N>.json whose recorded `cpus` equals this run's
+    # width (pick_baseline), and skips the pair when none does (the
+    # current round's artifact is written by the driver only AFTER this
+    # run, so the newest on disk is always a prior round).
     paired = _paired_summary(
         out["queries"], set(out["suite_spread"]["flagged"]), sf, explicit
     )
@@ -351,14 +353,38 @@ def _load_old_queries(path: str) -> "tuple[dict, set, float | None]":
     return old_q, old_flagged, old.get("sf")
 
 
+def pick_baseline(here: str, names: "list[str]", width: int) -> "str | None":
+    """The newest of `names` (BENCH_r<N>.json or BENCH_r<N>_c<W>.json,
+    relative to `here`) whose recorded `cpus` equals `width`, by round
+    N; None when none does. Since the session takes its width from the
+    host, residuals against a baseline of another width mix the width
+    change with plan changes."""
+    import re
+
+    cands = []
+    for name in names:
+        m = re.match(r"BENCH_r(\d+)(?:_c\d+)?\.json$", os.path.basename(name))
+        if not m:
+            continue
+        path = os.path.join(here, name)
+        try:
+            with open(path) as f:
+                cpus = json.load(f).get("cpus")
+        except (OSError, ValueError):
+            continue
+        if cpus == width:
+            cands.append((int(m.group(1)), path))
+    return max(cands)[1] if cands else None
+
+
 def _paired_summary(
     timings: dict,
     flagged: set,
     sf: float,
     paired_path: "str | None" = None,
+    width: "int | None" = None,
 ) -> "dict | None":
     import glob
-    import re
 
     here = os.path.dirname(os.path.abspath(__file__))
     if paired_path is None:
@@ -387,14 +413,15 @@ def _paired_summary(
                 os.path.basename(p)
                 for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
             ]
-        cands = []
-        for name in names:
-            m = re.match(r"BENCH_r(\d+)\.json$", os.path.basename(name))
-            if m:
-                cands.append((int(m.group(1)), os.path.join(here, name)))
-        if not cands:
+        width = execution_width() if width is None else width
+        paired_path = pick_baseline(here, names, width)
+        if paired_path is None:
+            print(
+                f"bench: no committed BENCH_r*.json was recorded at {width} "
+                "cpus — skipping the pair",
+                file=sys.stderr,
+            )
             return None
-        paired_path = max(cands)[1]
         print(
             f"bench: auto-paired baseline = {os.path.basename(paired_path)}",
             file=sys.stderr,

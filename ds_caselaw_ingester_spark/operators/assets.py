@@ -191,11 +191,12 @@ def asset_rows(
 def publish_copies(assets: DataFrame, publish_uris: DataFrame) -> DataFrame:
     """K11 asset-copy: on publish, every asset under the document's prefix
     is copied private -> public (docs/workflow.md:169-175). `publish_uris`
-    is the (uri) set being published this batch; the join keeps only their
-    assets and emits one copy row per asset. content_md5 (when the asset
-    rows carry it) rides along, so each copy row pins the bytes copied."""
+    is the (uri) set being published this batch; a left-semi join keeps
+    only their assets and emits one copy row per asset, however often a
+    uri repeats in the set. content_md5 (when the asset rows carry it)
+    rides along, so each copy row pins the bytes copied."""
     extra = ["content_md5"] if "content_md5" in assets.columns else []
-    return assets.join(publish_uris.select("uri").distinct(), "uri").select(
+    return assets.join(publish_uris.select("uri"), "uri", "left_semi").select(
         "uri",
         "s3_key",
         F.lit("unpublished").alias("from_bucket"),

@@ -342,6 +342,15 @@ def merge_touched_buckets(
     rows depend only on that key's input rows, so restricting the
     table to the touched buckets cannot change any result.
 
+    The table keeps ONE row per key. Where `merge` returns several rows
+    for a key (two updates for one key in a batch, on the first write
+    or against the table), the greatest row wins, compared column by
+    column in the frame's column order (nulls lowest): a winner that
+    depends on the rows alone, not on their arrival, so a replayed
+    batch writes the same table. The reduction groups by (kb, key)
+    after the `kb` exchange the write makes anyway, so it adds no
+    shuffle.
+
     Protocol, in order:
     1. refuse a flat table and a changed n_buckets
        (ensure_partitioned_layout);
@@ -382,8 +391,11 @@ def merge_touched_buckets(
     )
     tmp = local + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    merge(current, updates).withColumn("kb", kb).repartition(
-        F.col("kb")
+    merged = merge(current, updates).withColumn("kb", kb).repartition(F.col("kb"))
+    cols = [c for c in merged.columns if c != "kb"]
+    winner = F.max(F.struct(*[c for c in cols if c != key])).alias("_w")
+    merged.groupBy("kb", key).agg(winner).select(
+        *[F.col(c if c == key else f"_w.{c}").alias(c) for c in cols], "kb"
     ).write.mode("overwrite").partitionBy("kb").parquet(tmp)
     after = partition_file_snapshot(local, touched, "kb")
     changed = [b for b in touched if after[b] != snapshot[b]]

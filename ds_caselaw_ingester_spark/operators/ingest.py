@@ -90,48 +90,51 @@ def analyze(
             "opt_error_on_existing"
         ),
     )
+    # P10: S3-path consignment ref is overwritten by the TRE reference;
+    # V2 path keeps the message reference (messages.py:33-34, 84-93)
+    ref = F.when(
+        (F.col("kind") == "s3") & F.col("tre_reference").isNotNull(),
+        F.col("tre_reference"),
+    ).otherwise(F.col("consignment_ref"))
+    doc_kind = classify_document_xml(F.col("best_xml"))  # P11
     enriched = (
         messages.where(F.col("kind") != "invalid")
         .join(m, "consignment_ref", "left")
         .join(best_xmls, "consignment_ref", "left")
-        # The PRE-override reference survives as raw_consignment_ref:
-        # the reference snapshots it at Ingest.__init__ (ingester.py:193)
-        # BEFORE the TRE update (:206) and every FILE operation — tar
-        # filename, copy_file member paths {ref}/parser.log,
-        # {ref}/{source}, {ref}/{image} — reads the snapshot
-        # (:364-413). Tar members are keyed by the archive filename
-        # stem, so asset joins keyed on the post-override ref would
-        # probe 'TRE-X/parser.log' against member 'X/parser.log' and
-        # silently miss (review finding).
-        .withColumn("raw_consignment_ref", F.col("consignment_ref"))
-        # P10: S3-path consignment ref is overwritten by the TRE reference;
-        # V2 path keeps the message reference (messages.py:33-34, 84-93)
-        .withColumn(
-            "consignment_ref",
-            F.when(
-                (F.col("kind") == "s3") & F.col("tre_reference").isNotNull(),
-                F.col("tre_reference"),
-            ).otherwise(F.col("consignment_ref")),
+        .withColumns(
+            {
+                # The PRE-override reference survives as
+                # raw_consignment_ref: the reference snapshots it at
+                # Ingest.__init__ (ingester.py:193) BEFORE the TRE update
+                # (:206) and every FILE operation — tar filename,
+                # copy_file member paths {ref}/parser.log,
+                # {ref}/{source}, {ref}/{image} — reads the snapshot
+                # (:364-413). Tar members are keyed by the archive
+                # filename stem, so asset joins keyed on the
+                # post-override ref would probe 'TRE-X/parser.log'
+                # against member 'X/parser.log' and silently miss
+                # (review finding).
+                "raw_consignment_ref": F.col("consignment_ref"),
+                "consignment_ref": ref,
+                "is_tdr": F.col("tdr").isNotNull(),  # P3
+                "auto_publish": F.coalesce(F.col("opt_auto_publish"), F.lit(False)),  # P5
+                "error_on_existing": F.coalesce(
+                    F.col("opt_error_on_existing"), F.lit(False)
+                ),  # P6
+                "doc_kind": doc_kind,
+                "slug_candidate": trimmed_uri(F.col("parser_uri")),  # P4
+                "ncn_candidate": F.col("extracted_ncn"),
+                "expected_ns": expected_namespace_col(doc_kind),
+                "msg_id": F.coalesce(F.col("message_id"), ref),
+            }
         )
-        .withColumn("is_tdr", F.col("tdr").isNotNull())  # P3
-        .withColumn("auto_publish", F.coalesce(F.col("opt_auto_publish"), F.lit(False)))  # P5
-        .withColumn(
-            "error_on_existing", F.coalesce(F.col("opt_error_on_existing"), F.lit(False))
-        )  # P6
-        .withColumn("doc_kind", classify_document_xml(F.col("best_xml")))  # P11
-        .withColumn("slug_candidate", trimmed_uri(F.col("parser_uri")))  # P4
-        .withColumn("ncn_candidate", F.col("extracted_ncn"))
-        .withColumn("expected_ns", expected_namespace_col(F.col("doc_kind")))
-        .withColumn("msg_id", F.coalesce(F.col("message_id"), F.col("consignment_ref")))
     )
-    # msg_id is the join key back from resolution, so it must be UNIQUE
-    # within the batch: an at-least-once source can deliver the same
-    # message_id twice in one micro-batch (and direct-SNS rows fall back
-    # to the shared consignment_ref), and duplicate keys would fan the
-    # enriched<->resolved join out quadratically — every sink then gets
-    # 2x rows. First-wins per msg_id mirrors the reference, where a
-    # redelivery re-runs the SAME work idempotently rather than twice in
-    # one invocation.
+    # msg_id must be UNIQUE within the batch: an at-least-once source can
+    # deliver the same message_id twice in one micro-batch (and
+    # direct-SNS rows fall back to the shared consignment_ref), and every
+    # sink would then get one row per copy. First-wins per msg_id
+    # mirrors the reference, where a redelivery re-runs the SAME work
+    # idempotently rather than twice in one invocation.
     w_dedup = Window.partitionBy("msg_id").orderBy(
         F.col("message_id").asc_nulls_last()
     )
@@ -140,15 +143,9 @@ def analyze(
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-    resolved = resolve_uris(
-        enriched.select(
-            "msg_id", "doc_kind", "slug_candidate", "ncn_candidate", "expected_ns"
-        ),
-        identifiers,
-    )
-    analysis = enriched.join(
-        resolved.select("msg_id", "status", "uri", "exists_in_db"), "msg_id", "left"
-    )
+    # one pass: resolve_uris keeps every enriched column beside its
+    # status, uri and exists_in_db
+    analysis = resolve_uris(enriched, identifiers)
     # J5 — published-flag lookup. documents_state is the full corpus-sized
     # sink table, NOT a dimension: never broadcast-hint it (at 100 TB that
     # is an executor OOM). Leave the strategy to Catalyst/AQE — with the
@@ -191,7 +188,7 @@ def analyze(
             F.col("originator"),
             F.col("auto_publish"),
             F.col("exists_in_db"),
-            environment=F.lit(environment),
+            environment=environment,
         ).alias("email_action"),
         insert_or_update_route(F.col("exists_in_db"), F.col("error_on_existing")).alias(
             "write_route"
@@ -225,7 +222,9 @@ def perform_ingest(
 ) -> dict[str, int]:
     """Execute phase: apply every effect of the batch (K13) and return
     the row count of each effect table (``Observation`` metrics computed
-    by the write itself, so no sink plan runs twice).
+    by the write itself, so no sink plan runs twice). For documents that
+    is the rows offered to the MERGE: two messages resolving to one uri
+    offer two and leave one (upsert_parquet_table_bucketed).
 
     The batch, not the effect, is the unit of atomicity. The seven
     effects write disjoint tables, none reads another's output, and each

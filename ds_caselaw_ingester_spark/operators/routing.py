@@ -40,20 +40,23 @@ def email_action(
     originator: Column,
     auto_publish: Column,
     exists_in_db: Column,
-    environment: Column | None = None,
+    environment: Column | str | None = None,
 ) -> Column:
     """C2 (ingester.py:442-457): FCL reparse -> no email; FCL S3 -> bulk
     notification iff not auto_publish (a stub in the reference,
     ingester.py:323-325); TDR -> 'updated' vs 'new' template by
     exists_in_db; unknown -> 'error'.
 
-    environment: optional deployment-environment column. Outside 'prod'
-    the reference logs the personalisation and returns WITHOUT sending
-    (ROLLBAR_ENV gate, ingester.py:288-290, 307-309; pinned by
+    environment: optional deployment environment, a column or a plain
+    string. Outside 'prod' the reference logs the personalisation and
+    returns WITHOUT sending (ROLLBAR_ENV gate, ingester.py:288-290,
+    307-309; pinned by
     tests/test_notifications.py::test_do_not_send_..._on_staging) — here
     the would-be send surfaces as 'suppressed:<action>' so the decision
     stays observable while the notifications sink (which keys on the
-    'email' prefix) writes nothing. Omitted -> prod behavior.
+    'email' prefix) writes nothing. Omitted -> prod behavior. A string
+    gate is decided here, in Python, so the plan carries no comparison
+    of two literals.
     """
     base = (
         F.when(originator == ORIGINATOR_FCL, F.lit("none"))
@@ -67,12 +70,13 @@ def email_action(
         )
         .otherwise(F.lit("error"))
     )
-    if environment is None:
+    if isinstance(environment, Column):
+        gate = base.startswith("email") & (environment != F.lit("prod"))
+    elif environment in (None, "prod"):
         return base
-    return F.when(
-        base.startswith("email") & (environment != F.lit("prod")),
-        F.concat(F.lit("suppressed:"), base),
-    ).otherwise(base)
+    else:
+        gate = base.startswith("email")
+    return F.when(gate, F.concat(F.lit("suppressed:"), base)).otherwise(base)
 
 
 # The six TDR keys personalise_email serialises into update_metadata,

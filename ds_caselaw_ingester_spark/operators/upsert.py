@@ -85,8 +85,15 @@ def upsert_parquet_table_bucketed(
     O(touched buckets) ≈ O(batch × table/n_buckets). Pick n_buckets so
     a bucket fits an executor's memory at the target table size. The
     crash recovery, the concurrent-writer check and the layout guard
-    are the protocol's. (A Delta/Iceberg MERGE is the production
-    substitute — docs/TABLE_FORMATS.md.)
+    are the protocol's.
+
+    One row per `key`, on the first write and on every merge: when a
+    batch holds several rows for one key (two messages resolving to one
+    uri), the greatest row wins, compared column by column in the
+    frame's column order (xml first for the documents frame), so a
+    replay writes the same table. The table keeps one row per uri, and
+    the next batch's J5 state join cannot fan out. (A Delta/Iceberg
+    MERGE is the production substitute — docs/TABLE_FORMATS.md.)
     """
 
     def merge(current: "DataFrame | None", updates: DataFrame) -> DataFrame:

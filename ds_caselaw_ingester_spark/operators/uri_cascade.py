@@ -87,7 +87,9 @@ def resolve_uris(messages: DataFrame, identifiers: DataFrame) -> DataFrame:
                  ncn_candidate (nullable), expected_ns (nullable)
     identifiers: slug (nullable), value (nullable), namespace, uri
 
-    Returns messages + (status, uri, exists_in_db, upload_state).
+    Returns every column of `messages` (one row per input row) plus
+    status, uri, exists_in_db and upload_state, so a caller reads the
+    resolution beside its own columns without joining back on msg_id.
     """
     # J1 index: one row per slug carrying cardinality + a deterministic
     # representative uri (min — stable under duplicate identifier rows).
@@ -140,8 +142,7 @@ def resolve_uris(messages: DataFrame, identifiers: DataFrame) -> DataFrame:
         )
     )
     out = joined.select(
-        messages["msg_id"],
-        messages["doc_kind"],
+        *[messages[c] for c in messages.columns],
         status.alias("status"),
         uri.alias("uri"),
     )
@@ -155,4 +156,4 @@ def resolve_uris(messages: DataFrame, identifiers: DataFrame) -> DataFrame:
         .when(F.col("status") == STATUS_NEW, F.lit("inserted"))
         .otherwise(F.lit("error"))
     )
-    return out.withColumn("exists_in_db", exists).withColumn("upload_state", upload_state)
+    return out.withColumns({"exists_in_db": exists, "upload_state": upload_state})

@@ -157,7 +157,9 @@ def q_uri_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_oracle_safe(spark)
     msgs = _cascade_messages(spark, sf_dir)
     ids = _cascade_identifiers(spark, sf_dir)
-    return resolve_uris(msgs, ids)
+    return resolve_uris(msgs, ids).select(
+        "msg_id", "doc_kind", "status", "uri", "exists_in_db", "upload_state"
+    )
 
 
 # ---------------------------------------------------------------------------

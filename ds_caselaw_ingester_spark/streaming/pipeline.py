@@ -48,16 +48,29 @@ def read_message_stream(spark: SparkSession, path: str, max_files: int = 1) -> D
 # far more partitions than the epoch has rows on a wide session.
 CACHED_PLAN_REPARTITION = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
+# On by default: the JVM's first ICU case mapping (an epoch's first is
+# file_extension's lower() in the asset fan-out) loads
+# CollationAwareUTF8String, whose static initializer title-cases all
+# 1,114,112 code points, about 1.1 s in one task on the epoch's
+# critical path. Off, lower() runs UTF8String.toLowerCase (JDK tables).
+ICU_CASE_MAPPINGS = "spark.sql.icu.caseMappings.enabled"
 
-def _size_epoch_caches(batch_df: DataFrame) -> None:
-    """Let AQE coalesce the frames this epoch persists, so each sink
-    write runs as many tasks, and leaves as many files, as its rows need.
+# The conf of every epoch's session clone (see _set_epoch_conf).
+EPOCH_CONF = {CACHED_PLAN_REPARTITION: "true", ICU_CASE_MAPPINGS: "false"}
+
+
+def _set_epoch_conf(batch_df: DataFrame) -> None:
+    """Set EPOCH_CONF on the session of an epoch's DataFrame: AQE may
+    then coalesce the frames the epoch persists, so each sink write runs
+    as many tasks, and leaves as many files, as its rows need; and case
+    mapping skips ICU, so the epoch never builds ICU's title-case table.
 
     foreachBatch hands every epoch a DataFrame of the query's private
     clone of the caller's session (cloned when the query starts), so the
     conf set here reaches neither the caller's session nor any batch
     plan built outside the stream."""
-    batch_df.sparkSession.conf.set(CACHED_PLAN_REPARTITION, "true")
+    for key, value in EPOCH_CONF.items():
+        batch_df.sparkSession.conf.set(key, value)
 
 
 def run_full_ingest_stream(
@@ -105,13 +118,13 @@ def run_full_ingest_stream(
     under far more shuffle partitions than it has rows ran one task per
     partition in every sink write and left up to one file per partition
     in every append sink (884 tasks per 25-message epoch at local[4]
-    with 32 shuffle partitions). _size_epoch_caches turns
-    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` on for
-    the query's own session clone only: the caller's session, and every
-    batch plan and oracle run in it, keep their conf. localCheckpoint
-    would size the frames as well, but its blocks are never released,
-    so a long-running stream would leak every epoch's data; persist +
-    unpersist frees them when the epoch ends.
+    with 32 shuffle partitions). _set_epoch_conf turns
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` on, and
+    ICU case mapping off, for the query's own session clone only: the
+    caller's session, and every batch plan and oracle run in it, keep
+    their conf. localCheckpoint would size the frames as well, but its
+    blocks are never released, so a long-running stream would leak every
+    epoch's data; persist + unpersist frees them when the epoch ends.
 
     Every job of an epoch runs in the query's job group and is labelled
     ``ingest.<step>`` (messages, analysis, then one label per sink
@@ -132,7 +145,7 @@ def run_full_ingest_stream(
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        _size_epoch_caches(batch_df)
+        _set_epoch_conf(batch_df)
         docs_path = f"{sink_root}/documents"
         recover_buckets(local_path(docs_path))
         docs = read_parquet_or_none(spark, docs_path)

@@ -77,3 +77,23 @@ def test_subset_run_writes_layers_for_exactly_the_names_given(
     assert sorted(art["queries"]) == names
     last = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert sorted(last["queries"]) == names and "layers" not in last
+
+
+def test_auto_pairing_picks_the_newest_baseline_of_the_same_width(tmp_path, capsys):
+    """A run pairs only with a baseline recorded at its own width, the
+    newest by round; with none it prints one stderr line and skips."""
+    for name, cpus in (("BENCH_r14.json", 32), ("BENCH_r15.json", 32),
+                       ("BENCH_r14_c8.json", 8), ("BENCH_r15_c8.json", 8),
+                       ("BENCH_r9_c4.json", 4), ("BENCH_LAST.json", 4)):
+        (tmp_path / name).write_text(json.dumps({"cpus": cpus, "tail": ""}))
+    names = sorted(p.name for p in tmp_path.iterdir())
+    pick = lambda w: bench.pick_baseline(str(tmp_path), names, w)  # noqa: E731
+    assert pick(32) == str(tmp_path / "BENCH_r15.json")
+    assert pick(8) == str(tmp_path / "BENCH_r15_c8.json")
+    assert pick(4) == str(tmp_path / "BENCH_r9_c4.json")
+    assert pick(16) is None
+
+    capsys.readouterr()
+    assert bench._paired_summary({"a": 1.0}, set(), 0.1, width=3) is None
+    err = capsys.readouterr().err.splitlines()
+    assert len(err) == 1 and "3 cpus" in err[0], err

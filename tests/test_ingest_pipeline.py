@@ -598,3 +598,66 @@ def test_duplicate_message_id_in_one_batch_does_not_fan_out(spark, tmp_path):
     counts = perform_ingest(a, sink_root, batch_id=0)
     assert counts["documents"] == 1
     assert counts["versions"] == 1
+
+
+def test_two_messages_for_one_uri_leave_one_document_row(spark, tmp_path):
+    """Two messages of one epoch that resolve to the same existing uri
+    offer the documents MERGE two rows for one key. The table keeps one
+    row per uri (the MERGE reduces each key to one winner) while
+    versions keeps one row per message; and the next epoch's state read
+    sees one row, so its analysis does not fan out on the J5 join."""
+    from ds_caselaw_ingester_spark.operators.upsert import upsert_parquet_table_bucketed
+
+    uri = "doc/ewca-111"
+    sink_root = str(tmp_path / "sinks")
+    docs_path = f"{sink_root}/documents"
+    upsert_parquet_table_bucketed(
+        spark.createDataFrame(
+            [(uri, "<old/>", "judgment", False)],
+            "uri string, xml string, doc_type string, is_published boolean",
+        ),
+        docs_path,
+    )
+    second = json.loads(json.dumps(METADATA_TDR))
+    second["parameters"]["TRE"]["reference"] = "TDR-5"
+    metadata = spark.createDataFrame(
+        [("TDR-1", json.dumps(METADATA_TDR)), ("TDR-5", json.dumps(second))],
+        "consignment_ref string, raw string",
+    ).select("consignment_ref", F.from_json("raw", METADATA_SCHEMA).alias("metadata"))
+    best_xmls = spark.createDataFrame(
+        [("TDR-1", JUDGMENT_XML, True), ("TDR-5", PRESS_XML, True)],
+        "consignment_ref string, best_xml string, xml_was_valid boolean",
+    )
+    identifiers = spark.createDataFrame(
+        [("ewca/civ/2022/111", "[2022] EWCA Civ 111", "ukncn", uri)],
+        "slug string, value string, namespace string, uri string",
+    )
+
+    def epoch(batch_id: int, *records: tuple):
+        state = spark.read.parquet(docs_path).select("uri", "is_published")
+        a = analyze(
+            parse_messages(spark.createDataFrame(
+                list(records), "message_id string, event_source string, body string"
+            )),
+            metadata, best_xmls, identifiers, state,
+        )
+        analysed = a.select("msg_id", "uri", "exists_in_db").collect()
+        perform_ingest(a, sink_root, batch_id=batch_id)
+        return analysed
+
+    analysed = epoch(0, _v2_record("m1", "TDR-1", "TDR"), _v2_record("m5", "TDR-5", "TDR"))
+    assert sorted((r.msg_id, r.uri, r.exists_in_db) for r in analysed) == [
+        ("m1", uri, True), ("m5", uri, True)
+    ]
+    docs = spark.read.parquet(docs_path).collect()
+    assert [d.uri for d in docs] == [uri]
+    # the winner is the greatest row, xml first: '<judgment' > '<doc'
+    assert docs[0].xml == JUDGMENT_XML
+    versions = spark.read.parquet(f"{sink_root}/versions").where("batch_id = 0")
+    assert versions.where(F.col("uri") == uri).count() == 2
+
+    analysed = epoch(1, _v2_record("m6", "TDR-1", "TDR"))
+    assert [(r.msg_id, r.uri) for r in analysed] == [("m6", uri)]
+    assert spark.read.parquet(docs_path).count() == 1
+    versions = spark.read.parquet(f"{sink_root}/versions").where("batch_id = 1")
+    assert versions.count() == 1

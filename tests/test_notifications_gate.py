@@ -49,6 +49,26 @@ def test_notification_decision(decision_rows, idx):
     assert decision_rows[idx] == CASES[idx][4], CASES[idx]
 
 
+def test_string_environment_matches_the_column_gate(spark):
+    """A plain-string environment (analyze's) is folded in Python: no
+    literal-vs-literal comparison in the plan, the same decision as the
+    column path on every case."""
+    df = spark.createDataFrame(
+        [(i, o, a, e) for i, (o, a, e, _, _) in enumerate(CASES)],
+        "i int, originator string, auto_publish boolean, exists_in_db boolean",
+    )
+    for env in sorted({c[3] for c in CASES}):
+        action = email_action(
+            F.col("originator"), F.col("auto_publish"), F.col("exists_in_db"),
+            environment=env,
+        )
+        assert "prod" not in str(action), action
+        rows = {r.i: r.action for r in df.select("i", action.alias("action")).collect()}
+        for i, (o, a, e, case_env, expected) in enumerate(CASES):
+            if case_env == env:
+                assert rows[i] == expected, CASES[i]
+
+
 def test_no_environment_column_means_prod(spark):
     df = spark.createDataFrame([("TDR", False, True)], "o string, a boolean, e boolean")
     got = df.select(

@@ -147,6 +147,40 @@ def test_analyze_broadcasts_identifiers_but_not_pub_state(spark):
     assert plan.count("BroadcastHashJoin") >= 2, plan  # J1/J2 still broadcast
 
 
+def test_analyze_resolves_uris_in_one_pass(spark):
+    """resolve_uris carries every enriched column, so the analysis is
+    built once: one Window (the msg_id dedup) and no join keyed on
+    msg_id (the self-join that brought the resolution back, over a
+    second copy of the enriched subtree, is gone)."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from ds_caselaw_ingester_spark.operators.ingest import analyze
+    from ds_caselaw_ingester_spark.schemas import METADATA_SCHEMA
+
+    messages = spark.createDataFrame(
+        [("m1", "v2", "TDR-1", "TDR")],
+        schema="message_id string, kind string, consignment_ref string, originator string",
+    )
+    metadata = spark.createDataFrame(
+        [("TDR-1", '{"parameters": {}}')], schema="consignment_ref string, raw string"
+    ).select("consignment_ref", F.from_json("raw", METADATA_SCHEMA).alias("metadata"))
+    best_xmls = spark.createDataFrame(
+        [("TDR-1", "<judgment/>", True)],
+        schema="consignment_ref string, best_xml string, xml_was_valid boolean",
+    )
+    identifiers = spark.createDataFrame(
+        [("s", "v", "ukncn", "u")],
+        schema="slug string, value string, namespace string, uri string",
+    )
+    state = spark.createDataFrame([("u", True)], schema="uri string, is_published boolean")
+    plan = _physical_plan(analyze(messages, metadata, best_xmls, identifiers, state))
+    assert len(re.findall(r"^\(\d+\) Window$", plan, re.M)) == 1, plan
+    join_keys = [l for l in plan.splitlines() if re.match(r"^(Left|Right) keys", l)]
+    assert join_keys and not any("msg_id" in l for l in join_keys), plan
+
+
 def test_fuzzy_match_has_no_cross_product(spark, sf_dir):
     """Candidate generation must be the variant equi-join — a
     BroadcastNestedLoopJoin (cross product with levenshtein post-filter)

@@ -102,3 +102,23 @@ def test_scalar_functions_match_reference_models(spark, strings, default):
     uris_out = df.select("uri", trimmed_uri(F.col("uri")).alias("t")).collect()
     for r in uris_out:
         assert r.t == model_trimmed_uri(r.uri), r.uri
+
+
+def test_file_extension_under_the_epoch_conf_matches_str_lower(spark):
+    """An ingest epoch runs with ICU case mapping off (pipeline.EPOCH_CONF),
+    so file_extension's lower() takes the JVM's String.toLowerCase there.
+    On every character of TEXT's alphabet it still equals Python's
+    str.lower, alone, mixed with ASCII, and after a dot."""
+    from ds_caselaw_ingester_spark.streaming.pipeline import EPOCH_CONF
+
+    epoch = spark.newSession()
+    for key, value in EPOCH_CONF.items():
+        epoch.conf.set(key, value)
+    chars = sorted(set("./+%&<>  yYnN10") | {chr(c) for c in range(0x300)})
+    names = [n for c in chars for n in (c, f"Doc.A{c}B", f"x.{c}{c}.{c}Z")]
+    out = epoch.createDataFrame([(n,) for n in names], "s string").select(
+        "s", file_extension(F.col("s")).alias("ext")
+    ).collect()
+    assert len(out) == len(names)
+    for r in out:
+        assert r.ext == model_file_extension(r.s), repr(r.s)

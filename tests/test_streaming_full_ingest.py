@@ -264,16 +264,33 @@ def test_parse_invalid_and_routing_errors_share_one_dlq_partition(
 
 
 def test_epoch_caches_are_sized_released_and_stream_scoped(
-    spark, tmp_path, context_tables
+    spark, tmp_path, context_tables, monkeypatch
 ):
-    """The epoch's cached frames are coalesced by AQE, on the stream's
-    own session clone only. Under 32 shuffle partitions a small epoch
-    used to run 32 tasks per sink write and leave several files per
-    append sink partition. Pins: the caller's conf is never written, every
-    epoch cache is released, and each sink partition holds one file
-    (assets too: the asset fan-out is one frame, no longer a union of
-    four)."""
-    from ds_caselaw_ingester_spark.streaming.pipeline import CACHED_PLAN_REPARTITION
+    """The epoch's cached frames are coalesced by AQE, and its case
+    mapping skips ICU, on the stream's own session clone only. Under 32
+    shuffle partitions a small epoch used to run 32 tasks per sink write
+    and leave several files per append sink partition. Pins: the
+    caller's conf is never written, the epoch's session has both
+    settings, every epoch cache is released, and each sink partition
+    holds one file (assets too: the asset fan-out is one frame, no
+    longer a union of four)."""
+    from ds_caselaw_ingester_spark.operators import ingest
+    from ds_caselaw_ingester_spark.streaming.pipeline import (
+        CACHED_PLAN_REPARTITION,
+        ICU_CASE_MAPPINGS,
+    )
+
+    epoch_conf = []
+    real_analyze = ingest.analyze
+
+    def recording_analyze(messages, *args, **kwargs):
+        conf = messages.sparkSession.conf
+        epoch_conf.append(
+            (conf.get(CACHED_PLAN_REPARTITION), conf.get(ICU_CASE_MAPPINGS))
+        )
+        return real_analyze(messages, *args, **kwargs)
+
+    monkeypatch.setattr(ingest, "analyze", recording_analyze)
 
     src = tmp_path / "incoming"
     src.mkdir()
@@ -290,12 +307,13 @@ def test_epoch_caches_are_sized_released_and_stream_scoped(
     jsc = spark.sparkContext._jsc
     cached_before = set(jsc.getPersistentRDDs().keys())
     conf_before = spark.conf.get(CACHED_PLAN_REPARTITION)
+    icu_before = spark.conf.get(ICU_CASE_MAPPINGS)
     partitions_before = spark.conf.get("spark.sql.shuffle.partitions")
     real_set = spark.conf.set
 
     def guarded_set(key, value):
-        assert key != CACHED_PLAN_REPARTITION, (
-            "the ingest stream wrote the caller session's cached-plan conf"
+        assert key not in (CACHED_PLAN_REPARTITION, ICU_CASE_MAPPINGS), (
+            f"the ingest stream wrote the caller session's {key}"
         )
         return real_set(key, value)
 
@@ -310,6 +328,8 @@ def test_epoch_caches_are_sized_released_and_stream_scoped(
         spark.conf.set("spark.sql.shuffle.partitions", partitions_before)
 
     assert spark.conf.get(CACHED_PLAN_REPARTITION) == conf_before
+    assert spark.conf.get(ICU_CASE_MAPPINGS) == icu_before == "true"
+    assert epoch_conf == [("true", "false")]
     # ids, not a count: localCheckpoint RDDs left by earlier tests are
     # released by Spark's context cleaner at whatever JVM GC comes next,
     # which can shrink the count mid-stream. No RDD persisted during the

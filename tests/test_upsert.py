@@ -305,3 +305,22 @@ def test_bucketed_upsert_refuses_flat_table_and_bucket_change(spark, tmp_path):
     upsert_parquet_table_bucketed(b2, buck, key="uri", n_buckets=8)
     rows = [(r.uri, r.xml) for r in spark.read.parquet(buck).collect()]
     assert rows == [("a", "<j>2</j>")]
+
+
+def test_bucketed_upsert_keeps_one_row_per_key(spark, tmp_path):
+    """Two rows for one key in a batch leave ONE row, on the first write
+    and on the merge against the table: the greatest row wins, whatever
+    order the rows arrive in, so a replay writes the same table."""
+    path = str(tmp_path / "docs")
+    schema = "uri string, xml string"
+    upsert_parquet_table_bucketed(
+        spark.createDataFrame([("a", "x0"), ("a", "w0"), ("b", "y")], schema), path
+    )
+    assert sorted(map(tuple, spark.read.parquet(path).drop("kb").collect())) == [
+        ("a", "x0"), ("b", "y")
+    ]
+    for rows in ([("a", "x1"), ("a", "x2")], [("a", "x2"), ("a", "x1")]):
+        upsert_parquet_table_bucketed(spark.createDataFrame(rows, schema), path)
+        assert sorted(map(tuple, spark.read.parquet(path).drop("kb").collect())) == [
+            ("a", "x2"), ("b", "y")
+        ]
